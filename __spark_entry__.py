@@ -2305,9 +2305,10 @@ def q_stream_session_native(spark, sf_dir):
     session_window) in APPEND mode — Spark's native session-merge state
     operator (sessions merge as gap-bridging events arrive; each merged
     session finalized exactly ONCE when the watermark passes its end).
-    The custom-state twin `stream_session` proves the applyInPandas
-    path; this proves the all-JVM chained-native path against the SAME
-    gaps-and-islands SQL oracle as batch `w_session`. Drain: one-batch
+    Both session gates run native `session_windows`: `stream_session`
+    drains a multi-trigger stream into the exactly-once parquet sink;
+    this one drains a single-batch backlog into a memory sink, against
+    the SAME gaps-and-islands SQL oracle as batch `w_session`. Drain: one-batch
     backlog + a watermark-advancing sentinel (the watermark node sits
     on the raw stream, so one system row suffices). State-store
     partitions pinned to 8 for the run (restored after) — the

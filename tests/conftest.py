@@ -42,3 +42,36 @@ def transcripts_df(spark, transcripts_pdf):
     from vaero_spark.sources.transcripts import TRANSCRIPTS_SCHEMA
 
     return spark.createDataFrame(transcripts_pdf, TRANSCRIPTS_SCHEMA)
+
+
+class FakeState:
+    """In-process stand-in for ``GroupState``: unit tests drive an
+    ``applyInPandasWithState`` function batch by batch and read the
+    stored tuple back from ``_v``."""
+
+    exists = False
+    hasTimedOut = False
+    _v = None
+
+    @property
+    def get(self):
+        return self._v
+
+    def update(self, v):
+        self._v = v
+        self.exists = True
+
+    def setTimeoutTimestamp(self, *a, **k):
+        pass
+
+    def getCurrentWatermarkMs(self):
+        return 0
+
+    def remove(self):
+        self._v, self.exists = None, False
+
+
+@pytest.fixture
+def fake_state():
+    """The :class:`FakeState` class; call it for a fresh state."""
+    return FakeState

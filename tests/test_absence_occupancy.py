@@ -16,7 +16,8 @@ import pytest
 
 from vaero_spark.operators.cep import (
     ROLE_SYMBOLS,
-    _stream_absence_fn,
+    _AbsenceStep,
+    _reassembly_fn,
     cep_absence,
     stream_cep_absence,
 )
@@ -42,34 +43,11 @@ def _brute_absence(seq: str, k: int = 3, trig: str = "u", resp: str = "a"):
     return len(seq), n_trig, n_dang, first
 
 
-class FakeState:
-    exists = False
-    hasTimedOut = False
-    _v = None
-
-    @property
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = v
-        self.exists = True
-
-    def setTimeoutTimestamp(self, *a, **k):
-        pass
-
-    def getCurrentWatermarkMs(self):
-        return 0
-
-    def remove(self):
-        self._v, self.exists = None, False
-
-
-def _drive(seq: str, splits: tuple[int, ...], k: int = 3):
+def _drive(seq: str, splits: tuple[int, ...], k: int, fake_state):
     """Feed ``seq`` to the absence state fn in chunks (in order) and
     return every emission as (n_turns, n_triggers, n_dangling, first)."""
-    fn = _stream_absence_fn("u", "a", k, ROLE_SYMBOLS, 3600)
-    state = FakeState()
+    fn = _reassembly_fn(_AbsenceStep("u", "a", k), ROLE_SYMBOLS, 3600)
+    state = fake_state()
     out = []
     pos = 0
     for ln in splits:
@@ -104,7 +82,7 @@ def _splits(n: int):
             yield (a, b, n - a - b)
 
 
-def test_stream_absence_every_emission_equals_prefix_batch():
+def test_stream_absence_every_emission_equals_prefix_batch(fake_state):
     """Exhaustive: for every role string up to length 6 over {u,a,t}
     and every 1-3-chunk split, EVERY emission equals the brute-force
     batch scan of the prefix consumed so far, and open-trigger state
@@ -114,7 +92,7 @@ def test_stream_absence_every_emission_equals_prefix_batch():
         for seq in map("".join, itertools.product("uat", repeat=n)):
             want_final = _brute_absence(seq, k)
             for sp in _splits(n):
-                out, state = _drive(seq, sp, k)
+                out, state = _drive(seq, sp, k, fake_state)
                 pos = 0
                 for (n_turns, n_trig, n_dang, first), ln in zip(out, sp):
                     pos += ln
@@ -128,11 +106,11 @@ def test_stream_absence_every_emission_equals_prefix_batch():
                 assert len(state._v[3] or []) <= k + 1
 
 
-def test_stream_absence_fn_out_of_order_and_dups():
+def test_stream_absence_fn_out_of_order_and_dups(fake_state):
     """Out-of-order arrival buffers in pend until the contiguous prefix
     reaches it; duplicate turns drop (first arrival wins)."""
-    fn = _stream_absence_fn("u", "a", 3, ROLE_SYMBOLS, 3600)
-    state = FakeState()
+    fn = _reassembly_fn(_AbsenceStep("u", "a", 3), ROLE_SYMBOLS, 3600)
+    state = fake_state()
     seq = "utttaut"  # u@0 answered at 4 (gap 4 > 3 => dangling!), u@5 open
 
     def feed(idxs):
@@ -371,12 +349,15 @@ def test_stream_absence_resumes_from_checkpoint(spark, tmp_path):
     assert got == want and want
 
 
-def test_stream_absence_time_emissions_equal_prefix_batch():
+def test_stream_absence_time_emissions_equal_prefix_batch(fake_state):
     """Time-based absence: random timed role strings x chunkings — every
-    emission equals the brute-force time-window scan of the prefix."""
+    emission equals the brute-force time-window scan of the prefix. A
+    second pass draws null event times with the batch twin's semantics
+    (``MIN`` skips null response times; NULL arithmetic answers a
+    null-time trigger by any later timed response)."""
     import random
 
-    from vaero_spark.operators.cep import _stream_absence_time_fn
+    from vaero_spark.operators.cep import _AbsenceTimeStep
 
     def brute(seq, mss, wait_ms):
         n_trig = n_dang = 0
@@ -386,7 +367,9 @@ def test_stream_absence_time_emissions_equal_prefix_batch():
                 continue
             n_trig += 1
             answered = any(
-                seq[j] == "a" and mss[j] - mss[i] <= wait_ms
+                seq[j] == "a"
+                and mss[j] is not None
+                and (mss[i] is None or mss[j] - mss[i] <= wait_ms)
                 for j in range(i + 1, len(seq))
             )
             if not answered:
@@ -395,38 +378,39 @@ def test_stream_absence_time_emissions_equal_prefix_batch():
                     first = i
         return len(seq), n_trig, n_dang, first
 
-    rng = random.Random(31)
     wait_ms = 300_000
-    for trial in range(80):
-        n = rng.randrange(2, 9)
-        seq = "".join(rng.choice("uat") for _ in range(n))
-        base = 1_704_067_200_000
-        mss = []
-        t = base
-        for _ in range(n):
-            t += rng.choice([1_000, 60_000, 200_000, 400_000])
-            mss.append(t)
-        cuts = sorted(rng.sample(range(1, n), k=min(2, n - 1))) + [n]
-        fn = _stream_absence_time_fn("u", "a", wait_ms, ROLE_SYMBOLS, 3600)
-        state = FakeState()
-        pos = 0
-        for cut in cuts:
-            idxs = list(range(pos, cut))
-            pdf = pd.DataFrame(
-                {
-                    "turn_idx": idxs,
-                    "role": [SYM_TO_ROLE[seq[i]] for i in idxs],
-                    "ts": pd.to_datetime([mss[i] for i in idxs], unit="ms"),
-                }
-            )
-            for emitted in fn(("c",), iter([pdf]), state):
-                got = (
-                    int(emitted["n_turns"].iloc[0]),
-                    int(emitted["n_triggers"].iloc[0]),
-                    int(emitted["n_dangling"].iloc[0]),
-                    int(emitted["first_dangling_turn"].iloc[0]),
+    for null_share in (0.0, 0.3):
+        rng, null_rng = random.Random(31), random.Random(32)
+        for trial in range(80):
+            n = rng.randrange(2, 9)
+            seq = "".join(rng.choice("uat") for _ in range(n))
+            base = 1_704_067_200_000
+            mss = []
+            t = base
+            for _ in range(n):
+                t += rng.choice([1_000, 60_000, 200_000, 400_000])
+                mss.append(None if null_rng.random() < null_share else t)
+            cuts = sorted(rng.sample(range(1, n), k=min(2, n - 1))) + [n]
+            fn = _reassembly_fn(_AbsenceTimeStep("u", "a", wait_ms), ROLE_SYMBOLS, 3600)
+            state = fake_state()
+            pos = 0
+            for cut in cuts:
+                idxs = list(range(pos, cut))
+                pdf = pd.DataFrame(
+                    {
+                        "turn_idx": idxs,
+                        "role": [SYM_TO_ROLE[seq[i]] for i in idxs],
+                        "ts": pd.to_datetime([mss[i] for i in idxs], unit="ms"),
+                    }
                 )
-                assert got == brute(seq[:cut], mss[:cut], wait_ms), (
-                    seq, mss, cuts, cut,
-                )
-            pos = cut
+                for emitted in fn(("c",), iter([pdf]), state):
+                    got = (
+                        int(emitted["n_turns"].iloc[0]),
+                        int(emitted["n_triggers"].iloc[0]),
+                        int(emitted["n_dangling"].iloc[0]),
+                        int(emitted["first_dangling_turn"].iloc[0]),
+                    )
+                    assert got == brute(seq[:cut], mss[:cut], wait_ms), (
+                        seq, mss, cuts, cut,
+                    )
+                pos = cut

@@ -7,7 +7,15 @@ import re
 import pandas as pd
 import pytest
 
-from vaero_spark.operators.cep import ROLE_SYMBOLS, cep_match
+from vaero_spark.operators.cep import (
+    ROLE_SYMBOLS,
+    _AbsenceStep,
+    _AbsenceTimeStep,
+    _KleeneStep,
+    _reassembly_fn,
+    _WithinStep,
+    cep_match,
+)
 
 ROLES = ["user", "assistant", "tool", "system"]
 
@@ -113,38 +121,15 @@ def test_stream_cep_final_state_equals_batch(spark, tmp_path):
         assert n_turns == totals[conv], conv
 
 
-def test_stream_cep_fn_reassembles_out_of_order():
+def test_stream_cep_fn_reassembles_out_of_order(fake_state):
     """Unit-drive the state fn batch-by-batch with an adversarial
     arrival order: the match spanning a batch boundary is found once
     the gap fills, never double-counted."""
-    from vaero_spark.operators.cep import ROLE_SYMBOLS, _stream_cep_fn
-
-    class FakeState:
-        exists = False
-        hasTimedOut = False
-        _v = None
-
-        @property
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-            self.exists = True
-
-        def setTimeoutTimestamp(self, *a, **k):
-            pass
-
-        def getCurrentWatermarkMs(self):
-            return 0
-
-        def remove(self):
-            self._v, self.exists = None, False
-
     roles = ["user", "tool", "tool", "user", "assistant", "tool", "tool", "user"]
     # seq = "uttuattu": matches of "ttu" at 1 and 5
-    fn = _stream_cep_fn("ttu", ROLE_SYMBOLS, 3600)
-    state = FakeState()
+    # stream_cep_match's step: the literal as a fixed-length pattern
+    fn = _reassembly_fn(_KleeneStep(re.escape("ttu"), 3, 3), ROLE_SYMBOLS, 3600)
+    state = fake_state()
 
     def feed(idxs):
         pdf = pd.DataFrame(
@@ -189,42 +174,16 @@ def test_kleene_parser_widths_and_lazy_form():
             parse_kleene_pattern(bad, ROLE_SYMBOLS)
 
 
-def test_stream_cep_kleene_fn_earliest_completion_and_carry():
+def test_stream_cep_kleene_fn_earliest_completion_and_carry(fake_state):
     """Unit-drive the Kleene state fn: a quantified match held open at
     a batch boundary completes (earliest-completion) once the next
     symbols arrive, the carry stays < max_len, and a greedy-looking
     continuation does NOT extend an already-final match."""
-    from vaero_spark.operators.cep import (
-        ROLE_SYMBOLS,
-        _stream_cep_kleene_fn,
-        parse_kleene_pattern,
-    )
-
-    class FakeState:
-        exists = False
-        hasTimedOut = False
-        _v = None
-
-        @property
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-            self.exists = True
-
-        def setTimeoutTimestamp(self, *a, **k):
-            pass
-
-        def getCurrentWatermarkMs(self):
-            return 0
-
-        def remove(self):
-            self._v, self.exists = None, False
+    from vaero_spark.operators.cep import parse_kleene_pattern
 
     l_min, l_max, lazy = parse_kleene_pattern("t{2,3}u", ROLE_SYMBOLS)
-    fn = _stream_cep_kleene_fn(lazy, l_min, l_max, ROLE_SYMBOLS, 3600)
-    state = FakeState()
+    fn = _reassembly_fn(_KleeneStep(lazy, l_min, l_max), ROLE_SYMBOLS, 3600)
+    state = fake_state()
     #         0      1      2      3      4      5       6      7
     roles = ["tool", "tool", "tool", "user", "tool", "tool", "user", "user"]
     # seq "tttuttuu": earliest-completion t{2,3}u: shortest at 0 needs
@@ -342,87 +301,78 @@ def test_cep_within_time_bound_excludes_slow_completions(spark):
         cep_within(df, "ttu", -1)
 
 
-def test_stream_within_every_emission_equals_prefix_batch():
+def test_stream_within_every_emission_equals_prefix_batch(fake_state):
     """Unit-drive the streaming within machine over random timed role
     strings and every chunking: each emission must equal the brute-force
     sliding lead-chain scan of the consumed prefix (no end-of-stream
-    fold exists in these semantics)."""
+    fold exists in these semantics). A second pass draws null event
+    times: as in the batch twin's lead chain, a window with a null end
+    is no hit."""
     import itertools
     import random
 
-    from vaero_spark.operators.cep import ROLE_SYMBOLS, _stream_within_fn
-
     SYM_TO_ROLE = {v: k for k, v in ROLE_SYMBOLS.items()}
-
-    class FakeState:
-        exists = False
-        hasTimedOut = False
-        _v = None
-
-        @property
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-            self.exists = True
-
-        def setTimeoutTimestamp(self, *a, **k):
-            pass
-
-        def getCurrentWatermarkMs(self):
-            return 0
-
-        def remove(self):
-            self._v, self.exists = None, False
 
     def brute(seq, mss, literal, span_ms):
         L = len(literal)
         n = first = 0
         first = -1
         for p in range(len(seq) - L + 1):
-            if seq[p : p + L] == literal and mss[p + L - 1] - mss[p] <= span_ms:
+            t0, t1 = mss[p], mss[p + L - 1]
+            if (
+                seq[p : p + L] == literal
+                and t0 is not None
+                and t1 is not None
+                and t1 - t0 <= span_ms
+            ):
                 n += 1
                 if first < 0:
                     first = p
         return len(seq), n, first
 
-    rng = random.Random(9)
     literal, span_ms = "ttu", 600_000
-    for trial in range(60):
-        n = rng.randrange(2, 9)
-        seq = "".join(rng.choice("uat") for _ in range(n))
-        base = 1_704_067_200_000
-        mss = []
-        t = base
-        for _ in range(n):
-            t += rng.choice([1_000, 120_000, 400_000, 700_000])
-            mss.append(t)
-        cuts = sorted(rng.sample(range(1, n), k=min(2, n - 1))) + [n]
-        fn = _stream_within_fn(literal, span_ms, ROLE_SYMBOLS, 3600)
-        state = FakeState()
-        pos = 0
-        for cut in cuts:
-            idxs = list(range(pos, cut))
-            pdf = pd.DataFrame(
-                {
-                    "turn_idx": idxs,
-                    "role": [SYM_TO_ROLE[seq[i]] for i in idxs],
-                    "ts": pd.to_datetime([mss[i] for i in idxs], unit="ms"),
-                }
+    null_ends = 0  # literal windows with a timed start and a null end
+    for null_share, n_trials in ((0.0, 60), (0.3, 200)):
+        rng, null_rng = random.Random(9), random.Random(10)
+        for trial in range(n_trials):
+            n = rng.randrange(2, 9)
+            seq = "".join(rng.choice("uat") for _ in range(n))
+            base = 1_704_067_200_000
+            mss = []
+            t = base
+            for _ in range(n):
+                t += rng.choice([1_000, 120_000, 400_000, 700_000])
+                mss.append(None if null_rng.random() < null_share else t)
+            null_ends += sum(
+                seq.startswith(literal, p) and mss[p] is not None and mss[p + 2] is None
+                for p in range(n - 2)
             )
-            for emitted in fn(("c",), iter([pdf]), state):
-                got = (
-                    int(emitted["n_turns"].iloc[0]),
-                    int(emitted["n_within"].iloc[0]),
-                    int(emitted["first_within_turn"].iloc[0]),
+            cuts = sorted(rng.sample(range(1, n), k=min(2, n - 1))) + [n]
+            fn = _reassembly_fn(_WithinStep(literal, span_ms), ROLE_SYMBOLS, 3600)
+            state = fake_state()
+            pos = 0
+            for cut in cuts:
+                idxs = list(range(pos, cut))
+                pdf = pd.DataFrame(
+                    {
+                        "turn_idx": idxs,
+                        "role": [SYM_TO_ROLE[seq[i]] for i in idxs],
+                        "ts": pd.to_datetime([mss[i] for i in idxs], unit="ms"),
+                    }
                 )
-                assert got == brute(seq[:cut], mss[:cut], literal, span_ms), (
-                    seq, mss, cuts, cut,
-                )
-            pos = cut
-        # carry bounded by L-1 symbols
-        assert len(state._v[4] or "") <= len(literal) - 1
+                for emitted in fn(("c",), iter([pdf]), state):
+                    got = (
+                        int(emitted["n_turns"].iloc[0]),
+                        int(emitted["n_within"].iloc[0]),
+                        int(emitted["first_within_turn"].iloc[0]),
+                    )
+                    assert got == brute(seq[:cut], mss[:cut], literal, span_ms), (
+                        seq, mss, cuts, cut,
+                    )
+                pos = cut
+            # carry bounded by L-1 symbols
+            assert len(state._v[4] or "") <= len(literal) - 1
+    assert null_ends, "null pass drew no window with a null end"
 
 
 def test_stream_within_drain_equals_batch(spark, tmp_path):
@@ -486,3 +436,69 @@ def test_cep_match_multi_equals_per_pattern_runs(spark):
         for r in cep_match(df, pat).collect()
     )
     assert got == want and want
+
+
+#: one instance factory per pattern step behind the reassembly core
+_STEPS = {
+    "kleene": lambda: _KleeneStep("t{2,3}?u", 3, 4),
+    "absence": lambda: _AbsenceStep("u", "a", 2),
+    "within": lambda: _WithinStep("tu", 300_000),
+    "absence_time": lambda: _AbsenceTimeStep("u", "a", 300_000),
+}
+
+
+def _feed(fn, state, idxs, seq, mss):
+    sym_to_role = {v: k for k, v in ROLE_SYMBOLS.items()}
+    pdf = pd.DataFrame(
+        {
+            "turn_idx": idxs,
+            "role": [sym_to_role[seq[i]] for i in idxs],
+            "ts": pd.to_datetime([mss[i] for i in idxs], unit="ms"),
+        }
+    )
+    return [tuple(e.iloc[0]) for e in fn(("c",), iter([pdf]), state)]
+
+
+@pytest.mark.parametrize("step", list(_STEPS))
+def test_stream_step_out_of_order_equals_in_order(step, fake_state):
+    """Every CEP step behind the shared reassembly core: shuffled,
+    duplicated arrival in random chunks ends in the same emission and
+    the same stored state as in-order arrival in one batch."""
+    import random
+
+    make_step = _STEPS[step]
+    rng = random.Random(17)
+    for trial in range(40):
+        n = rng.randrange(1, 25)
+        seq = "".join(rng.choice("uats") for _ in range(n))
+        mss, t = [], 1_704_067_200_000
+        for _ in range(n):
+            t += rng.choice([1_000, 120_000, 400_000])
+            mss.append(t)
+
+        fn, ref = _reassembly_fn(make_step(), ROLE_SYMBOLS, 3600), fake_state()
+        want = _feed(fn, ref, list(range(n)), seq, mss)[-1]
+
+        arrivals = list(range(n)) + [rng.randrange(n) for _ in range(rng.randrange(1, 5))]
+        rng.shuffle(arrivals)
+        fn, state = _reassembly_fn(make_step(), ROLE_SYMBOLS, 3600), fake_state()
+        got, pos = None, 0
+        while pos < len(arrivals):
+            chunk = arrivals[pos : pos + rng.randrange(1, 5)]
+            pos += len(chunk)
+            got = (_feed(fn, state, chunk, seq, mss) or [got])[-1]
+        assert got == want, (step, seq, arrivals)
+        assert state._v == ref._v, (step, seq, arrivals)
+
+
+@pytest.mark.parametrize("step", list(_STEPS))
+def test_stream_step_timeout_removes_state_and_emits_nothing(step, fake_state):
+    """An idle-timeout call drops the conversation's state and emits
+    nothing, even when it carries new rows."""
+    seq, mss = "uttua", [1_704_067_200_000 + i * 1_000 for i in range(5)]
+    fn, state = _reassembly_fn(_STEPS[step](), ROLE_SYMBOLS, 3600), fake_state()
+    assert _feed(fn, state, [0, 1, 3], seq, mss)
+    assert state.exists
+    state.hasTimedOut = True
+    assert _feed(fn, state, [2, 4], seq, mss) == []
+    assert not state.exists and state.get is None

@@ -42,6 +42,7 @@ grouping) — no backreferences or lookaround, which RE2 lacks.
 from __future__ import annotations
 
 import re
+from itertools import count, repeat
 from typing import Any, Iterator, Tuple
 
 import pandas as pd
@@ -62,8 +63,10 @@ UNKNOWN_SYMBOL = "?"
 _MS_DIVISORS = {"s": None, "ms": 1, "us": 1_000, "ns": 1_000_000}
 
 
-def _ts_to_ms(tsk: "pd.Series") -> "pd.Series":
-    """int64 milliseconds from a datetime64 series, whatever its unit."""
+def _ts_to_ms(tsk: "pd.Series") -> list:
+    """Integer milliseconds from a datetime64 series, whatever its unit.
+    Null (NaT) becomes ``None``, not the int64 view's -2^63 sentinel:
+    the batch twins' NULL arithmetic decides what a null time means."""
     import numpy as np
 
     unit, _ = np.datetime_data(tsk.dtype)  # raises on non-datetime dtypes
@@ -72,8 +75,12 @@ def _ts_to_ms(tsk: "pd.Series") -> "pd.Series":
     if div is None:
         if unit != "s":
             raise TypeError(f"unsupported datetime64 unit {unit!r}")
-        return ims * 1_000
-    return ims // div
+        ms = ims * 1_000
+    else:
+        ms = ims // div
+    if tsk.hasnans:
+        ms = ms.astype(object).where(tsk.notna(), None)
+    return ms.tolist()
 
 
 def _check_pattern(pattern: str, symbols: dict[str, str]) -> None:
@@ -383,7 +390,7 @@ def cep_within_sql(
 
 
 # ---------------------------------------------------------------------------
-# streaming CEP — literal sequence patterns over a live transcript stream
+# streaming CEP — one sequence-reassembly core, one fold step per pattern
 # ---------------------------------------------------------------------------
 
 CEP_STREAM_OUTPUT_SCHEMA = T.StructType(
@@ -395,27 +402,69 @@ CEP_STREAM_OUTPUT_SCHEMA = T.StructType(
     ]
 )
 
-#: next_idx = next contiguous turn expected; pend_* = out-of-order turns
-#: awaiting reassembly (idx list + aligned symbol chars); carry = the
-#: unmatched tail of the consumed prefix (< pattern length, the only
-#: bytes a future match can still use); last_us arms idle eviction
-CEP_STREAM_STATE_SCHEMA = T.StructType(
+ABSENCE_STREAM_OUTPUT_SCHEMA = T.StructType(
     [
-        T.StructField("next_idx", T.LongType()),
-        T.StructField("pend_idx", T.ArrayType(T.LongType())),
-        T.StructField("pend_sym", T.StringType()),
-        T.StructField("carry", T.StringType()),
-        T.StructField("n_matches", T.LongType()),
-        T.StructField("first_match", T.LongType()),
-        T.StructField("last_us", T.LongType()),
+        T.StructField("conv_id", T.StringType()),
+        T.StructField("n_turns", T.LongType()),
+        T.StructField("n_triggers", T.LongType()),
+        T.StructField("n_dangling", T.LongType()),
+        T.StructField("first_dangling_turn", T.LongType()),
     ]
 )
 
+WITHIN_STREAM_OUTPUT_SCHEMA = T.StructType(
+    [
+        T.StructField("conv_id", T.StringType()),
+        T.StructField("n_turns", T.LongType()),
+        T.StructField("n_within", T.LongType()),
+        T.StructField("first_within_turn", T.LongType()),
+    ]
+)
 
-def _stream_cep_fn(literal: str, symbols: dict[str, str], idle_timeout_seconds: int):
+_LONG_ARRAY = T.ArrayType(T.LongType())
+
+
+def _state_schema(step) -> T.StructType:
+    """The stored layout of every streaming CEP operator: the core's
+    prefix, the step's accumulator fields, then ``last_us``.
+
+    next_idx = next contiguous turn expected; pend_* = out-of-order
+    turns awaiting reassembly (idx list + aligned symbol chars, plus
+    event-time ms when the step reads time); last_us arms idle eviction.
+    """
+    head = [
+        T.StructField("next_idx", T.LongType()),
+        T.StructField("pend_idx", _LONG_ARRAY),
+        T.StructField("pend_sym", T.StringType()),
+    ]
+    if step.timed:
+        head.append(T.StructField("pend_ms", _LONG_ARRAY))
+    return T.StructType(head + step.fields + [T.StructField("last_us", T.LongType())])
+
+
+def _reassembly_fn(step, symbols: dict[str, str], idle_timeout_seconds: int):
+    """The ``applyInPandasWithState`` function of every streaming CEP
+    operator: out-of-order sequence reassembly over
+    ``(conv_id, turn_idx, role, ts)`` around one pattern ``step``.
+
+    Turns wait in a pending buffer until the contiguous ``turn_idx``
+    prefix reaches them (first arrival wins; consumed turns and late
+    duplicates drop), so the step folds each newly contiguous run
+    ``(start, symbols, event-time ms)`` exactly once and in order. A
+    null ``ts`` reaches a timed step as ``None``. One row, from
+    ``step.emit``, goes out whenever the prefix advances. Turn indexes
+    are assumed 0-based contiguous per conversation (the canonical
+    transcripts derivation guarantees it).
+
+    A step supplies ``output`` (its output schema), ``timed`` (it reads
+    event time, so the core buffers ``pend_ms``), ``fields`` and
+    ``init`` (its accumulator's state fields and empty value),
+    ``fold(acc, start, syms, mss) -> acc`` and ``emit(acc, n_turns)``
+    (the output columns after ``conv_id, n_turns``)."""
     from vaero_spark.operators.state import _arm_idle_timeout, _pdf_max_us
 
-    plen = len(literal)
+    names = step.output.fieldNames()
+    n_acc = len(step.fields)
 
     def fn(
         key: Tuple[Any, ...], pdf_iter: Iterator[pd.DataFrame], state: GroupState
@@ -424,13 +473,16 @@ def _stream_cep_fn(literal: str, symbols: dict[str, str], idle_timeout_seconds: 
             state.remove()  # conversation idle past the horizon
             return
         if state.exists:
-            next_idx, pend_idx, pend_sym, carry, n_matches, first_match, last_us = (
-                state.get
+            stored = state.get
+            next_idx, last_us = stored[0], stored[-1]
+            pend_ms = (stored[3] or []) if step.timed else repeat(None)
+            pend = dict(zip(stored[1] or [], zip(stored[2] or "", pend_ms)))
+            acc = tuple(
+                d if v is None else v
+                for v, d in zip(stored[-1 - n_acc : -1], step.init)
             )
-            pend = dict(zip(pend_idx or [], pend_sym or ""))
         else:
-            next_idx, carry, n_matches, first_match, last_us = 0, "", 0, -1, 0
-            pend = {}
+            next_idx, last_us, pend, acc = 0, 0, {}, step.init
         for pdf in pdf_iter:
             if not len(pdf):
                 continue
@@ -440,47 +492,55 @@ def _stream_cep_fn(literal: str, symbols: dict[str, str], idle_timeout_seconds: 
             # Series element loop here doubled the drain wall time)
             idxs = pdf["turn_idx"].to_numpy()
             keep = idxs >= next_idx
-            syms = pdf["role"][keep].map(symbols).fillna(UNKNOWN_SYMBOL)
-            for i, s in zip(idxs[keep].tolist(), syms.tolist()):
+            syms = pdf["role"][keep].map(symbols).fillna(UNKNOWN_SYMBOL).tolist()
+            mss = _ts_to_ms(pdf["ts"][keep]) if step.timed else repeat(None)
+            for i, s, m in zip(idxs[keep].tolist(), syms, mss):
                 if i not in pend:  # first arrival wins; late dups drop
-                    pend[i] = s
-        # reassemble: consume the contiguous prefix that is now complete
-        work = []
+                    pend[i] = (s, m)
+        run = []
         while next_idx in pend:
-            work.append(pend.pop(next_idx))
+            run.append(pend.pop(next_idx))
             next_idx += 1
-        if work:
-            scan_abs = next_idx - len(work) - len(carry)
-            scan = carry + "".join(work)
-            pos = 0
-            while (hit := scan.find(literal, pos)) != -1:
-                n_matches += 1
-                if first_match < 0:
-                    first_match = scan_abs + hit
-                pos = hit + plen  # non-overlapping, same as the batch scan
-            carry = scan[max(pos, len(scan) - (plen - 1)) :]
-            yield pd.DataFrame(
-                {
-                    "conv_id": [key[0]],
-                    "n_turns": [next_idx],
-                    "n_matches": [n_matches],
-                    "first_match_turn": [first_match],
-                }
+        if run:
+            acc = step.fold(
+                acc,
+                next_idx - len(run),
+                "".join(s for s, _ in run),
+                [m for _, m in run],
             )
-        state.update(
-            (
-                next_idx,
-                sorted(pend),
-                "".join(pend[i] for i in sorted(pend)),
-                carry,
-                n_matches,
-                first_match,
-                last_us,
-            )
-        )
+            row = (key[0], next_idx, *step.emit(acc, next_idx))
+            yield pd.DataFrame({name: [v] for name, v in zip(names, row)})
+        order = sorted(pend)
+        head = (next_idx, order, "".join(pend[i][0] for i in order))
+        if step.timed:
+            head += ([pend[i][1] for i in order],)
+        state.update(head + tuple(acc) + (last_us,))
         _arm_idle_timeout(state, last_us, idle_timeout_seconds)
 
     return fn
+
+
+def _stream_reassembled(
+    stream: DataFrame,
+    step,
+    watermark: str,
+    symbols: dict[str, str],
+    idle_timeout_seconds: int,
+) -> DataFrame:
+    return (
+        # guide §4.1: only the columns the state machine reads cross
+        # the Python boundary (text/tool payloads never ship per group)
+        stream.select("conv_id", "turn_idx", "role", "ts")
+        .withWatermark("ts", watermark)
+        .groupBy("conv_id")
+        .applyInPandasWithState(
+            _reassembly_fn(step, dict(symbols), idle_timeout_seconds),
+            outputStructType=step.output,
+            stateStructType=_state_schema(step),
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.EventTimeTimeout,
+        )
+    )
 
 
 # Bounded-quantifier (Kleene-class) streaming patterns: a CONCATENATION
@@ -542,127 +602,79 @@ def parse_kleene_pattern(pattern: str, symbols: dict[str, str]) -> tuple[int, in
     return l_min, l_max, "".join(lazy_parts)
 
 
-def _stream_cep_kleene_fn(
-    pattern: str, l_min: int, l_max: int,
-    symbols: dict[str, str], idle_timeout_seconds: int,
-):
-    from vaero_spark.operators.state import _arm_idle_timeout, _pdf_max_us
+class _KleeneStep:
+    """Earliest-completion (leftmost, shortest, non-overlapping) count
+    of a pattern whose matches are ``l_min``..``l_max`` symbols long.
+    A literal is the case ``l_min == l_max``: its carry is then always
+    shorter than the literal and its end-of-stream tail is empty."""
 
-    rx = re.compile(pattern)
+    output = CEP_STREAM_OUTPUT_SCHEMA
+    timed = False
+    #: carry = the consumed suffix from the first unsettled position on
+    #: (shorter than max_len, never the conversation)
+    fields = [
+        T.StructField("carry", T.StringType()),
+        T.StructField("n_matches", T.LongType()),
+        T.StructField("first_match", T.LongType()),
+    ]
+    init = ("", 0, -1)
 
-    def _shortest(s: str, p: int) -> int:
+    def __init__(self, pattern: str, l_min: int, l_max: int):
+        self.rx = re.compile(pattern)
+        self.l_min, self.l_max = l_min, l_max
+
+    def _shortest(self, s: str, p: int) -> int:
         """Length of the earliest-completion (shortest) match at ``p``
         over what is available, or 0."""
-        for ln in range(l_min, min(l_max, len(s) - p) + 1):
-            if rx.fullmatch(s, p, p + ln):
+        for ln in range(self.l_min, min(self.l_max, len(s) - p) + 1):
+            if self.rx.fullmatch(s, p, p + ln):
                 return ln
         return 0
 
-    def _scan(scan: str, scan_abs: int, n_matches: int, first_match: int):
-        """Leftmost earliest-completion scan, SETTLING only decisions
-        that are final regardless of future input: a found (shortest)
-        match at p uses already-seen symbols only — final immediately;
-        a NO-match at p is final only once >= max_len symbols are
-        available past p (more input could still complete a match
-        there — and were a later completed match counted while p is
-        still open, a future completion at p would have absorbed it,
-        breaking the leftmost non-overlap invariant). Everything from
-        the first unsettled position on is carried, so the carry — and
-        with it the state — is bounded by max_len + the disorder gap,
-        never the conversation."""
-        p, n = 0, len(scan)
-        while p < n:
-            hit = _shortest(scan, p)
-            if hit:
-                n_matches += 1
-                if first_match < 0:
-                    first_match = scan_abs + p
-                p += hit
-            elif n - p >= l_max:
-                p += 1
-            else:
-                break
-        return scan[p:], n_matches, first_match
+    def _scan(self, s: str, s_abs: int, final: bool) -> tuple[int, int, int]:
+        """Leftmost earliest-completion scan of ``s`` (its first symbol
+        is turn ``s_abs``) → (stop position, matches, first match turn).
 
-    def _tail(carry: str, carry_abs: int) -> tuple[int, int]:
-        """End-of-stream scan of the carry: what the batch scan would
-        add for these trailing symbols if the stream ended NOW. Settled
-        decisions stop at the first position that future input could
-        still flip, so every emission folds this in (recomputed from
-        the tiny carry, never stored): settled + tail == the batch scan
-        of the full prefix seen so far — the emission, not just the
-        drained final one, is exact."""
-        p, n, cnt, first = 0, len(carry), 0, -1
+        Unless ``final``, it SETTLES only decisions that are final
+        regardless of future input: a found (shortest) match at p uses
+        already-seen symbols only — final immediately; a NO-match at p
+        is final only once >= max_len symbols are available past p
+        (more input could still complete a match there — and were a
+        later completed match counted while p is still open, a future
+        completion at p would have absorbed it, breaking the leftmost
+        non-overlap invariant). The scan stops at the first unsettled
+        position. ``final`` is the end-of-stream view: every position
+        settles."""
+        p, n, cnt, first = 0, len(s), 0, -1
         while p < n:
-            hit = _shortest(carry, p)
+            hit = self._shortest(s, p)
             if hit:
                 cnt += 1
                 if first < 0:
-                    first = carry_abs + p
+                    first = s_abs + p
                 p += hit
-            else:
+            elif final or n - p >= self.l_max:
                 p += 1
-        return cnt, first
+            else:
+                break
+        return p, cnt, first
 
-    def fn(
-        key: Tuple[Any, ...], pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        if state.exists:
-            next_idx, pend_idx, pend_sym, carry, n_matches, first_match, last_us = (
-                state.get
-            )
-            pend = dict(zip(pend_idx or [], pend_sym or ""))
-        else:
-            next_idx, carry, n_matches, first_match, last_us = 0, "", 0, -1, 0
-            pend = {}
-        for pdf in pdf_iter:
-            if not len(pdf):
-                continue
-            last_us = _pdf_max_us(pdf, last_us)
-            idxs = pdf["turn_idx"].to_numpy()
-            keep = idxs >= next_idx
-            syms = pdf["role"][keep].map(symbols).fillna(UNKNOWN_SYMBOL)
-            for i, s in zip(idxs[keep].tolist(), syms.tolist()):
-                if i not in pend:
-                    pend[i] = s
-        work = []
-        while next_idx in pend:
-            work.append(pend.pop(next_idx))
-            next_idx += 1
-        if work:
-            scan = carry + "".join(work)
-            scan_abs = next_idx - len(scan)
-            carry, n_matches, first_match = _scan(
-                scan, scan_abs, n_matches, first_match
-            )
-            t_cnt, t_first = _tail(carry, next_idx - len(carry))
-            yield pd.DataFrame(
-                {
-                    "conv_id": [key[0]],
-                    "n_turns": [next_idx],
-                    "n_matches": [n_matches + t_cnt],
-                    "first_match_turn": [
-                        first_match if first_match >= 0 else t_first
-                    ],
-                }
-            )
-        state.update(
-            (
-                next_idx,
-                sorted(pend),
-                "".join(pend[i] for i in sorted(pend)),
-                carry,
-                n_matches,
-                first_match,
-                last_us,
-            )
-        )
-        _arm_idle_timeout(state, last_us, idle_timeout_seconds)
+    def fold(self, acc, start: int, syms: str, mss: list):
+        carry, n_matches, first_match = acc
+        scan = carry + syms
+        p, cnt, first = self._scan(scan, start - len(carry), final=False)
+        return scan[p:], n_matches + cnt, first_match if first_match >= 0 else first
 
-    return fn
+    def emit(self, acc, n_turns: int):
+        # settled + an end-of-stream scan of the tiny carry (recomputed,
+        # never stored) == the batch scan of the prefix seen so far, so
+        # every emission is exact, not just the drained final one
+        carry, n_matches, first_match = acc
+        _, cnt, first = self._scan(carry, n_turns - len(carry), final=True)
+        return n_matches + cnt, first_match if first_match >= 0 else first
+
+
+CEP_STREAM_STATE_SCHEMA = _state_schema(_KleeneStep)
 
 
 def stream_cep_kleene(
@@ -705,21 +717,9 @@ def stream_cep_kleene(
     mode whenever the contiguous prefix advances.
     """
     l_min, l_max, lazy = parse_kleene_pattern(pattern, symbols)
-    return (
-        # guide §4.1: only the columns the state machine reads cross
-        # the Python boundary (text/tool payloads never ship per group)
-        stream.select("conv_id", "turn_idx", "role", "ts")
-        .withWatermark("ts", watermark)
-        .groupBy("conv_id")
-        .applyInPandasWithState(
-            _stream_cep_kleene_fn(
-                lazy, l_min, l_max, dict(symbols), idle_timeout_seconds
-            ),
-            outputStructType=CEP_STREAM_OUTPUT_SCHEMA,
-            stateStructType=CEP_STREAM_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+    return _stream_reassembled(
+        stream, _KleeneStep(lazy, l_min, l_max), watermark, symbols,
+        idle_timeout_seconds,
     )
 
 
@@ -740,9 +740,11 @@ def stream_cep_match(
     reaches them (sequence reassembly); consumed symbols are scanned
     left-to-right non-overlapping, and only the unmatched tail
     (< pattern length) is carried — so per-conversation state is
-    O(pattern + out-of-order gap), never O(conversation). Kleene
-    patterns (``tt+u``) need unbounded lookahead and stay batch-side in
-    :func:`cep_match`; the documented split.
+    O(pattern + out-of-order gap), never O(conversation). A literal is
+    the fixed-length case of :func:`stream_cep_kleene`'s scan. Bounded
+    quantifiers (``t{2,3}u``) stream through :func:`stream_cep_kleene`;
+    only unbounded ``+``/``*`` patterns (``tt+u``) need unbounded
+    lookahead and stay batch-side in :func:`cep_match`.
 
     Emits (conv_id, n_turns, n_matches, first_match_turn) in UPDATE
     mode whenever the contiguous prefix advances; after a full drain
@@ -758,133 +760,62 @@ def stream_cep_match(
     if not set(literal) <= alphabet:
         raise ValueError(f"literal {literal!r} uses symbols outside {sorted(alphabet)}")
     _check_pattern(literal, symbols)
-    return (
-        # guide §4.1: only the columns the state machine reads cross
-        # the Python boundary (text/tool payloads never ship per group)
-        stream.select("conv_id", "turn_idx", "role", "ts")
-        .withWatermark("ts", watermark)
-        .groupBy("conv_id")
-        .applyInPandasWithState(
-            _stream_cep_fn(literal, dict(symbols), idle_timeout_seconds),
-            outputStructType=CEP_STREAM_OUTPUT_SCHEMA,
-            stateStructType=CEP_STREAM_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
+    step = _KleeneStep(re.escape(literal), len(literal), len(literal))
+    return _stream_reassembled(stream, step, watermark, symbols, idle_timeout_seconds)
 
 
 # ---------------------------------------------------------------------------
 # streaming CEP negation — absence detection with bounded per-conv state
 # ---------------------------------------------------------------------------
 
-ABSENCE_STREAM_OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType()),
-        T.StructField("n_turns", T.LongType()),
-        T.StructField("n_triggers", T.LongType()),
-        T.StructField("n_dangling", T.LongType()),
-        T.StructField("first_dangling_turn", T.LongType()),
-    ]
-)
 
-#: open_idx = trigger turn positions still awaiting a response (all
-#: within k turns of the consumed prefix end, so |open_idx| <= k+1);
-#: counters never change once written
-ABSENCE_STREAM_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("next_idx", T.LongType()),
-        T.StructField("pend_idx", T.ArrayType(T.LongType())),
-        T.StructField("pend_sym", T.StringType()),
-        T.StructField("open_idx", T.ArrayType(T.LongType())),
+class _AbsenceStep:
+    """Count-based absence: a trigger is dangling when none of the
+    ``limit`` turns after it is a response."""
+
+    output = ABSENCE_STREAM_OUTPUT_SCHEMA
+    timed = False
+    #: open_idx = trigger turn positions still awaiting a response (all
+    #: within k turns of the consumed prefix end, so |open_idx| <= k+1);
+    #: counters never change once written
+    fields = [
+        T.StructField("open_idx", _LONG_ARRAY),
         T.StructField("n_triggers", T.LongType()),
         T.StructField("n_dangling", T.LongType()),
         T.StructField("first_dangling", T.LongType()),
-        T.StructField("last_us", T.LongType()),
     ]
-)
+    init = ([], 0, 0, -1)
 
+    def __init__(self, trig_sym: str, resp_sym: str, limit: int):
+        self.trig, self.resp, self.limit = trig_sym, resp_sym, limit
 
-def _stream_absence_fn(
-    trig_sym: str, resp_sym: str, k: int, symbols: dict[str, str],
-    idle_timeout_seconds: int,
-):
-    from vaero_spark.operators.state import _arm_idle_timeout, _pdf_max_us
-
-    def fn(
-        key: Tuple[Any, ...], pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()  # idle past the horizon = semantic close
-            return
-        if state.exists:
-            (next_idx, pend_idx, pend_sym, open_idx, n_trig, n_dang,
-             first_dang, last_us) = state.get
-            pend = dict(zip(pend_idx or [], pend_sym or ""))
-            open_t = list(open_idx or [])
-        else:
-            next_idx, n_trig, n_dang, first_dang, last_us = 0, 0, 0, -1, 0
-            pend, open_t = {}, []
-        for pdf in pdf_iter:
-            if not len(pdf):
-                continue
-            last_us = _pdf_max_us(pdf, last_us)
-            idxs = pdf["turn_idx"].to_numpy()
-            keep = idxs >= next_idx
-            syms = pdf["role"][keep].map(symbols).fillna(UNKNOWN_SYMBOL)
-            for i, s in zip(idxs[keep].tolist(), syms.tolist()):
-                if i not in pend:  # first arrival wins; late dups drop
-                    pend[i] = s
-        advanced = False
-        while next_idx in pend:
-            s = pend.pop(next_idx)
+    def fold(self, acc, start: int, syms: str, mss: list):
+        open_t, (n_trig, n_dang, first_dang) = list(acc[0]), acc[1:]
+        for idx, s in enumerate(syms, start):
             # settle expired triggers first: the k turns after them are
             # now fully seen with no response -> dangling, FINAL
-            while open_t and next_idx - open_t[0] > k:
+            while open_t and idx - open_t[0] > self.limit:
                 t = open_t.pop(0)
                 n_dang += 1
                 if first_dang < 0:
                     first_dang = t
-            if s == resp_sym:
+            if s == self.resp:
                 open_t.clear()  # every surviving open trigger is answered
-            if s == trig_sym:
+            if s == self.trig:
                 n_trig += 1
-                open_t.append(next_idx)
-            next_idx += 1
-            advanced = True
-        if advanced:
-            # fold in the end-of-stream view: open triggers have no
-            # response in the prefix seen so far, so the batch scan of
-            # this prefix counts them dangling (open_t is increasing
-            # and > every settled dangling index, so min folds cheaply)
-            emit_dang = n_dang + len(open_t)
-            emit_first = first_dang if first_dang >= 0 else (
-                open_t[0] if open_t else -1
-            )
-            yield pd.DataFrame(
-                {
-                    "conv_id": [key[0]],
-                    "n_turns": [next_idx],
-                    "n_triggers": [n_trig],
-                    "n_dangling": [emit_dang],
-                    "first_dangling_turn": [emit_first],
-                }
-            )
-        state.update(
-            (
-                next_idx,
-                sorted(pend),
-                "".join(pend[i] for i in sorted(pend)),
-                open_t,
-                n_trig,
-                n_dang,
-                first_dang,
-                last_us,
-            )
-        )
-        _arm_idle_timeout(state, last_us, idle_timeout_seconds)
+                open_t.append(idx)
+        return open_t, n_trig, n_dang, first_dang
 
-    return fn
+    def emit(self, acc, n_turns: int):
+        # fold in the end-of-stream view: open triggers have no response
+        # in the prefix seen so far, so its batch scan counts them
+        # dangling
+        open_idx, (n_trig, n_dang, first_dang) = acc[0], acc[-3:]
+        firsts = [t for t in (first_dang, *open_idx) if t >= 0]
+        return n_trig, n_dang + len(open_idx), min(firsts, default=-1)
+
+
+ABSENCE_STREAM_STATE_SCHEMA = _state_schema(_AbsenceStep)
 
 
 def stream_cep_absence(
@@ -926,138 +857,61 @@ def stream_cep_absence(
         raise ValueError("trigger and response roles must differ")
     if k < 1:
         raise ValueError("k must be >= 1")
-    trig_sym = symbols[trigger_role]
-    resp_sym = symbols[response_role]
-    return (
-        # guide §4.1: only the columns the state machine reads cross
-        # the Python boundary (text/tool payloads never ship per group)
-        stream.select("conv_id", "turn_idx", "role", "ts")
-        .withWatermark("ts", watermark)
-        .groupBy("conv_id")
-        .applyInPandasWithState(
-            _stream_absence_fn(
-                trig_sym, resp_sym, k, dict(symbols), idle_timeout_seconds
-            ),
-            outputStructType=ABSENCE_STREAM_OUTPUT_SCHEMA,
-            stateStructType=ABSENCE_STREAM_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
+    step = _AbsenceStep(symbols[trigger_role], symbols[response_role], k)
+    return _stream_reassembled(stream, step, watermark, symbols, idle_timeout_seconds)
 
 
 # ---------------------------------------------------------------------------
 # streaming time-bounded CEP — the within() clause as a live detector
 # ---------------------------------------------------------------------------
 
-WITHIN_STREAM_OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType()),
-        T.StructField("n_turns", T.LongType()),
-        T.StructField("n_within", T.LongType()),
-        T.StructField("first_within_turn", T.LongType()),
-    ]
-)
 
-#: carry_* = the last len(literal)-1 consumed turns (symbol chars +
-#: epoch-ms) — the only lookbehind a window ending at the next turn
-#: needs; pend_* buffers out-of-order arrivals as in the other machines
-WITHIN_STREAM_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("next_idx", T.LongType()),
-        T.StructField("pend_idx", T.ArrayType(T.LongType())),
-        T.StructField("pend_sym", T.StringType()),
-        T.StructField("pend_ms", T.ArrayType(T.LongType())),
+class _WithinStep:
+    """Sliding ``literal`` windows whose last turn is at most
+    ``max_span_ms`` after their first."""
+
+    output = WITHIN_STREAM_OUTPUT_SCHEMA
+    timed = True
+    #: carry_* = the last len(literal)-1 consumed turns (symbol chars +
+    #: epoch-ms) — the only lookbehind a window ending at the next turn
+    #: needs
+    fields = [
         T.StructField("carry_sym", T.StringType()),
-        T.StructField("carry_ms", T.ArrayType(T.LongType())),
+        T.StructField("carry_ms", _LONG_ARRAY),
         T.StructField("n_within", T.LongType()),
         T.StructField("first_within", T.LongType()),
-        T.StructField("last_us", T.LongType()),
     ]
-)
+    init = ("", [], 0, -1)
 
+    def __init__(self, literal: str, max_span_ms: int):
+        self.literal, self.max_span_ms = literal, max_span_ms
 
-def _stream_within_fn(
-    literal: str, max_span_ms: int, symbols: dict[str, str],
-    idle_timeout_seconds: int,
-):
-    from vaero_spark.operators.state import _arm_idle_timeout, _pdf_max_us
-
-    L = len(literal)
-
-    def fn(
-        key: Tuple[Any, ...], pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        if state.exists:
-            (next_idx, pend_idx, pend_sym, pend_ms, carry_sym, carry_ms,
-             n_within, first_within, last_us) = state.get
-            pend = {
-                i: (s, m)
-                for i, s, m in zip(pend_idx or [], pend_sym or "", pend_ms or [])
-            }
-            carry = list(zip(carry_sym or "", carry_ms or []))
-        else:
-            next_idx, n_within, first_within, last_us = 0, 0, -1, 0
-            pend, carry = {}, []
-        for pdf in pdf_iter:
-            if not len(pdf):
-                continue
-            last_us = _pdf_max_us(pdf, last_us)
-            idxs = pdf["turn_idx"].to_numpy()
-            keep = idxs >= next_idx
-            syms = pdf["role"][keep].map(symbols).fillna(UNKNOWN_SYMBOL)
-            tsk = pdf["ts"][keep]
-            # unit-dispatched ms conversion (ADVICE r6: never assume us/ns)
-            mss = _ts_to_ms(tsk).tolist()
-            for i, s, m in zip(idxs[keep].tolist(), syms.tolist(), mss):
-                if i not in pend:  # first arrival wins; late dups drop
-                    pend[i] = (s, m)
-        advanced = False
-        while next_idx in pend:
-            s, m = pend.pop(next_idx)
-            window = carry + [(s, m)]
-            # a sliding start settles the moment its window completes:
-            # symbols already seen, span check pure arithmetic — every
-            # emission equals the batch lead-chain on the seen prefix
+    def fold(self, acc, start: int, syms: str, mss: list):
+        carry_sym, carry_ms, n_within, first_within = acc
+        seq, ms = carry_sym + syms, list(carry_ms) + mss
+        base, tail = start - len(carry_sym), len(self.literal) - 1
+        # a sliding start settles the moment its window completes:
+        # symbols already seen, span check pure arithmetic — every
+        # emission equals the batch lead-chain on the seen prefix. The
+        # carry is < len(literal), so each window ends in the new run.
+        for p in range(len(seq) - tail):
+            t0, t1 = ms[p], ms[p + tail]
             if (
-                len(window) == L
-                and "".join(c for c, _ in window) == literal
-                and window[-1][1] - window[0][1] <= max_span_ms
+                seq.startswith(self.literal, p)
+                and t0 is not None
+                and t1 is not None  # a null end is no hit, as in the batch
+                and t1 - t0 <= self.max_span_ms
             ):
                 n_within += 1
                 if first_within < 0:
-                    first_within = next_idx - L + 1
-            carry = window[-(L - 1):] if L > 1 else []
-            next_idx += 1
-            advanced = True
-        if advanced:
-            yield pd.DataFrame(
-                {
-                    "conv_id": [key[0]],
-                    "n_turns": [next_idx],
-                    "n_within": [n_within],
-                    "first_within_turn": [first_within],
-                }
-            )
-        state.update(
-            (
-                next_idx,
-                sorted(pend),
-                "".join(pend[i][0] for i in sorted(pend)),
-                [pend[i][1] for i in sorted(pend)],
-                "".join(c for c, _ in carry),
-                [m for _, m in carry],
-                n_within,
-                first_within,
-                last_us,
-            )
-        )
-        _arm_idle_timeout(state, last_us, idle_timeout_seconds)
+                    first_within = base + p
+        return seq[-tail:], ms[-tail:], n_within, first_within
 
-    return fn
+    def emit(self, acc, n_turns: int):
+        return acc[2:]
+
+
+WITHIN_STREAM_STATE_SCHEMA = _state_schema(_WithinStep)
 
 
 def stream_cep_within(
@@ -1089,22 +943,9 @@ def stream_cep_within(
         raise ValueError(f"literal {literal!r} uses symbols outside the alphabet")
     if max_span_s < 0:
         raise ValueError("max_span_s must be >= 0")
-    return (
-        # guide §4.1: only the columns the state machine reads cross
-        # the Python boundary (text/tool payloads never ship per group)
-        stream.select("conv_id", "turn_idx", "role", "ts")
-        .withWatermark("ts", watermark)
-        .groupBy("conv_id")
-        .applyInPandasWithState(
-            _stream_within_fn(
-                literal, max_span_s * 1000, dict(symbols), idle_timeout_seconds
-            ),
-            outputStructType=WITHIN_STREAM_OUTPUT_SCHEMA,
-            stateStructType=WITHIN_STREAM_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
+    step = _WithinStep(literal, max_span_s * 1000)
+    return _stream_reassembled(stream, step, watermark, symbols, idle_timeout_seconds)
+
 
 
 # ---------------------------------------------------------------------------
@@ -1301,107 +1142,49 @@ def cep_absence_time_sql(
     WHERE n_dangling > 0"""
 
 
-ABSENCE_TIME_STREAM_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("next_idx", T.LongType()),
-        T.StructField("pend_idx", T.ArrayType(T.LongType())),
-        T.StructField("pend_sym", T.StringType()),
-        T.StructField("pend_ms", T.ArrayType(T.LongType())),
-        T.StructField("open_idx", T.ArrayType(T.LongType())),
-        T.StructField("open_ms", T.ArrayType(T.LongType())),
+class _AbsenceTimeStep(_AbsenceStep):
+    """Time-based absence: a trigger is dangling when no later response
+    comes within ``limit`` ms of it. Null event times follow the batch
+    twin's NULL arithmetic: a ``None``-time response answers nothing,
+    and a ``None``-time trigger never expires by time — it stays open
+    until a timed response answers it."""
+
+    timed = True
+    fields = [
+        T.StructField("open_idx", _LONG_ARRAY),
+        T.StructField("open_ms", _LONG_ARRAY),
         T.StructField("n_triggers", T.LongType()),
         T.StructField("n_dangling", T.LongType()),
         T.StructField("first_dangling", T.LongType()),
-        T.StructField("last_us", T.LongType()),
     ]
-)
+    init = ([], [], 0, 0, -1)
 
-
-def _stream_absence_time_fn(
-    trig_sym: str, resp_sym: str, max_wait_ms: int, symbols: dict[str, str],
-    idle_timeout_seconds: int,
-):
-    from vaero_spark.operators.state import _arm_idle_timeout, _pdf_max_us
-
-    def fn(
-        key: Tuple[Any, ...], pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        if state.exists:
-            (next_idx, pend_idx, pend_sym, pend_ms, open_idx, open_ms,
-             n_trig, n_dang, first_dang, last_us) = state.get
-            pend = {
-                i: (s, m)
-                for i, s, m in zip(pend_idx or [], pend_sym or "", pend_ms or [])
-            }
-            open_t = list(zip(open_idx or [], open_ms or []))
-        else:
-            next_idx, n_trig, n_dang, first_dang, last_us = 0, 0, 0, -1, 0
-            pend, open_t = {}, []
-        for pdf in pdf_iter:
-            if not len(pdf):
-                continue
-            last_us = _pdf_max_us(pdf, last_us)
-            idxs = pdf["turn_idx"].to_numpy()
-            keep = idxs >= next_idx
-            syms = pdf["role"][keep].map(symbols).fillna(UNKNOWN_SYMBOL)
-            tsk = pdf["ts"][keep]
-            # unit-dispatched ms conversion (ADVICE r6: never assume us/ns)
-            for i, s, m in zip(idxs[keep].tolist(), syms.tolist(), _ts_to_ms(tsk).tolist()):
-                if i not in pend:
-                    pend[i] = (s, m)
-        advanced = False
-        while next_idx in pend:
-            s, m = pend.pop(next_idx)
-            # per-conv ts is non-decreasing in turn order (the canonical
-            # derivation orders turn_idx by ts), so once THIS turn is
-            # past a trigger's deadline every earlier turn was too:
-            # the trigger's wait window is fully seen -> dangling, FINAL
-            while open_t and m - open_t[0][1] > max_wait_ms:
-                t_idx, _ = open_t.pop(0)
-                n_dang += 1
-                if first_dang < 0:
-                    first_dang = t_idx
-            if s == resp_sym:
-                open_t.clear()  # every survivor answered within the wait
-            if s == trig_sym:
+    def fold(self, acc, start: int, syms: str, mss: list):
+        open_t = list(zip(acc[0], acc[1]))
+        n_trig, n_dang, first_dang = acc[2:]
+        for idx, s, m in zip(count(start), syms, mss):
+            if m is not None:
+                # per-conv ts is non-decreasing in turn order (the
+                # canonical derivation orders turn_idx by ts), so once
+                # THIS turn is past a trigger's deadline every earlier
+                # turn was too: the trigger's wait window is fully seen
+                # -> dangling, FINAL. Timed triggers expire in turn
+                # order, so the first one settled is the smallest.
+                expired = [i for i, t in open_t if t is not None and m - t > self.limit]
+                if expired:
+                    n_dang += len(expired)
+                    if first_dang < 0:
+                        first_dang = expired[0]
+                    open_t = [(i, t) for i, t in open_t if i not in expired]
+                if s == self.resp:
+                    open_t = []  # every survivor answered within the wait
+            if s == self.trig:
                 n_trig += 1
-                open_t.append((next_idx, m))
-            next_idx += 1
-            advanced = True
-        if advanced:
-            emit_dang = n_dang + len(open_t)
-            emit_first = first_dang if first_dang >= 0 else (
-                open_t[0][0] if open_t else -1
-            )
-            yield pd.DataFrame(
-                {
-                    "conv_id": [key[0]],
-                    "n_turns": [next_idx],
-                    "n_triggers": [n_trig],
-                    "n_dangling": [emit_dang],
-                    "first_dangling_turn": [emit_first],
-                }
-            )
-        state.update(
-            (
-                next_idx,
-                sorted(pend),
-                "".join(pend[i][0] for i in sorted(pend)),
-                [pend[i][1] for i in sorted(pend)],
-                [i for i, _ in open_t],
-                [m for _, m in open_t],
-                n_trig,
-                n_dang,
-                first_dang,
-                last_us,
-            )
-        )
-        _arm_idle_timeout(state, last_us, idle_timeout_seconds)
+                open_t.append((idx, m))
+        return [i for i, _ in open_t], [t for _, t in open_t], n_trig, n_dang, first_dang
 
-    return fn
+
+ABSENCE_TIME_STREAM_STATE_SCHEMA = _state_schema(_AbsenceTimeStep)
 
 
 def stream_cep_absence_time(
@@ -1425,7 +1208,9 @@ def stream_cep_absence_time(
     (+ the disorder buffer); each emission folds open triggers in as
     dangling-at-prefix-end, so every emission equals the batch scan of
     the seen prefix, and drained == :func:`cep_absence_time` row for
-    row (same SQL oracle).
+    row (same SQL oracle). Null ``ts`` follows the batch twin: a
+    null-time response answers nothing, and a null-time trigger is
+    dangling unless some later timed response exists.
 
     Emits (conv_id, n_turns, n_triggers, n_dangling,
     first_dangling_turn) in UPDATE mode on contiguous-prefix advance.
@@ -1442,22 +1227,7 @@ def stream_cep_absence_time(
         raise ValueError("trigger and response roles must differ")
     if max_wait_s < 0:
         raise ValueError("max_wait_s must be >= 0")
-    trig_sym = symbols[trigger_role]
-    resp_sym = symbols[response_role]
-    return (
-        # guide §4.1: only the columns the state machine reads cross
-        # the Python boundary (text/tool payloads never ship per group)
-        stream.select("conv_id", "turn_idx", "role", "ts")
-        .withWatermark("ts", watermark)
-        .groupBy("conv_id")
-        .applyInPandasWithState(
-            _stream_absence_time_fn(
-                trig_sym, resp_sym, max_wait_s * 1000, dict(symbols),
-                idle_timeout_seconds,
-            ),
-            outputStructType=ABSENCE_STREAM_OUTPUT_SCHEMA,
-            stateStructType=ABSENCE_TIME_STREAM_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+    step = _AbsenceTimeStep(
+        symbols[trigger_role], symbols[response_role], max_wait_s * 1000
     )
+    return _stream_reassembled(stream, step, watermark, symbols, idle_timeout_seconds)

@@ -13,7 +13,6 @@ state per key is O(1) scalars or a bounded set.
 
 from __future__ import annotations
 
-import os
 from typing import Any, Iterator, Tuple
 
 import pandas as pd
@@ -22,9 +21,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql import types as T
-
-# benchmark A/B knob only — see _arm_idle_timeout docstring
-_DISABLE_ARMING = os.environ.get("VAERO_DISABLE_IDLE_EVICTION") == "1"
 
 # ---------------------------------------------------------------------------
 # open-session tracking (time-cap flush parity, event-time based)
@@ -205,15 +201,8 @@ def _arm_idle_timeout(state: GroupState, last_us: int, idle_s: int) -> None:
     is NOT armed: max(1970+idle, wm+1) degenerates to wm+1 — an
     immediately-expiring timeout that would evict the seen-set /
     counters on the very next batch, re-admitting duplicates. Such a
-    key keeps NoTimeout behavior until a real timestamp arrives.
-
-    ``VAERO_DISABLE_IDLE_EVICTION=1`` is a benchmark-A/B-only knob
-    (``tools/ab_eviction.py``): it skips arming so the per-key
-    ``setTimeoutTimestamp`` cost can be measured against an otherwise
-    identical run. Never set it in production — per-key state then
-    grows without bound. (Read at worker import time: local-mode Python
-    workers inherit the driver's environment.)"""
-    if last_us == 0 or _DISABLE_ARMING:
+    key keeps NoTimeout behavior until a real timestamp arrives."""
+    if last_us == 0:
         return
     state.setTimeoutTimestamp(
         max(
