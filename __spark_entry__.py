@@ -13,8 +13,10 @@ every transcript-operator oracle rebuilds the identical input.
 
 from __future__ import annotations
 
+import datetime
 import sys
 from collections.abc import Callable
+from functools import partial
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -35,9 +37,11 @@ from vaero_spark.operators.joins import asof_join_last_user, user_tool_join
 from vaero_spark.operators.skew import salted_agg
 from vaero_spark.operators import windows as WINDOWS
 from vaero_spark.operators.windows import session_windows, windowed_counts
+from vaero_spark.sinks.writers import ExactlyOnceParquetSink, MemorySink
 from vaero_spark.sources import corpus as CORPUS
 from vaero_spark.sources.transcripts import (
     TRANSCRIPTS_ORACLE_CTE,
+    TRANSCRIPTS_SCHEMA,
     TRANSCRIPTS_WITH_DUPES_ORACLE_CTE,
     load_table,
     load_transcripts,
@@ -248,15 +252,8 @@ def _gate_stream_input(spark, sf_dir, variant: str) -> str:
       EARLIER micro-batches than the rows they supersede — the
       out-of-order delivery ``stream_upsert`` must absorb.
     """
-    import datetime
     import os
     import tempfile
-
-    from vaero_spark.sources.transcripts import (
-        TRANSCRIPTS_SCHEMA,
-        load_transcripts,
-        load_transcripts_with_dupes,
-    )
 
     # key the cache on the SOURCE parquet's identity too, so a
     # regenerated testdata dir can never serve a stale cached input
@@ -323,55 +320,25 @@ def _gate_stream_input(spark, sf_dir, variant: str) -> str:
     return inp
 
 
-def _stream_state_partitions(input_path: str | None = None, floor: int = 8) -> int:
-    """State-store partition count for a gate's streaming drain, SIZED TO
-    STATE VOLUME rather than the session's batch shuffle width (guide §2:
-    partitioning must be scale-adaptive, not a constant tuned to the local
-    core count). Every micro-batch of a stateful streaming query pays a
-    per-store fixed cost (open/commit of each state store instance —
-    RocksDB under the bench config) TIMES the shuffle-partition count; at
-    gate volume that fixed cost dominates the data (r6 measured the
-    stream-stream outer join at 26.6 s with 32 partitions vs 6.3 s with 8,
-    identical rows). Derivation: one partition per 256 MB of stream input
-    with a floor of 8 — gate inputs yield the floor, petabyte streams get
-    width. ``VAERO_STREAM_STATE_PARTITIONS`` overrides for production
-    tuning."""
-    import os
-
-    env = os.environ.get("VAERO_STREAM_STATE_PARTITIONS")
-    if env:
-        return int(env)
-    size = 0
-    if input_path is not None:
-        for root, _dirs, files in os.walk(input_path):
-            for fname in files:
-                try:
-                    size += os.path.getsize(os.path.join(root, fname))
-                except OSError:
-                    pass
-    return max(floor, size // (256 << 20))
-
-
 class _pinned_state_partitions:
     """Context manager: pin ``spark.sql.shuffle.partitions`` (which fixes
     the streaming state-store partition count at query start) around a
-    gate's drain, restoring the session value after — the r6 06f9cea
-    sizing (VERDICT r6 #3), applied to the JVM-NATIVE-state gates only.
+    gate's drain, restoring the session value after.
 
-    Measured r7 (ABBA, order-balanced, CPU probes healthy): native state
-    ops (dropDuplicates, session/window aggs, stream-stream joins) are
-    per-store-fixed-cost bound and speed up 1.2-1.7x at 8 partitions
-    (w_distinct 8.7→5.3 s, session_native 10.1→8.6 s); the
-    ``applyInPandasWithState`` gates are bound by per-GROUP Python
-    invocation cost, which executor-width parallelism amortizes — the
-    same pin makes them 2-3x SLOWER (open_sessions 26→50-61 s, counters
-    13.6→30-45 s, cep 13.3→30-39 s), so those gates keep the session
-    width and get guide §4.1 column pruning inside the operators
-    instead."""
+    The count is SIZED TO STATE VOLUME rather than the session's batch
+    shuffle width (guide §2: partitioning must be scale-adaptive, not a
+    constant tuned to the local core count): one partition per 256 MB of
+    stream input, floor 8, so gate inputs yield the floor and petabyte
+    streams get width. The input is measured through Hadoop FS, so
+    ``file://``, ``s3a://`` and ``hdfs://`` URIs size like local paths."""
 
-    def __init__(self, spark, input_path: str | None = None):
+    def __init__(self, spark, input_path: str):
+        from vaero_spark.sinks.fs import _jvm_fs
+
+        fs, jpath, _ = _jvm_fs(spark, input_path)
         self.spark = spark
-        self.n = _stream_state_partitions(input_path)
+        self.bytes = fs.getContentSummary(jpath).getLength()
+        self.n = max(8, self.bytes // (256 << 20))
 
     def __enter__(self):
         self.old = self.spark.conf.get("spark.sql.shuffle.partitions")
@@ -383,35 +350,99 @@ class _pinned_state_partitions:
         return False
 
 
-def _stream_transcripts(spark, sf_dir, branch_fns, common_fn=None):
+def _drain_gate(
+    spark, build, *, mode, pin, inp=None, backlog=None, schema=TRANSCRIPTS_SCHEMA,
+    max_files=4, sink=None, sentinel=None,
+):
+    """Drain one streaming gate: file source → ``build(src)`` → sink, the
+    one runner every ``writeStream`` gate shares (the reference wires
+    each pipeline as source → transform → sink the same way). Returns
+    the sink; the gate reads it back.
+
+    - ``inp``: the gate input directory (``_gate_stream_input``), read
+      with ``schema``, ``max_files`` files per trigger (``None``: the
+      whole directory as one batch).
+    - ``backlog``: instead of ``inp``, a DataFrame written to
+      ``<work>/in`` first. Its files are still read with ``schema``,
+      not the frame's own: transcripts' NTZ ``ts`` cannot carry an
+      event-time watermark.
+    - ``sentinel(max_ts)``: rows in ``schema`` appended to a backlog
+      after the first drain (``max_ts`` = the backlog's max ``ts``),
+      then drained again — the watermark jumps and every held window,
+      session or unmatched join row flushes.
+    - ``sink``: called with ``<work>/out`` to build the sink (e.g.
+      ``ExactlyOnceParquetSink``); default a fresh :class:`MemorySink`.
+    - ``pin``: pin the state-store partitions with
+      :class:`_pinned_state_partitions` for the drain. Measured r7
+      (ABBA, order-balanced, CPU probes healthy): JVM-native state ops
+      (dropDuplicates, window/session aggs, stream-stream joins) are
+      per-store-fixed-cost bound and speed up 1.2-1.7x at 8 partitions
+      (w_distinct 8.7→5.3 s, session_native 10.1→8.6 s; r6: the outer
+      join 26.6 s at 32 partitions vs 6.3 s at 8, same rows), so they
+      pin. ``applyInPandasWithState`` gates are bound by per-GROUP
+      Python invocation cost, which executor width amortizes — the same
+      pin makes them 2-3x SLOWER (open_sessions 26→50-61 s, counters
+      13.6→30-45 s, cep 13.3→30-39 s) — and ``stream_trending``'s
+      per-batch JVM tokenize+explode is compute-bound (pinned 14.4 vs
+      11.6 s): both keep the session width.
+    """
+    import contextlib
     import tempfile
 
-    from vaero_spark.sinks.writers import ExactlyOnceParquetSink
-    from vaero_spark.sources.transcripts import transcripts_stream
-    from vaero_spark.streaming.engine import run_streaming_fanout
-
-    work = tempfile.mkdtemp(prefix="vaero_q_stream_")
-    inp = _gate_stream_input(spark, sf_dir, "plain")
-    src = transcripts_stream(spark, inp, max_files_per_trigger=4)  # >1 epoch
-    sinks = {n: ExactlyOnceParquetSink(f"{work}/{n}") for n in branch_fns}
-    with _pinned_state_partitions(spark, inp):
-        pipe = run_streaming_fanout(
-            spark, src, branch_fns, lambda n: sinks[n], f"{work}/ckpt",
-            common_fn=common_fn,
+    work = tempfile.mkdtemp(prefix="vaero_gate_")
+    if backlog is not None:
+        inp = f"{work}/in"
+        backlog.write.parquet(inp)
+        if sentinel is not None:
+            max_ts = backlog.agg(F.max("ts")).first()[0]
+    reader = spark.readStream.schema(schema)
+    if max_files is not None:
+        reader = reader.option("maxFilesPerTrigger", str(max_files))
+    src = reader.parquet(inp)
+    sink = MemorySink() if sink is None else sink(f"{work}/out")
+    with _pinned_state_partitions(spark, inp) if pin else contextlib.nullcontext():
+        q = (
+            build(src)
+            .writeStream.outputMode(mode)
+            .option("checkpointLocation", f"{work}/ckpt")
+            .foreachBatch(sink.foreach_batch())
+            .start()
         )
-        pipe.process_all()
-        pipe.stop()
-    outs = [s.read_committed(spark).drop("prefix", "epoch") for s in sinks.values()]
-    df = outs[0]
-    for o in outs[1:]:
-        df = df.unionByName(o)
-    return df
+        try:
+            q.processAllAvailable()
+            if sentinel is not None:
+                spark.createDataFrame(sentinel(max_ts), schema).write.mode(
+                    "append"
+                ).parquet(inp)
+                q.processAllAvailable()
+        finally:
+            q.stop()
+    return sink
+
+
+def _last_emission(sink, *key) -> list:
+    """Update-mode collapse of a drained :class:`MemorySink`: for each
+    ``key`` value, the rows of the latest epoch that emitted it (one row
+    for the single-row gates: ``applyInPandasWithState`` calls the state
+    function at most once per key per micro-batch)."""
+    final: dict = {}
+    for _, rows in sorted(sink.batches):
+        epoch: dict = {}
+        for r in rows:
+            epoch.setdefault(tuple(r[k] for k in key), []).append(r)
+        final.update(epoch)
+    return [r for rs in final.values() for r in rs]
 
 
 def q_stream_pipeline(spark, sf_dir):
     """Full streaming tap→transform→route→sink pipeline, drained through
     checkpointed exactly-once parquet sinks; output must match the pure
     SQL oracle — streamed rows == batch rows, the parity invariant."""
+    import tempfile
+
+    from vaero_spark.sources.transcripts import transcripts_stream
+    from vaero_spark.streaming.engine import run_streaming_fanout
+
     def common(df):
         df = TR.mask(df, "text", EMAIL_RE, "<EMAIL>")
         df = TR.parse_regexp(df, "text", "k=(?<kval>[0-9]+)")
@@ -421,35 +452,34 @@ def q_stream_pipeline(spark, sf_dir):
         "tools": lambda b: TR.add(b.filter(F.col("role") == "tool"), "route", "tools"),
         "rest": lambda b: TR.add(b.filter(F.col("role") != "tool"), "route", "rest"),
     }
-    return _stream_transcripts(spark, sf_dir, branches, common_fn=common)
+    work = tempfile.mkdtemp(prefix="vaero_q_stream_")
+    inp = _gate_stream_input(spark, sf_dir, "plain")
+    src = transcripts_stream(spark, inp, max_files_per_trigger=4)  # >1 epoch
+    sinks = {n: ExactlyOnceParquetSink(f"{work}/{n}") for n in branches}
+    with _pinned_state_partitions(spark, inp):
+        pipe = run_streaming_fanout(
+            spark, src, branches, lambda n: sinks[n], f"{work}/ckpt",
+            common_fn=common,
+        )
+        try:
+            pipe.process_all()
+        finally:
+            pipe.stop()
+    tools, rest = (
+        s.read_committed(spark).drop("prefix", "epoch") for s in sinks.values()
+    )
+    return tools.unionByName(rest)
 
 
 def q_stream_dedup(spark, sf_dir):
     """Streaming dropDuplicates over the duped fixture: state-store dedup
     across micro-batches (a duplicate arriving in a later epoch than its
     original must still be dropped)."""
-    import tempfile
-
-    from vaero_spark.sinks.writers import ExactlyOnceParquetSink
-    from vaero_spark.sources.transcripts import TRANSCRIPTS_SCHEMA
-
-    work = tempfile.mkdtemp(prefix="vaero_q_sdedup_")
-    inp = _gate_stream_input(spark, sf_dir, "dupes")
-    src = (
-        spark.readStream.schema(TRANSCRIPTS_SCHEMA)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(inp)
+    sink = _drain_gate(
+        spark, lambda src: src.dropDuplicates(["conv_id", "turn_idx"]),
+        mode="append", pin=True, inp=_gate_stream_input(spark, sf_dir, "dupes"),
+        sink=ExactlyOnceParquetSink,
     )
-    sink = ExactlyOnceParquetSink(f"{work}/out")
-    with _pinned_state_partitions(spark, inp):
-        q = (
-            src.dropDuplicates(["conv_id", "turn_idx"])
-            .writeStream.option("checkpointLocation", f"{work}/ckpt")
-            .foreachBatch(sink.foreach_batch())
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
     return sink.read_committed(spark).drop("prefix", "epoch")
 
 
@@ -459,29 +489,14 @@ def q_stream_dedup_wm(spark, sf_dir):
     the shape that survives 10^12 turns, vs dropDuplicates' forever-state
     (`stream_dedup`). On the gate fixture every duplicate arrives within
     the horizon, so the result equals full dedup bit-for-bit."""
-    import tempfile
-
-    from vaero_spark.sinks.writers import ExactlyOnceParquetSink
-    from vaero_spark.sources.transcripts import TRANSCRIPTS_SCHEMA
-
-    work = tempfile.mkdtemp(prefix="vaero_q_sdedupwm_")
-    inp = _gate_stream_input(spark, sf_dir, "dupes")
-    src = (
-        spark.readStream.schema(TRANSCRIPTS_SCHEMA)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(inp)
+    sink = _drain_gate(
+        spark,
+        lambda src: src.withWatermark("ts", "60 days").dropDuplicatesWithinWatermark(
+            ["conv_id", "turn_idx"]
+        ),
+        mode="append", pin=True, inp=_gate_stream_input(spark, sf_dir, "dupes"),
+        sink=ExactlyOnceParquetSink,
     )
-    sink = ExactlyOnceParquetSink(f"{work}/out")
-    with _pinned_state_partitions(spark, inp):
-        q = (
-            src.withWatermark("ts", "60 days")
-            .dropDuplicatesWithinWatermark(["conv_id", "turn_idx"])
-            .writeStream.option("checkpointLocation", f"{work}/ckpt")
-            .foreachBatch(sink.foreach_batch())
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
     return sink.read_committed(spark).drop("prefix", "epoch")
 
 
@@ -496,30 +511,12 @@ def q_stream_session(spark, sf_dir):
     mechanics. Watermark delay (60 days) exceeds the corpus time span,
     so no real row is ever late-dropped regardless of file→batch order.
     """
-    import tempfile
-
-    from vaero_spark.operators.windows import session_windows
-    from vaero_spark.sinks.writers import ExactlyOnceParquetSink
-    from vaero_spark.sources.transcripts import TRANSCRIPTS_SCHEMA
-
-    work = tempfile.mkdtemp(prefix="vaero_q_ssess_")
-    inp = _gate_stream_input(spark, sf_dir, "session")
-    src = (
-        spark.readStream.schema(TRANSCRIPTS_SCHEMA)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(inp)
+    sink = _drain_gate(
+        spark,
+        lambda src: session_windows(src.withWatermark("ts", "60 days"), "30 minutes"),
+        mode="append", pin=True, inp=_gate_stream_input(spark, sf_dir, "session"),
+        sink=partial(ExactlyOnceParquetSink, ts_col="min_ts", order_cols=("conv_id",)),
     )
-    win = session_windows(src.withWatermark("ts", "60 days"), "30 minutes")
-    sink = ExactlyOnceParquetSink(f"{work}/out", ts_col="min_ts", order_cols=("conv_id",))
-    with _pinned_state_partitions(spark, inp):
-        q = (
-            win.writeStream.outputMode("append")
-            .option("checkpointLocation", f"{work}/ckpt")
-            .foreachBatch(sink.foreach_batch())
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
     return (
         sink.read_committed(spark)
         .drop("epoch", "prefix")
@@ -535,40 +532,22 @@ def q_stream_join(spark, sf_dir):
     bit-for-bit against the same oracle as `j_user_tool`. The 60-day
     watermark exceeds the corpus span: nothing is late-dropped, state
     eviction mechanics still run."""
-    import tempfile
-
     from vaero_spark.operators.joins import streaming_user_tool_join
-    from vaero_spark.sinks.writers import ExactlyOnceParquetSink
-    from vaero_spark.sources.transcripts import TRANSCRIPTS_SCHEMA
 
-    work = tempfile.mkdtemp(prefix="vaero_q_sjoin_")
-    inp = _gate_stream_input(spark, sf_dir, "plain")
-    src = (
-        spark.readStream.schema(TRANSCRIPTS_SCHEMA)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(inp)
+    sink = _drain_gate(
+        spark,
+        lambda src: streaming_user_tool_join(
+            src, watermark="60 days", max_lag="4 hours"
+        ),
+        mode="append", pin=True, inp=_gate_stream_input(spark, sf_dir, "plain"),
+        sink=partial(
+            ExactlyOnceParquetSink,
+            ts_col="user_ts",
+            order_cols=("conv_id", "user_turn", "tool_turn"),
+        ),
     )
-    joined = streaming_user_tool_join(src, watermark="60 days", max_lag="4 hours")
-    sink = ExactlyOnceParquetSink(
-        f"{work}/out", ts_col="user_ts", order_cols=("conv_id", "user_turn", "tool_turn")
-    )
-    with _pinned_state_partitions(spark, inp):
-        q = (
-            joined.writeStream.outputMode("append")
-            .option("checkpointLocation", f"{work}/ckpt")
-            .foreachBatch(sink.foreach_batch())
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-    out = sink.read_committed(spark).drop("epoch", "prefix")
-    return out.select(
-        "conv_id",
-        F.col("user_turn").alias("user_turn"),
-        "user_ts",
-        F.col("tool_turn").alias("tool_turn"),
-        "tool_name",
-        "tool_ts",
+    return sink.read_committed(spark).select(
+        "conv_id", "user_turn", "user_ts", "tool_turn", "tool_name", "tool_ts"
     )
 
 
@@ -578,35 +557,14 @@ def q_stream_counters(spark, sf_dir):
     of the north star): drain the stream, keep each conversation's LAST
     emission; the final counters must equal a batch GROUP BY —
     bit-for-bit against the SQL oracle."""
-    import tempfile
-
     from vaero_spark.operators.state import routing_counters
-    from vaero_spark.sinks.writers import MemorySink
-    from vaero_spark.sources.transcripts import TRANSCRIPTS_SCHEMA
 
-    work = tempfile.mkdtemp(prefix="vaero_q_scnt_")
-    inp = _gate_stream_input(spark, sf_dir, "plain")
-    src = (
-        spark.readStream.schema(TRANSCRIPTS_SCHEMA)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(inp)
+    sink = _drain_gate(
+        spark, lambda src: routing_counters(src, watermark="60 days"),
+        mode="update", pin=False, inp=_gate_stream_input(spark, sf_dir, "plain"),
     )
-    sink = MemorySink()
-    q = (
-        routing_counters(src, watermark="60 days")
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", f"{work}/ckpt")
-        .foreachBatch(sink.foreach_batch())
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    final = {}  # update mode: later epochs supersede earlier emissions
-    for epoch_id, rows in sorted(sink.batches):
-        for r in rows:
-            final[r.conv_id] = r
     return spark.createDataFrame(
-        list(final.values()),
+        _last_emission(sink, "conv_id"),
         "conv_id string, n_total long, n_user long, n_tool long, n_error long",
     )
 
@@ -618,36 +576,14 @@ def q_stream_cep(spark, sf_dir):
     carry state, update-mode emissions. After the drain the last
     emission per conversation must equal the batch regex operator —
     an EXACT SQL oracle for the streaming state machine."""
-    import tempfile
-
-    from vaero_spark.operators.cep import stream_cep_match
-    from vaero_spark.sinks.writers import MemorySink
-    from vaero_spark.sources.transcripts import TRANSCRIPTS_SCHEMA
-
-    work = tempfile.mkdtemp(prefix="vaero_q_scep_")
-    inp = _gate_stream_input(spark, sf_dir, "plain")
-    src = (
-        spark.readStream.schema(TRANSCRIPTS_SCHEMA)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(inp)
+    sink = _drain_gate(
+        spark,
+        lambda src: CEP.stream_cep_match(src, CEP_STREAM_LITERAL, watermark="60 days"),
+        mode="update", pin=False, inp=_gate_stream_input(spark, sf_dir, "plain"),
     )
-    sink = MemorySink()
-    q = (
-        stream_cep_match(src, CEP_STREAM_LITERAL, watermark="60 days")
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", f"{work}/ckpt")
-        .foreachBatch(sink.foreach_batch())
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    final = {}  # update mode: later epochs supersede earlier emissions
-    for epoch_id, rows in sorted(sink.batches):
-        for r in rows:
-            final[r.conv_id] = r
     matched = [
         (r.conv_id, r.n_turns, r.n_matches, r.first_match_turn)
-        for r in final.values()
+        for r in _last_emission(sink, "conv_id")
         if r.n_matches > 0
     ]
     return spark.createDataFrame(
@@ -663,36 +599,14 @@ def q_stream_cep_kleene(spark, sf_dir):
     so the drained last emission equals the batch regex operator with
     the reluctant pattern 't{1,3}?u' EXACTLY (hash-gated SQL oracle
     for a stateful Kleene matcher)."""
-    import tempfile
-
-    from vaero_spark.operators.cep import stream_cep_kleene
-    from vaero_spark.sinks.writers import MemorySink
-    from vaero_spark.sources.transcripts import TRANSCRIPTS_SCHEMA
-
-    work = tempfile.mkdtemp(prefix="vaero_q_sck_")
-    inp = _gate_stream_input(spark, sf_dir, "plain")
-    src = (
-        spark.readStream.schema(TRANSCRIPTS_SCHEMA)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(inp)
+    sink = _drain_gate(
+        spark,
+        lambda src: CEP.stream_cep_kleene(src, CEP_KLEENE_PATTERN, watermark="60 days"),
+        mode="update", pin=False, inp=_gate_stream_input(spark, sf_dir, "plain"),
     )
-    sink = MemorySink()
-    q = (
-        stream_cep_kleene(src, CEP_KLEENE_PATTERN, watermark="60 days")
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", f"{work}/ckpt")
-        .foreachBatch(sink.foreach_batch())
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    final = {}  # update mode: later epochs supersede earlier emissions
-    for epoch_id, rows in sorted(sink.batches):
-        for r in rows:
-            final[r.conv_id] = r
     matched = [
         (r.conv_id, r.n_turns, r.n_matches, r.first_match_turn)
-        for r in final.values()
+        for r in _last_emission(sink, "conv_id")
         if r.n_matches > 0
     ]
     return spark.createDataFrame(
@@ -707,29 +621,13 @@ def q_stream_open_sessions(spark, sf_dir):
     sentinel closes every session via watermark timeout; the emitted
     closed=True rows must equal the batch session windows — an exact
     SQL oracle for the stateful operator itself."""
-    import tempfile
-
     from vaero_spark.operators.state import track_open_sessions
-    from vaero_spark.sinks.writers import MemorySink
-    from vaero_spark.sources.transcripts import TRANSCRIPTS_SCHEMA
 
-    work = tempfile.mkdtemp(prefix="vaero_q_sopen_")
-    inp = _gate_stream_input(spark, sf_dir, "session")
-    src = (
-        spark.readStream.schema(TRANSCRIPTS_SCHEMA)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(inp)
+    sink = _drain_gate(
+        spark,
+        lambda src: track_open_sessions(src, gap_seconds=1800, watermark="60 days"),
+        mode="append", pin=False, inp=_gate_stream_input(spark, sf_dir, "session"),
     )
-    sink = MemorySink()
-    q = (
-        track_open_sessions(src, gap_seconds=1800, watermark="60 days")
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", f"{work}/ckpt")
-        .foreachBatch(sink.foreach_batch())
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
     closed = [
         (r.conv_id, r.session_start, r.session_end, r.n_turns)
         for r in sink.rows()
@@ -993,19 +891,8 @@ def q_stream_interval(spark, sf_dir):
     100 TB shape: each micro-batch hash-joins its turns against the
     pre-exploded interval table on the bucket id — broadcast when the
     table is small, shuffle when not (AQE per micro-batch)."""
-    import tempfile
-
     from vaero_spark.operators.joins import interval_join_binned
-    from vaero_spark.sinks.writers import ExactlyOnceParquetSink
-    from vaero_spark.sources.transcripts import TRANSCRIPTS_SCHEMA
 
-    work = tempfile.mkdtemp(prefix="vaero_q_sintv_")
-    inp = _gate_stream_input(spark, sf_dir, "plain")
-    src = (
-        spark.readStream.schema(TRANSCRIPTS_SCHEMA)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(inp)
-    )
     ev_ms = F.unix_millis(F.col("ts").cast("timestamp"))
     intervals = (
         load_table(spark, sf_dir, "events")
@@ -1016,21 +903,15 @@ def q_stream_interval(spark, sf_dir):
             (ev_ms + 1_800_000).alias("end_ms"),
         )
     )
-    joined = interval_join_binned(src, intervals, bucket_s=1800)
-    sink = ExactlyOnceParquetSink(
-        f"{work}/out",
-        ts_col="_no_prefix",
-        order_cols=("interval_id", "conv_id", "turn_idx"),
+    sink = _drain_gate(
+        spark, lambda src: interval_join_binned(src, intervals, bucket_s=1800),
+        mode="append", pin=True, inp=_gate_stream_input(spark, sf_dir, "plain"),
+        sink=partial(
+            ExactlyOnceParquetSink,
+            ts_col="_no_prefix",
+            order_cols=("interval_id", "conv_id", "turn_idx"),
+        ),
     )
-    with _pinned_state_partitions(spark, inp):
-        q = (
-            joined.writeStream.outputMode("append")
-            .option("checkpointLocation", f"{work}/ckpt")
-            .foreachBatch(sink.foreach_batch())
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
     return sink.read_committed(spark).select(
         "interval_id", "conv_id", "turn_idx", "ts_ms"
     )
@@ -1094,35 +975,19 @@ def q_stream_upsert(spark, sf_dir):
     seq%6 so supersession arrives across micro-batch boundaries in both
     directions); state = one scalar tuple per entity (the view itself),
     drained last emission per id == the batch argmax(seq) exactly."""
-    import tempfile
-
     from vaero_spark.operators.state import stream_upsert
-    from vaero_spark.sinks.writers import MemorySink
 
-    work = tempfile.mkdtemp(prefix="vaero_q_supsert_")
-    inp = _gate_stream_input(spark, sf_dir, "cdc")
-    src = (
-        spark.readStream.schema("doc_id bigint, seq bigint, op string, text string")
-        .option("maxFilesPerTrigger", "2")
-        .parquet(inp)
+    sink = _drain_gate(
+        spark, stream_upsert, mode="update", pin=False,
+        inp=_gate_stream_input(spark, sf_dir, "cdc"),
+        schema="doc_id bigint, seq bigint, op string, text string", max_files=2,
     )
-    sink = MemorySink()
-    q = (
-        stream_upsert(src)
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", f"{work}/ckpt")
-        .foreachBatch(sink.foreach_batch())
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    final = {}  # update mode: the last emission per entity wins
-    for epoch_id, rows in sorted(sink.batches):
-        for r in rows:
-            final[r.doc_id] = (r.doc_id, r.cur_seq, r.deleted, r.text_md5)
+    final = [
+        (r.doc_id, r.cur_seq, r.deleted, r.text_md5)
+        for r in _last_emission(sink, "doc_id")
+    ]
     return spark.createDataFrame(
-        list(final.values()),
-        "doc_id long, cur_seq long, deleted int, text_md5 string",
+        final, "doc_id long, cur_seq long, deleted int, text_md5 string"
     )
 
 
@@ -1147,11 +1012,7 @@ def q_stream_trending(spark, sf_dir):
     Bounded-replay drain: one-batch backlog + a zero-token sentinel 3 h
     past max_ts flushes every real window; ranking the drained counts
     with group_topk must equal batch trending_tokens (same oracle)."""
-    import datetime
-    import tempfile
-
     from vaero_spark.operators.analytics import stream_windowed_token_counts
-    from vaero_spark.sinks.writers import MemorySink
 
     t = load_transcripts(spark, sf_dir).select(
         "conv_id",
@@ -1161,33 +1022,14 @@ def q_stream_trending(spark, sf_dir):
         "tool",
         F.col("ts").cast("timestamp").alias("ts"),
     )
-    max_ts = t.agg(F.max("ts")).first()[0]
-    work = tempfile.mkdtemp(prefix="vaero_q_strend_")
-    inp = f"{work}/in"
-    t.write.parquet(inp)
-    src = spark.readStream.schema(t.schema).parquet(inp)  # one batch
-    sink = MemorySink()
-    # NOT partition-pinned: this gate's per-batch work is the JVM
-    # tokenize+explode of the whole backlog (compute-bound — 8
-    # partitions caps that parallelism, measured 14.4 vs 11.6 s), and
-    # the two-batch drain pays the per-store fixed cost only twice
-    q = (
-        stream_windowed_token_counts(src)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", f"{work}/ckpt")
-        .foreachBatch(sink.foreach_batch())
-        .start()
+    sink = _drain_gate(
+        spark, stream_windowed_token_counts, mode="append", pin=False,
+        backlog=t, max_files=None,
+        sentinel=lambda max_ts: [
+            ("__sentinel__", 0, "system", "", "", max_ts + datetime.timedelta(hours=3))
+        ],
     )
-    q.processAllAvailable()  # batch 1: the full backlog, nothing late
-    sentinel = spark.createDataFrame(
-        [("__sentinel__", 0, "system", "", "",
-          max_ts + datetime.timedelta(hours=3))],
-        t.schema,
-    )
-    sentinel.write.mode("append").parquet(inp)
-    q.processAllAvailable()  # batch 2: watermark jumps, windows flush
-    q.stop()
-    rows = [(r.win_start, r.token, r.n) for _, batch in sink.batches for r in batch]
+    rows = [(r.win_start, r.token, r.n) for r in sink.rows()]
     counts = spark.createDataFrame(rows, "win_start timestamp, token string, n long")
     return TR.group_topk(counts, "win_start", "n", "token", k=5)
 
@@ -1658,41 +1500,16 @@ def q_stream_funnel(spark, sf_dir):
     eviction. The drained last emission per conversation must equal the
     batch funnel_membership rows — an EXACT SQL oracle for the stateful
     op (the stream_cep / stream_spikes pairing)."""
-    import tempfile
-
     from vaero_spark.operators.analytics import stream_funnel
-    from vaero_spark.sinks.writers import MemorySink
-    from vaero_spark.sources.transcripts import TRANSCRIPTS_SCHEMA
 
-    work = tempfile.mkdtemp(prefix="vaero_q_sfun_")
-    inp = _gate_stream_input(spark, sf_dir, "plain")
-    src = (
-        spark.readStream.schema(TRANSCRIPTS_SCHEMA)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(inp)
+    sink = _drain_gate(
+        spark,
+        lambda src: stream_funnel(
+            src, [F.col("role") == r for r in FUNNEL_ROLES], watermark="60 days"
+        ),
+        mode="update", pin=False, inp=_gate_stream_input(spark, sf_dir, "plain"),
     )
-    sink = MemorySink()
-    q = (
-        stream_funnel(
-            src,
-            [F.col("role") == r for r in FUNNEL_ROLES],
-            watermark="60 days",
-        )
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", f"{work}/ckpt")
-        .foreachBatch(sink.foreach_batch())
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    final = {}  # update mode: the last full vector per conversation wins
-    for epoch_id, rows in sorted(sink.batches):
-        staged: dict = {}
-        for r in rows:
-            staged.setdefault(r.conv_id, []).append(r)
-        for conv, rs in staged.items():
-            final[conv] = rs
-    out = [(r.conv_id, r.stage, r.first_ord) for rs in final.values() for r in rs]
+    out = [(r.conv_id, r.stage, r.first_ord) for r in _last_emission(sink, "conv_id")]
     return spark.createDataFrame(out, "conv_id string, stage int, first_ord long")
 
 
@@ -1724,36 +1541,17 @@ def q_stream_spikes(spark, sf_dir):
     (applyInPandasWithState, watermark-bounded per-key bucket state,
     update-mode re-emission); the drained final emission equals the
     batch operator — an EXACT SQL oracle for the stateful op."""
-    import tempfile
-
     from vaero_spark.operators.analytics import stream_rate_spikes
-    from vaero_spark.sinks.writers import MemorySink
 
-    work = tempfile.mkdtemp(prefix="vaero_q_spike_")
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    ev.repartition(6, "event_id").write.parquet(f"{work}/in")
-    src = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "2")
-        .parquet(f"{work}/in")
+    sink = _drain_gate(
+        spark, lambda src: stream_rate_spikes(src, watermark="90 days", **SPIKE_PARAMS),
+        mode="update", pin=False, backlog=ev.repartition(6, "event_id"),
+        schema=ev.schema, max_files=2,
     )
-    sink = MemorySink()
-    q = (
-        stream_rate_spikes(src, watermark="90 days", **SPIKE_PARAMS)
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", f"{work}/ckpt")
-        .foreachBatch(sink.foreach_batch())
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    final = {}  # update mode: later epochs supersede earlier emissions
-    for epoch_id, rows in sorted(sink.batches):
-        for r in rows:
-            final[(r.key, r.bucket_idx)] = r
     spikes = [
         (r.key, r.bucket_idx, r.n_events, r.baseline_sum)
-        for r in final.values()
+        for r in _last_emission(sink, "key", "bucket_idx")
         if r.is_spike
     ]
     return spark.createDataFrame(
@@ -1945,39 +1743,19 @@ def q_stream_w_distinct(spark, sf_dir):
     event past max_ts + watermark + 2 windows flushes every real
     window; the sentinel's own window stays held, so emitted rows ==
     the batch aggregate exactly."""
-    import datetime
-    import tempfile
-
     from vaero_spark.operators.windows import stream_windowed_distinct
-    from vaero_spark.sinks.writers import MemorySink
 
     # events.ts is parquet NTZ; watermarks need TIMESTAMP (UTC session
     # => same wall time, the house convention from stream_lexicon)
     ev = load_table(spark, sf_dir, "events").select(
         F.col("ts").cast("timestamp").alias("ts"), "user_id"
     )
-    max_ts = ev.agg(F.max("ts")).first()[0]
-    work = tempfile.mkdtemp(prefix="vaero_q_swd_")
-    inp = f"{work}/in"
-    ev.write.parquet(inp)
-    src = spark.readStream.schema(ev.schema).parquet(inp)  # one batch
-    sink = MemorySink()
-    with _pinned_state_partitions(spark, inp):
-        q = (
-            stream_windowed_distinct(src)
-            .writeStream.outputMode("append")
-            .option("checkpointLocation", f"{work}/ckpt")
-            .foreachBatch(sink.foreach_batch())
-            .start()
-        )
-        q.processAllAvailable()  # batch 1: the full backlog, nothing late
-        sentinel = spark.createDataFrame(
-            [(max_ts + datetime.timedelta(hours=3), -1)], ev.schema
-        )
-        sentinel.write.mode("append").parquet(inp)
-        q.processAllAvailable()  # batch 2: watermark jumps, windows flush
-        q.stop()
-    rows = [(r.win_start, r.n_users) for _, batch in sink.batches for r in batch]
+    sink = _drain_gate(
+        spark, stream_windowed_distinct, mode="append", pin=True,
+        backlog=ev, schema=ev.schema, max_files=None,
+        sentinel=lambda max_ts: [(max_ts + datetime.timedelta(hours=3), -1)],
+    )
+    rows = [(r.win_start, r.n_users) for r in sink.rows()]
     return spark.createDataFrame(rows, "win_start timestamp, n_users long")
 
 
@@ -2064,35 +1842,16 @@ def q_stream_lexicon(spark, sf_dir):
     oracle for the stateful op (the stream_funnel pairing). Lexicon
     phrases live in the transcripts' event-type vocabulary so real
     hits flow."""
-    import tempfile
-
     from vaero_spark.operators.curate import stream_lexicon
-    from vaero_spark.sinks.writers import MemorySink
-    from vaero_spark.sources.transcripts import TRANSCRIPTS_SCHEMA
 
-    work = tempfile.mkdtemp(prefix="vaero_q_slex_")
-    inp = _gate_stream_input(spark, sf_dir, "plain")
-    src = (
-        spark.readStream.schema(TRANSCRIPTS_SCHEMA)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(inp)
+    sink = _drain_gate(
+        spark,
+        lambda src: stream_lexicon(src, lexicon=STREAM_LEXICON, watermark="60 days"),
+        mode="update", pin=False, inp=_gate_stream_input(spark, sf_dir, "plain"),
     )
-    sink = MemorySink()
-    q = (
-        stream_lexicon(src, lexicon=STREAM_LEXICON, watermark="60 days")
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", f"{work}/ckpt")
-        .foreachBatch(sink.foreach_batch())
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    final = {}  # update mode: the last emission per conversation wins
-    for epoch_id, rows in sorted(sink.batches):
-        for r in rows:
-            final[r.conv_id] = (r.conv_id, r.lex_hits, r.flagged)
     return spark.createDataFrame(
-        list(final.values()), "conv_id string, lex_hits long, flagged int"
+        [(r.conv_id, r.lex_hits, r.flagged) for r in _last_emission(sink, "conv_id")],
+        "conv_id string, lex_hits long, flagged int",
     )
 
 
@@ -2145,11 +1904,7 @@ def q_stream_hll(spark, sf_dir):
     sibling stream_w_distinct holds one row per open distinct key).
     Drained registers + the stateless summary layer must equal the
     batch windowed sketch (same oracle minus the exact grading side)."""
-    import datetime
-    import tempfile
-
     from vaero_spark.operators.sketch import stream_windowed_hll, windowed_hll_summary
-    from vaero_spark.sinks.writers import MemorySink
 
     t = load_transcripts(spark, sf_dir).select(
         "conv_id",
@@ -2159,32 +1914,14 @@ def q_stream_hll(spark, sf_dir):
         "tool",
         F.col("ts").cast("timestamp").alias("ts"),
     )
-    max_ts = t.agg(F.max("ts")).first()[0]
-    work = tempfile.mkdtemp(prefix="vaero_q_shll_")
-    inp = f"{work}/in"
-    t.write.parquet(inp)
-    src = spark.readStream.schema(t.schema).parquet(inp)  # one batch
-    sink = MemorySink()
-    with _pinned_state_partitions(spark, inp):
-        q = (
-            stream_windowed_hll(src)
-            .writeStream.outputMode("append")
-            .option("checkpointLocation", f"{work}/ckpt")
-            .foreachBatch(sink.foreach_batch())
-            .start()
-        )
-        q.processAllAvailable()  # batch 1: the full backlog, nothing late
-        sentinel = spark.createDataFrame(
-            [("__sentinel__", 0, "system", "", "",
-              max_ts + datetime.timedelta(hours=3))],
-            t.schema,
-        )
-        sentinel.write.mode("append").parquet(inp)
-        q.processAllAvailable()  # batch 2: watermark jumps, windows flush
-        q.stop()
-    rows = [
-        (r.win_start, r.register, r.max_rank) for _, batch in sink.batches for r in batch
-    ]
+    sink = _drain_gate(
+        spark, stream_windowed_hll, mode="append", pin=True,
+        backlog=t, max_files=None,
+        sentinel=lambda max_ts: [
+            ("__sentinel__", 0, "system", "", "", max_ts + datetime.timedelta(hours=3))
+        ],
+    )
+    rows = [(r.win_start, r.register, r.max_rank) for r in sink.rows()]
     regs = spark.createDataFrame(
         rows, "win_start timestamp, register int, max_rank int"
     )
@@ -2216,36 +1953,13 @@ def q_stream_absence(spark, sf_dir):
     settles on what does NOT arrive (the k-turn window filling); open
     triggers bounded by k+1, every emission equals the batch scan of
     the seen prefix, drained == the batch operator's SQL oracle."""
-    import tempfile
-
-    from vaero_spark.operators.cep import stream_cep_absence
-    from vaero_spark.sinks.writers import MemorySink
-    from vaero_spark.sources.transcripts import TRANSCRIPTS_SCHEMA
-
-    work = tempfile.mkdtemp(prefix="vaero_q_sabs_")
-    inp = _gate_stream_input(spark, sf_dir, "plain")
-    src = (
-        spark.readStream.schema(TRANSCRIPTS_SCHEMA)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(inp)
+    sink = _drain_gate(
+        spark, lambda src: CEP.stream_cep_absence(src, k=3, watermark="60 days"),
+        mode="update", pin=False, inp=_gate_stream_input(spark, sf_dir, "plain"),
     )
-    sink = MemorySink()
-    q = (
-        stream_cep_absence(src, k=3, watermark="60 days")
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", f"{work}/ckpt")
-        .foreachBatch(sink.foreach_batch())
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    final = {}  # update mode: later epochs supersede earlier emissions
-    for epoch_id, rows in sorted(sink.batches):
-        for r in rows:
-            final[r.conv_id] = r
     flagged = [
         (r.conv_id, r.n_turns, r.n_triggers, r.n_dangling, r.first_dangling_turn)
-        for r in final.values()
+        for r in _last_emission(sink, "conv_id")
         if r.n_dangling > 0
     ]
     return spark.createDataFrame(
@@ -2262,36 +1976,13 @@ def q_stream_within(spark, sf_dir):
     pure ms arithmetic), so state is the last 2 turns + the disorder
     buffer and every emission equals the batch lead-chain on the seen
     prefix. Drained == cep_within's SQL oracle row for row."""
-    import tempfile
-
-    from vaero_spark.operators.cep import stream_cep_within
-    from vaero_spark.sinks.writers import MemorySink
-    from vaero_spark.sources.transcripts import TRANSCRIPTS_SCHEMA
-
-    work = tempfile.mkdtemp(prefix="vaero_q_swi_")
-    inp = _gate_stream_input(spark, sf_dir, "plain")
-    src = (
-        spark.readStream.schema(TRANSCRIPTS_SCHEMA)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(inp)
+    sink = _drain_gate(
+        spark, lambda src: CEP.stream_cep_within(src, "ttu", 21600, watermark="60 days"),
+        mode="update", pin=False, inp=_gate_stream_input(spark, sf_dir, "plain"),
     )
-    sink = MemorySink()
-    q = (
-        stream_cep_within(src, "ttu", 21600, watermark="60 days")
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", f"{work}/ckpt")
-        .foreachBatch(sink.foreach_batch())
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    final = {}  # update mode: later epochs supersede earlier emissions
-    for epoch_id, rows in sorted(sink.batches):
-        for r in rows:
-            final[r.conv_id] = r
     hits = [
         (r.conv_id, r.n_turns, r.n_within, r.first_within_turn)
-        for r in final.values()
+        for r in _last_emission(sink, "conv_id")
         if r.n_within > 0
     ]
     return spark.createDataFrame(
@@ -2310,45 +2001,16 @@ def q_stream_session_native(spark, sf_dir):
     this one drains a single-batch backlog into a memory sink, against
     the SAME gaps-and-islands SQL oracle as batch `w_session`. Drain: one-batch
     backlog + a watermark-advancing sentinel (the watermark node sits
-    on the raw stream, so one system row suffices). State-store
-    partitions pinned to 8 for the run (restored after) — the
-    q_stream_outer_join sizing note."""
-    import datetime
-    import tempfile
-
-    from vaero_spark.sinks.writers import MemorySink
-    from vaero_spark.sources.transcripts import TRANSCRIPTS_SCHEMA
-
-    t = load_transcripts(spark, sf_dir)
-    max_ts = t.agg(F.max("ts")).first()[0]
-    work = tempfile.mkdtemp(prefix="vaero_q_ssn_")
-    inp = f"{work}/in"
-    t.write.parquet(inp)
-    src = spark.readStream.schema(TRANSCRIPTS_SCHEMA).parquet(inp)  # one batch
-    agg = session_windows(src.withWatermark("ts", "1 hour"), "30 minutes")
-    sink = MemorySink()
-    with _pinned_state_partitions(spark, inp):
-        q = (
-            agg.writeStream.outputMode("append")
-            .option("checkpointLocation", f"{work}/ckpt")
-            .foreachBatch(sink.foreach_batch())
-            .start()
-        )
-        q.processAllAvailable()  # backlog: sessions merge in-state, held
-        sentinel = spark.createDataFrame(
-            [("__sentinel__", 0, "system", "", "",
-              max_ts + datetime.timedelta(days=60))],
-            TRANSCRIPTS_SCHEMA,
-        )
-        sentinel.write.mode("append").parquet(inp)
-        q.processAllAvailable()  # watermark jumps; every real session flushes
-        q.stop()
-    rows = [
-        tuple(r)
-        for _, batch in sink.batches
-        for r in batch
-        if not r.conv_id.startswith("__sentinel")
-    ]
+    on the raw stream, so one system row suffices)."""
+    sink = _drain_gate(
+        spark,
+        lambda src: session_windows(src.withWatermark("ts", "1 hour"), "30 minutes"),
+        mode="append", pin=True, backlog=load_transcripts(spark, sf_dir), max_files=None,
+        sentinel=lambda max_ts: [
+            ("__sentinel__", 0, "system", "", "", max_ts + datetime.timedelta(days=60))
+        ],
+    )
+    rows = [tuple(r) for r in sink.rows() if not r.conv_id.startswith("__sentinel")]
     return spark.createDataFrame(
         rows,
         "conv_id string, win_start timestamp, win_end timestamp, "
@@ -2373,36 +2035,16 @@ def q_stream_absence_t(spark, sf_dir):
     time drives the decision, not wall clock); open state bounded by
     one wait window of triggers; drained == the batch operator's SQL
     oracle."""
-    import tempfile
-
-    from vaero_spark.operators.cep import stream_cep_absence_time
-    from vaero_spark.sinks.writers import MemorySink
-    from vaero_spark.sources.transcripts import TRANSCRIPTS_SCHEMA
-
-    work = tempfile.mkdtemp(prefix="vaero_q_sabt_")
-    inp = _gate_stream_input(spark, sf_dir, "plain")
-    src = (
-        spark.readStream.schema(TRANSCRIPTS_SCHEMA)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(inp)
+    sink = _drain_gate(
+        spark,
+        lambda src: CEP.stream_cep_absence_time(
+            src, max_wait_s=3600, watermark="60 days"
+        ),
+        mode="update", pin=False, inp=_gate_stream_input(spark, sf_dir, "plain"),
     )
-    sink = MemorySink()
-    q = (
-        stream_cep_absence_time(src, max_wait_s=3600, watermark="60 days")
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", f"{work}/ckpt")
-        .foreachBatch(sink.foreach_batch())
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    final = {}  # update mode: later epochs supersede earlier emissions
-    for epoch_id, rows in sorted(sink.batches):
-        for r in rows:
-            final[r.conv_id] = r
     flagged = [
         (r.conv_id, r.n_turns, r.n_triggers, r.n_dangling, r.first_dangling_turn)
-        for r in final.values()
+        for r in _last_emission(sink, "conv_id")
         if r.n_dangling > 0
     ]
     return spark.createDataFrame(
@@ -2513,54 +2155,27 @@ def q_stream_outer_join(spark, sf_dir):
     (nothing late) + a user+tool sentinel pair at max_ts + 60 days
     (both per-side watermark nodes sit after the role filters, so the
     sentinel must survive both) to advance the watermark and flush the
-    tail. Drained == the batch LEFT JOIN bit for bit.
-
-    The state-store partition count is pinned to 8 for this query (and
-    restored after): a stream-stream outer join holds FOUR state stores
-    per partition, and at gate volume the per-store fixed cost — not
-    data — dominates (measured 26.6 s at 32 partitions vs 6.3 s at 8,
-    same rows). Production sizes this to state volume, not the
-    session's batch shuffle width."""
-    import datetime
-    import tempfile
-
+    tail. Drained == the batch LEFT JOIN bit for bit."""
     from vaero_spark.operators.joins import streaming_user_tool_join
-    from vaero_spark.sinks.writers import MemorySink
-    from vaero_spark.sources.transcripts import TRANSCRIPTS_SCHEMA
 
-    t = load_transcripts(spark, sf_dir)
-    max_ts = t.agg(F.max("ts")).first()[0]
-    work = tempfile.mkdtemp(prefix="vaero_q_soj_")
-    inp = f"{work}/in"
-    t.write.parquet(inp)
-    src = spark.readStream.schema(TRANSCRIPTS_SCHEMA).parquet(inp)  # one batch
-    out = streaming_user_tool_join(
-        src, watermark="1 hour", max_lag="4 hours", how="left_outer"
+    def sentinel(max_ts):
+        ts = max_ts + datetime.timedelta(days=60)
+        return [
+            ("__sentinel__", 0, "user", "", "", ts),
+            ("__sentinel__", 1, "tool", "", "calc", ts),
+        ]
+
+    sink = _drain_gate(
+        spark,
+        lambda src: streaming_user_tool_join(
+            src, watermark="1 hour", max_lag="4 hours", how="left_outer"
+        ),
+        mode="append", pin=True, backlog=load_transcripts(spark, sf_dir), max_files=None,
+        sentinel=sentinel,
     )
-    sink = MemorySink()
-    with _pinned_state_partitions(spark, inp):
-        q = (
-            out.writeStream.outputMode("append")
-            .option("checkpointLocation", f"{work}/ckpt")
-            .foreachBatch(sink.foreach_batch())
-            .start()
-        )
-        q.processAllAvailable()  # backlog: matches emit, unmatched held
-        sent_ts = max_ts + datetime.timedelta(days=60)
-        sentinel = spark.createDataFrame(
-            [
-                ("__sentinel__", 0, "user", "", "", sent_ts),
-                ("__sentinel__", 1, "tool", "", "calc", sent_ts),
-            ],
-            TRANSCRIPTS_SCHEMA,
-        )
-        sentinel.write.mode("append").parquet(inp)
-        q.processAllAvailable()  # watermark jumps; evicted rows emit nulls
-        q.stop()
     rows = [
         (r.conv_id, r.user_turn, r.user_ts, r.tool_turn, r.tool_name, r.tool_ts)
-        for _, batch in sink.batches
-        for r in batch
+        for r in sink.rows()
         if not r.conv_id.startswith("__sentinel")
     ]
     return spark.createDataFrame(

@@ -1,8 +1,8 @@
 #!/usr/bin/env python
 """Measure the applyInPandasWithState framework floor vs the real gates.
 
-Runs, over the SAME gate stream input and drain harness as
-q_stream_counters, three variants:
+Runs, over the SAME gate stream input and drain harness
+(``__spark_entry__._drain_gate``) as q_stream_counters, three variants:
 
 - ``noop``: a state fn that consumes the iterator and emits one tiny row
   per group — the irreducible per-group Python invocation cost;
@@ -18,7 +18,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import tempfile
 import time
 from pathlib import Path
 
@@ -33,8 +32,6 @@ from pyspark.sql.streaming.state import GroupStateTimeout  # noqa: E402
 def main() -> None:
     import __spark_entry__ as entry
     from vaero_spark.session import get_spark
-    from vaero_spark.sinks.writers import MemorySink
-    from vaero_spark.sources.transcripts import TRANSCRIPTS_SCHEMA
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -82,24 +79,9 @@ def main() -> None:
         return track_open_sessions(src, gap_seconds=1800, watermark="60 days")
 
     def drain(build, mode):
-        work = tempfile.mkdtemp(prefix="vaero_prof_state_")
-        src = (
-            spark.readStream.schema(TRANSCRIPTS_SCHEMA)
-            .option("maxFilesPerTrigger", "4")
-            .parquet(inp)
-        )
-        sink = MemorySink()
         t0 = time.perf_counter()
-        q = (
-            build(src)
-            .writeStream.outputMode(mode)
-            .option("checkpointLocation", f"{work}/ckpt")
-            .foreachBatch(sink.foreach_batch())
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        return round(time.perf_counter() - t0, 3), sum(len(b) for _, b in sink.batches)
+        sink = entry._drain_gate(spark, build, mode=mode, pin=False, inp=inp)
+        return round(time.perf_counter() - t0, 3), len(sink.rows())
 
     for name, build, mode in (
         ("noop", build_noop, "update"),
