@@ -458,8 +458,7 @@ def q_stream_pipeline(spark, sf_dir):
     sinks = {n: ExactlyOnceParquetSink(f"{work}/{n}") for n in branches}
     with _pinned_state_partitions(spark, inp):
         pipe = run_streaming_fanout(
-            spark, src, branches, lambda n: sinks[n], f"{work}/ckpt",
-            common_fn=common,
+            spark, common(src), branches, lambda n: sinks[n], f"{work}/ckpt"
         )
         try:
             pipe.process_all()

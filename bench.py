@@ -264,11 +264,10 @@ def run_throughput(cores: int, input_dir: str, n_rows: int, passes: int = 1) -> 
         sinks = {n: ExactlyOnceParquetSink(os.path.join(work, n)) for n in branches}
         pipe = run_streaming_fanout(
             spark,
-            src,
+            _pipeline_transform(src),
             branches,
             sink_factory=lambda name: sinks[name],
             checkpoint_dir=os.path.join(work, "ckpt"),
-            common_fn=_pipeline_transform,
         )
         pipe.process_all()
         prog = [

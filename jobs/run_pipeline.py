@@ -41,19 +41,20 @@ from pyspark.sql import functions as F
 EMAIL_RE = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+"
 
 
-def build_branches():
+def transform(df):
+    """The shared prefix, applied to the source stream once: mask PII →
+    parse k= → tag."""
     from vaero_spark.operators import transforms as TR
 
-    def transform(df):
-        df = TR.mask(df, "text", EMAIL_RE, "<EMAIL>")
-        df = TR.parse_regexp(df, "text", "k=(?<kval>[0-9]+)")
-        df = TR.add(df, "pipeline", "flagship")
-        return df
+    df = TR.mask(df, "text", EMAIL_RE, "<EMAIL>")
+    df = TR.parse_regexp(df, "text", "k=(?<kval>[0-9]+)")
+    return TR.add(df, "pipeline", "flagship")
 
-    return {
-        "errors": lambda b: transform(b).filter(F.col("text").rlike("error")),
-        "rest": lambda b: transform(b).filter(~F.col("text").rlike("error")),
-    }
+
+BRANCHES = {
+    "errors": lambda b: b.filter(F.col("text").rlike("error")),
+    "rest": lambda b: b.filter(~F.col("text").rlike("error")),
+}
 
 
 def run_spec(spark, spec_path: str, output: str, checkpoint: str,
@@ -144,13 +145,13 @@ def main() -> None:
     src = transcripts_stream(spark, args.input, args.max_files_per_trigger)
     sinks = {
         name: ExactlyOnceParquetSink(os.path.join(args.output, name))
-        for name in ("errors", "rest")
+        for name in BRANCHES
     }
     t0 = time.perf_counter()
     pipe = run_streaming_fanout(
         spark,
-        src,
-        build_branches(),
+        transform(src),
+        BRANCHES,
         sink_factory=lambda name: sinks[name],
         checkpoint_dir=args.checkpoint,
         trigger_seconds=args.trigger_seconds,

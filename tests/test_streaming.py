@@ -246,6 +246,115 @@ def test_multi_sink_dsl_plan_fanout(spark, tmp_path):
         assert got.filter(F.col("text").contains("<EMAIL>")).count() > 0, name
 
 
+def _forked_plan(src_dir: str, prefix_op=None, branch_op=None):
+    """source → [prefix_op] → fork(users / tools, each [branch_op] then
+    its role filter) → two memory sinks."""
+    from vaero_spark.dsl import Vaero
+
+    v = Vaero().source("transcripts", path=src_dir, max_files_per_trigger=1)
+    if prefix_op:
+        v = prefix_op(v)
+    for name, role in [("users", "user"), ("tools", "tool")]:
+        b = branch_op(v) if branch_op else v
+        b.filter_regexp("role", f"^{role}$").sink("memory", name=name)
+    return v.plan()
+
+
+def test_stateful_prefix_keeps_state_across_epochs(spark, tmp_path):
+    """dedup before the fork runs stream-side: a row repeated in a later
+    epoch is dropped in every branch, and each sink drains exactly what
+    compile_batch computes for the same plan on the same input."""
+    import collections
+    import shutil
+
+    from vaero_spark.compiler import compile_batch
+    from vaero_spark.sources.transcripts import TRANSCRIPTS_SCHEMA
+    from vaero_spark.streaming.engine import run_streaming_plan
+
+    src = tmp_path / "src"
+    write_transcripts_parquet(str(src), n_files=1, n_turns=300, n_convs=8, seed=37)
+    # the same rows again in a second file: a second epoch
+    shutil.copy(src / "part-0000.parquet", src / "part-0001.parquet")
+
+    def plan():
+        return _forked_plan(str(src), prefix_op=lambda v: v.dedup(["conv_id", "turn_idx"]))
+
+    sinks = collections.defaultdict(MemorySink)
+    pipe = run_streaming_plan(
+        spark, plan(), str(tmp_path / "ckpt"), sink_factory=lambda n, node: sinks[n]
+    )
+    try:
+        pipe.process_all()
+    finally:
+        pipe.stop()
+    assert len(sinks["users"].batches) == 2  # one file per epoch
+
+    batch = compile_batch(
+        spark,
+        plan(),
+        source_resolver=lambda s, node: s.read.schema(TRANSCRIPTS_SCHEMA).parquet(
+            str(src)
+        ),
+    )
+    for name in ("users", "tools"):
+        got = sinks[name].rows()
+        keys = collections.Counter((r.conv_id, r.turn_idx) for r in got)
+        assert got and max(keys.values()) == 1, name
+        want = batch.sinks[name].collect()
+        assert collections.Counter(map(tuple, got)) == collections.Counter(
+            map(tuple, want)
+        ), name
+
+
+_BRANCH_STATEFUL = {
+    "dedup": lambda v: v.dedup(["conv_id", "turn_idx"]),
+    "watermark": lambda v: v.watermark("ts", "1 hour"),
+    "window": lambda v: v.window("1 hour"),
+    "session_window": lambda v: v.session_window("30 minutes"),
+}
+
+
+@pytest.mark.parametrize("op", list(_BRANCH_STATEFUL))
+def test_stateful_op_after_fork_rejected(spark, tmp_path, op):
+    """A stateful op in a branch suffix would run per epoch in batch
+    mode; it is refused, naming the op and the sink, before any query
+    starts or any checkpoint metadata is written."""
+    from vaero_spark.streaming.engine import run_streaming_plan
+
+    src = tmp_path / "src"
+    write_transcripts_parquet(str(src), n_files=1, n_turns=50, n_convs=2, seed=3)
+    active = len(spark.streams.active)
+    with pytest.raises(ValueError, match=f"sink 'users': stateful op '{op}'"):
+        run_streaming_plan(
+            spark,
+            _forked_plan(str(src), branch_op=_BRANCH_STATEFUL[op]),
+            str(tmp_path / "ckpt"),
+            sink_factory=lambda n, node: MemorySink(),
+        )
+    assert len(spark.streams.active) == active
+    assert not (tmp_path / "ckpt").exists()
+
+
+def test_duplicate_sink_names_raise(spark, tmp_path):
+    """compile_batch and run_streaming_plan share one plan walk: two
+    sinks with one name are refused by both, not collapsed into one."""
+    from vaero_spark.compiler import compile_batch
+    from vaero_spark.dsl import Vaero
+    from vaero_spark.streaming.engine import run_streaming_plan
+
+    src = tmp_path / "src"
+    write_transcripts_parquet(str(src), n_files=1, n_turns=50, n_convs=2, seed=5)
+    v = Vaero().source("transcripts", path=str(src))
+    v.filter_regexp("role", "^user$").sink("memory", name="out")
+    v.filter_regexp("role", "^tool$").sink("memory", name="out")
+    with pytest.raises(ValueError, match="duplicate sink name 'out'"):
+        compile_batch(spark, v.plan(), source_resolver=lambda s, node: s.read.parquet(str(src)))
+    with pytest.raises(ValueError, match="duplicate sink name 'out'"):
+        run_streaming_plan(
+            spark, v.plan(), str(tmp_path / "ckpt"), sink_factory=lambda n, node: MemorySink()
+        )
+
+
 def test_checkpoint_refuses_changed_plan(spark, tmp_path):
     """Resume with the SAME plan works; a semantically different plan on
     the same checkpoint is refused loudly (SURVEY §3: resume must

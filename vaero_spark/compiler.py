@@ -4,11 +4,12 @@ Where the reference interprets its task graph per event in a Go loop
 (``/root/reference/execute/transformNode.go:14-35``), we fold the whole
 op chain into ONE DataFrame expression tree and let Catalyst do op
 fusion, predicate pushdown, column pruning, and whole-stage codegen.
-Branches become multiple derived DataFrames sharing the parent plan
-(copy-isolation is free — DataFrames are immutable; reference needs
-explicit deep copies, ``transformNode.go:38-56``). A sink mid-chain is
-just an extra consumer of the intermediate DataFrame
-(post-sink continuation, ``transformNode.go:58-62``).
+:func:`sink_chains` is the one plan walk, shared with the streaming
+runner: each sink gets its source-to-sink op chain folded over the
+source DataFrame (copy-isolation is free — DataFrames are immutable;
+reference needs explicit deep copies, ``transformNode.go:38-56``). A
+sink mid-chain is a chain that later sinks extend (post-sink
+continuation, ``transformNode.go:58-62``).
 """
 
 from __future__ import annotations
@@ -55,15 +56,14 @@ def compile_batch(
     plan: Plan,
     source_resolver: SourceResolver = _default_source,
 ) -> CompiledPipeline:
-    out = CompiledPipeline()
     root = plan.root
     if root.type != "source":
         raise ValueError("plan must start with a source node")
-    df = _default_source(spark, root) if source_resolver is _default_source else source_resolver(spark, root)
-    out.source = df
-    ctr = [0]
-    _compile_chain(root.children, df, out, ctr)
-    return out
+    src = source_resolver(spark, root)
+    return CompiledPipeline(
+        sinks={name: _apply_chain(ops)(src) for name, _, ops in sink_chains(plan)},
+        source=src,
+    )
 
 
 def apply_tn(df: DataFrame, op: str, args: dict) -> DataFrame:
@@ -111,31 +111,50 @@ def apply_tn(df: DataFrame, op: str, args: dict) -> DataFrame:
     raise ValueError(f"unknown transform op {op!r}")
 
 
-def _compile_chain(
-    children: list[OpNode], df: DataFrame, out: CompiledPipeline, ctr: list[int]
-) -> None:
-    # >1 child = branch fan-out: each child chain derives from the same df
-    for node in children:
-        _compile_node(node, df, out, ctr)
+def sink_chains(plan: Plan) -> list[tuple[str, OpNode, list[OpNode]]]:
+    """[(sink_name, sink_node, tn-nodes from source to sink), ...] —
+    a post-sink continuation keeps extending the same chain
+    (``transformNode.go:58-62``), a >1-child node forks it."""
+    chains: list[tuple[str, OpNode, list[OpNode]]] = []
+    ctr = [0]
 
-
-def _compile_node(node: OpNode, df: DataFrame, out: CompiledPipeline, ctr: list[int]) -> None:
-    while True:
-        if node.type == "tn":
-            df = apply_tn(df, node.op, node.args)
-        elif node.type == "sink":
-            name = node.args.get("name") or f"{node.op}#{ctr[0]}"
-            ctr[0] += 1
-            out.sinks[name] = df
-        elif node.type == "source":
-            raise ValueError("source mid-chain")
-        if not node.children:
+    def walk(node: OpNode, acc: list[OpNode]) -> None:
+        while True:
+            if node.type == "tn":
+                acc = acc + [node]
+            elif node.type == "sink":
+                name = node.args.get("name") or f"{node.op}#{ctr[0]}"
+                ctr[0] += 1
+                if any(name == n for n, _, _ in chains):
+                    raise ValueError(
+                        f"duplicate sink name {name!r}: two branches would "
+                        "silently collapse into one output — give each sink "
+                        "a distinct name="
+                    )
+                chains.append((name, node, acc))
+            elif node.type == "source":
+                raise ValueError("source mid-chain")
+            if not node.children:
+                return
+            if len(node.children) == 1:
+                node = node.children[0]
+                continue
+            for child in node.children:
+                walk(child, acc)
             return
-        if len(node.children) == 1:
-            node = node.children[0]
-            continue
-        _compile_chain(node.children, df, out, ctr)
-        return
+
+    for child in plan.root.children:
+        walk(child, [])
+    return chains
+
+
+def _apply_chain(ops: list[OpNode]) -> Callable[[DataFrame], DataFrame]:
+    def fn(df: DataFrame) -> DataFrame:
+        for node in ops:
+            df = apply_tn(df, node.op, node.args)
+        return df
+
+    return fn
 
 
 def rows_as_json(df: DataFrame) -> DataFrame:

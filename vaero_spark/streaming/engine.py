@@ -1,13 +1,19 @@
 """Streaming pipeline runner.
 
-The reference runs each pipeline as three goroutines joined by channels
-(``/root/reference/execute/execute.go:35-47``). Ours is one
-``StreamingQuery`` per pipeline: file/Iceberg stream source → the
-compiled transform chain → a single ``foreachBatch`` that fans out to
-every sink with the micro-batch persisted once (so the shared transform
-prefix is computed once per epoch, the analog of the reference's
-single transformNode feeding multiple sink capsules,
-``transformNode.go:58-62`` — but exactly-once).
+The reference runs every pipeline one way: source → one transformNode
+that feeds every sink (``execute/execute.go:35-47``,
+``transformNode.go:58-62``). Ours is one ``StreamingQuery`` per
+pipeline, also run one way:
+
+- the longest tn prefix that every sink shares is applied to the
+  source stream once, stream-side, so stateful ops there (dedup,
+  watermark, windows) keep their state across epochs;
+- one ``foreachBatch`` fans each epoch out to every sink, and each
+  branch applies its own suffix to the epoch's batch. Suffixes run
+  batch-mode per epoch, so they must be stateless;
+  :func:`run_streaming_plan` rejects a stateful op after the fork
+  before any query starts. With more than one sink the batch is
+  persisted once and the branches write concurrently.
 
 Checkpoint dir = job identity (reference: SQLite jobs table,
 ``cmd/util.go:144-177``). Restart with the same checkpoint resumes from
@@ -22,7 +28,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from vaero_spark.compiler import apply_tn
+from vaero_spark.compiler import _apply_chain, sink_chains
 from vaero_spark.plans.plan import OpNode, Plan
 from vaero_spark.sources.transcripts import transcripts_stream
 
@@ -104,29 +110,24 @@ def _resolve_stream_source(spark: SparkSession, node: OpNode) -> DataFrame:
                 rate=SteadyRateLimiter(float(node.args.get("rate_increment", 0.0))),
                 secret_resolver=node.args.get("_secret_resolver"),
             )
-            src.start_polling(float(node.args.get("interval", 10.0)))
-            node.args["_server"] = src
-            return src.stream(spark, node.args["schema"])
-        fetch = node.args.get("fetch_page")
-        if fetch is None:
-            if node.op not in PRESET_FETCH_PAGE:
-                raise ValueError("paginated_api source requires fetch_page=")
-            fetch = PRESET_FETCH_PAGE[node.op](node.args)
-        src = PaginatedApiSource(
-            fetch_page=fetch,
-            spool_dir=node.args["spool_dir"],
-            cursor_path=node.args["cursor_path"],
-            event_time_key=node.args.get(
-                "event_time_key", PRESET_EVENT_TIME_KEY.get(node.op, "ts")
-            ),
-            max_events_per_poll=node.args.get("max_events_per_poll"),
-            rate=SteadyRateLimiter(float(node.args.get("rate_increment", 0.0))),
-            secret_resolver=node.args.get("_secret_resolver"),
-        )
-        src.start_polling(float(node.args.get("interval", 10.0)))
-        node.args["_server"] = src
-        return src.stream(spark, node.args["schema"])
-    if node.op in ("s3", "object_store"):
+        else:
+            fetch = node.args.get("fetch_page")
+            if fetch is None:
+                if node.op not in PRESET_FETCH_PAGE:
+                    raise ValueError("paginated_api source requires fetch_page=")
+                fetch = PRESET_FETCH_PAGE[node.op](node.args)
+            src = PaginatedApiSource(
+                fetch_page=fetch,
+                spool_dir=node.args["spool_dir"],
+                cursor_path=node.args["cursor_path"],
+                event_time_key=node.args.get(
+                    "event_time_key", PRESET_EVENT_TIME_KEY.get(node.op, "ts")
+                ),
+                max_events_per_poll=node.args.get("max_events_per_poll"),
+                rate=SteadyRateLimiter(float(node.args.get("rate_increment", 0.0))),
+                secret_resolver=node.args.get("_secret_resolver"),
+            )
+    elif node.op in ("s3", "object_store"):
         # pull source (ref source_s3.go:25-85: list prefix → GET → split
         # on newline): a driver-side poller over a ListingObjectStore
         # client, spooling object versions into an exactly-once file
@@ -147,42 +148,13 @@ def _resolve_stream_source(spark: SparkSession, node: OpNode) -> DataFrame:
             spool_dir=node.args["spool_dir"],
             seen_path=node.args["seen_path"],
         )
-        src.start_polling(float(node.args.get("interval", 10.0)))
-        node.args["_server"] = src
-        return src.stream(spark, node.args["schema"])
-    raise ValueError(f"unknown stream source {node.op!r}")
-
-
-def compile_stream(
-    spark: SparkSession, plan: Plan
-) -> tuple[DataFrame, list[tuple[str, OpNode, DataFrame]]]:
-    """Compile the plan against a streaming source. Returns (source_df,
-    [(sink_name, sink_node, sink_df), ...])."""
-    root = plan.root
-    src = _resolve_stream_source(spark, root)
-    taps: list[tuple[str, OpNode, DataFrame]] = []
-    ctr = [0]
-
-    def walk(node: OpNode, df: DataFrame) -> None:
-        while True:
-            if node.type == "tn":
-                df = apply_tn(df, node.op, node.args)
-            elif node.type == "sink":
-                name = node.args.get("name") or f"{node.op}#{ctr[0]}"
-                ctr[0] += 1
-                taps.append((name, node, df))
-            if not node.children:
-                return
-            if len(node.children) == 1:
-                node = node.children[0]
-                continue
-            for child in node.children:
-                walk(child, df)
-            return
-
-    for child in root.children:
-        walk(child, src)
-    return src, taps
+    else:
+        raise ValueError(f"unknown stream source {node.op!r}")
+    # every pull source: start its poller and stash the live handle on
+    # the node, like http_server
+    src.start_polling(float(node.args.get("interval", 10.0)))
+    node.args["_server"] = src
+    return src.stream(spark, node.args["schema"])
 
 
 def derive_trigger_seconds(plan: Plan) -> float | None:
@@ -194,63 +166,19 @@ def derive_trigger_seconds(plan: Plan) -> float | None:
     must trigger at least that often). None when the plan carries no
     timing args (ASAP triggers — the default in tests).
     """
-    bounds = []
+    bounds = [
+        float(node.args["batch_max_time"])
+        for _, node, _ in sink_chains(plan)
+        if node.args.get("batch_max_time")
+    ]
     interval = plan.root.args.get("interval")
     if interval:
         bounds.append(float(interval))
-
-    def walk(node: OpNode) -> None:
-        if node.type == "sink" and node.args.get("batch_max_time"):
-            bounds.append(float(node.args["batch_max_time"]))
-        for ch in node.children:
-            walk(ch)
-
-    walk(plan.root)
     return min(bounds) if bounds else None
 
 
-def _sink_chains(plan: Plan) -> list[tuple[str, OpNode, list[OpNode]]]:
-    """[(sink_name, sink_node, tn-nodes from source to sink), ...] —
-    a post-sink continuation keeps extending the same chain
-    (``transformNode.go:58-62``), a >1-child node forks it."""
-    chains: list[tuple[str, OpNode, list[OpNode]]] = []
-    ctr = [0]
-
-    def walk(node: OpNode, acc: list[OpNode]) -> None:
-        while True:
-            if node.type == "tn":
-                acc = acc + [node]
-            elif node.type == "sink":
-                name = node.args.get("name") or f"{node.op}#{ctr[0]}"
-                ctr[0] += 1
-                if any(name == n for n, _, _ in chains):
-                    raise ValueError(
-                        f"duplicate sink name {name!r}: two branches would "
-                        "silently collapse into one output — give each sink "
-                        "a distinct name="
-                    )
-                chains.append((name, node, acc))
-            if not node.children:
-                return
-            if len(node.children) == 1:
-                node = node.children[0]
-                continue
-            for child in node.children:
-                walk(child, acc)
-            return
-
-    for child in plan.root.children:
-        walk(child, [])
-    return chains
-
-
-def _apply_chain(ops: list[OpNode]):
-    def fn(df: DataFrame) -> DataFrame:
-        for node in ops:
-            df = apply_tn(df, node.op, node.args)
-        return df
-
-    return fn
+# ops whose result depends on earlier epochs: they only work stream-side
+_STATEFUL_OPS = ("dedup", "watermark", "window", "session_window")
 
 
 def run_streaming_plan(
@@ -263,22 +191,48 @@ def run_streaming_plan(
 ) -> StreamingPipeline:
     """Start the pipeline as ONE streaming query with multi-sink fan-out.
 
+    The longest tn prefix common to every sink chain
+    (:func:`~vaero_spark.compiler.sink_chains`) is applied to the source
+    stream, stream-side, so stateful ops (watermarks, dedup, windows)
+    work there and keep their state across epochs. The query then hands
+    off to :func:`run_streaming_fanout`, and each branch applies only
+    its suffix per epoch. A single sink is one branch with an empty
+    suffix.
+
+    Branch suffixes run batch-mode per epoch, so they must be stateless
+    (the reference's branches are exactly that): a ``dedup``,
+    ``watermark``, ``window`` or ``session_window`` after the fork
+    raises ValueError, naming the op and the sink, before any query
+    starts. Put it before the fork instead.
+
+    Secrets specs run at query start. The prefix is planned then, so
+    secrets in its args are read once; suffix args and pull sources see
+    the per-epoch refresh.
+
     ``trigger_seconds="auto"`` derives the trigger from the plan's DSL
     timing args (source interval clamped by sink batch_max_time) via
     :func:`derive_trigger_seconds`; None keeps ASAP triggers.
-
-    Single sink: the whole chain stays stream-side (cross-epoch state —
-    watermarks, dedup, windows — works). Multiple sinks: one
-    foreachBatch fan-out via :func:`run_streaming_fanout` — the longest
-    common tn prefix is applied ONCE per epoch and persisted, each
-    branch's suffix derives from it (the reference's single
-    transformNode feeding every sink, ``transformNode.go:36-62``, with
-    exactly-once). Branch suffixes run batch-mode per epoch, so they
-    must be stateless transforms (the reference's branches are exactly
-    that); put stateful ops before the fork or use a single-sink plan.
     """
     if trigger_seconds == "auto":
         trigger_seconds = derive_trigger_seconds(plan)
+    chains = sink_chains(plan)
+    if not chains:
+        raise ValueError("plan has no sinks")
+    # the longest common tn prefix, by node identity
+    prefix_len = 0
+    shortest = min(len(ops) for _, _, ops in chains)
+    while prefix_len < shortest and all(
+        ops[prefix_len] is chains[0][2][prefix_len] for _, _, ops in chains
+    ):
+        prefix_len += 1
+    for name, _, ops in chains:
+        for node in ops[prefix_len:]:
+            if node.op in _STATEFUL_OPS:
+                raise ValueError(
+                    f"sink {name!r}: stateful op {node.op!r} after the fork "
+                    "would run per epoch in batch mode and lose its state "
+                    "between epochs; move it before the fork"
+                )
     # Plan-compatibility gate BEFORE any resolution mutates args:
     # Spark's checkpoint protects offsets/state, not transform
     # semantics — resuming a checkpoint with a changed op chain would
@@ -291,73 +245,21 @@ def run_streaming_plan(
     from vaero_spark.secrets import resolve_plan_secrets
 
     resolvers = resolve_plan_secrets(plan)
-    chains = _sink_chains(plan)
-    if not chains:
-        raise ValueError("plan has no sinks")
     src = _resolve_stream_source(spark, plan.root)
     sinks = {name: sink_factory(name, node) for name, node, _ in chains}
-    servers = [plan.root.args["_server"]] if plan.root.args.get("_server") else []
-
-    def _with_refresh(inner):
-        if not resolvers:
-            return inner
-
-        def fb(df, epoch_id):
-            for r in resolvers:
-                r.refresh_if_stale()
-            inner(df, epoch_id)
-
-        return fb
-
-    # Single-sink fast path: hand the DataFrame straight to foreachBatch.
-    if len(chains) == 1:
-        name, node, ops = chains[0]
-        df = _apply_chain(ops)(src)
-        writer = (
-            df.writeStream.queryName(query_name)
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(_with_refresh(sinks[name].foreach_batch()))
-        )
-        if trigger_seconds:
-            writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-        return StreamingPipeline(writer.start(), sinks, servers=servers)
-
-    # Multi-sink: factor the longest common tn prefix (by node identity)
-    # into the persisted common_fn; each branch applies only its suffix.
-    prefix_len = 0
-    shortest = min(len(ops) for _, _, ops in chains)
-    while prefix_len < shortest and all(
-        ops[prefix_len] is chains[0][2][prefix_len] for _, _, ops in chains
-    ):
-        prefix_len += 1
-    common = chains[0][2][:prefix_len]
-    branch_fns = {
-        name: _apply_chain(ops[prefix_len:]) for name, _, ops in chains
-    }
     pipe = run_streaming_fanout(
         spark,
-        src,
-        branch_fns,
+        _apply_chain(chains[0][2][:prefix_len])(src),
+        {name: _apply_chain(ops[prefix_len:]) for name, _, ops in chains},
         sink_factory=lambda name: sinks[name],
         checkpoint_dir=checkpoint_dir,
         trigger_seconds=trigger_seconds,
         query_name=query_name,
-        common_fn=_with_refresh_common(resolvers, _apply_chain(common)),
+        resolvers=resolvers,
     )
-    pipe.servers = servers
+    if plan.root.args.get("_server"):
+        pipe.servers = [plan.root.args["_server"]]
     return pipe
-
-
-def _with_refresh_common(resolvers, common_fn):
-    if not resolvers:
-        return common_fn
-
-    def fn(df: DataFrame) -> DataFrame:
-        for r in resolvers:
-            r.refresh_if_stale()
-        return common_fn(df)
-
-    return fn
 
 
 def run_streaming_fanout(
@@ -368,54 +270,58 @@ def run_streaming_fanout(
     checkpoint_dir: str,
     trigger_seconds: float | None = None,
     query_name: str = "vaero_fanout",
-    common_fn: Callable[[DataFrame], DataFrame] | None = None,
+    resolvers: list | tuple = (),
 ) -> StreamingPipeline:
-    """Multi-sink fan-out inside one query: per epoch, persist the batch
-    once, apply each branch's (batch-mode) transform chain, write to its
-    sink idempotently keyed by (epoch, sink). This is the Spark shape of
-    the reference's branch construct (``transformNode.go:36-62``) with
+    """Fan one streaming query out to every sink: per epoch, apply each
+    branch's transform to the batch and write it to its sink
+    idempotently keyed by (epoch, sink). This is the Spark shape of the
+    reference's branch construct (``transformNode.go:36-62``) with
     exactly-once instead of fire-and-forget.
 
-    ``common_fn`` is the shared transform prefix (the reference's single
-    transformNode feeding every sink, ``transformNode.go:58-62``): it is
-    applied ONCE per epoch and its *output* is persisted, so N branches
-    never recompute the expensive chain — with regex-heavy transforms
-    this halves (or better) per-epoch CPU vs putting the prefix inside
-    each branch.
+    ``source_stream`` already carries the shared transform prefix (the
+    reference's single transformNode feeding every sink,
+    ``transformNode.go:58-62``), applied stream-side: stateful ops
+    belong there. ``branch_fns`` run batch-mode per epoch, so they must
+    be stateless. ``resolvers`` (secrets) are refreshed at the start of
+    every epoch.
 
-    Branch writes run CONCURRENTLY (one thread per sink submitting its
-    Spark job): the branches are independent jobs over the same
-    persisted batch, and serial submission left the cluster idle during
-    each write's scheduling/commit tail — the reference gets the same
-    overlap from its per-sink flush goroutines (``sinkNode.go:133-173``).
-    Exactly-once is unaffected: each sink's epoch commit is independent
-    and idempotent, and a failed branch fails the whole batch (so the
-    epoch is redelivered and the already-committed sinks dedup it)."""
+    One branch writes the batch straight to its sink. With more, the
+    batch is persisted once, so N branches never recompute the shared
+    prefix, and branch writes run CONCURRENTLY (one thread per sink
+    submitting its Spark job): the branches are independent jobs over
+    the same persisted batch, and serial submission left the cluster
+    idle during each write's scheduling/commit tail — the reference gets
+    the same overlap from its per-sink flush goroutines
+    (``sinkNode.go:133-173``). Exactly-once is unaffected: each sink's
+    epoch commit is independent and idempotent, and a failed branch
+    fails the whole batch (so the epoch is redelivered and the
+    already-committed sinks dedup it)."""
     sinks = {name: sink_factory(name) for name in branch_fns}
+    writes = {name: sink.foreach_batch() for name, sink in sinks.items()}
 
     def fan_out(batch_df: DataFrame, epoch_id: int) -> None:
         from concurrent.futures import ThreadPoolExecutor
 
-        shared = common_fn(batch_df) if common_fn else batch_df
-        # concurrent branches do NOT double-compute the persisted batch:
-        # the block manager's per-partition cache locks make the second
-        # job's tasks wait for in-flight computation instead of redoing it
-        shared.persist()
+        for r in resolvers:
+            r.refresh_if_stale()
 
         def run_branch(item):
             name, fn = item
-            out = fn(shared)
-            if hasattr(sinks[name], "write"):
-                sinks[name].write(out, epoch_id)
-            else:
-                sinks[name].foreach_batch()(out, epoch_id)
+            writes[name](fn(batch_df), epoch_id)
 
+        if len(branch_fns) == 1:
+            run_branch(next(iter(branch_fns.items())))
+            return
+        # concurrent branches do NOT double-compute the persisted batch:
+        # the block manager's per-partition cache locks make the second
+        # job's tasks wait for in-flight computation instead of redoing it
+        batch_df.persist()
         try:
             with ThreadPoolExecutor(max_workers=len(branch_fns)) as pool:
                 # list() re-raises the first branch exception
                 list(pool.map(run_branch, branch_fns.items()))
         finally:
-            shared.unpersist()
+            batch_df.unpersist()
 
     writer = (
         source_stream.writeStream.queryName(query_name)
