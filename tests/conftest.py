@@ -20,6 +20,9 @@ def spark():
             "spark.sql.streaming.stateStore.providerClass": (
                 "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
             ),
+            # get_spark's 48g default lets the heap grow past a 16 GB host's
+            # memory over the suite (JVM resident 15 GB, then OOM-killed)
+            "spark.driver.memory": "6g",
         },
     )
     yield s
