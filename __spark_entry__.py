@@ -328,8 +328,11 @@ class _pinned_state_partitions:
     The count is SIZED TO STATE VOLUME rather than the session's batch
     shuffle width (guide §2: partitioning must be scale-adaptive, not a
     constant tuned to the local core count): one partition per 256 MB of
-    stream input, floor 8, so gate inputs yield the floor and petabyte
-    streams get width. The input is measured through Hadoop FS, so
+    stream input, floor ``min(8, slots)``, so gate inputs yield the floor
+    and petabyte streams get width. The floor never exceeds the executor
+    slots (``defaultParallelism``): each store pays a fixed commit and
+    Python-worker cost per epoch, and stores beyond the slots run in
+    extra task waves. The input is measured through Hadoop FS, so
     ``file://``, ``s3a://`` and ``hdfs://`` URIs size like local paths."""
 
     def __init__(self, spark, input_path: str):
@@ -338,7 +341,8 @@ class _pinned_state_partitions:
         fs, jpath, _ = _jvm_fs(spark, input_path)
         self.spark = spark
         self.bytes = fs.getContentSummary(jpath).getLength()
-        self.n = max(8, self.bytes // (256 << 20))
+        slots = spark.sparkContext.defaultParallelism
+        self.n = max(min(8, slots), self.bytes // (256 << 20))
 
     def __enter__(self):
         self.old = self.spark.conf.get("spark.sql.shuffle.partitions")
@@ -373,7 +377,10 @@ def _drain_gate(
     - ``sink``: called with ``<work>/out`` to build the sink (e.g.
       ``ExactlyOnceParquetSink``); default a fresh :class:`MemorySink`.
     - ``pin``: pin the state-store partitions with
-      :class:`_pinned_state_partitions` for the drain. Measured r7
+      :class:`_pinned_state_partitions` for the drain; otherwise the
+      session width applies (``get_spark``'s default: the slot count).
+      On a host with 8 or fewer slots the two coincide by default, so
+      the split below matters on wider hosts. Measured r7 on 32 slots
       (ABBA, order-balanced, CPU probes healthy): JVM-native state ops
       (dropDuplicates, window/session aggs, stream-stream joins) are
       per-store-fixed-cost bound and speed up 1.2-1.7x at 8 partitions

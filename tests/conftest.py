@@ -20,8 +20,8 @@ def spark():
             "spark.sql.streaming.stateStore.providerClass": (
                 "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
             ),
-            # get_spark's 48g default lets the heap grow past a 16 GB host's
-            # memory over the suite (JVM resident 15 GB, then OOM-killed)
+            # a fixed heap, so the suite's memory does not follow the host's
+            # (get_spark's default is half of physical memory)
             "spark.driver.memory": "6g",
         },
     )

@@ -7,11 +7,17 @@ left running and the session's shuffle width must be back where it was
 
 from __future__ import annotations
 
+import shutil
+
 import duckdb
 import pytest
+from pyspark.sql import functions as F
 
 import __spark_entry__ as E
 from tools.check_oracle import TABLES, value_hash
+from vaero_spark.sinks.writers import MemorySink
+from vaero_spark.sources.transcripts import TRANSCRIPTS_SCHEMA
+from vaero_spark.testing.fixtures import write_transcripts_parquet
 
 STREAM_GATES = [name for name in E.queries() if name.startswith("stream_")]
 
@@ -53,4 +59,54 @@ def test_pinned_input_size_reads_uris(spark, tmp_path):
     n_bytes = E._pinned_state_partitions(spark, d).bytes
     assert n_bytes > 0
     assert E._pinned_state_partitions(spark, f"file://{d}").bytes == n_bytes
-    assert E._pinned_state_partitions(spark, d).n == 8
+    slots = spark.sparkContext.defaultParallelism
+    assert E._pinned_state_partitions(spark, d).n == min(8, slots)
+
+
+def test_state_width_survives_a_narrower_resume(spark, tmp_path):
+    """A stateful query keeps the state-store count it started with: a
+    checkpoint begun at width 8 and resumed in a session at width 4 still
+    runs 8 stores (Spark restores the width from the offset log), and its
+    drained result equals an uninterrupted run's."""
+    staged = tmp_path / "staged"
+    pdf = write_transcripts_parquet(str(staged), n_files=6, n_turns=1200, n_convs=30, seed=5)
+    files = sorted(staged.iterdir())
+    src = tmp_path / "src"
+    src.mkdir()
+
+    def drain(inp, ckpt, sink, width):
+        spark.conf.set("spark.sql.shuffle.partitions", str(width))
+        q = (
+            spark.readStream.schema(TRANSCRIPTS_SCHEMA)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(str(inp))
+            .groupBy("conv_id")
+            .agg(F.count("*").alias("n"), F.max("turn_idx").alias("last"))
+            .writeStream.outputMode("update")
+            .option("checkpointLocation", str(ckpt))
+            .foreachBatch(sink.foreach_batch())
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+            return [op["numShufflePartitions"] for op in q.lastProgress["stateOperators"]]
+        finally:
+            q.stop()
+
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        resumed = MemorySink()
+        for f in files[:3]:
+            shutil.copy(f, src)
+        assert drain(src, tmp_path / "ckpt", resumed, 8) == [8]
+        for f in files[3:]:
+            shutil.copy(f, src)
+        assert drain(src, tmp_path / "ckpt", resumed, 4) == [8]
+        assert len(resumed.batches) == 6
+        whole = MemorySink()
+        assert drain(staged, tmp_path / "ckpt_whole", whole, 4) == [4]
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    got = sorted(tuple(r) for r in E._last_emission(resumed, "conv_id"))
+    assert got == sorted(tuple(r) for r in E._last_emission(whole, "conv_id"))
+    assert sum(r[1] for r in got) == len(pdf)

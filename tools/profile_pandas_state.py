@@ -38,7 +38,6 @@ def main() -> None:
     spark = get_spark(
         "profile_pandas_state",
         master=f"local[{cpus}]",
-        shuffle_partitions=max(cpus, 8),
         extra_conf={"spark.sql.streaming.stateStore.providerClass": (
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
         )},

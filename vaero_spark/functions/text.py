@@ -132,8 +132,9 @@ def quality_columns(col: str | Column, tok: Column | None = None) -> dict[str, C
     # count punct CHARS by stripping the allowed class and measuring
     # what remains — same value as size(regexp_extract_all) (every match
     # is one char) without materializing a per-row match array on the
-    # hot path
-    n_punct = F.length(F.regexp_replace(c, "[A-Za-z0-9 ]", "")).cast("bigint")
+    # hot path; stripping whole runs leaves the same string in fewer
+    # replacements
+    n_punct = F.length(F.regexp_replace(c, "[A-Za-z0-9 ]+", "")).cast("bigint")
     stop_bp = F.floor(F.lit(10000) * n_stop / F.greatest(n_tok, F.lit(1))).cast("bigint")
     punct_bp = F.floor(
         F.lit(10000) * n_punct / F.greatest(F.length(c).cast("bigint"), F.lit(1))

@@ -1,8 +1,10 @@
 """SparkSession factory tuned for the sandbox (local[N]) while keeping
 cluster-scale defaults: AQE on, skew-join handling on, shuffle
-partitions sized to parallelism, UTC session timezone (required for
-bit-exact parity with the DuckDB oracle), Arrow enabled for the
-pandas-UDF slow path. Python workers start through
+partitions equal to the master's slot count (which also fixes a
+streaming query's state-store count, so a stateful stage runs in one
+wave of tasks), UTC session timezone (required for bit-exact parity
+with the DuckDB oracle), Arrow enabled for the pandas-UDF slow path, a
+driver heap that fits the host. Python workers start through
 ``vaero_spark.worker_daemon``, which stops each task from re-parsing
 ``pyspark.zip`` (~0.28 CPU-s per Python task); the package's parent directory
 goes on the workers' ``PYTHONPATH`` so they find it from any working
@@ -12,10 +14,26 @@ directory.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_LOCAL_MASTER = re.compile(r"local\[(\d+)\]")
+
+
+def master_slots(master: str, cpus: int) -> int:
+    """Task slots of ``master``: N for ``local[N]``, else ``cpus``."""
+    m = _LOCAL_MASTER.fullmatch(master)
+    return int(m.group(1)) if m else cpus
+
+
+def default_driver_memory() -> str:
+    """Half the host's physical memory, at least 1g and at most 48g: the
+    heap may grow to its limit over a long session, and a limit above
+    physical memory ends with the kernel killing the JVM."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(48, max(1, phys // 2 >> 30))}g"
 
 
 def get_spark(
@@ -27,6 +45,11 @@ def get_spark(
     """Build (or fetch) a SparkSession.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
+    ``shuffle_partitions`` defaults to :func:`master_slots`: a streaming
+    query fixes its state-store count from this width when it first
+    starts, and each store pays a fixed commit and Python-worker cost per
+    epoch, so more stores than slots only add task waves. The driver heap
+    is ``$SPARK_DRIVER_MEMORY``, else :func:`default_driver_memory`.
     On a real cluster this function is a no-op passthrough: spark-submit
     sets the master and executor topology; we only pin semantics-critical
     confs (timezone, AQE, Arrow).
@@ -35,7 +58,8 @@ def get_spark(
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
-        shuffle_partitions = max(cpus, 8)
+        shuffle_partitions = master_slots(master, cpus)
+    driver_memory = os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory()
 
     conf = dict(extra_conf or {})
     worker_path = [conf.pop("spark.executorEnv.PYTHONPATH", None), _PACKAGE_PARENT]
@@ -53,7 +77,7 @@ def get_spark(
         # driver — measured as all-executors-parked phases per epoch)
         .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory", driver_memory)
         .config("spark.python.daemon.module", "vaero_spark.worker_daemon")
         .config("spark.executorEnv.PYTHONPATH", os.pathsep.join(filter(None, worker_path)))
     )
