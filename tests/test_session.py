@@ -1,6 +1,7 @@
 """``get_spark``'s host-derived defaults: the shuffle width (and so a new
-streaming query's state-store count) is the master's slot count, and the
-driver heap follows the host's physical memory."""
+streaming query's state-store count) is the master's slot count, the
+driver heap follows the host's physical memory, and an in-process master
+reads and writes local files through the java.nio local filesystem."""
 
 from __future__ import annotations
 
@@ -11,7 +12,7 @@ import textwrap
 
 import pytest
 
-from vaero_spark.session import default_driver_memory, master_slots
+from vaero_spark.session import default_driver_memory, in_process, master_slots
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -24,6 +25,15 @@ def test_master_slots(master, slots):
     assert master_slots(master, cpus=5) == slots
 
 
+@pytest.mark.parametrize(
+    "master, local",
+    [("local", True), ("local[2]", True), ("local[*]", True), ("local[4,2]", True),
+     ("local-cluster[2,1,1024]", False), ("yarn", False), ("spark://h:7077", False)],
+)
+def test_in_process(master, local):
+    assert in_process(master) is local
+
+
 def test_default_driver_memory_fits_the_host():
     gb = int(default_driver_memory().removesuffix("g"))
     phys_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / (1 << 30)
@@ -34,15 +44,25 @@ def test_default_driver_memory_fits_the_host():
 def test_session_defaults_follow_the_master(tmp_path):
     """A session started on ``local[2]`` with no explicit width gets 2
     shuffle partitions, even with ``$SPARK_GRAFT_CPUS`` wider; with no
-    ``$SPARK_DRIVER_MEMORY`` its heap is :func:`default_driver_memory`."""
+    ``$SPARK_DRIVER_MEMORY`` its heap is :func:`default_driver_memory`.
+    Its ``file:`` filesystems are the java.nio ones, and a caller's
+    ``spark.driver.extraClassPath`` entry stays on the classpath."""
+    caller_jar = str(tmp_path / "caller.jar")
     script = textwrap.dedent(
         f"""
         import sys
         sys.path.insert(0, {REPO!r})
         from vaero_spark.session import get_spark
 
-        spark = get_spark("width_probe", master="local[2]")
-        print(spark.conf.get("spark.sql.shuffle.partitions"),
+        spark = get_spark("width_probe", master="local[2]",
+                          extra_conf={{"spark.driver.extraClassPath": {caller_jar!r}}})
+        jvm, conf = spark._jvm, spark._jsc.hadoopConfiguration()
+        uri = jvm.java.net.URI("file:///")
+        print(jvm.org.apache.hadoop.fs.FileSystem.get(uri, conf).getClass().getName(),
+              jvm.org.apache.hadoop.fs.FileContext.getFileContext(uri, conf)
+              .getDefaultFileSystem().getClass().getName(),
+              jvm.java.lang.System.getProperty("java.class.path"),
+              spark.conf.get("spark.sql.shuffle.partitions"),
               spark.sparkContext.getConf().get("spark.driver.memory"))
         spark.stop()
         """
@@ -54,4 +74,7 @@ def test_session_defaults_follow_the_master(tmp_path):
         capture_output=True, text=True, timeout=300,
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
-    assert proc.stdout.split()[-2:] == ["2", default_driver_memory()]
+    fs, afs, class_path, *defaults = proc.stdout.split()[-5:]
+    assert (fs, afs) == ("vaero.fs.NioLocalFileSystem", "vaero.fs.NioLocalFs")
+    assert caller_jar in class_path.split(os.pathsep)
+    assert defaults == ["2", default_driver_memory()]

@@ -358,9 +358,3 @@ def _validate_checkpoint_plan(checkpoint_dir: str, fp: str, plan: Plan) -> None:
     with open(tmp, "w") as f:
         _json.dump({"fingerprint": fp, "plan": plan.serialize()}, f, default=str)
     os.replace(tmp, meta_path)
-
-
-def checkpoint_root(base: str, job_name: str) -> str:
-    path = os.path.join(base, "checkpoints", job_name)
-    os.makedirs(path, exist_ok=True)
-    return path
