@@ -6,7 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from vaero_spark.sinks.bucketed import cojoin, load_bucketed, save_bucketed
+from vaero_spark.sinks.bucketed import save_bucketed
 
 
 def _plan(df) -> str:
@@ -29,7 +29,7 @@ def test_cojoin_of_cobucketed_tables_is_exchange_free(spark, tmp_path):
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        joined = cojoin(spark, "t_bk_left", "t_bk_right", "k")
+        joined = spark.table("t_bk_left").join(spark.table("t_bk_right"), "k")
         assert "Exchange" not in _plan(joined)
         rows = joined.orderBy("k").limit(3).collect()
         assert [(r.k, r.a, r.b) for r in rows] == [(0, 0, 0), (1, 2, 3), (2, 4, 6)]
@@ -47,7 +47,7 @@ def test_groupby_on_bucket_key_is_exchange_free(spark, tmp_path):
     save_bucketed(df, "t_bk_agg", "k", 4, path=str(tmp_path / "g"))
     try:
         agg = (
-            load_bucketed(spark, "t_bk_agg")
+            spark.table("t_bk_agg")
             .groupBy("k")
             .agg(F.count(F.lit(1)).alias("n"))
         )
@@ -65,7 +65,8 @@ def test_mismatched_bucket_counts_still_correct(spark, tmp_path):
     save_bucketed(left, "t_bk_l8", "k", 8, path=str(tmp_path / "l8"))
     save_bucketed(right, "t_bk_r3", "k", 3, path=str(tmp_path / "r3"))
     try:
-        assert cojoin(spark, "t_bk_l8", "t_bk_r3", "k").count() == 100
+        joined = spark.table("t_bk_l8").join(spark.table("t_bk_r3"), "k")
+        assert joined.count() == 100
     finally:
         spark.sql("DROP TABLE IF EXISTS t_bk_l8")
         spark.sql("DROP TABLE IF EXISTS t_bk_r3")

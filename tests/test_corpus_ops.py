@@ -411,11 +411,6 @@ def test_frame_sampling_counts(spark):
         assert got.get(row.doc_id, 0) == expect
 
 
-def test_decode_stub_raises():
-    with pytest.raises(NotImplementedError):
-        MM.decode_image(b"\x89PNG...")
-
-
 def test_neardup_clusters_no_driver_probe_actions(spark):
     """Convergence detection must ride the propagation job itself
     (observe + localCheckpoint), not a separate isEmpty/count/collect

@@ -78,3 +78,38 @@ def test_session_defaults_follow_the_master(tmp_path):
     assert (fs, afs) == ("vaero.fs.NioLocalFileSystem", "vaero.fs.NioLocalFs")
     assert caller_jar in class_path.split(os.pathsep)
     assert defaults == ["2", default_driver_memory()]
+
+
+def test_spark_submit_keeps_the_launchers_master(tmp_path):
+    """Under ``spark-submit`` the Python driver joins a JVM that is already
+    running: a default ``get_spark()`` keeps the submitted master and sizes
+    the width to it, and local parquet I/O works although the java.nio
+    filesystem's jar could not join that JVM's classpath."""
+    import pyspark
+
+    out = str(tmp_path / "probe.parquet")
+    script = tmp_path / "probe.py"
+    script.write_text(textwrap.dedent(
+        f"""
+        import sys
+        sys.path.insert(0, {REPO!r})
+        from vaero_spark.session import get_spark
+
+        spark = get_spark("submit_probe")
+        spark.range(5).write.parquet({out!r})
+        rows = sorted(r.id for r in spark.read.parquet({out!r}).collect())
+        print(spark.sparkContext.master,
+              spark.conf.get("spark.sql.shuffle.partitions"),
+              ",".join(map(str, rows)))
+        spark.stop()
+        """
+    ))
+    env = dict(os.environ, SPARK_GRAFT_CPUS="3", PYSPARK_PYTHON=sys.executable,
+               PYSPARK_DRIVER_PYTHON=sys.executable)
+    submit = os.path.join(os.path.dirname(pyspark.__file__), "bin", "spark-submit")
+    proc = subprocess.run(
+        [submit, "--master", "local[2]", "--driver-memory", "1g", str(script)],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert proc.stdout.split()[-3:] == ["local[2]", "2", "0,1,2,3,4"]

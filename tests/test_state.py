@@ -1,6 +1,7 @@
 """Custom keyed-state operators (applyInPandasWithState): open-session
-tracking with event-time timeout, stateful dedup, routing counters,
-byte-cap flush parity."""
+tracking with event-time timeout, routing counters with idle eviction,
+the shared eviction helpers, and the stored state layout of every
+such operator."""
 
 from __future__ import annotations
 
@@ -8,14 +9,9 @@ import os
 
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
-from vaero_spark.operators.state import (
-    byte_cap_flush,
-    routing_counters,
-    stateful_dedup,
-    track_open_sessions,
-)
+from vaero_spark.operators import analytics, cep, curate, state
+from vaero_spark.operators.state import routing_counters, track_open_sessions
 from vaero_spark.sinks.writers import MemorySink
 from vaero_spark.sources.transcripts import transcripts_stream
 from vaero_spark.testing.fixtures import write_transcripts_parquet
@@ -39,18 +35,6 @@ def src(tmp_path_factory):
     d = tmp_path_factory.mktemp("state_src")
     pdf = write_transcripts_parquet(str(d), n_files=3, n_turns=1500, n_convs=40, seed=23)
     return str(d), pdf
-
-
-def test_stateful_dedup_removes_duplicates(spark, src, tmp_path):
-    src_dir, pdf = src
-    stream = transcripts_stream(spark, src_dir, max_files_per_trigger=1)
-    deduped = stateful_dedup(stream)
-    sink = _run(spark, deduped, str(tmp_path), "dedup", "append")
-    got = [(r.conv_id, r.turn_idx) for r in sink.rows()]
-    assert len(got) == len(set(got)), "emitted duplicates"
-    # every distinct (conv, turn) appears exactly once
-    want = set(zip(pdf["conv_id"], pdf["turn_idx"]))
-    assert set(got) == want
 
 
 def test_routing_counters_final_totals(spark, src, tmp_path):
@@ -181,35 +165,6 @@ def test_routing_counters_evict_idle_state(spark, tmp_path):
     )
 
 
-def test_stateful_dedup_evicts_idle_state_and_still_dedups(spark, tmp_path):
-    """Same eviction bound for the dedup seen-sets; duplicates within
-    the horizon are still dropped after other keys were evicted."""
-    src_dir, base = _mk_idle_src(tmp_path)
-    import time
-
-    # a duplicate of c2 turn 1 in a later file: still deduped
-    pd.DataFrame(
-        {
-            "conv_id": ["c2"],
-            "turn_idx": pd.array([1], dtype="int32"),
-            "role": ["user"],
-            "text": ["x"],
-            "tool": [""],
-            "ts": pd.Series([pd.Timestamp("2024-03-01 15:00:00")]).astype(
-                "datetime64[us]"
-            ),
-        }
-    ).to_parquet(os.path.join(src_dir, "f3.parquet"), index=False)
-    time.sleep(1.1)
-    stream = transcripts_stream(spark, src_dir, max_files_per_trigger=1)
-    deduped = stateful_dedup(stream, watermark="10 minutes", idle_timeout_seconds=600)
-    sink, prog = _run_with_progress(spark, deduped, str(tmp_path), "dedup_evict", "append")
-    got = sorted((r.conv_id, r.turn_idx) for r in sink.rows())
-    assert got == [("c1", 0), ("c1", 1), ("c2", 0), ("c2", 1)]  # dup dropped
-    assert prog[-1]["stateOperators"][0]["numRowsTotal"] == 1  # c1 evicted
-    assert any(p["stateOperators"][0].get("numRowsRemoved", 0) > 0 for p in prog)
-
-
 def test_pdf_max_us_ignores_nat():
     """NaT becomes the -2^63 sentinel under an int64 view; the last-event
     tracker must skip null ts or an all-null conversation arms an
@@ -227,7 +182,7 @@ def test_pdf_max_us_ignores_nat():
 def test_arm_idle_timeout_skips_all_null_ts_key():
     """A key whose rows ALL carry null ts keeps last_us=0; arming it
     would degenerate to watermark+1 — an immediately-expiring timeout
-    that evicts the seen-set on the next batch, re-admitting duplicates.
+    that evicts the key's state on the next batch.
     Such a key must retain NoTimeout behavior until a real ts arrives."""
     from vaero_spark.operators.state import _arm_idle_timeout
 
@@ -248,41 +203,75 @@ def test_arm_idle_timeout_skips_all_null_ts_key():
     assert st.armed == 1_700_000_100_000 + 3600 * 1000  # real ts arms
 
 
-def test_byte_cap_flush_counts(spark, src, tmp_path):
-    """batch_max_bytes parity (sinkNode.go:105-125): flush rows appear
-    whenever a prefix buffer would exceed the cap; each flushed buffer
-    except the trailing one is ≤ cap and adding one more event would
-    have exceeded it."""
-    src_dir, pdf = src
-    cap = 2000
-    stream = transcripts_stream(spark, src_dir, max_files_per_trigger=1)
-    flushes = byte_cap_flush(stream, batch_max_bytes=cap, prefix_format="yyyy-MM-dd")
-    sink = _run(spark, flushes, str(tmp_path), "flush", "append")
-    rows = sink.rows()
-    assert rows, "no flushes"
-    assert all(r.n_bytes <= cap for r in rows)
-    total_flushed = sum(r.n_events for r in rows)
-    assert 0 < total_flushed <= len(pdf)
 
-
-def test_byte_cap_time_flush_drains_trailing_buffer(spark, tmp_path):
-    """The event-time version of the reference's batch_max_time timer
-    (sinkNode.go:242-254): once the watermark passes a prefix's last
-    event + time cap, its trailing sub-cap buffer flushes and the state
-    row is evicted — EVERY event ends up flushed, prefixes don't
-    accumulate open buffers forever."""
-    src_dir, base = _mk_idle_src(tmp_path)
-    stream = transcripts_stream(spark, src_dir, max_files_per_trigger=1)
-    flushes = byte_cap_flush(
-        stream,
-        batch_max_bytes=10_000_000,  # byte cap never reached
-        batch_max_time_s=300,
-        prefix_format="yyyy-MM-dd HH",  # hour prefixes: c1's hour goes idle
-        watermark="10 minutes",
-    )
-    sink, prog = _run_with_progress(spark, flushes, str(tmp_path), "tflush", "append")
-    rows = sink.rows()
-    # c1's two 09:xx turns flushed by the time cap (single flush row)
-    nine = [r for r in rows if r.prefix.endswith("09")]
-    assert len(nine) == 1 and nine[0].n_events == 2
-    assert any(p["stateOperators"][0].get("numRowsRemoved", 0) > 0 for p in prog)
+@pytest.mark.parametrize(
+    "layout,want",
+    [
+        pytest.param(
+            cep._state_schema(cep._KleeneStep),
+            "struct<next_idx:bigint,pend_idx:array<bigint>,pend_sym:string,"
+            "carry:string,n_matches:bigint,first_match:bigint,last_us:bigint>",
+            id="cep_kleene",
+        ),
+        pytest.param(
+            cep._state_schema(cep._AbsenceStep),
+            "struct<next_idx:bigint,pend_idx:array<bigint>,pend_sym:string,"
+            "open_idx:array<bigint>,n_triggers:bigint,n_dangling:bigint,"
+            "first_dangling:bigint,last_us:bigint>",
+            id="cep_absence",
+        ),
+        pytest.param(
+            cep._state_schema(cep._WithinStep),
+            "struct<next_idx:bigint,pend_idx:array<bigint>,pend_sym:string,"
+            "pend_ms:array<bigint>,carry_sym:string,carry_ms:array<bigint>,"
+            "n_within:bigint,first_within:bigint,last_us:bigint>",
+            id="cep_within",
+        ),
+        pytest.param(
+            cep._state_schema(cep._AbsenceTimeStep),
+            "struct<next_idx:bigint,pend_idx:array<bigint>,pend_sym:string,"
+            "pend_ms:array<bigint>,open_idx:array<bigint>,open_ms:array<bigint>,"
+            "n_triggers:bigint,n_dangling:bigint,first_dangling:bigint,"
+            "last_us:bigint>",
+            id="cep_absence_time",
+        ),
+        pytest.param(
+            state.SESSION_STATE_SCHEMA,
+            "struct<ts_us:array<bigint>>",
+            id="open_sessions",
+        ),
+        pytest.param(
+            state.COUNTER_STATE_SCHEMA,
+            "struct<n_total:bigint,n_user:bigint,n_tool:bigint,n_error:bigint,"
+            "last_us:bigint>",
+            id="routing_counters",
+        ),
+        pytest.param(
+            state.UPSERT_STATE_DDL,
+            "best_seq bigint, deleted int, text_md5 string",
+            id="upsert",
+        ),
+        pytest.param(
+            analytics._FUNNEL_STATE_SCHEMA,
+            "struct<ords:array<bigint>,masks:array<bigint>,last_us:bigint>",
+            id="funnel",
+        ),
+        pytest.param(
+            analytics._SPIKE_STATE_SCHEMA,
+            "struct<bucket_idxs:array<bigint>,counts:array<bigint>>",
+            id="rate_spikes",
+        ),
+        pytest.param(
+            curate._LEX_STATE_SCHEMA_DDL,
+            "ords array<long>, hits array<long>, last_us long",
+            id="lexicon",
+        ),
+    ],
+)
+def test_stored_state_layout_is_pinned(layout, want):
+    """A checkpoint stores each operator's state rows in its layout; a
+    changed layout cannot resume from an existing checkpoint. Change a
+    literal here only together with a state migration or a documented
+    checkpoint reset."""
+    got = layout if isinstance(layout, str) else layout.simpleString()
+    assert got == want

@@ -13,7 +13,6 @@ import re
 
 _NAMED_PY = re.compile(r"\(\?P<([A-Za-z][A-Za-z0-9_]*)>")
 _NAMED_ANY = re.compile(r"\(\?P?<([A-Za-z][A-Za-z0-9_]*)>")
-_GROUP_OPEN = re.compile(r"(?<!\\)\((?!\?)")
 
 
 def to_java_regex(pattern: str) -> str:

@@ -109,8 +109,9 @@ def pack_sequences(
     Distributed shape: one narrow pass computes (shard, n_tokens), one
     shuffle groups shards, and an ``applyInPandas`` runs the exact
     greedy loop per shard (O(shard rows), the same sequential-decision
-    class as the sink's byte-cap flush ``operators/state.byte_cap_flush``
-    — the per-shard order dependency is inherent to packing, the
+    class as the reference sink's greedy byte-cap flush,
+    ``sinkNode.go:105-125`` — the per-shard order dependency is
+    inherent to packing, the
     parallelism comes from sharding). Output: (doc_id, shard, seq_idx,
     n_tokens) — integer-only, exactly reproduced by a recursive-CTE
     oracle.

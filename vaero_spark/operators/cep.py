@@ -674,9 +674,6 @@ class _KleeneStep:
         return n_matches + cnt, first_match if first_match >= 0 else first
 
 
-CEP_STREAM_STATE_SCHEMA = _state_schema(_KleeneStep)
-
-
 def stream_cep_kleene(
     stream: DataFrame,
     pattern: str,
@@ -815,9 +812,6 @@ class _AbsenceStep:
         return n_trig, n_dang + len(open_idx), min(firsts, default=-1)
 
 
-ABSENCE_STREAM_STATE_SCHEMA = _state_schema(_AbsenceStep)
-
-
 def stream_cep_absence(
     stream: DataFrame,
     trigger_role: str = "user",
@@ -909,9 +903,6 @@ class _WithinStep:
 
     def emit(self, acc, n_turns: int):
         return acc[2:]
-
-
-WITHIN_STREAM_STATE_SCHEMA = _state_schema(_WithinStep)
 
 
 def stream_cep_within(
@@ -1182,9 +1173,6 @@ class _AbsenceTimeStep(_AbsenceStep):
                 n_trig += 1
                 open_t.append((idx, m))
         return [i for i, _ in open_t], [t for _, t in open_t], n_trig, n_dang, first_dang
-
-
-ABSENCE_TIME_STREAM_STATE_SCHEMA = _state_schema(_AbsenceTimeStep)
 
 
 def stream_cep_absence_time(

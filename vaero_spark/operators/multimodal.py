@@ -3,10 +3,9 @@
 Media are opaque ``binary`` payloads with typed metadata (SURVEY.md
 §2.6; the reference is text-only). The Spark-side plumbing — binary
 columns through Arrow, `mapInPandas` batch shapes, schema evolution —
-is real and tested; the actual codecs are STUBBED (no image/audio
-libraries in this container): :func:`decode_image` raises
-``NotImplementedError`` unless handed the deterministic fake decoder
-used by tests.
+is real and tested; no codec is wired in (the package depends on no
+image/audio library), so the operators read payload bytes, never
+decoded pixels or samples.
 
 Operators:
 
@@ -60,14 +59,6 @@ FEATURES_SCHEMA = T.StructType(
         T.StructField("byte_max", T.IntegerType()),
     ]
 )
-
-
-def decode_image(payload: bytes):  # pragma: no cover - stub by design
-    """Decode an image payload to pixels. STUB: the sandbox has no
-    imaging libraries; production wires Pillow/libvips here. The
-    surrounding Spark plumbing (binary in, array out, batch sizes) is
-    what this repo implements and tests."""
-    raise NotImplementedError("image decoding requires an imaging library")
 
 
 def extract_metadata(media: DataFrame) -> DataFrame:

@@ -1,14 +1,19 @@
-"""Per-conversation custom state — ``applyInPandasWithState`` operators.
+"""Per-key custom state — ``applyInPandasWithState`` operators.
 
 The reference's only stateful construct is the sink-side per-prefix
-buffer: byte-cap flush (``/root/reference/execute/sinkNode.go:105-125``)
-and time-cap flush via a timer goroutine (``sinkNode.go:242-254``).
-These operators generalize that to keyed state in Spark's state store
-(RocksDB-backed in production), checkpointed and exactly-once — the
-reference loses its buffers on crash.
+buffer: byte-cap flush (``execute/sinkNode.go:105-125``) and time-cap
+flush via a timer goroutine (``sinkNode.go:242-254``). The byte cap
+lives in the sink's ``file_seq`` packing (``sinks/writers.py``); this
+module holds the keyed state that a job needs beyond what Spark's
+native stateful operators give: open-session tracking (the event-time
+time cap), routing counters and the CDC upsert view, plus the idle
+eviction helpers the CEP, funnel and lexicon operators share. State
+lives in Spark's state store (RocksDB-backed in production),
+checkpointed and exactly-once — the reference loses its buffers on
+crash.
 
 All logic is Arrow-batched pandas (no per-row Python in the JVM loop);
-state per key is O(1) scalars or a bounded set.
+state per key is O(1) scalars or a bounded list.
 """
 
 from __future__ import annotations
@@ -153,28 +158,15 @@ def track_open_sessions(
 
 
 # ---------------------------------------------------------------------------
-# stateful dedup (seen-set per conversation)
+# idle eviction (shared with the CEP, funnel and lexicon operators)
 # ---------------------------------------------------------------------------
 
-DEDUP_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("seen", T.ArrayType(T.IntegerType())),
-        T.StructField("last_us", T.LongType()),
-    ]
-)
-
-# Event-time idle horizon after which a key's state is evicted (both
-# custom-state ops below). Without eviction, one state row per
-# conversation lives FOREVER — on a months-long run over 10^9
-# conversations the state store grows without bound. A key idle longer
-# than this (in event time) is removed:
-#  - dedup: a duplicate arriving later than the idle horizon has an
-#    event time below ``watermark − idle`` and is already dropped by
-#    the watermark's late-row filter before reaching the operator, so
-#    eviction cannot re-admit it (keep idle ≥ the watermark delay);
-#  - counters: a conversation resuming after the horizon restarts at
-#    zero — partial counts merge downstream by summing per conv_id
-#    (the update-mode consumer sums/replaces per key anyway).
+# Event-time idle horizon after which a routing-counter key's state is
+# evicted. Without eviction, one state row per conversation lives
+# FOREVER — on a months-long run over 10^9 conversations the state store
+# grows without bound. A conversation resuming after the horizon
+# restarts at zero — partial counts merge downstream by summing per
+# conv_id (the update-mode consumer sums/replaces per key anyway).
 DEFAULT_IDLE_TIMEOUT_S = 24 * 3600
 
 
@@ -183,7 +175,7 @@ def _pdf_max_us(pdf: pd.DataFrame, cur: int) -> int:
     excluded BEFORE the int64 view: it converts to the -2^63 sentinel,
     and an all-null-ts conversation would otherwise keep last_us=0 and
     arm an already-expired timeout that evicts its state on the next
-    batch (re-admitting duplicates / resetting counters)."""
+    batch (resetting counters / reassembly buffers)."""
     ts = pdf["ts"].dropna()
     if ts.empty:
         return cur
@@ -199,65 +191,15 @@ def _arm_idle_timeout(state: GroupState, last_us: int, idle_s: int) -> None:
 
     A key that has never seen a non-null event time (``last_us == 0``)
     is NOT armed: max(1970+idle, wm+1) degenerates to wm+1 — an
-    immediately-expiring timeout that would evict the seen-set /
-    counters on the very next batch, re-admitting duplicates. Such a
-    key keeps NoTimeout behavior until a real timestamp arrives."""
+    immediately-expiring timeout that would evict the key's state on
+    the very next batch. Such a key keeps NoTimeout behavior until a
+    real timestamp arrives."""
     if last_us == 0:
         return
     state.setTimeoutTimestamp(
         max(
             -(-(last_us + idle_s * 1_000_000) // 1000),
             state.getCurrentWatermarkMs() + 1,
-        )
-    )
-
-
-def _dedup_fn(idle_timeout_seconds: int):
-    def fn(
-        key: Tuple[Any, ...], pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()  # idle past the horizon: seen-set expired
-            return
-        seen_list, last_us = state.get if state.exists else ([], 0)
-        seen = set(seen_list or [])
-        for pdf in pdf_iter:
-            fresh_mask = ~pdf["turn_idx"].isin(seen) & ~pdf["turn_idx"].duplicated()
-            out = pdf[fresh_mask]
-            seen.update(int(t) for t in out["turn_idx"])
-            if len(pdf):
-                last_us = _pdf_max_us(pdf, last_us)
-            if len(out):
-                yield out
-        state.update((sorted(seen), last_us))
-        _arm_idle_timeout(state, last_us, idle_timeout_seconds)
-
-    return fn
-
-
-def stateful_dedup(
-    stream: DataFrame,
-    watermark: str = "10 minutes",
-    idle_timeout_seconds: int = DEFAULT_IDLE_TIMEOUT_S,
-) -> DataFrame:
-    """Exactly-once per-(conv_id, turn_idx) pass-through — the custom-state
-    generalization of ``dropDuplicates`` (reference seed: the Okta cursor
-    ``>=`` late/dup gate, ``source_okta.py:91-113``). Keeps the full turn
-    row; the seen-set is bounded per conversation AND per-key state is
-    evicted after ``idle_timeout_seconds`` of event-time idleness (see
-    ``DEFAULT_IDLE_TIMEOUT_S`` for why eviction cannot re-admit a
-    duplicate when the horizon covers the watermark delay)."""
-    cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
-    out_schema = T.StructType([f for f in stream.schema.fields if f.name in cols])
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy("conv_id")
-        .applyInPandasWithState(
-            _dedup_fn(idle_timeout_seconds),
-            outputStructType=out_schema,
-            stateStructType=DEDUP_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
     )
 
@@ -358,112 +300,6 @@ def routing_counters(
             outputMode="update",
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
-    )
-
-
-# ---------------------------------------------------------------------------
-# byte-cap flush parity (batch_max_bytes)
-# ---------------------------------------------------------------------------
-
-FLUSH_OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("prefix", T.StringType()),
-        T.StructField("n_events", T.LongType()),
-        T.StructField("n_bytes", T.LongType()),
-        T.StructField("last_ts", T.TimestampType()),
-    ]
-)
-
-FLUSH_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("buf_bytes", T.LongType()),
-        T.StructField("buf_events", T.LongType()),
-        T.StructField("last_us", T.LongType()),
-    ]
-)
-
-
-def _flush_fn(batch_max_bytes: int, batch_max_time_s: int):
-    def fn(
-        key: Tuple[Any, ...], pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (prefix,) = key
-        if state.hasTimedOut:
-            # time-cap flush (sinkNode.go:242-254): the watermark passed
-            # last-event + batch_max_time with the buffer unflushed —
-            # emit the trailing buffer and drop the key (state eviction
-            # and the reference's flush timer are the same event here)
-            buf_bytes, buf_events, last_us = state.get
-            state.remove()
-            if buf_events:
-                yield pd.DataFrame(
-                    [(prefix, buf_events, buf_bytes, pd.Timestamp(int(last_us), unit="us"))],
-                    columns=["prefix", "n_events", "n_bytes", "last_ts"],
-                )
-            return
-        buf_bytes, buf_events, last_us = state.get if state.exists else (0, 0, 0)
-        flushed = []
-        for pdf in pdf_iter:
-            # text itself never ships — the JVM-computed char length is
-            # all the cap logic reads (guide §4.1; F.length == str.len
-            # on code points)
-            sizes = pdf["_text_len"].astype("int64") + 1  # + newline, like "\n".join
-            us = pdf["ts"].astype("int64")
-            if pdf["ts"].dtype == "datetime64[ns]":
-                us = us // 1000
-            # vectorized pass per Arrow batch; flush decisions are per-event
-            # (sinkNode.go:105-125: if appending would exceed the cap, flush
-            # existing buffer, start fresh with the new event)
-            for size, t in zip(sizes.to_numpy(), us.to_numpy()):
-                if buf_bytes + size > batch_max_bytes and buf_events > 0:
-                    flushed.append((prefix, buf_events, buf_bytes, pd.Timestamp(int(last_us), unit="us")))
-                    buf_bytes, buf_events = 0, 0
-                buf_bytes += int(size)
-                buf_events += 1
-                last_us = int(t)
-        state.update((buf_bytes, buf_events, last_us))
-        if buf_events:
-            _arm_idle_timeout(state, last_us, batch_max_time_s)
-        if flushed:
-            yield pd.DataFrame(flushed, columns=["prefix", "n_events", "n_bytes", "last_ts"])
-
-    return fn
-
-
-def byte_cap_flush(
-    stream: DataFrame,
-    batch_max_bytes: int = 1_000_000,
-    batch_max_time_s: int = 300,
-    prefix_format: str = "yyyy/MM/dd",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Exact-parity port of the sink buffer caps: group events by the
-    strftime prefix of ts (``sinkNode.go:63-102``), flush a 'file' row
-    whenever the buffered text bytes would exceed ``batch_max_bytes``
-    (``sinkNode.go:105-125``), AND flush the trailing buffer once the
-    watermark passes last-event + ``batch_max_time_s`` — the event-time
-    version of the reference's flush timer (``sinkNode.go:242-254``),
-    which doubles as state eviction: a prefix's state row lives only
-    while its buffer is open, so prefixes (dates) never accumulate
-    forever. Rows with null ts are dropped, mirroring the reference's
-    silent drop of unparseable timestamps (``sinkNode.go:86-89``)."""
-    from pyspark.sql import functions as F
-
-    keyed = (
-        stream.filter(F.col("ts").isNotNull())
-        .select(
-            F.date_format("ts", prefix_format).alias("prefix"),
-            F.length("text").alias("_text_len"),
-            "ts",
-        )
-        .withWatermark("ts", watermark)
-    )
-    return keyed.groupBy("prefix").applyInPandasWithState(
-        _flush_fn(batch_max_bytes, batch_max_time_s),
-        outputStructType=FLUSH_OUTPUT_SCHEMA,
-        stateStructType=FLUSH_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
 
 

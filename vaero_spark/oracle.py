@@ -29,16 +29,6 @@ def _get(obj: Any, path: str) -> Any:
     return cur
 
 
-def _has(obj: Any, path: str) -> bool:
-    cur = obj
-    for p in path.split("."):
-        if isinstance(cur, dict) and p in cur:
-            cur = cur[p]
-        else:
-            return False
-    return True
-
-
 def _set(obj: dict, path: str, value: Any) -> None:
     parts = path.split(".")
     cur = obj

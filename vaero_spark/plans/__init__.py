@@ -1,1 +1,1 @@
-from vaero_spark.plans.plan import OpNode, Plan, plan_from_json, plan_to_json  # noqa: F401
+from vaero_spark.plans.plan import OpNode, Plan, plan_from_json  # noqa: F401

@@ -60,10 +60,6 @@ def _chain_to_list(node: OpNode) -> list[Any]:
     return out
 
 
-def plan_to_json(plan: Plan) -> str:
-    return plan.to_json()
-
-
 def plan_fingerprint(plan: Plan) -> str:
     """Semantic fingerprint for checkpoint compatibility (SURVEY §3:
     "resume must validate plan compatibility"). Spark's checkpoint only

@@ -8,8 +8,9 @@ driver heap that fits the host. Python workers start through
 ``vaero_spark.worker_daemon``, which stops each task from re-parsing
 ``pyspark.zip`` (~0.28 CPU-s per Python task); the package's parent directory
 goes on the workers' ``PYTHONPATH`` so they find it from any working
-directory. On an in-process local master, local files go through
-``vaero.fs.NioLocalFileSystem`` (``jvm/localfs.jar``, sources beside it):
+directory. On an in-process local master whose JVM ``get_spark``
+launches, local files go through ``vaero.fs.NioLocalFileSystem``
+(``jvm/localfs.jar``, sources beside it):
 without ``libhadoop.so``, Hadoop's local filesystem forks ``chmod`` on every
 file it creates and ``readlink`` on every rename, ~17 ms per checkpoint or
 state-store file on a 4-vCPU VM; the jar's java.nio versions of those two
@@ -66,20 +67,22 @@ def get_spark(
     driver's classpath, after any ``spark.driver.extraClassPath`` the
     caller gives; another master keeps Hadoop's, as its executors may not
     have the jar.
-    On a real cluster this function is a no-op passthrough: spark-submit
-    sets the master and executor topology; we only pin semantics-critical
-    confs (timezone, AQE, Arrow).
+    Under ``spark-submit`` the Python driver joins a JVM that is already
+    running (``$PYSPARK_GATEWAY_PORT`` is set): ``master`` defaults to the
+    submitted one, and the java.nio filesystem is left out, as its jar can
+    no longer join that JVM's classpath.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    if master is None:
+    joined = "PYSPARK_GATEWAY_PORT" in os.environ
+    if master is None and not joined:
         master = f"local[{cpus}]"
-    if shuffle_partitions is None:
+    if shuffle_partitions is None and master is not None:
         shuffle_partitions = master_slots(master, cpus)
     driver_memory = os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory()
 
     conf = dict(extra_conf or {})
     worker_path = [conf.pop("spark.executorEnv.PYTHONPATH", None), _PACKAGE_PARENT]
-    if in_process(master):
+    if not joined and in_process(master):
         class_path = [conf.pop("spark.driver.extraClassPath", None), _LOCALFS_JAR]
         conf = {
             "spark.hadoop.fs.file.impl": "vaero.fs.NioLocalFileSystem",
@@ -87,11 +90,13 @@ def get_spark(
             **conf,
             "spark.driver.extraClassPath": os.pathsep.join(filter(None, class_path)),
         }
+    builder = SparkSession.builder.appName(app_name)
+    if master is not None:
+        builder = builder.master(master)
+    if shuffle_partitions is not None:
+        builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
     builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
+        builder.config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
@@ -108,5 +113,8 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
+    if shuffle_partitions is None:  # the launcher's master, known only now
+        width = master_slots(spark.sparkContext.master, cpus)
+        spark.conf.set("spark.sql.shuffle.partitions", str(width))
     spark.sparkContext.setLogLevel("WARN")
     return spark

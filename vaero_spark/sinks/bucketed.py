@@ -27,7 +27,7 @@ as a zip-merge without an in-task sort.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def save_bucketed(
@@ -44,7 +44,10 @@ def save_bucketed(
     One shuffle now, zero shuffles for every future equi-join or
     aggregation on ``key`` between tables sharing the layout. Pass
     ``path`` to create an EXTERNAL table at that location (tests use a
-    tmp dir; production points at the lake prefix).
+    tmp dir; production points at the lake prefix). Read it back with
+    ``spark.table(table)``: the scan carries the bucket distribution, so
+    a join of two tables written with the same ``n_buckets`` compiles
+    with no Exchange on either side.
     """
     if n_buckets < 1:
         raise ValueError("n_buckets must be >= 1")
@@ -55,17 +58,3 @@ def save_bucketed(
         w = w.option("path", path)
     w.format("parquet").saveAsTable(table)
 
-
-def load_bucketed(spark: SparkSession, table: str) -> DataFrame:
-    """Read a bucketed table back; the scan carries the bucket
-    distribution, so joins/aggs on the bucket key skip their Exchange."""
-    return spark.table(table)
-
-
-def cojoin(spark: SparkSession, left_table: str, right_table: str, key: str) -> DataFrame:
-    """Equi-join two co-bucketed tables on ``key`` — compiles to a join
-    with NO Exchange on either side when both tables were written by
-    :func:`save_bucketed` with the same bucket count."""
-    return load_bucketed(spark, left_table).join(
-        load_bucketed(spark, right_table), key
-    )

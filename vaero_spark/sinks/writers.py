@@ -65,8 +65,8 @@ class ExactlyOnceParquetSink:
       falls into (one window pass reusing the prefix partitioning;
       deterministic block packing, vs the reference's greedy
       reset-on-flush — boundaries may differ by at most one event per
-      file, documented divergence; exact greedy parity lives in
-      ``operators/state.byte_cap_flush``).
+      file, documented divergence; this packing is the one byte-cap
+      implementation).
     - ``filename_format`` (``sinkNode.go:190-225``): ``window_file``
       column = strftime of the LAST event's ts in the (prefix,
       file_seq) buffer — ``%s`` = epoch seconds like the reference's
