@@ -1,14 +1,19 @@
 """Custom keyed-state operators (applyInPandasWithState): open-session
 tracking with event-time timeout, routing counters with idle eviction,
-the shared eviction helpers, and the stored state layout of every
-such operator."""
+the shared eviction helpers, the packed int64-list codec, and the stored
+state layout of every such operator."""
 
 from __future__ import annotations
 
 import os
+import struct
 
 import pandas as pd
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
+from pyspark.errors import StreamingQueryException
+from pyspark.sql.streaming.state import GroupStateTimeout
 
 from vaero_spark.operators import analytics, cep, curate, state
 from vaero_spark.operators.state import routing_counters, track_open_sessions
@@ -204,74 +209,253 @@ def test_arm_idle_timeout_skips_all_null_ts_key():
 
 
 
-@pytest.mark.parametrize(
-    "layout,want",
-    [
-        pytest.param(
-            cep._state_schema(cep._KleeneStep),
-            "struct<next_idx:bigint,pend_idx:array<bigint>,pend_sym:string,"
-            "carry:string,n_matches:bigint,first_match:bigint,last_us:bigint>",
-            id="cep_kleene",
-        ),
-        pytest.param(
-            cep._state_schema(cep._AbsenceStep),
-            "struct<next_idx:bigint,pend_idx:array<bigint>,pend_sym:string,"
-            "open_idx:array<bigint>,n_triggers:bigint,n_dangling:bigint,"
-            "first_dangling:bigint,last_us:bigint>",
-            id="cep_absence",
-        ),
-        pytest.param(
-            cep._state_schema(cep._WithinStep),
-            "struct<next_idx:bigint,pend_idx:array<bigint>,pend_sym:string,"
-            "pend_ms:array<bigint>,carry_sym:string,carry_ms:array<bigint>,"
-            "n_within:bigint,first_within:bigint,last_us:bigint>",
-            id="cep_within",
-        ),
-        pytest.param(
-            cep._state_schema(cep._AbsenceTimeStep),
-            "struct<next_idx:bigint,pend_idx:array<bigint>,pend_sym:string,"
-            "pend_ms:array<bigint>,open_idx:array<bigint>,open_ms:array<bigint>,"
-            "n_triggers:bigint,n_dangling:bigint,first_dangling:bigint,"
-            "last_us:bigint>",
-            id="cep_absence_time",
-        ),
-        pytest.param(
-            state.SESSION_STATE_SCHEMA,
-            "struct<ts_us:array<bigint>>",
-            id="open_sessions",
-        ),
-        pytest.param(
-            state.COUNTER_STATE_SCHEMA,
-            "struct<n_total:bigint,n_user:bigint,n_tool:bigint,n_error:bigint,"
-            "last_us:bigint>",
-            id="routing_counters",
-        ),
-        pytest.param(
-            state.UPSERT_STATE_DDL,
-            "best_seq bigint, deleted int, text_md5 string",
-            id="upsert",
-        ),
-        pytest.param(
-            analytics._FUNNEL_STATE_SCHEMA,
-            "struct<ords:array<bigint>,masks:array<bigint>,last_us:bigint>",
-            id="funnel",
-        ),
-        pytest.param(
-            analytics._SPIKE_STATE_SCHEMA,
-            "struct<bucket_idxs:array<bigint>,counts:array<bigint>>",
-            id="rate_spikes",
-        ),
-        pytest.param(
-            curate._LEX_STATE_SCHEMA_DDL,
-            "ords array<long>, hits array<long>, last_us long",
-            id="lexicon",
-        ),
-    ],
-)
+# A changed literal is a checkpoint reset: Spark refuses a checkpoint of
+# the old layout at restart (test_array_layout_checkpoint_is_refused).
+_LAYOUTS = [
+    pytest.param(
+        cep._state_schema(cep._KleeneStep),
+        "struct<next_idx:bigint,pend_idx:binary,pend_sym:string,"
+        "carry:string,n_matches:bigint,first_match:bigint,last_us:bigint>",
+        id="cep_kleene",
+    ),
+    pytest.param(
+        cep._state_schema(cep._AbsenceStep),
+        "struct<next_idx:bigint,pend_idx:binary,pend_sym:string,"
+        "open_idx:binary,n_triggers:bigint,n_dangling:bigint,"
+        "first_dangling:bigint,last_us:bigint>",
+        id="cep_absence",
+    ),
+    pytest.param(
+        cep._state_schema(cep._WithinStep),
+        "struct<next_idx:bigint,pend_idx:binary,pend_sym:string,"
+        "pend_ms:binary,carry_sym:string,carry_ms:binary,"
+        "n_within:bigint,first_within:bigint,last_us:bigint>",
+        id="cep_within",
+    ),
+    pytest.param(
+        cep._state_schema(cep._AbsenceTimeStep),
+        "struct<next_idx:bigint,pend_idx:binary,pend_sym:string,"
+        "pend_ms:binary,open_idx:binary,open_ms:binary,"
+        "n_triggers:bigint,n_dangling:bigint,first_dangling:bigint,"
+        "last_us:bigint>",
+        id="cep_absence_time",
+    ),
+    pytest.param(
+        state.SESSION_STATE_SCHEMA,
+        "struct<ts_us:binary>",
+        id="open_sessions",
+    ),
+    pytest.param(
+        state.COUNTER_STATE_SCHEMA,
+        "struct<n_total:bigint,n_user:bigint,n_tool:bigint,n_error:bigint,"
+        "last_us:bigint>",
+        id="routing_counters",
+    ),
+    pytest.param(
+        state.UPSERT_STATE_DDL,
+        "best_seq bigint, deleted int, text_md5 string",
+        id="upsert",
+    ),
+    pytest.param(
+        analytics._FUNNEL_STATE_SCHEMA,
+        "struct<ords:binary,masks:binary,last_us:bigint>",
+        id="funnel",
+    ),
+    pytest.param(
+        analytics._SPIKE_STATE_SCHEMA,
+        "struct<bucket_idxs:binary,counts:binary>",
+        id="rate_spikes",
+    ),
+    pytest.param(
+        curate._LEX_STATE_SCHEMA_DDL,
+        "ords binary, hits binary, last_us long",
+        id="lexicon",
+    ),
+]
+
+
+def _layout_string(layout) -> str:
+    return layout if isinstance(layout, str) else layout.simpleString()
+
+
+@pytest.mark.parametrize("layout,want", _LAYOUTS)
 def test_stored_state_layout_is_pinned(layout, want):
     """A checkpoint stores each operator's state rows in its layout; a
     changed layout cannot resume from an existing checkpoint. Change a
     literal here only together with a state migration or a documented
     checkpoint reset."""
-    got = layout if isinstance(layout, str) else layout.simpleString()
-    assert got == want
+    assert _layout_string(layout) == want
+
+
+@pytest.mark.parametrize("layout,want", _LAYOUTS)
+def test_stored_layout_has_no_array_or_map(layout, want):
+    """An ``array`` or ``map`` state field makes Spark's Row encoder emit
+    ``MapObjects`` code whose variable names carry a JVM-global counter,
+    so its state encoders are compiled again in every micro-batch; list
+    state is stored packed (``state.LONGS``) instead."""
+    got = _layout_string(layout).lower()
+    assert "array<" not in got and "map<" not in got
+
+
+# ---------------------------------------------------------------------------
+# the packed int64-list codec
+# ---------------------------------------------------------------------------
+
+_INT64 = st.integers(min_value=state.NULL_LONG + 1, max_value=2**63 - 1)
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.one_of(st.none(), st.lists(st.one_of(st.none(), _INT64), max_size=40)))
+@example(None)
+@example([])
+@example([None])
+@example([None, None])
+@example([state.NULL_LONG + 1, 2**63 - 1, 0, -1])
+def test_packed_longs_round_trip(values):
+    packed = state.pack_longs(values)
+    assert packed is None if values is None else len(packed) == 8 * len(values)
+    assert state.unpack_longs(packed) == values
+
+
+def test_packed_longs_are_little_endian_int64():
+    assert state.pack_longs([1, -2, None, 2**63 - 1]) == bytes.fromhex(
+        "0100000000000000"
+        "feffffffffffffff"
+        "0000000000000080"
+        "ffffffffffffff7f"
+    )
+    assert state.unpack_longs(bytearray(b"\x05" + b"\x00" * 7)) == [5]
+
+
+def test_packed_longs_reject_the_null_sentinel_and_torn_blobs():
+    with pytest.raises(ValueError):
+        state.pack_longs([3, state.NULL_LONG])
+    with pytest.raises(struct.error):
+        state.unpack_longs(b"\x00" * 9)
+
+
+# ---------------------------------------------------------------------------
+# the stored layouts on a running engine
+# ---------------------------------------------------------------------------
+
+
+@pytest.fixture(scope="module")
+def one_file_epochs(tmp_path_factory):
+    d = tmp_path_factory.mktemp("epochs_src")
+    write_transcripts_parquet(str(d), n_files=8, n_turns=800, n_convs=20, seed=5)
+    return str(d)
+
+
+@pytest.mark.parametrize(
+    "build,mode",
+    [
+        pytest.param(
+            lambda s: cep.stream_cep_match(s, "ttu"), "update", id="cep_match"
+        ),
+        pytest.param(track_open_sessions, "append", id="open_sessions"),
+    ],
+)
+def test_state_encoders_compile_once(spark, one_file_epochs, tmp_path, build, mode):
+    """Janino compiles a stateful operator's state encoders once, not in
+    every micro-batch. After the first epochs at most one class per data
+    epoch is new: the filter that holds the epoch's watermark as a
+    literal. The array<bigint> layouts compiled 2-3 more per epoch. (The
+    query's first no-data epoch, which may end the drain, compiles its
+    own plan once and is not counted.)"""
+    compiles = (
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME()
+    )
+    seen = {}
+
+    def on_batch(df, epoch_id):
+        df.collect()
+        seen[epoch_id] = compiles.getCount()
+
+    stream = transcripts_stream(spark, one_file_epochs, max_files_per_trigger=1)
+    q = (
+        build(stream)
+        .writeStream.outputMode(mode)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .foreachBatch(on_batch)
+        .start()
+    )
+    q.processAllAvailable()
+    data = {p["batchId"] for p in q.recentProgress if p["numInputRows"]}
+    q.stop()
+    late = {e: seen[e] - seen[e - 1] for e in sorted(data) if e > 2}
+    assert len(late) >= 4, seen
+    assert max(late.values()) <= 1, late
+
+
+def _old_layout_op(stream, cols, output, layout, value, mode):
+    """A stateful operator shaped like a packed one that stores ``value``
+    in an ``array<long>`` ``layout``, as the operators did before they
+    packed their lists."""
+
+    def fn(key, pdfs, group_state):
+        for _ in pdfs:
+            pass
+        group_state.update(value)
+        yield from ()
+
+    return (
+        stream.select(*cols)
+        .withWatermark("ts", "10 minutes")
+        .groupBy("conv_id")
+        .applyInPandasWithState(
+            fn, output, layout, mode, GroupStateTimeout.EventTimeTimeout
+        )
+    )
+
+
+@pytest.mark.parametrize(
+    "old,build,mode",
+    [
+        pytest.param(
+            (
+                ["conv_id", "turn_idx", "role", "ts"],
+                cep.CEP_STREAM_OUTPUT_SCHEMA,
+                "next_idx long, pend_idx array<long>, pend_sym string, "
+                "carry string, n_matches long, first_match long, last_us long",
+                (0, [1, 2], "tt", "", 0, -1, 0),
+            ),
+            lambda s: cep.stream_cep_match(s, "ttu"),
+            "update",
+            id="cep_match",
+        ),
+        pytest.param(
+            (["conv_id", "ts"], state.SESSION_OUTPUT_SCHEMA, "ts_us array<long>", ([0],)),
+            track_open_sessions,
+            "append",
+            id="open_sessions",
+        ),
+    ],
+)
+def test_array_layout_checkpoint_is_refused(spark, tmp_path, old, build, mode):
+    """A checkpoint written with an operator's old ``array<bigint>``
+    layout does not resume under the packed one: Spark's state schema
+    check refuses it at restart instead of misreading the stored rows."""
+    src = tmp_path / "src"
+    write_transcripts_parquet(str(src), n_files=1, n_turns=60, n_convs=4, seed=9)
+    ckpt = str(tmp_path / "ckpt")
+
+    def run(df):
+        q = (
+            df.writeStream.outputMode(mode)
+            .option("checkpointLocation", ckpt)
+            .foreachBatch(lambda b, _: b.collect())
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    run(_old_layout_op(transcripts_stream(spark, str(src)), *old, mode))
+    write_transcripts_parquet(
+        str(src), n_files=1, start_file_idx=1, n_turns=60, n_convs=4, seed=10
+    )
+    with pytest.raises(StreamingQueryException) as err:
+        run(build(transcripts_stream(spark, str(src))))
+    assert "STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE" in str(err.value)

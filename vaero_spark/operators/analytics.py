@@ -59,6 +59,14 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from vaero_spark.operators.state import (
+    LONGS,
+    _arm_idle_timeout,
+    _pdf_max_us,
+    pack_longs,
+    unpack_longs,
+)
+
 # ---------------------------------------------------------------------------
 # funnel analysis
 # ---------------------------------------------------------------------------
@@ -208,8 +216,8 @@ def funnel_membership_sql(
 
 _FUNNEL_STATE_SCHEMA = T.StructType(
     [
-        T.StructField("ords", T.ArrayType(T.LongType())),
-        T.StructField("masks", T.ArrayType(T.LongType())),
+        T.StructField("ords", LONGS),
+        T.StructField("masks", LONGS),
         T.StructField("last_us", T.LongType()),
     ]
 )
@@ -251,8 +259,6 @@ def stream_funnel(
     op gets an EXACT SQL oracle, the ``stream_cep`` /
     ``stream_spikes`` pairing.
     """
-    from vaero_spark.operators.state import _arm_idle_timeout, _pdf_max_us
-
     n = len(stage_cols)
     if not n:
         raise ValueError("stream_funnel needs at least one stage")
@@ -277,8 +283,8 @@ def stream_funnel(
         if state.hasTimedOut:  # idle conversation: emissions were eager
             state.remove()
             return
-        ords, masks, last_us = state.get if state.exists else ([], [], 0)
-        turns = dict(zip(ords, masks))
+        ords, masks, last_us = state.get if state.exists else (b"", b"", 0)
+        turns = dict(zip(unpack_longs(ords), unpack_longs(masks)))
         for pdf in pdfs:
             for o, m in zip(pdf["_ord"], pdf["_mask"]):
                 o = int(o)
@@ -286,7 +292,13 @@ def stream_funnel(
             if len(pdf):
                 last_us = _pdf_max_us(pdf, last_us)
         items = sorted(turns.items())
-        state.update(([o for o, _ in items], [m for _, m in items], last_us))
+        state.update(
+            (
+                pack_longs(o for o, _ in items),
+                pack_longs(m for _, m in items),
+                last_us,
+            )
+        )
         _arm_idle_timeout(state, last_us, idle_timeout_seconds)
         rows = []
         prev = None
@@ -548,8 +560,8 @@ def rate_spikes_sql(
 
 _SPIKE_STATE_SCHEMA = T.StructType(
     [
-        T.StructField("bucket_idxs", T.ArrayType(T.LongType())),
-        T.StructField("counts", T.ArrayType(T.LongType())),
+        T.StructField("bucket_idxs", LONGS),
+        T.StructField("counts", LONGS),
     ]
 )
 _SPIKE_OUT_SCHEMA = (
@@ -587,8 +599,8 @@ def stream_rate_spikes(
         if state.hasTimedOut:  # nothing to finalize: emissions are eager
             state.remove()
             return
-        idxs, cnts = state.get if state.exists else ([], [])
-        buckets = dict(zip(idxs, cnts))
+        idxs, cnts = state.get if state.exists else (b"", b"")
+        buckets = dict(zip(unpack_longs(idxs), unpack_longs(cnts)))
         for pdf in pdfs:
             days = (
                 pdf[ts_col].values.astype("datetime64[D]").astype("int64")
@@ -609,7 +621,9 @@ def stream_rate_spikes(
             cutoff = wm_ms // 86_400_000 - baseline_buckets
             buckets = {b: n for b, n in buckets.items() if b >= cutoff}
         ordered = sorted(buckets)
-        state.update((ordered, [buckets[b] for b in ordered]))
+        state.update(
+            (pack_longs(ordered), pack_longs(buckets[b] for b in ordered))
+        )
         # Emit only buckets the watermark has NOT passed: those are the
         # still-mutable ones, and exactly they have their full baseline
         # retained (cutoff = wm_day - baseline). A bucket behind the

@@ -51,6 +51,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from vaero_spark.operators.state import (
+    LONGS,
+    _arm_idle_timeout,
+    _pdf_max_us,
+    pack_longs,
+    unpack_longs,
+)
+
 #: default role → symbol alphabet for transcript tables
 ROLE_SYMBOLS = {"user": "u", "assistant": "a", "tool": "t", "system": "s"}
 #: unmapped roles render as '?' — keep it out of patterns
@@ -421,9 +429,6 @@ WITHIN_STREAM_OUTPUT_SCHEMA = T.StructType(
     ]
 )
 
-_LONG_ARRAY = T.ArrayType(T.LongType())
-
-
 def _state_schema(step) -> T.StructType:
     """The stored layout of every streaming CEP operator: the core's
     prefix, the step's accumulator fields, then ``last_us``.
@@ -431,14 +436,15 @@ def _state_schema(step) -> T.StructType:
     next_idx = next contiguous turn expected; pend_* = out-of-order
     turns awaiting reassembly (idx list + aligned symbol chars, plus
     event-time ms when the step reads time); last_us arms idle eviction.
+    Int64 lists are stored packed (:data:`~vaero_spark.operators.state.LONGS`).
     """
     head = [
         T.StructField("next_idx", T.LongType()),
-        T.StructField("pend_idx", _LONG_ARRAY),
+        T.StructField("pend_idx", LONGS),
         T.StructField("pend_sym", T.StringType()),
     ]
     if step.timed:
-        head.append(T.StructField("pend_ms", _LONG_ARRAY))
+        head.append(T.StructField("pend_ms", LONGS))
     return T.StructType(head + step.fields + [T.StructField("last_us", T.LongType())])
 
 
@@ -460,11 +466,12 @@ def _reassembly_fn(step, symbols: dict[str, str], idle_timeout_seconds: int):
     event time, so the core buffers ``pend_ms``), ``fields`` and
     ``init`` (its accumulator's state fields and empty value),
     ``fold(acc, start, syms, mss) -> acc`` and ``emit(acc, n_turns)``
-    (the output columns after ``conv_id, n_turns``)."""
-    from vaero_spark.operators.state import _arm_idle_timeout, _pdf_max_us
-
+    (the output columns after ``conv_id, n_turns``). An accumulator
+    field of type ``LONGS`` holds a list in ``acc``; the core packs it
+    at ``state.update`` and unpacks it at ``state.get``."""
     names = step.output.fieldNames()
     n_acc = len(step.fields)
+    packed = [f.dataType == LONGS for f in step.fields]
 
     def fn(
         key: Tuple[Any, ...], pdf_iter: Iterator[pd.DataFrame], state: GroupState
@@ -475,11 +482,12 @@ def _reassembly_fn(step, symbols: dict[str, str], idle_timeout_seconds: int):
         if state.exists:
             stored = state.get
             next_idx, last_us = stored[0], stored[-1]
-            pend_ms = (stored[3] or []) if step.timed else repeat(None)
-            pend = dict(zip(stored[1] or [], zip(stored[2] or "", pend_ms)))
+            pend_idx = unpack_longs(stored[1]) or []
+            pend_ms = (unpack_longs(stored[3]) or []) if step.timed else repeat(None)
+            pend = dict(zip(pend_idx, zip(stored[2] or "", pend_ms)))
             acc = tuple(
-                d if v is None else v
-                for v, d in zip(stored[-1 - n_acc : -1], step.init)
+                d if v is None else unpack_longs(v) if p else v
+                for v, d, p in zip(stored[-1 - n_acc : -1], step.init, packed)
             )
         else:
             next_idx, last_us, pend, acc = 0, 0, {}, step.init
@@ -511,10 +519,11 @@ def _reassembly_fn(step, symbols: dict[str, str], idle_timeout_seconds: int):
             row = (key[0], next_idx, *step.emit(acc, next_idx))
             yield pd.DataFrame({name: [v] for name, v in zip(names, row)})
         order = sorted(pend)
-        head = (next_idx, order, "".join(pend[i][0] for i in order))
+        head = (next_idx, pack_longs(order), "".join(pend[i][0] for i in order))
         if step.timed:
-            head += ([pend[i][1] for i in order],)
-        state.update(head + tuple(acc) + (last_us,))
+            head += (pack_longs([pend[i][1] for i in order]),)
+        stored_acc = tuple(pack_longs(v) if p else v for v, p in zip(acc, packed))
+        state.update(head + stored_acc + (last_us,))
         _arm_idle_timeout(state, last_us, idle_timeout_seconds)
 
     return fn
@@ -776,7 +785,7 @@ class _AbsenceStep:
     #: within k turns of the consumed prefix end, so |open_idx| <= k+1);
     #: counters never change once written
     fields = [
-        T.StructField("open_idx", _LONG_ARRAY),
+        T.StructField("open_idx", LONGS),
         T.StructField("n_triggers", T.LongType()),
         T.StructField("n_dangling", T.LongType()),
         T.StructField("first_dangling", T.LongType()),
@@ -871,7 +880,7 @@ class _WithinStep:
     #: needs
     fields = [
         T.StructField("carry_sym", T.StringType()),
-        T.StructField("carry_ms", _LONG_ARRAY),
+        T.StructField("carry_ms", LONGS),
         T.StructField("n_within", T.LongType()),
         T.StructField("first_within", T.LongType()),
     ]
@@ -1142,8 +1151,8 @@ class _AbsenceTimeStep(_AbsenceStep):
 
     timed = True
     fields = [
-        T.StructField("open_idx", _LONG_ARRAY),
-        T.StructField("open_ms", _LONG_ARRAY),
+        T.StructField("open_idx", LONGS),
+        T.StructField("open_ms", LONGS),
         T.StructField("n_triggers", T.LongType()),
         T.StructField("n_dangling", T.LongType()),
         T.StructField("first_dangling", T.LongType()),

@@ -573,7 +573,7 @@ def lexicon_flags_sql(
 # lexicon blocklist — streaming (live safety alerting per conversation)
 # ---------------------------------------------------------------------------
 
-_LEX_STATE_SCHEMA_DDL = "ords array<long>, hits array<long>, last_us long"
+_LEX_STATE_SCHEMA_DDL = "ords binary, hits binary, last_us long"  # packed LONGS
 _LEX_OUT_SCHEMA_DDL = "conv_id string, lex_hits long, flagged int"
 
 
@@ -621,7 +621,12 @@ def stream_lexicon(
     update re-emits the running sum), so downstream consumers see the
     final pre-timeout row even though timeout itself emits nothing.
     """
-    from vaero_spark.operators.state import _arm_idle_timeout, _pdf_max_us
+    from vaero_spark.operators.state import (
+        _arm_idle_timeout,
+        _pdf_max_us,
+        pack_longs,
+        unpack_longs,
+    )
 
     pre = (
         stream.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
@@ -641,15 +646,21 @@ def stream_lexicon(
         if state.hasTimedOut:  # idle conversation: emissions were eager
             state.remove()
             return
-        ords, hits, last_us = state.get if state.exists else ([], [], 0)
-        turns = dict(zip(ords, hits))
+        ords, hits, last_us = state.get if state.exists else (b"", b"", 0)
+        turns = dict(zip(unpack_longs(ords), unpack_longs(hits)))
         for pdf in pdfs:
             for o, h in zip(pdf["_ord"], pdf["_h"]):
                 turns[int(o)] = int(h)  # overwrite: duplicate-safe
             if len(pdf):
                 last_us = _pdf_max_us(pdf, last_us)
         items = sorted(turns.items())
-        state.update(([o for o, _ in items], [h for _, h in items], last_us))
+        state.update(
+            (
+                pack_longs(o for o, _ in items),
+                pack_longs(h for _, h in items),
+                last_us,
+            )
+        )
         _arm_idle_timeout(state, last_us, idle_timeout_seconds)
         total = sum(h for _, h in items)
         out = pd.DataFrame(
