@@ -7,7 +7,8 @@ Default mode (what the driver runs per-round):
 
 - Runs every ``queries()`` entry from ``__spark_entry__`` at
   ``$SPARK_GRAFT_SF_DIR`` (default ``/root/testdata/sf0.1``) on
-  ``local[$SPARK_GRAFT_CPUS]`` (default 32), forcing each plan with a
+  ``local[N]``, N = ``session.host_cpus()`` (``$SPARK_GRAFT_CPUS``, else
+  the CPUs this process may run on), forcing each plan with a
   ``noop`` write (full execution, no driver collect).
 - Runs the full tap→transform→route→sink streaming pipeline (the
   north-star metric: sustained turns/sec) at TWO parallelism levels on
@@ -162,10 +163,11 @@ def prepare_throughput_input(sf_dir: str, rep: int) -> tuple[str, int]:
             return out, int(fh.read().strip())
 
     from pyspark.sql import functions as F
+    from vaero_spark.session import host_cpus
     from vaero_spark.sources.transcripts import load_transcripts
 
     shutil.rmtree(marker, ignore_errors=True)
-    spark = _spark(int(os.environ.get("SPARK_GRAFT_CPUS", "32")), "vaero_bench_prep")
+    spark = _spark(host_cpus(), "vaero_bench_prep")
     t = load_transcripts(spark, sf_dir)
     reps = spark.range(rep).select(F.col("id").alias("rep"))
     big = (
@@ -804,14 +806,14 @@ def main() -> None:
             run_throughput(args.cores, args.input, args.rows, args.passes)
         ))
         return
+    from vaero_spark.session import host_cpus
+
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", SF_DIR_DEFAULT)
+    cpus = host_cpus()
     if args.scale_ops:
-        sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", SF_DIR_DEFAULT)
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
         print(json.dumps(run_scale_ops(sf_dir, args.scale_ops, cpus)))
         return
 
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", SF_DIR_DEFAULT)
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sf = float(Path(sf_dir).name.replace("sf", "") or 0.1)
 
     if args.scaling_only:

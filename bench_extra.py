@@ -11,8 +11,8 @@ Usage:
     python bench_extra.py --explain q1         # dump explain('formatted')
     python bench_extra.py --all                # whole suite, bench order
 
-Methodology mirrors bench.py's suite phase exactly: one local[32]
-session (``$SPARK_GRAFT_CPUS``), shuffle_partitions=max(cores,8),
+Methodology mirrors bench.py's suite phase exactly: one local[N]
+session (N = ``session.host_cpus()``), shuffle_partitions=max(cores,8),
 RocksDB state store provider, a t_rename_delete warm-up through the
 same noop path, then each query forced with a noop write. Output: one
 JSON line per query on stdout.
@@ -59,8 +59,9 @@ def main() -> None:
     import __spark_entry__ as entry_mod
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", SF_DIR_DEFAULT)
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = _spark(cpus)
+    from vaero_spark.session import host_cpus
+
+    spark = _spark(host_cpus())
     qs = entry_mod.queries()
     names = list(qs) if args.all else args.names
     unknown = [n for n in names if n not in qs]

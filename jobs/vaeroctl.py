@@ -119,27 +119,15 @@ def _get(jobs: dict, job_id) -> dict:
     return _refresh(job)
 
 
-def _capture_task_graph(spec_path: str) -> str:
-    """Run the spec subprocess and decode its task graph — same stdout
-    IR channel as ``vaero add`` (cmd/util.go:178-210)."""
-    from vaero_spark.plans.plan import task_graph_from_stdout
-
-    if not os.path.exists(spec_path):
-        raise JobError(f"spec file not found: {spec_path}")
-    proc = subprocess.run(
-        [sys.executable, spec_path], capture_output=True, text=True
-    )
-    if proc.returncode != 0:
-        raise JobError(f"spec failed: {proc.stderr[-500:]}")
-    try:
-        return task_graph_from_stdout(proc.stdout)
-    except ValueError as e:
-        raise JobError(f"spec {spec_path!r}: no task-graph JSON line") from e
-
-
 def add(home: str, spec_path: str, interval: float | None = None) -> dict:
-    """Register the job as 'staged' with its captured task graph."""
-    graph = _capture_task_graph(spec_path)
+    """Register the job as 'staged' with the task graph its spec prints —
+    same stdout IR channel as ``vaero add`` (cmd/util.go:178-210)."""
+    from vaero_spark.plans.plan import task_graph_from_spec
+
+    try:
+        graph = task_graph_from_spec(spec_path)
+    except ValueError as e:
+        raise JobError(str(e)) from e
     with _locked_registry(home) as jobs:
         job_id = str(max((int(k) for k in jobs), default=0) + 1)
         job_home = os.path.join(os.path.abspath(home), f"job-{job_id}")

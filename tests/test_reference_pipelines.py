@@ -263,6 +263,13 @@ def test_spec_file_lifecycle(spark, tmp_path):
     assert out.count() == want
     assert out.select("route").distinct().first().route == "users"
 
+    # a spec that fails: its stderr tail is in the error, and no query starts
+    bad = tmp_path / "bad_pipe.py"
+    bad.write_text("raise SystemExit('no such source: kafka')\n")
+    with pytest.raises(ValueError, match="failed: no such source: kafka"):
+        run_spec(spark, str(bad), str(tmp_path / "bad_sinks"), str(tmp_path / "bad_ckpt"))
+    assert not (tmp_path / "bad_ckpt").exists()
+
 
 def test_replay_pipe_py(spark, tmp_path):
     """pipelines/replay_pipe.py: replay a stored batch back through the

@@ -12,17 +12,30 @@ import textwrap
 
 import pytest
 
-from vaero_spark.session import default_driver_memory, in_process, master_slots
+from vaero_spark.session import (
+    default_driver_memory, host_cpus, in_process, master_slots,
+)
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.mark.parametrize(
     "master, slots",
-    [("local[2]", 2), ("local[12]", 12), ("local[*]", 5), ("yarn", 5)],
+    [("local", 1), ("local[2]", 2), ("local[12]", 12), ("local[4,2]", 4),
+     ("local[*]", 5),  # host_cpus()
+     # a cluster master's width is its cluster's: no default from this host
+     ("yarn", None), ("spark://h:7077", None), ("local-cluster[2,1,1024]", None)],
 )
-def test_master_slots(master, slots):
-    assert master_slots(master, cpus=5) == slots
+def test_master_slots(master, slots, monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "5")
+    assert master_slots(master) == slots
+
+
+def test_host_cpus_env_wins_else_affinity(monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "7")
+    assert host_cpus() == 7
+    monkeypatch.delenv("SPARK_GRAFT_CPUS")
+    assert host_cpus() == len(os.sched_getaffinity(0))
 
 
 @pytest.mark.parametrize(

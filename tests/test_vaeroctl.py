@@ -13,6 +13,7 @@ import time
 import pytest
 
 from jobs import vaeroctl
+from vaero_spark.session import host_cpus
 from vaero_spark.testing.fixtures import write_transcripts_parquet
 
 
@@ -56,7 +57,19 @@ def _wait_rows(home, job_id, want, deadline_s=120):
     )
 
 
-def test_job_lifecycle_add_start_stop_resume_delete(spark, tmp_path):
+def _session_record(log_path: str) -> dict:
+    """The ``{"session": ...}`` line the job prints once its session is up."""
+    with open(log_path) as f:
+        for line in f:
+            if line.startswith('{"session"'):
+                return json.loads(line)["session"]
+    raise AssertionError(f"no session record in {log_path}")
+
+
+def test_job_lifecycle_add_start_stop_resume_delete(spark, tmp_path, monkeypatch):
+    # the job's own JVM, beside the test session's: a fixed small heap, not
+    # half of the host's memory
+    monkeypatch.setenv("SPARK_DRIVER_MEMORY", "1g")
     home = str(tmp_path / "home")
     src = tmp_path / "src"
     pdf1 = write_transcripts_parquet(str(src), n_files=3, n_turns=600, n_convs=12, seed=7)
@@ -73,24 +86,38 @@ def test_job_lifecycle_add_start_stop_resume_delete(spark, tmp_path):
 
     # ---- start: detached subprocess, list shows running ----
     job = vaeroctl.start(home, jid)
-    assert job["status"] == "running" and job["pid"]
-    listed = {j["id"]: j for j in vaeroctl.list_jobs(home)}
-    assert listed[jid]["status"] == "running"
-    with pytest.raises(vaeroctl.JobError, match="is running"):
-        vaeroctl.start(home, jid)
-    with pytest.raises(vaeroctl.JobError, match="no job"):
-        vaeroctl.start(home, "99")  # missing id → JobError, not KeyError
-    with pytest.raises(vaeroctl.JobError, match="stop it first"):
-        vaeroctl.delete(home, jid)
+    try:
+        assert job["status"] == "running" and job["pid"]
+        listed = {j["id"]: j for j in vaeroctl.list_jobs(home)}
+        assert listed[jid]["status"] == "running"
+        with pytest.raises(vaeroctl.JobError, match="is running"):
+            vaeroctl.start(home, jid)
+        with pytest.raises(vaeroctl.JobError, match="no job"):
+            vaeroctl.start(home, "99")  # missing id → JobError, not KeyError
+        with pytest.raises(vaeroctl.JobError, match="stop it first"):
+            vaeroctl.delete(home, jid)
 
-    # first run drains the 3 initial files
-    _wait_rows(home, jid, len(pdf1))
+        # first run drains the 3 initial files
+        _wait_rows(home, jid, len(pdf1))
+    except BaseException:
+        vaeroctl.stop(home, jid)  # a failed check must not leave the job running
+        raise
 
     # ---- stop: subprocess terminated, status=stopped ----
     pid = job["pid"]
     job = vaeroctl.stop(home, jid)
     assert job["status"] == "stopped" and job["pid"] is None
     assert not vaeroctl._pid_alive(pid)
+
+    # the job's session is get_spark's: one store per host CPU, the java.nio
+    # local filesystem and the Python worker daemon
+    cpus = host_cpus()
+    assert _session_record(job["log"]) == {
+        "master": f"local[{cpus}]",
+        "spark.sql.shuffle.partitions": str(cpus),
+        "spark.hadoop.fs.file.impl": "vaero.fs.NioLocalFileSystem",
+        "spark.python.daemon.module": "vaero_spark.worker_daemon",
+    }
 
     # ---- resume: more input, same checkpoint → exactly-once total ----
     pdf2 = write_transcripts_parquet(

@@ -34,10 +34,8 @@ def main() -> None:
     from vaero_spark.session import get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = get_spark(
         "profile_pandas_state",
-        master=f"local[{cpus}]",
         extra_conf={"spark.sql.streaming.stateStore.providerClass": (
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
         )},

@@ -14,6 +14,9 @@ branches are nested lists appended after the node they fork from.
 from __future__ import annotations
 
 import json
+import os
+import subprocess
+import sys
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -102,15 +105,22 @@ def plan_fingerprint(plan: Plan) -> str:
     return hashlib.sha256(canon.encode()).hexdigest()[:32]
 
 
-def task_graph_from_stdout(stdout: str) -> str:
-    """Extract the task-graph line from a spec subprocess's stdout (the
-    IR channel, ``vaero/stream.py:127-132`` / ``cmd/util.go:192-210``):
-    the LAST line that parses as a JSON list — never blindly the last
-    line, since a spec (or a library it imports) may print after
-    ``Vaero(...)....start()``. Raises ValueError when no such line
-    exists. Shared by every entry point that runs a spec
-    (``jobs/run_pipeline.py``, ``jobs/vaeroctl.py``)."""
-    for line in reversed(stdout.strip().splitlines()):
+def task_graph_from_spec(spec_path: str) -> str:
+    """Run a pipeline spec file in a subprocess and return the task-graph
+    JSON it prints (the reference's ``vaero add``, ``cmd/util.go:178-210``;
+    stdout is the IR channel, ``vaero/stream.py:127-132``): the LAST line
+    that parses as a JSON list — never blindly the last line, since a spec
+    (or a library it imports) may print after ``Vaero(...)....start()``.
+    Every entry point that runs a spec (``jobs/run_pipeline.py``,
+    ``jobs/vaeroctl.py``) comes through here. Raises ValueError when the
+    file is missing, when the spec exits non-zero (with the tail of its
+    stderr) and when it prints no task graph."""
+    if not os.path.exists(spec_path):
+        raise ValueError(f"spec file not found: {spec_path}")
+    proc = subprocess.run([sys.executable, spec_path], capture_output=True, text=True)
+    if proc.returncode != 0:
+        raise ValueError(f"spec {spec_path!r} failed: {proc.stderr[-500:]}")
+    for line in reversed(proc.stdout.strip().splitlines()):
         line = line.strip()
         if line.startswith("["):
             try:
@@ -119,7 +129,7 @@ def task_graph_from_stdout(stdout: str) -> str:
             except json.JSONDecodeError:
                 continue
     raise ValueError(
-        "spec printed no task-graph JSON line "
+        f"spec {spec_path!r} printed no task-graph JSON line "
         "(expected Vaero(...)....start() to print a JSON list)"
     )
 

@@ -1,10 +1,13 @@
-"""SparkSession factory tuned for the sandbox (local[N]) while keeping
-cluster-scale defaults: AQE on, skew-join handling on, shuffle
-partitions equal to the master's slot count (which also fixes a
-streaming query's state-store count, so a stateful stage runs in one
-wave of tasks), UTC session timezone (required for bit-exact parity
-with the DuckDB oracle), Arrow enabled for the pandas-UDF slow path, a
-driver heap that fits the host. Python workers start through
+"""The one SparkSession factory of every entry point (the driver contract,
+the benchmarks, the tests and the job runner), tuned for in-process
+``local[N]`` masters while keeping cluster-scale defaults: AQE on,
+skew-join handling on, shuffle partitions equal to an in-process
+master's slot count (which also fixes a streaming query's state-store
+count, so a stateful stage runs in one wave of tasks; a cluster
+master's width is left to the submitter), UTC session timezone
+(required for bit-exact parity with the DuckDB oracle), Arrow enabled
+for the pandas-UDF slow path, a driver heap that fits the host.
+Python workers start through
 ``vaero_spark.worker_daemon``, which stops each task from re-parsing
 ``pyspark.zip`` (~0.28 CPU-s per Python task); the package's parent directory
 goes on the workers' ``PYTHONPATH`` so they find it from any working
@@ -26,14 +29,25 @@ import re
 from pyspark.sql import SparkSession
 
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-_LOCAL_MASTER = re.compile(r"local\[(\d+)\]")
+_LOCAL_MASTER = re.compile(r"local(?:\[(\d+|\*)(?:,\d+)?\])?")
 _LOCALFS_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "localfs.jar")
 
 
-def master_slots(master: str, cpus: int) -> int:
-    """Task slots of ``master``: N for ``local[N]``, else ``cpus``."""
+def host_cpus() -> int:
+    """CPUs this process may run on: ``$SPARK_GRAFT_CPUS`` if set, else
+    its scheduler affinity."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
+
+
+def master_slots(master: str) -> int | None:
+    """Task slots of an in-process master: 1 for ``local``, N for
+    ``local[N]``, :func:`host_cpus` for ``local[*]``. ``None`` for any
+    other master, whose width is its cluster's, not this host's."""
     m = _LOCAL_MASTER.fullmatch(master)
-    return int(m.group(1)) if m else cpus
+    if not m:
+        return None
+    return host_cpus() if m.group(1) == "*" else int(m.group(1) or 1)
 
 
 def in_process(master: str) -> bool:
@@ -57,11 +71,13 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
+    ``master`` defaults to ``local[N]`` with N = :func:`host_cpus`.
     ``shuffle_partitions`` defaults to :func:`master_slots`: a streaming
     query fixes its state-store count from this width when it first
     starts, and each store pays a fixed commit and Python-worker cost per
-    epoch, so more stores than slots only add task waves. The driver heap
+    epoch, so more stores than slots only add task waves. A cluster
+    master gets no default width: the submitter's
+    ``--conf spark.sql.shuffle.partitions`` or Spark's own. The driver heap
     is ``$SPARK_DRIVER_MEMORY``, else :func:`default_driver_memory`.
     An :func:`in_process` master gets the java.nio local filesystem on the
     driver's classpath, after any ``spark.driver.extraClassPath`` the
@@ -72,12 +88,11 @@ def get_spark(
     submitted one, and the java.nio filesystem is left out, as its jar can
     no longer join that JVM's classpath.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     joined = "PYSPARK_GATEWAY_PORT" in os.environ
     if master is None and not joined:
-        master = f"local[{cpus}]"
+        master = f"local[{host_cpus()}]"
     if shuffle_partitions is None and master is not None:
-        shuffle_partitions = master_slots(master, cpus)
+        shuffle_partitions = master_slots(master)
     driver_memory = os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory()
 
     conf = dict(extra_conf or {})
@@ -113,8 +128,8 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
-    if shuffle_partitions is None:  # the launcher's master, known only now
-        width = master_slots(spark.sparkContext.master, cpus)
+    # a launcher's master is known only now
+    if shuffle_partitions is None and (width := master_slots(spark.sparkContext.master)):
         spark.conf.set("spark.sql.shuffle.partitions", str(width))
     spark.sparkContext.setLogLevel("WARN")
     return spark
