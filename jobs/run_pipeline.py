@@ -23,7 +23,9 @@ exactly-once from committed offsets.
 The session is ``get_spark``'s. Once it is up, the job prints one JSON
 line, ``{"session": {...}}``, with its master, shuffle width (a new
 checkpoint's state-store count), local filesystem class and Python
-worker daemon module.
+worker daemon module. Per-epoch metrics go to
+``./vaero_metrics/metrics.jsonl``; ``vaeroctl start`` runs each job in its
+own job home, so every job has its own file.
 """
 
 from __future__ import annotations
@@ -83,7 +85,7 @@ def main() -> None:
            for k in ("spark.hadoop.fs.file.impl", "spark.python.daemon.module")},
     }
     print(json.dumps({"session": session}), flush=True)
-    attach_metrics_listener(spark)
+    attach_metrics_listener(spark, os.path.abspath("vaero_metrics"))
 
     # a drain run must not wait out the DSL's 300 s batch_max_time
     # trigger between micro-batches — ASAP triggers for availableNow;

@@ -173,6 +173,7 @@ def start(home: str, job_id: str) -> dict:
         with open(job["log"], "a") as log:
             proc = subprocess.Popen(
                 argv,
+                cwd=os.path.dirname(job["log"]),  # job home: its metrics land there
                 stdout=log,
                 stderr=log,
                 start_new_session=True,  # survives this CLI's exit

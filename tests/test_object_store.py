@@ -167,6 +167,48 @@ def test_source_crash_between_spool_and_seen_never_refetches(tmp_path):
     assert len(os.listdir(tmp_path / "spool")) == 1
 
 
+def test_source_crash_before_spool_rename_delivers_once(spark, tmp_path, monkeypatch):
+    """A crash between the spool write and its rename leaves the temp file
+    in the spool directory. The file stream must not read it: the retried
+    poll writes and renames the same lines, and those are the ones read."""
+    from vaero_spark.sinks.writers import MemorySink
+
+    store = LocalDirObjectStore(str(tmp_path / "bucket"))
+    _put_lines(store, "a.jsonl", _mk_rows(0, 6))
+    src = ObjectLineSource(
+        store=store,
+        prefix="",
+        spool_dir=str(tmp_path / "spool"),
+        seen_path=str(tmp_path / "seen.json"),
+    )
+    real_replace = os.replace
+    crashes = []
+
+    def replace_crashing_once(a, b):
+        if not crashes:
+            crashes.append(a)
+            raise OSError("crash before rename")
+        real_replace(a, b)
+
+    monkeypatch.setattr(os, "replace", replace_crashing_once)
+    with pytest.raises(OSError, match="crash before rename"):
+        src.poll()
+    sink = MemorySink()
+    q = (
+        src.stream(spark, SCHEMA)
+        .writeStream.option("checkpointLocation", str(tmp_path / "ckpt"))
+        .foreachBatch(sink.foreach_batch())
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        assert src.poll() == 1
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert sorted(r.event_id for r in sink.rows()) == list(range(6))
+
+
 def test_source_stream_end_to_end(spark, tmp_path):
     store = LocalDirObjectStore(str(tmp_path / "bucket"))
     _put_lines(store, "logs/a.jsonl", _mk_rows(0, 10))

@@ -300,3 +300,67 @@ def test_polling_loop_survives_transient_and_halts_on_permanent(tmp_path):
             src.check_health()
     finally:
         src.stop()
+
+
+def test_multi_app_polling_loop_isolates_transient_and_halts_on_permanent(tmp_path):
+    """The multi-app source runs the same guarded loop over its per-app
+    sources: a transient failure on one app does not hold back another
+    app's events in the same run, and a permanent error on any app halts
+    the loop and surfaces from check_health()."""
+    import time as _time
+
+    from vaero_spark.sources.connectors import GoogleWorkspaceMultiAppSource
+
+    mode = {"m": "transient"}
+    admin_pages = pages_from_rows(_mk_rows(3), 10)
+    login_rows = [{**r, "event_id": r["event_id"] + 100} for r in _mk_rows(4)]
+
+    def admin_fetch(since_s, tok):
+        if mode["m"] == "transient":
+            raise TransientApiError("429 forever")
+        if mode["m"] == "permanent":
+            raise PermanentApiError("401 bad token")
+        return admin_pages(since_s, tok)
+
+    def app_source(app, fetch_page):
+        return PaginatedApiSource(
+            fetch_page=fetch_page,
+            spool_dir=str(tmp_path / "spool"),
+            cursor_path=str(tmp_path / f"cursor-{app}.json"),
+            spool_prefix=f"{app}-",
+            max_tries=2,
+            backoff_factor=0.0,
+            _sleep=lambda s: None,
+        )
+
+    admin = app_source("admin", admin_fetch)
+    login = app_source("login", pages_from_rows(login_rows, 10))
+    src = GoogleWorkspaceMultiAppSource([admin, login])
+    src.start_polling(0.01)
+    try:
+        deadline = _time.time() + 10
+        while (
+            admin.consecutive_failures < 2 or not _spooled_ids(tmp_path / "spool")
+        ) and _time.time() < deadline:
+            _time.sleep(0.01)
+        # admin (polled first every tick) keeps failing; login still spools
+        assert admin.consecutive_failures >= 2
+        assert sorted(_spooled_ids(tmp_path / "spool")) == [100, 101, 102, 103]
+        assert src._thread.is_alive()
+        src.check_health()
+
+        mode["m"] = "ok"
+        while len(_spooled_ids(tmp_path / "spool")) < 7 and _time.time() < deadline:
+            _time.sleep(0.01)
+        assert sorted(_spooled_ids(tmp_path / "spool")) == [0, 1, 2, 100, 101, 102, 103]
+
+        mode["m"] = "permanent"
+        while admin.poll_error is None and _time.time() < deadline:
+            _time.sleep(0.01)
+        assert isinstance(admin.poll_error, PermanentApiError)
+        src._thread.join(timeout=5)
+        assert not src._thread.is_alive()
+        with pytest.raises(RuntimeError, match="polling halted"):
+            src.check_health()
+    finally:
+        src.stop()

@@ -70,6 +70,10 @@ def test_job_lifecycle_add_start_stop_resume_delete(spark, tmp_path, monkeypatch
     # the job's own JVM, beside the test session's: a fixed small heap, not
     # half of the host's memory
     monkeypatch.setenv("SPARK_DRIVER_MEMORY", "1g")
+    # the CLI runs from a directory of its own: the job must write nothing here
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
     home = str(tmp_path / "home")
     src = tmp_path / "src"
     pdf1 = write_transcripts_parquet(str(src), n_files=3, n_turns=600, n_convs=12, seed=7)
@@ -119,6 +123,12 @@ def test_job_lifecycle_add_start_stop_resume_delete(spark, tmp_path, monkeypatch
         "spark.python.daemon.module": "vaero_spark.worker_daemon",
     }
 
+    # per-job metrics: the job's epochs land under its own job home
+    metrics = os.path.join(os.path.dirname(job["log"]), "vaero_metrics", "metrics.jsonl")
+    with open(metrics) as f:
+        epochs = [r["epoch"] for r in map(json.loads, f) if r["event"] == "progress"]
+    assert epochs and min(epochs) == 0
+
     # ---- resume: more input, same checkpoint → exactly-once total ----
     pdf2 = write_transcripts_parquet(
         str(src), n_files=3, n_turns=600, n_convs=12, seed=8, start_file_idx=3
@@ -157,6 +167,7 @@ def test_job_lifecycle_add_start_stop_resume_delete(spark, tmp_path, monkeypatch
     assert jid not in {j["id"] for j in vaeroctl.list_jobs(home)}
     vaeroctl.delete(home, other["id"], purge=True)
     assert not os.path.isdir(os.path.dirname(other["checkpoint"]))
+    assert os.listdir(cwd) == []
 
 
 def test_add_rejects_bad_spec(tmp_path):

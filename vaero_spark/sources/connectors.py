@@ -52,8 +52,9 @@ import urllib.parse
 import urllib.request
 from typing import Callable
 
-from vaero_spark.sources.paginated_api import (
+from vaero_spark.sources.spool import (
     PermanentApiError,
+    SpoolPoller,
     TransientApiError,
 )
 
@@ -164,111 +165,38 @@ def build_google_workspace_fetch_page(args: dict) -> Callable:
     return fetch_page
 
 
-class GoogleWorkspaceMultiAppSource:
+class GoogleWorkspaceMultiAppSource(SpoolPoller):
     """Reference-parity multi-app polling
     (``source_google_workspace.py:78-81,196-207``): the reference drains
     ALL configured applications within a single read cycle (its
     ``__FLAG__`` continuation token advances ``_configured_app_idx``
     until the app list wraps), so one poll interval covers every app —
     per-app latency does NOT scale with ``len(apps)``. Mirrored here:
-    each daemon tick runs a FULL rotation (:meth:`poll_cycle`). Each
-    app's cursor is isolated (the reference keys its cursor dict by app
-    name; here each app owns a full ``PaginatedApiSource`` — cursor
-    file, crash-replay guard, late gate — sharing one spool directory
-    via per-app filename prefixes, so the pipeline still reads ONE
-    exactly-once file stream)."""
+    the shared poll loop's units are the per-app sources, so each tick
+    polls every app in order (:meth:`poll_cycle` is one such tick,
+    unguarded). Each app's cursor is isolated (the reference keys its
+    cursor dict by app name; here each app owns a full
+    ``PaginatedApiSource`` — cursor file, crash-replay guard, late gate,
+    poll health — sharing one spool directory via per-app filename
+    prefixes, so the pipeline still reads ONE exactly-once file stream).
+    A permanent error on any app halts the loop and surfaces via
+    :meth:`check_health`; a transient one on one app never holds back
+    the others."""
 
     def __init__(self, sources: list):
         if not sources:
             raise ValueError("at least one per-app source required")
         self.sources = sources
-        self._idx = 0
 
-    def poll(self) -> int:
-        """Poll the NEXT app in rotation and advance it (the single-app
-        step; a full read cycle is :meth:`poll_cycle`)."""
-        src = self.sources[self._idx]
-        self._idx = (self._idx + 1) % len(self.sources)
-        return src.poll()
+    def poll_units(self) -> tuple:
+        return tuple(self.sources)
 
     def poll_cycle(self) -> int:
-        """One full rotation over every app — the reference's per-cycle
-        drain unit."""
-        return sum(self.poll() for _ in self.sources)
-
-    def check_health(self) -> None:
-        for src in self.sources:
-            src.check_health()
-
-    @property
-    def poll_error(self):
-        for src in self.sources:
-            if src.poll_error is not None:
-                return src.poll_error
-        return None
+        return sum(src.poll() for src in self.sources)
 
     def stream(self, spark, payload_schema: str):
         self.check_health()
         return self.sources[0].stream(spark, payload_schema)
-
-    def _poll_next_guarded(self) -> bool:
-        """One guarded rotation step (shared by the daemon loop): poll
-        the next app via :meth:`poll`, absorbing transient errors per
-        app. Returns False on a permanent error (halt the loop — the
-        error surfaces via check_health / poll_error)."""
-        import logging
-
-        src = self.sources[self._idx]  # poll() advances _idx
-        try:
-            self.poll()
-            src.consecutive_failures = 0
-            src.last_transient_error = None
-        except PermanentApiError as exc:
-            src.poll_error = exc
-            logging.getLogger(__name__).error(
-                "polling halted (permanent API error): %s", exc
-            )
-            return False
-        except Exception as exc:  # noqa: BLE001
-            src.consecutive_failures += 1
-            src.last_transient_error = exc
-            logging.getLogger(__name__).warning(
-                "poll failed, retrying next interval: %s", exc
-            )
-        return True
-
-    def start_polling(self, interval: float) -> "GoogleWorkspaceMultiAppSource":
-        """Same guarded daemon-loop contract as the single source, but
-        each tick drains a FULL app rotation (reference parity — the
-        class docstring's per-cycle drain; one slow/failing app delays,
-        never starves, the others within the tick). A permanent error on
-        any app halts the loop and surfaces via check_health."""
-        import threading
-        import time as _time
-
-        self._stop_evt = threading.Event()
-
-        def loop() -> None:
-            while not self._stop_evt.is_set():
-                started = _time.time()
-                for _ in self.sources:
-                    if not self._poll_next_guarded():
-                        return
-                    if self._stop_evt.is_set():
-                        return
-                remaining = interval - (_time.time() - started)
-                if remaining > 0:
-                    self._stop_evt.wait(remaining)
-
-        self._thread = threading.Thread(target=loop, daemon=True)
-        self._thread.start()
-        return self
-
-    def stop(self) -> None:
-        evt = getattr(self, "_stop_evt", None)
-        if evt is not None:
-            evt.set()
-            self._thread.join(timeout=30)
 
 
 def build_google_workspace_multi_source(args: dict, **source_kwargs):

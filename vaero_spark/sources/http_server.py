@@ -31,7 +31,8 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+from vaero_spark.sources.spool import read_spool, write_atomic
 
 
 def break_json_array(body: str) -> list[str]:
@@ -144,11 +145,10 @@ class HttpPushSource:
             lines.append(json.dumps(obj))
         if not lines:
             return
-        name = f"req-{uuid.uuid4().hex}.jsonl"
-        tmp = os.path.join(self.spool_dir, f".{name}.tmp")
-        with open(tmp, "w") as f:
-            f.write("\n".join(lines) + "\n")
-        os.replace(tmp, os.path.join(self.spool_dir, name))
+        write_atomic(
+            os.path.join(self.spool_dir, f"req-{uuid.uuid4().hex}.jsonl"),
+            "".join(ln + "\n" for ln in lines),
+        )
         self.n_requests += 1
         self.n_events += len(lines)
 
@@ -162,11 +162,10 @@ class HttpPushSource:
         """The pipeline-facing stream: spool files as an exactly-once
         file source. ``payload_schema`` is the DDL of the event fields;
         the enrichment columns are appended automatically."""
-        full = f"{payload_schema}, timestamp string, remoteaddr string"
-        return (
-            spark.readStream.schema(T.StructType.fromDDL(full))
-            .option("maxFilesPerTrigger", "16")
-            .json(self.spool_dir)
+        return read_spool(
+            spark,
+            self.spool_dir,
+            f"{payload_schema}, timestamp string, remoteaddr string",
         )
 
 

@@ -47,11 +47,12 @@ Documented divergences (each an upgrade over the reference, flagged):
   ETag-stable (so the paired source never re-ingests it).
 
 Exactly-once ingestion: one spool file per object **version**, named
-deterministically from (key, size, mtime). A crash between spool-write
-and seen-set store is recovered by the file's existence — never a
-re-fetch (Spark's file source dedups by path; re-fetching a key that
-grew upstream would silently lose the delta — same invariant as
-``paginated_api.poll``'s crash-replay guard).
+deterministically from (key, size, version) — the version is the ETag,
+or mtime only when the listing has no ETag (:attr:`ObjectInfo.version`).
+A crash between spool-write and seen-set store is recovered by the
+file's existence — never a re-fetch (Spark's file source dedups by
+path; re-fetching a key that grew upstream would silently lose the
+delta — same invariant as ``paginated_api.poll``'s crash-replay guard).
 """
 
 from __future__ import annotations
@@ -59,11 +60,12 @@ from __future__ import annotations
 import hashlib
 import json
 import os
-import time
 from dataclasses import dataclass, field
 from typing import Callable, Iterable, Protocol
 
 from pyspark.sql import DataFrame
+
+from vaero_spark.sources.spool import PollUnit, SpoolPoller, read_spool, write_atomic
 
 
 @dataclass(frozen=True)
@@ -155,11 +157,13 @@ class LocalDirObjectStore:
 
 
 @dataclass
-class ObjectLineSource:
+class ObjectLineSource(PollUnit, SpoolPoller):
     """Driver-side ingestion shim (the role of the reference's pull
     goroutine): poll the store, fetch new/changed objects, split on
     newline, spool atomically; the pipeline reads the spool with the
-    checkpointed file stream (``stream()``)."""
+    checkpointed file stream (``stream()``). ``start_polling`` runs the
+    shared guarded loop (``spool.SpoolPoller``): one bad object (store
+    hiccup, undecodable blob) is logged and retried next interval."""
 
     store: ListingObjectStore
     prefix: str
@@ -181,13 +185,6 @@ class ObjectLineSource:
         except OSError:
             return {}
 
-    def _store_seen(self, seen: dict) -> None:
-        os.makedirs(os.path.dirname(self.seen_path) or ".", exist_ok=True)
-        tmp = self.seen_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(seen, f)
-        os.replace(tmp, self.seen_path)
-
     def poll(self) -> int:
         """One cycle: list → diff against the seen-set → GET + spool new
         versions. Returns the number of newly-spooled objects."""
@@ -205,62 +202,21 @@ class ObjectLineSource:
                     ln for ln in self.store.get_object(obj.key).decode().split("\n")
                     if ln.strip()
                 ]
-                tmp = spool + ".tmp"
-                with open(tmp, "w") as f:
-                    f.write("\n".join(lines) + ("\n" if lines else ""))
-                os.replace(tmp, spool)
+                write_atomic(spool, "".join(ln + "\n" for ln in lines))
             # spool existed → crash between spool and seen-store: recover
             # by marking seen, NEVER re-fetching (module docstring)
             seen[obj.key] = version
             new += 1
         if new:
-            self._store_seen(seen)
+            write_atomic(self.seen_path, json.dumps(seen))
         return new
 
     def stream(self, spark, payload_schema: str) -> DataFrame:
         """Checkpointed exactly-once file stream over the spool."""
-        from pyspark.sql import types as T
-
         from vaero_spark.sources.http_server import JSON_TS_OPTIONS
 
-        return (
-            spark.readStream.schema(T.StructType.fromDDL(payload_schema))
-            .options(**JSON_TS_OPTIONS)
-            .option("maxFilesPerTrigger", "16")
-            .json(self.spool_dir)
-        )
-
-    def start_polling(self, interval: float) -> "ObjectLineSource":
-        """Same daemon-loop contract as ``PaginatedApiSource``: the body
-        is guarded so one bad object (store hiccup, undecodable blob)
-        logs and retries next interval instead of silently killing the
-        thread while the spool stream looks healthy."""
-        import logging
-        import threading
-
-        self._stop_evt = threading.Event()
-        log = logging.getLogger(__name__)
-
-        def loop() -> None:
-            while not self._stop_evt.is_set():
-                started = time.time()
-                try:
-                    self.poll()
-                except Exception as exc:  # noqa: BLE001
-                    log.warning("object-store poll failed, retrying: %s", exc)
-                remaining = interval - (time.time() - started)
-                if remaining > 0:
-                    self._stop_evt.wait(remaining)
-
-        self._thread = threading.Thread(target=loop, daemon=True)
-        self._thread.start()
-        return self
-
-    def stop(self) -> None:
-        evt = getattr(self, "_stop_evt", None)
-        if evt is not None:
-            evt.set()
-            self._thread.join(timeout=30)
+        self.check_health()
+        return read_spool(spark, self.spool_dir, payload_schema, **JSON_TS_OPTIONS)
 
 
 # ---------------------------------------------------------------------------

@@ -42,15 +42,16 @@ from dataclasses import dataclass, field
 from datetime import datetime, timedelta
 from typing import Callable
 
+from vaero_spark.sources.spool import (
+    PermanentApiError,  # noqa: F401 — re-exported, raised by fetch_page callables
+    PollUnit,
+    SpoolPoller,
+    TransientApiError,
+    read_spool,
+    write_atomic,
+)
+
 ISO = "%Y-%m-%dT%H:%M:%S.%f"
-
-
-class TransientApiError(RuntimeError):
-    """Retryable failure (429 / connection reset analog)."""
-
-
-class PermanentApiError(RuntimeError):
-    """Non-retryable failure (non-429 4xx analog) — give up."""
 
 
 @dataclass
@@ -106,15 +107,11 @@ class ApiCursor:
             pass  # first run: empty cursor, like the reference
 
     def store(self, path: str) -> None:
-        os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(self.cursor, f)
-        os.replace(tmp, path)
+        write_atomic(path, json.dumps(self.cursor))
 
 
 @dataclass
-class PaginatedApiSource:
+class PaginatedApiSource(PollUnit, SpoolPoller):
     """Driver-side poller: fetch pages from ``fetch_page(cursor_since,
     page_token)`` → ``(events, next_page_token)`` with rate limiting +
     backoff, gate late events, spool, advance + persist the cursor.
@@ -138,12 +135,6 @@ class PaginatedApiSource:
     # cursor AND one filename namespace per app, same stream).
     spool_prefix: str = ""
     _sleep: Callable = time.sleep
-    # polling-loop health (set by the daemon loop, read by check_health):
-    # a PermanentApiError halts polling and is re-raised to the caller;
-    # transient exhaustion is logged and retried next interval
-    poll_error: BaseException | None = None
-    last_transient_error: BaseException | None = None
-    consecutive_failures: int = 0
 
     def _parse(self, s: str) -> datetime:
         return datetime.strptime(s, ISO) if "." in s else datetime.strptime(s, ISO[:-3])
@@ -232,13 +223,7 @@ class PaginatedApiSource:
         # spool first, cursor second; the filename is the PRE-poll
         # cursor, so a crash between the two is recovered by the replay
         # guard above (never a re-fetch) — no dup, no loss
-        os.makedirs(self.spool_dir, exist_ok=True)
-        name = self._spool_name(since_s)
-        tmp = os.path.join(self.spool_dir, f".{name}.tmp")
-        with open(tmp, "w") as f:
-            for ev in events:
-                f.write(json.dumps(ev) + "\n")
-        os.replace(tmp, os.path.join(self.spool_dir, name))
+        write_atomic(spool_path, "".join(json.dumps(ev) + "\n" for ev in events))
 
         # cursor advance = max(event time) + 1 µs (source_okta.py:122-130);
         # a deferred max-ts group pins the cursor ON its timestamp instead
@@ -259,79 +244,10 @@ class PaginatedApiSource:
                 return total
         return total
 
-    def check_health(self) -> None:
-        """Fail fast if the polling loop died on a permanent error.
-
-        Without this, a dead poller is invisible: the streaming query
-        over the spool stays 'healthy' and simply sees no new files
-        forever. Call sites: ``stream()`` (setup) and any monitoring
-        loop (per-epoch)."""
-        if self.poll_error is not None:
-            raise RuntimeError(
-                "API polling halted on a permanent error; the spool is no "
-                "longer being fed"
-            ) from self.poll_error
-
     def stream(self, spark, payload_schema: str):
         """The pipeline-facing exactly-once stream over the spool."""
-        from pyspark.sql import types as T
-
         self.check_health()
-        return (
-            spark.readStream.schema(T.StructType.fromDDL(payload_schema))
-            .option("maxFilesPerTrigger", "16")
-            .json(self.spool_dir)
-        )
-
-    def start_polling(self, interval: float) -> "PaginatedApiSource":
-        """Poll every ``interval`` seconds in a daemon thread (the
-        reference's pull loop sleeps ``interval − elapsed``,
-        ``execute/execute.go:99-110``).
-
-        The loop body is guarded: transient exhaustion (>max_tries 429s,
-        a connection reset, a secret-refresh hiccup) is recorded and
-        retried at the next interval — the cursor was not advanced, so
-        nothing is lost — while a PermanentApiError (non-429 4xx: bad
-        credentials, revoked scope) stops the loop and is surfaced by
-        :meth:`check_health` / :meth:`stream` instead of killing the
-        daemon thread silently."""
-        import logging
-        import threading
-
-        self._stop_evt = threading.Event()
-        log = logging.getLogger(__name__)
-
-        def loop() -> None:
-            while not self._stop_evt.is_set():
-                started = time.time()
-                try:
-                    self.poll()
-                    self.consecutive_failures = 0
-                    self.last_transient_error = None
-                except PermanentApiError as exc:
-                    self.poll_error = exc
-                    log.error("polling halted (permanent API error): %s", exc)
-                    return
-                except Exception as exc:  # transient exhaustion, IO, secrets
-                    self.consecutive_failures += 1
-                    self.last_transient_error = exc
-                    log.warning(
-                        "poll failed (%d consecutive), retrying next "
-                        "interval: %s", self.consecutive_failures, exc,
-                    )
-                remaining = interval - (time.time() - started)
-                if remaining > 0:
-                    self._stop_evt.wait(remaining)
-
-        self._thread = threading.Thread(target=loop, daemon=True)
-        self._thread.start()
-        return self
-
-    def stop(self) -> None:  # lifecycle parity with HttpPushSource
-        evt = getattr(self, "_stop_evt", None)
-        if evt is not None:
-            evt.set()
-            self._thread.join(timeout=30)
+        return read_spool(spark, self.spool_dir, payload_schema)
 
 
 def pages_from_rows(

@@ -59,9 +59,9 @@ class MetricsListener(StreamingQueryListener):
             f.write(json.dumps(rec, default=str) + "\n")
 
 
-def attach_metrics_listener(spark, out_dir: str | None = None) -> MetricsListener:
+def attach_metrics_listener(spark, out_dir: str) -> MetricsListener:
     """Register a MetricsListener on the session; metrics land in
-    ``out_dir`` (default: ``$PWD/vaero_metrics``)."""
-    listener = MetricsListener(out_dir or os.path.join(os.getcwd(), "vaero_metrics"))
+    ``<out_dir>/metrics.jsonl``."""
+    listener = MetricsListener(out_dir)
     spark.streams.addListener(listener)
     return listener
