@@ -50,11 +50,13 @@ def transcripts_df(spark, transcripts_pdf):
 class FakeState:
     """In-process stand-in for ``GroupState``: unit tests drive an
     ``applyInPandasWithState`` function batch by batch and read the
-    stored tuple back from ``_v``."""
+    stored tuple back from ``_v`` and the last armed timeout from
+    ``armed`` (``None``: never armed)."""
 
     exists = False
     hasTimedOut = False
     _v = None
+    armed = None
 
     @property
     def get(self):
@@ -64,8 +66,8 @@ class FakeState:
         self._v = v
         self.exists = True
 
-    def setTimeoutTimestamp(self, *a, **k):
-        pass
+    def setTimeoutTimestamp(self, ms):
+        self.armed = ms
 
     def getCurrentWatermarkMs(self):
         return 0

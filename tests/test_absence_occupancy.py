@@ -17,11 +17,11 @@ import pytest
 from vaero_spark.operators.cep import (
     ROLE_SYMBOLS,
     _AbsenceStep,
-    _reassembly_fn,
+    _Reassembly,
     cep_absence,
     stream_cep_absence,
 )
-from vaero_spark.operators.state import unpack_longs
+from vaero_spark.operators.state import _state_fn, unpack_longs
 from vaero_spark.operators.windows import concurrency_by_hour
 
 SYM_TO_ROLE = {v: k for k, v in ROLE_SYMBOLS.items()}
@@ -47,7 +47,7 @@ def _brute_absence(seq: str, k: int = 3, trig: str = "u", resp: str = "a"):
 def _drive(seq: str, splits: tuple[int, ...], k: int, fake_state):
     """Feed ``seq`` to the absence state fn in chunks (in order) and
     return every emission as (n_turns, n_triggers, n_dangling, first)."""
-    fn = _reassembly_fn(_AbsenceStep("u", "a", k), ROLE_SYMBOLS, 3600)
+    fn = _state_fn(_Reassembly(_AbsenceStep("u", "a", k), ROLE_SYMBOLS, 3600))
     state = fake_state()
     out = []
     pos = 0
@@ -110,7 +110,7 @@ def test_stream_absence_every_emission_equals_prefix_batch(fake_state):
 def test_stream_absence_fn_out_of_order_and_dups(fake_state):
     """Out-of-order arrival buffers in pend until the contiguous prefix
     reaches it; duplicate turns drop (first arrival wins)."""
-    fn = _reassembly_fn(_AbsenceStep("u", "a", 3), ROLE_SYMBOLS, 3600)
+    fn = _state_fn(_Reassembly(_AbsenceStep("u", "a", 3), ROLE_SYMBOLS, 3600))
     state = fake_state()
     seq = "utttaut"  # u@0 answered at 4 (gap 4 > 3 => dangling!), u@5 open
 
@@ -392,7 +392,7 @@ def test_stream_absence_time_emissions_equal_prefix_batch(fake_state):
                 t += rng.choice([1_000, 60_000, 200_000, 400_000])
                 mss.append(None if null_rng.random() < null_share else t)
             cuts = sorted(rng.sample(range(1, n), k=min(2, n - 1))) + [n]
-            fn = _reassembly_fn(_AbsenceTimeStep("u", "a", wait_ms), ROLE_SYMBOLS, 3600)
+            fn = _state_fn(_Reassembly(_AbsenceTimeStep("u", "a", wait_ms), ROLE_SYMBOLS, 3600))
             state = fake_state()
             pos = 0
             for cut in cuts:

@@ -12,10 +12,11 @@ from vaero_spark.operators.cep import (
     _AbsenceStep,
     _AbsenceTimeStep,
     _KleeneStep,
-    _reassembly_fn,
+    _Reassembly,
     _WithinStep,
     cep_match,
 )
+from vaero_spark.operators.state import _state_fn
 
 ROLES = ["user", "assistant", "tool", "system"]
 
@@ -128,7 +129,7 @@ def test_stream_cep_fn_reassembles_out_of_order(fake_state):
     roles = ["user", "tool", "tool", "user", "assistant", "tool", "tool", "user"]
     # seq = "uttuattu": matches of "ttu" at 1 and 5
     # stream_cep_match's step: the literal as a fixed-length pattern
-    fn = _reassembly_fn(_KleeneStep(re.escape("ttu"), 3, 3), ROLE_SYMBOLS, 3600)
+    fn = _state_fn(_Reassembly(_KleeneStep(re.escape("ttu"), 3, 3), ROLE_SYMBOLS, 3600))
     state = fake_state()
 
     def feed(idxs):
@@ -182,7 +183,7 @@ def test_stream_cep_kleene_fn_earliest_completion_and_carry(fake_state):
     from vaero_spark.operators.cep import parse_kleene_pattern
 
     l_min, l_max, lazy = parse_kleene_pattern("t{2,3}u", ROLE_SYMBOLS)
-    fn = _reassembly_fn(_KleeneStep(lazy, l_min, l_max), ROLE_SYMBOLS, 3600)
+    fn = _state_fn(_Reassembly(_KleeneStep(lazy, l_min, l_max), ROLE_SYMBOLS, 3600))
     state = fake_state()
     #         0      1      2      3      4      5       6      7
     roles = ["tool", "tool", "tool", "user", "tool", "tool", "user", "user"]
@@ -348,7 +349,7 @@ def test_stream_within_every_emission_equals_prefix_batch(fake_state):
                 for p in range(n - 2)
             )
             cuts = sorted(rng.sample(range(1, n), k=min(2, n - 1))) + [n]
-            fn = _reassembly_fn(_WithinStep(literal, span_ms), ROLE_SYMBOLS, 3600)
+            fn = _state_fn(_Reassembly(_WithinStep(literal, span_ms), ROLE_SYMBOLS, 3600))
             state = fake_state()
             pos = 0
             for cut in cuts:
@@ -476,12 +477,12 @@ def test_stream_step_out_of_order_equals_in_order(step, fake_state):
             t += rng.choice([1_000, 120_000, 400_000])
             mss.append(t)
 
-        fn, ref = _reassembly_fn(make_step(), ROLE_SYMBOLS, 3600), fake_state()
+        fn, ref = _state_fn(_Reassembly(make_step(), ROLE_SYMBOLS, 3600)), fake_state()
         want = _feed(fn, ref, list(range(n)), seq, mss)[-1]
 
         arrivals = list(range(n)) + [rng.randrange(n) for _ in range(rng.randrange(1, 5))]
         rng.shuffle(arrivals)
-        fn, state = _reassembly_fn(make_step(), ROLE_SYMBOLS, 3600), fake_state()
+        fn, state = _state_fn(_Reassembly(make_step(), ROLE_SYMBOLS, 3600)), fake_state()
         got, pos = None, 0
         while pos < len(arrivals):
             chunk = arrivals[pos : pos + rng.randrange(1, 5)]
@@ -496,7 +497,7 @@ def test_stream_step_timeout_removes_state_and_emits_nothing(step, fake_state):
     """An idle-timeout call drops the conversation's state and emits
     nothing, even when it carries new rows."""
     seq, mss = "uttua", [1_704_067_200_000 + i * 1_000 for i in range(5)]
-    fn, state = _reassembly_fn(_STEPS[step](), ROLE_SYMBOLS, 3600), fake_state()
+    fn, state = _state_fn(_Reassembly(_STEPS[step](), ROLE_SYMBOLS, 3600)), fake_state()
     assert _feed(fn, state, [0, 1, 3], seq, mss)
     assert state.exists
     state.hasTimedOut = True

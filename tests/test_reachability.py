@@ -39,8 +39,6 @@ ALLOWLIST = {
     "of the reference-interpreter parity tests",
     "vaero_spark.operators.analytics.funnel_membership": "batch reference "
     "that the stream_funnel tests compare against",
-    "vaero_spark.operators.skew.repartition_salted": "salted repartition for "
-    "hot keys, kept by ROADMAP and tested by test_skew.py",
     "vaero_spark.sinks.bucketed.save_bucketed": "bucketed-layout capability "
     "(SURVEY section 2), tested by test_bucketed.py",
     "vaero_spark.sinks.writers.IcebergSink": "cluster sink; it needs the "

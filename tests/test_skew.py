@@ -9,7 +9,7 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
-from vaero_spark.operators.skew import repartition_salted, salted_agg
+from vaero_spark.operators.skew import salted_agg
 from vaero_spark.sources.transcripts import TRANSCRIPTS_SCHEMA
 
 
@@ -51,20 +51,6 @@ def test_salted_agg_hot_key_values(spark, skewed_df):
     assert row.n_turns == 5000
     assert row.n_user == 2500
     assert row.last_turn == 4999
-
-
-def test_repartition_salted_spreads_hot_key(spark, skewed_df):
-    parts = repartition_salted(skewed_df, "conv_id", n_partitions=8, n_salts=8)
-    dist = (
-        parts.filter(F.col("conv_id") == "conv-hot")
-        .withColumn("pid", F.spark_partition_id())
-        .groupBy("pid")
-        .count()
-        .collect()
-    )
-    # the hot conversation must span several partitions, none holding all
-    assert len(dist) >= 4
-    assert max(r["count"] for r in dist) < 5000
 
 
 def test_salted_join_identical_to_plain_join(spark):

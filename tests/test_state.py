@@ -1,11 +1,13 @@
-"""Custom keyed-state operators (applyInPandasWithState): open-session
-tracking with event-time timeout, routing counters with idle eviction,
-the shared eviction helpers, the packed int64-list codec, and the stored
-state layout of every such operator."""
+"""The keyed-state core (the one applyInPandasWithState call) and its
+operators: open-session tracking with event-time timeout, routing
+counters with idle eviction, the event-time conversion and arming rule,
+every operator's step driven through the core, the packed int64-list
+codec, and the stored state layout of every such operator."""
 
 from __future__ import annotations
 
 import os
+import re
 import struct
 
 import pandas as pd
@@ -14,6 +16,7 @@ from hypothesis import example, given, settings
 from hypothesis import strategies as st
 from pyspark.errors import StreamingQueryException
 from pyspark.sql.streaming.state import GroupStateTimeout
+from pyspark.sql.types import _parse_datatype_string
 
 from vaero_spark.operators import analytics, cep, curate, state
 from vaero_spark.operators.state import routing_counters, track_open_sessions
@@ -171,17 +174,26 @@ def test_routing_counters_evict_idle_state(spark, tmp_path):
 
 
 def test_pdf_max_us_ignores_nat():
-    """NaT becomes the -2^63 sentinel under an int64 view; the last-event
-    tracker must skip null ts or an all-null conversation arms an
-    already-expired timeout and is evicted on the next batch."""
-    from vaero_spark.operators.state import _pdf_max_us
-
-    ts = pd.Series([pd.NaT, pd.Timestamp("2024-03-01 09:00:00")]).astype("datetime64[us]")
-    want = int(pd.Timestamp("2024-03-01 09:00:00").value // 1000)
-    assert _pdf_max_us(pd.DataFrame({"ts": ts}), 0) == want
-    assert _pdf_max_us(pd.DataFrame({"ts": ts}), want + 5) == want + 5  # monotone
-    all_nat = pd.Series([pd.NaT, pd.NaT]).astype("datetime64[us]")
-    assert _pdf_max_us(pd.DataFrame({"ts": all_nat}), 7) == 7  # unchanged
+    """``event_us``, the one event-time conversion: NaT becomes the -2^63
+    sentinel under an int64 view, so null ts is dropped first (index
+    kept), or an all-null conversation would arm an already-expired
+    timeout and be evicted on the next batch. The scale follows the
+    series' unit, and its ms are the µs floor-divided by 1,000."""
+    t = pd.Timestamp("2024-03-01 09:00:00.123456789")
+    for unit, want in (
+        ("ns", 1_709_283_600_123_456),
+        ("us", 1_709_283_600_123_456),
+        ("ms", 1_709_283_600_123_000),
+    ):
+        for vals in ([t], [pd.NaT, t, pd.NaT]):
+            got = state.event_us(pd.Series(vals).astype(f"datetime64[{unit}]"))
+            assert got.to_dict() == {vals.index(t): want}, unit
+        all_nat = pd.Series([pd.NaT, pd.NaT]).astype(f"datetime64[{unit}]")
+        assert state.event_us(all_nat).empty
+    ns = pd.Series([t]).astype("datetime64[ns]")
+    assert (state.event_us(ns) // 1000).tolist() == [t.value // 1_000_000]
+    with pytest.raises(TypeError):
+        state.event_us(pd.Series([1, 2]))
 
 
 def test_arm_idle_timeout_skips_all_null_ts_key():
@@ -189,7 +201,7 @@ def test_arm_idle_timeout_skips_all_null_ts_key():
     would degenerate to watermark+1 — an immediately-expiring timeout
     that evicts the key's state on the next batch.
     Such a key must retain NoTimeout behavior until a real ts arrives."""
-    from vaero_spark.operators.state import _arm_idle_timeout
+    from vaero_spark.operators.state import _arm_timeout
 
     class _FakeState:
         def __init__(self):
@@ -202,38 +214,63 @@ def test_arm_idle_timeout_skips_all_null_ts_key():
             return 1_700_000_000_000
 
     st = _FakeState()
-    _arm_idle_timeout(st, 0, 3600)
+    _arm_timeout(st, 0, 3600)
     assert st.armed is None  # never armed: NoTimeout retained
-    _arm_idle_timeout(st, 1_700_000_100_000_000, 3600)
+    _arm_timeout(st, 1_700_000_100_000_000, 3600)
     assert st.armed == 1_700_000_100_000 + 3600 * 1000  # real ts arms
 
+
+#: one step per keyed-state operator, as the operator builds it
+_STEPS = {
+    "cep_match": cep._Reassembly(
+        cep._KleeneStep(re.escape("ttu"), 3, 3), cep.ROLE_SYMBOLS, 3600
+    ),
+    "cep_kleene": cep._Reassembly(
+        cep._KleeneStep("t{2,3}?u", 3, 4), cep.ROLE_SYMBOLS, 3600
+    ),
+    "cep_absence": cep._Reassembly(
+        cep._AbsenceStep("u", "a", 2), cep.ROLE_SYMBOLS, 3600
+    ),
+    "cep_within": cep._Reassembly(
+        cep._WithinStep("tu", 300_000), cep.ROLE_SYMBOLS, 3600
+    ),
+    "cep_absence_time": cep._Reassembly(
+        cep._AbsenceTimeStep("u", "a", 300_000), cep.ROLE_SYMBOLS, 3600
+    ),
+    "open_sessions": state._SessionStep(1800),
+    "routing_counters": state._CounterStep(3600),
+    "upsert": state._UpsertStep(),
+    "funnel": analytics._FunnelStep(2, 3600),
+    "rate_spikes": analytics._SpikeStep("ts", 3, 20000, 3),
+    "lexicon": curate._LexiconStep(2, 3600),
+}
 
 
 # A changed literal is a checkpoint reset: Spark refuses a checkpoint of
 # the old layout at restart (test_array_layout_checkpoint_is_refused).
 _LAYOUTS = [
     pytest.param(
-        cep._state_schema(cep._KleeneStep),
+        state.state_layout(_STEPS["cep_kleene"]),
         "struct<next_idx:bigint,pend_idx:binary,pend_sym:string,"
         "carry:string,n_matches:bigint,first_match:bigint,last_us:bigint>",
         id="cep_kleene",
     ),
     pytest.param(
-        cep._state_schema(cep._AbsenceStep),
+        state.state_layout(_STEPS["cep_absence"]),
         "struct<next_idx:bigint,pend_idx:binary,pend_sym:string,"
         "open_idx:binary,n_triggers:bigint,n_dangling:bigint,"
         "first_dangling:bigint,last_us:bigint>",
         id="cep_absence",
     ),
     pytest.param(
-        cep._state_schema(cep._WithinStep),
+        state.state_layout(_STEPS["cep_within"]),
         "struct<next_idx:bigint,pend_idx:binary,pend_sym:string,"
         "pend_ms:binary,carry_sym:string,carry_ms:binary,"
         "n_within:bigint,first_within:bigint,last_us:bigint>",
         id="cep_within",
     ),
     pytest.param(
-        cep._state_schema(cep._AbsenceTimeStep),
+        state.state_layout(_STEPS["cep_absence_time"]),
         "struct<next_idx:bigint,pend_idx:binary,pend_sym:string,"
         "pend_ms:binary,open_idx:binary,open_ms:binary,"
         "n_triggers:bigint,n_dangling:bigint,first_dangling:bigint,"
@@ -241,41 +278,37 @@ _LAYOUTS = [
         id="cep_absence_time",
     ),
     pytest.param(
-        state.SESSION_STATE_SCHEMA,
+        state.state_layout(_STEPS["open_sessions"]),
         "struct<ts_us:binary>",
         id="open_sessions",
     ),
     pytest.param(
-        state.COUNTER_STATE_SCHEMA,
+        state.state_layout(_STEPS["routing_counters"]),
         "struct<n_total:bigint,n_user:bigint,n_tool:bigint,n_error:bigint,"
         "last_us:bigint>",
         id="routing_counters",
     ),
     pytest.param(
-        state.UPSERT_STATE_DDL,
-        "best_seq bigint, deleted int, text_md5 string",
+        state.state_layout(_STEPS["upsert"]),
+        "struct<best_seq:bigint,deleted:int,text_md5:string>",
         id="upsert",
     ),
     pytest.param(
-        analytics._FUNNEL_STATE_SCHEMA,
+        state.state_layout(_STEPS["funnel"]),
         "struct<ords:binary,masks:binary,last_us:bigint>",
         id="funnel",
     ),
     pytest.param(
-        analytics._SPIKE_STATE_SCHEMA,
+        state.state_layout(_STEPS["rate_spikes"]),
         "struct<bucket_idxs:binary,counts:binary>",
         id="rate_spikes",
     ),
     pytest.param(
-        curate._LEX_STATE_SCHEMA_DDL,
-        "ords binary, hits binary, last_us long",
+        state.state_layout(_STEPS["lexicon"]),
+        "struct<ords:binary,hits:binary,last_us:bigint>",
         id="lexicon",
     ),
 ]
-
-
-def _layout_string(layout) -> str:
-    return layout if isinstance(layout, str) else layout.simpleString()
 
 
 @pytest.mark.parametrize("layout,want", _LAYOUTS)
@@ -284,7 +317,51 @@ def test_stored_state_layout_is_pinned(layout, want):
     changed layout cannot resume from an existing checkpoint. Change a
     literal here only together with a state migration or a documented
     checkpoint reset."""
-    assert _layout_string(layout) == want
+    assert layout.simpleString() == want
+
+
+@pytest.mark.parametrize(
+    "ddl,schema",
+    [
+        pytest.param(
+            "best_seq bigint, deleted int, text_md5 string",
+            state.state_layout(_STEPS["upsert"]),
+            id="upsert_state",
+        ),
+        pytest.param(
+            "ords binary, hits binary, last_us long",
+            state.state_layout(_STEPS["lexicon"]),
+            id="lexicon_state",
+        ),
+        pytest.param(
+            "doc_id bigint, cur_seq bigint, deleted int, text_md5 string",
+            _STEPS["upsert"].output,
+            id="upsert_output",
+        ),
+        pytest.param(
+            "conv_id string, stage int, first_ord long",
+            _STEPS["funnel"].output,
+            id="funnel_output",
+        ),
+        pytest.param(
+            "key long, bucket_idx long, n_events long, baseline_sum long, "
+            "is_spike boolean",
+            _STEPS["rate_spikes"].output,
+            id="rate_spikes_output",
+        ),
+        pytest.param(
+            "conv_id string, lex_hits long, flagged int",
+            _STEPS["lexicon"].output,
+            id="lexicon_output",
+        ),
+    ],
+)
+def test_former_ddl_schemas_parse_to_the_same_struct(spark, ddl, schema):
+    """The upsert and lexicon layouts, and four output schemas, were DDL
+    strings that ``applyInPandasWithState`` parsed with Spark; Spark
+    parses each to a StructType equal to the one the step now declares,
+    so their checkpoints resume and their outputs are unchanged."""
+    assert _parse_datatype_string(ddl) == schema
 
 
 @pytest.mark.parametrize("layout,want", _LAYOUTS)
@@ -293,8 +370,88 @@ def test_stored_layout_has_no_array_or_map(layout, want):
     ``MapObjects`` code whose variable names carry a JVM-global counter,
     so its state encoders are compiled again in every micro-batch; list
     state is stored packed (``state.LONGS``) instead."""
-    got = _layout_string(layout).lower()
+    got = layout.simpleString().lower()
     assert "array<" not in got and "map<" not in got
+
+
+_T0 = pd.Timestamp("2024-03-01 09:00:00")
+
+
+def _batch(ts: list) -> pd.DataFrame:
+    """One pandas batch with every column a step reads ("uttua" roles)."""
+    n = len(ts)
+    return pd.DataFrame(
+        {
+            "turn_idx": range(n),
+            "role": ["user", "tool", "tool", "user", "assistant"][:n],
+            "ts": pd.Series(ts, dtype="datetime64[ns]"),
+            "_is_error": [False] * n,
+            "_ord": range(n),
+            "_mask": [1] * n,
+            "_h": [1] * n,
+            "_seq": range(n),
+            "_del": [0] * n,
+            "_md5": ["m"] * n,
+        }
+    )
+
+
+@pytest.mark.parametrize("name", list(_STEPS))
+def test_step_contract_through_the_core(name, fake_state):
+    """Every keyed-state operator's step, driven through the core without
+    a JVM: it stores its pinned layout with packed bytes in every LONGS
+    field and arms a timeout only if it has a horizon; a timed-out call
+    removes the state and emits only the step's expiry rows (closed
+    sessions for open sessions, nothing elsewhere); a key whose rows all
+    have a null ts never arms a timeout."""
+    step = _STEPS[name]
+    fn = state._state_fn(step)
+    layout = state.state_layout(step)
+    ts = [_T0 + pd.Timedelta(minutes=i) for i in range(5)]
+
+    st = fake_state()
+    assert list(fn(("k",), iter([_batch(ts)]), st))
+    assert len(st.get) == len(layout.fields)
+    for v, f in zip(st.get, layout.fields):
+        assert isinstance(v, bytes) == (f.dataType == state.LONGS), f.name
+    assert (st.armed is not None) == (step.horizon_s is not None)
+
+    st.hasTimedOut = True
+    out = list(fn(("k",), iter([_batch(ts)]), st))
+    assert not st.exists and st.get is None
+    want = []
+    if name == "open_sessions":
+        want = [("k", _T0, _T0 + pd.Timedelta(minutes=34), 5, True)]
+    assert [tuple(r) for df in out for r in df.itertuples(index=False)] == want
+
+    st = fake_state()
+    list(fn(("k",), iter([_batch([pd.NaT] * 3)]), st))
+    assert st.armed is None
+
+
+@pytest.mark.parametrize(
+    "name", [n for n, s in _STEPS.items() if s.horizon_s is not None]
+)
+def test_last_event_time_never_moves_back(name, fake_state):
+    """A key's last event time is monotone through the core: a later
+    batch of older events, or of null ts only, leaves the stored
+    ``last_us`` and the armed timeout where the newest event put them."""
+    step = _STEPS[name]
+    fn = state._state_fn(step)
+    clocked = step.last_us is None
+    st = fake_state()
+    newer = [_T0 + pd.Timedelta(hours=1, minutes=i) for i in range(5)]
+    list(fn(("k",), iter([_batch(newer)]), st))
+    armed = st.armed
+    last_us = st.get[-1] if clocked else None
+    assert armed is not None
+    if clocked:
+        assert last_us == newer[-1].value // 1000
+    for ts in ([_T0 + pd.Timedelta(minutes=i) for i in range(5)], [pd.NaT] * 3):
+        list(fn(("k",), iter([_batch(ts)]), st))
+        assert st.armed == armed
+        if clocked:
+            assert st.get[-1] == last_us
 
 
 # ---------------------------------------------------------------------------

@@ -4,14 +4,17 @@
 Runs, over the SAME gate stream input and drain harness
 (``__spark_entry__._drain_gate``) as q_stream_counters, three variants:
 
-- ``noop``: a state fn that consumes the iterator and emits one tiny row
-  per group — the irreducible per-group Python invocation cost;
+- ``noop``: a no-op step through the keyed-state core
+  (``operators/state.keyed_state``) that only counts each group's rows
+  and emits one row per group — the irreducible per-group cost of the
+  API and the core;
 - ``counters``: the real routing_counters operator;
 - ``sessions``: the real track_open_sessions operator.
 
-If ``noop`` is close to the real ops, the gates' cost is the per-group
-invocation overhead of the API itself (framework floor), not operator
-logic — and operator-level tuning cannot move it.
+All three run through the same core, so "noop vs real" compares
+operator logic on one call path: if ``noop`` is close to the real ops,
+the gates' cost is the per-group invocation overhead (framework floor),
+not operator logic — and operator-level tuning cannot move it.
 """
 from __future__ import annotations
 
@@ -23,10 +26,18 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-import pandas as pd  # noqa: E402
-from pyspark.sql import functions as F  # noqa: E402
-from pyspark.sql import types as T  # noqa: E402
-from pyspark.sql.streaming.state import GroupStateTimeout  # noqa: E402
+from vaero_spark.operators.state import (  # noqa: E402
+    DEFAULT_IDLE_TIMEOUT_S,
+    _CounterStep,
+    keyed_state,
+)
+
+
+class NoopStep(_CounterStep):
+    """The routing-counter step with its logic removed: it counts rows."""
+
+    def fold(self, acc, pdf, us):
+        return (acc[0] + len(pdf), 0, 0, 0)
 
 
 def main() -> None:
@@ -42,27 +53,10 @@ def main() -> None:
     )
     inp = entry._gate_stream_input(spark, sf_dir, "plain")
 
-    OUT = T.StructType([
-        T.StructField("conv_id", T.StringType()),
-        T.StructField("n", T.LongType()),
-    ])
-    STATE = T.StructType([T.StructField("n", T.LongType())])
-
-    def noop_fn(key, pdf_iter, state):
-        n = state.get[0] if state.exists else 0
-        for pdf in pdf_iter:
-            n += len(pdf)
-        state.update((n,))
-        yield pd.DataFrame({"conv_id": [key[0]], "n": [n]})
-
     def build_noop(src):
-        return (
-            src.select("conv_id", "ts")
-            .withWatermark("ts", "60 days")
-            .groupBy("conv_id")
-            .applyInPandasWithState(
-                noop_fn, OUT, STATE, "update", GroupStateTimeout.NoTimeout
-            )
+        return keyed_state(
+            src.select("conv_id", "ts").withWatermark("ts", "60 days").groupBy("conv_id"),
+            NoopStep(DEFAULT_IDLE_TIMEOUT_S),
         )
 
     def build_counters(src):

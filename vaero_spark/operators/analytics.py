@@ -41,8 +41,9 @@ Distributed shape:
   at far higher cost). The sort inside the window is per-key over
   bucket COUNTS (thousands per key per year), not events.
 
-- ``stream_rate_spikes``: the same rule on a LIVE stream via
-  ``applyInPandasWithState`` keyed by the entity: state is a bounded
+- ``stream_rate_spikes``: the same rule on a LIVE stream as a step of
+  the keyed-state core (``operators/state.keyed_state``) keyed by the
+  entity: state is a bounded
   ring of per-bucket counts (horizon = baseline + watermark slack),
   update-mode re-emission as late events land; the drained final
   emission per (key, bucket) equals the batch operator — giving the
@@ -52,20 +53,14 @@ Distributed shape:
 
 from __future__ import annotations
 
-from typing import Any, Iterator, Sequence, Tuple
+from typing import Sequence, Tuple
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from vaero_spark.operators.state import (
-    LONGS,
-    _arm_idle_timeout,
-    _pdf_max_us,
-    pack_longs,
-    unpack_longs,
-)
+from vaero_spark.operators.state import LONGS, KeyedStep, keyed_state
 
 # ---------------------------------------------------------------------------
 # funnel analysis
@@ -214,14 +209,53 @@ def funnel_membership_sql(
 # funnel analysis (streaming)
 # ---------------------------------------------------------------------------
 
-_FUNNEL_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("ords", LONGS),
-        T.StructField("masks", LONGS),
-        T.StructField("last_us", T.LongType()),
-    ]
-)
-_FUNNEL_OUT_SCHEMA = "conv_id string, stage int, first_ord long"
+
+class _FunnelStep(KeyedStep):
+    """Per conversation, the OR-ed stage mask of each stage-relevant
+    turn (by turn ordinal); emits the reached-stage vector. An idle
+    conversation's state is evicted, emitting nothing: emissions are
+    eager."""
+
+    output = T.StructType(
+        [
+            T.StructField("conv_id", T.StringType()),
+            T.StructField("stage", T.IntegerType()),
+            T.StructField("first_ord", T.LongType()),
+        ]
+    )
+    fields = [T.StructField("ords", LONGS), T.StructField("masks", LONGS)]
+    init = ([], [])
+
+    def __init__(self, n_stages: int, idle_timeout_seconds: int):
+        self.n_stages, self.horizon_s = n_stages, idle_timeout_seconds
+
+    def start(self, acc):
+        return dict(zip(*acc))
+
+    def fold(self, turns, pdf, us):
+        for o, m in zip(pdf["_ord"], pdf["_mask"]):
+            o = int(o)
+            turns[o] = turns.get(o, 0) | int(m)
+        return turns
+
+    def emit(self, key, turns, watermark_ms):
+        items = sorted(turns.items())
+        rows = []
+        prev = None
+        for k in range(self.n_stages):
+            hit = next(
+                (
+                    o
+                    for o, m in items
+                    if (m >> k) & 1 and (prev is None or o > prev)
+                ),
+                None,
+            )
+            if hit is None:
+                break
+            rows.append((key[0], k + 1, hit))
+            prev = hit
+        return ([o for o, _ in items], [m for _, m in items]), rows
 
 
 def stream_funnel(
@@ -245,8 +279,8 @@ def stream_funnel(
     conversation length, the transcripts boundedness assumption the
     reference's per-prefix sink buffers also make
     (``/root/reference/execute/sinkNode.go:80-101``) — plus the
-    last-event time for idle eviction (armed through the shared
-    NaT-guarded helper; an idle conversation's state is dropped once
+    last-event time for idle eviction (kept and armed by the
+    keyed-state core; an idle conversation's state is dropped once
     the watermark passes last-event + idle).
 
     Each batch recomputes the greedy stage chain (stage *k*'s first hit
@@ -276,55 +310,7 @@ def stream_funnel(
         )
         .filter(F.col("_mask") != 0)
     )
-
-    def fn(
-        key: Tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: Any
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:  # idle conversation: emissions were eager
-            state.remove()
-            return
-        ords, masks, last_us = state.get if state.exists else (b"", b"", 0)
-        turns = dict(zip(unpack_longs(ords), unpack_longs(masks)))
-        for pdf in pdfs:
-            for o, m in zip(pdf["_ord"], pdf["_mask"]):
-                o = int(o)
-                turns[o] = turns.get(o, 0) | int(m)
-            if len(pdf):
-                last_us = _pdf_max_us(pdf, last_us)
-        items = sorted(turns.items())
-        state.update(
-            (
-                pack_longs(o for o, _ in items),
-                pack_longs(m for _, m in items),
-                last_us,
-            )
-        )
-        _arm_idle_timeout(state, last_us, idle_timeout_seconds)
-        rows = []
-        prev = None
-        for k in range(n):
-            hit = next(
-                (
-                    o
-                    for o, m in items
-                    if (m >> k) & 1 and (prev is None or o > prev)
-                ),
-                None,
-            )
-            if hit is None:
-                break
-            rows.append((key[0], k + 1, hit))
-            prev = hit
-        out = pd.DataFrame(rows, columns=["conv_id", "stage", "first_ord"])
-        yield out.astype({"stage": "int32", "first_ord": "int64"})
-
-    return pre.groupBy("conv_id").applyInPandasWithState(
-        fn,
-        outputStructType=_FUNNEL_OUT_SCHEMA,
-        stateStructType=_FUNNEL_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf="EventTimeTimeout",
-    )
+    return keyed_state(pre.groupBy("conv_id"), _FunnelStep(n, idle_timeout_seconds))
 
 
 # ---------------------------------------------------------------------------
@@ -558,15 +544,78 @@ def rate_spikes_sql(
 # rate-spike detection (streaming)
 # ---------------------------------------------------------------------------
 
-_SPIKE_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("bucket_idxs", LONGS),
-        T.StructField("counts", LONGS),
-    ]
-)
-_SPIKE_OUT_SCHEMA = (
-    "key long, bucket_idx long, n_events long, baseline_sum long, is_spike boolean"
-)
+class _SpikeStep(KeyedStep):
+    """Per key, the event count of each retained day bucket; emits the
+    current flag row of every still-mutable bucket. No timeout:
+    eviction keys off the watermark (:meth:`emit`)."""
+
+    output = T.StructType(
+        [
+            T.StructField("key", T.LongType()),
+            T.StructField("bucket_idx", T.LongType()),
+            T.StructField("n_events", T.LongType()),
+            T.StructField("baseline_sum", T.LongType()),
+            T.StructField("is_spike", T.BooleanType()),
+        ]
+    )
+    fields = [T.StructField("bucket_idxs", LONGS), T.StructField("counts", LONGS)]
+    init = ([], [])
+
+    def __init__(
+        self, ts_col: str, baseline_buckets: int, factor_bp: int, min_baseline: int
+    ):
+        self.ts_col, self.baseline_buckets = ts_col, baseline_buckets
+        self.factor_bp, self.min_baseline = factor_bp, min_baseline
+
+    def start(self, acc):
+        return dict(zip(*acc))
+
+    def fold(self, buckets, pdf, us):
+        # a null ts has no day bucket (its NaT bucket, -2^63, is the
+        # packed-list null sentinel, which the core refuses to store)
+        ts = pdf[self.ts_col].dropna()
+        days = ts.values.astype("datetime64[D]").astype("int64")
+        for b, n in pd.Series(days).value_counts().items():
+            b = int(b)
+            buckets[b] = buckets.get(b, 0) + int(n)
+        return buckets
+
+    def emit(self, key, buckets, watermark_ms):
+        # Eviction keys off the WATERMARK, never the max bucket seen:
+        # the engine admits only rows with ts >= watermark into this
+        # operator, so a bucket below wm_day can no longer grow — and
+        # one below wm_day - baseline_buckets can no longer even serve
+        # as baseline for an admissible bucket. Anything younger must
+        # be retained (out-of-order files put a key's buckets in any
+        # arrival order). wm=0 (first batch / wide gate watermark)
+        # retains everything, which is what drain==batch needs.
+        wm_ms = watermark_ms()
+        if wm_ms > 0 and buckets:
+            cutoff = wm_ms // 86_400_000 - self.baseline_buckets
+            buckets = {b: n for b, n in buckets.items() if b >= cutoff}
+        ordered = sorted(buckets)
+        # Emit only buckets the watermark has NOT passed: those are the
+        # still-mutable ones, and exactly they have their full baseline
+        # retained (cutoff = wm_day - baseline). A bucket behind the
+        # watermark is FINAL — its last emission (made while it was
+        # admissible, with complete baselines) stands; recomputing it
+        # here against a partially-evicted baseline would supersede a
+        # correct row with an undercounted one.
+        emit_floor = wm_ms // 86_400_000 if wm_ms > 0 else None
+        rows = []
+        for b in ordered:
+            if emit_floor is not None and b < emit_floor:
+                continue
+            base = sum(
+                buckets.get(p, 0) for p in range(b - self.baseline_buckets, b)
+            )
+            cur = buckets[b]
+            spike = (
+                base >= self.min_baseline
+                and cur * self.baseline_buckets * 10000 > self.factor_bp * base
+            )
+            rows.append((key[0], b, cur, base, spike))
+        return (ordered, [buckets[b] for b in ordered]), rows
 
 
 def stream_rate_spikes(
@@ -593,78 +642,15 @@ def stream_rate_spikes(
     drain==batch pairing as ``stream_cep_match``, which is what makes a
     stateful streaming op SQL-oracle-checkable.
     """
-    def fn(
-        key: Tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: Any
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:  # nothing to finalize: emissions are eager
-            state.remove()
-            return
-        idxs, cnts = state.get if state.exists else (b"", b"")
-        buckets = dict(zip(unpack_longs(idxs), unpack_longs(cnts)))
-        for pdf in pdfs:
-            days = (
-                pdf[ts_col].values.astype("datetime64[D]").astype("int64")
-            )
-            for b, n in pd.Series(days).value_counts().items():
-                b = int(b)
-                buckets[b] = buckets.get(b, 0) + int(n)
-        # Eviction keys off the WATERMARK, never the max bucket seen:
-        # the engine admits only rows with ts >= watermark into this
-        # operator, so a bucket below wm_day can no longer grow — and
-        # one below wm_day - baseline_buckets can no longer even serve
-        # as baseline for an admissible bucket. Anything younger must
-        # be retained (out-of-order files put a key's buckets in any
-        # arrival order). wm=0 (first batch / wide gate watermark)
-        # retains everything, which is what drain==batch needs.
-        wm_ms = state.getCurrentWatermarkMs()
-        if wm_ms > 0 and buckets:
-            cutoff = wm_ms // 86_400_000 - baseline_buckets
-            buckets = {b: n for b, n in buckets.items() if b >= cutoff}
-        ordered = sorted(buckets)
-        state.update(
-            (pack_longs(ordered), pack_longs(buckets[b] for b in ordered))
-        )
-        # Emit only buckets the watermark has NOT passed: those are the
-        # still-mutable ones, and exactly they have their full baseline
-        # retained (cutoff = wm_day - baseline). A bucket behind the
-        # watermark is FINAL — its last emission (made while it was
-        # admissible, with complete baselines) stands; recomputing it
-        # here against a partially-evicted baseline would supersede a
-        # correct row with an undercounted one.
-        emit_floor = wm_ms // 86_400_000 if wm_ms > 0 else None
-        rows = []
-        for b in sorted(buckets):
-            if emit_floor is not None and b < emit_floor:
-                continue
-            base = sum(
-                buckets.get(p, 0) for p in range(b - baseline_buckets, b)
-            )
-            cur = buckets[b]
-            spike = (
-                base >= min_baseline
-                and cur * baseline_buckets * 10000 > factor_bp * base
-            )
-            rows.append((key[0], b, cur, base, spike))
-        yield pd.DataFrame(
-            rows,
-            columns=["key", "bucket_idx", "n_events", "baseline_sum", "is_spike"],
-        )
-
-    return (
+    return keyed_state(
         # NTZ sources (the driver parquet) must cast for event-time
         # watermarks; session TZ is pinned UTC so the cast is identity.
         # Only (key, ts) crosses the Python boundary — the bucket
         # counter reads nothing else (guide §4.1 column pruning).
         stream.select(F.col(key_col), F.col(ts_col).cast("timestamp").alias(ts_col))
         .withWatermark(ts_col, watermark)
-        .groupBy(F.col(key_col))
-        .applyInPandasWithState(
-            fn,
-            outputStructType=_SPIKE_OUT_SCHEMA,
-            stateStructType=_SPIKE_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf="NoTimeout",
-        )
+        .groupBy(F.col(key_col)),
+        _SpikeStep(ts_col, baseline_buckets, factor_bp, min_baseline),
     )
 
 

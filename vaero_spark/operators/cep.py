@@ -37,58 +37,28 @@ string (a ``*``-only pattern would make "first match" ill-defined and
 the non-overlapping count engine-divergent), and must use only the
 portable regex core (literals, classes, ``+ * ? {m,n}``, alternation,
 grouping) — no backreferences or lookaround, which RE2 lacks.
+
+The ``stream_cep_*`` twins are one sequence-reassembly step,
+:class:`_Reassembly`, of the keyed-state core (``state.keyed_state``),
+around one pattern step each (``_KleeneStep``, ``_AbsenceStep``,
+``_WithinStep``, ``_AbsenceTimeStep``).
 """
 
 from __future__ import annotations
 
 import re
 from itertools import count, repeat
-from typing import Any, Iterator, Tuple
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from vaero_spark.operators.state import (
-    LONGS,
-    _arm_idle_timeout,
-    _pdf_max_us,
-    pack_longs,
-    unpack_longs,
-)
+from vaero_spark.operators.state import LONGS, KeyedStep, keyed_state
 
 #: default role → symbol alphabet for transcript tables
 ROLE_SYMBOLS = {"user": "u", "assistant": "a", "tool": "t", "system": "s"}
 #: unmapped roles render as '?' — keep it out of patterns
 UNKNOWN_SYMBOL = "?"
-
-#: datetime64 unit -> divisor that converts the int64 view to MILLIS.
-#: Explicit dispatch on the actual unit (ADVICE r6): the old
-#: ``// 1_000_000 if ns else // 1_000`` silently mis-scaled a
-#: datetime64[ms]/[s] series 1000x instead of erroring.
-_MS_DIVISORS = {"s": None, "ms": 1, "us": 1_000, "ns": 1_000_000}
-
-
-def _ts_to_ms(tsk: "pd.Series") -> list:
-    """Integer milliseconds from a datetime64 series, whatever its unit.
-    Null (NaT) becomes ``None``, not the int64 view's -2^63 sentinel:
-    the batch twins' NULL arithmetic decides what a null time means."""
-    import numpy as np
-
-    unit, _ = np.datetime_data(tsk.dtype)  # raises on non-datetime dtypes
-    div = _MS_DIVISORS.get(unit)
-    ims = tsk.astype("int64")
-    if div is None:
-        if unit != "s":
-            raise TypeError(f"unsupported datetime64 unit {unit!r}")
-        ms = ims * 1_000
-    else:
-        ms = ims // div
-    if tsk.hasnans:
-        ms = ms.astype(object).where(tsk.notna(), None)
-    return ms.tolist()
 
 
 def _check_pattern(pattern: str, symbols: dict[str, str]) -> None:
@@ -429,104 +399,87 @@ WITHIN_STREAM_OUTPUT_SCHEMA = T.StructType(
     ]
 )
 
-def _state_schema(step) -> T.StructType:
-    """The stored layout of every streaming CEP operator: the core's
-    prefix, the step's accumulator fields, then ``last_us``.
-
-    next_idx = next contiguous turn expected; pend_* = out-of-order
-    turns awaiting reassembly (idx list + aligned symbol chars, plus
-    event-time ms when the step reads time); last_us arms idle eviction.
-    Int64 lists are stored packed (:data:`~vaero_spark.operators.state.LONGS`).
-    """
-    head = [
-        T.StructField("next_idx", T.LongType()),
-        T.StructField("pend_idx", LONGS),
-        T.StructField("pend_sym", T.StringType()),
-    ]
-    if step.timed:
-        head.append(T.StructField("pend_ms", LONGS))
-    return T.StructType(head + step.fields + [T.StructField("last_us", T.LongType())])
-
-
-def _reassembly_fn(step, symbols: dict[str, str], idle_timeout_seconds: int):
-    """The ``applyInPandasWithState`` function of every streaming CEP
-    operator: out-of-order sequence reassembly over
-    ``(conv_id, turn_idx, role, ts)`` around one pattern ``step``.
+class _Reassembly(KeyedStep):
+    """The keyed step of every streaming CEP operator: out-of-order
+    sequence reassembly over ``(conv_id, turn_idx, role, ts)`` around
+    one pattern ``step``.
 
     Turns wait in a pending buffer until the contiguous ``turn_idx``
     prefix reaches them (first arrival wins; consumed turns and late
-    duplicates drop), so the step folds each newly contiguous run
-    ``(start, symbols, event-time ms)`` exactly once and in order. A
-    null ``ts`` reaches a timed step as ``None``. One row, from
+    duplicates drop), so the pattern step folds each newly contiguous
+    run ``(start, symbols, event-time ms)`` exactly once and in order.
+    A null ``ts`` reaches a timed step as ``None``. One row, from
     ``step.emit``, goes out whenever the prefix advances. Turn indexes
     are assumed 0-based contiguous per conversation (the canonical
-    transcripts derivation guarantees it).
+    transcripts derivation guarantees it). An idle conversation's state
+    is evicted, emitting nothing. Stored: next_idx = next contiguous
+    turn expected; pend_* = out-of-order turns awaiting reassembly (idx
+    list + aligned symbol chars, plus event-time ms when the step reads
+    time); then the pattern step's accumulator fields.
 
-    A step supplies ``output`` (its output schema), ``timed`` (it reads
-    event time, so the core buffers ``pend_ms``), ``fields`` and
-    ``init`` (its accumulator's state fields and empty value),
-    ``fold(acc, start, syms, mss) -> acc`` and ``emit(acc, n_turns)``
-    (the output columns after ``conv_id, n_turns``). An accumulator
-    field of type ``LONGS`` holds a list in ``acc``; the core packs it
-    at ``state.update`` and unpacks it at ``state.get``."""
-    names = step.output.fieldNames()
-    n_acc = len(step.fields)
-    packed = [f.dataType == LONGS for f in step.fields]
+    A pattern step supplies ``output`` (its output schema), ``timed``
+    (it reads event time, so pending turns keep ``pend_ms``),
+    ``fields`` and ``init`` (its accumulator's state fields and empty
+    value), ``fold(acc, start, syms, mss) -> acc`` and
+    ``emit(acc, n_turns)`` (the output columns after ``conv_id,
+    n_turns``). An accumulator field of type ``LONGS`` holds a list."""
 
-    def fn(
-        key: Tuple[Any, ...], pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()  # conversation idle past the horizon
-            return
-        if state.exists:
-            stored = state.get
-            next_idx, last_us = stored[0], stored[-1]
-            pend_idx = unpack_longs(stored[1]) or []
-            pend_ms = (unpack_longs(stored[3]) or []) if step.timed else repeat(None)
-            pend = dict(zip(pend_idx, zip(stored[2] or "", pend_ms)))
-            acc = tuple(
-                d if v is None else unpack_longs(v) if p else v
-                for v, d, p in zip(stored[-1 - n_acc : -1], step.init, packed)
-            )
+    def __init__(self, step, symbols: dict[str, str], idle_timeout_seconds: int):
+        self.step, self.symbols = step, dict(symbols)
+        self.horizon_s = idle_timeout_seconds
+        self.output = step.output
+        head = [
+            T.StructField("next_idx", T.LongType()),
+            T.StructField("pend_idx", LONGS),
+            T.StructField("pend_sym", T.StringType()),
+        ]
+        if step.timed:
+            head.append(T.StructField("pend_ms", LONGS))
+        self.n_head, self.fields = len(head), head + step.fields
+        self.init = (0, [], "") + (([],) if step.timed else ()) + step.init
+
+    def start(self, acc):
+        pend_ms = acc[3] if self.step.timed else repeat(None)
+        return acc[0], dict(zip(acc[1], zip(acc[2], pend_ms))), acc[self.n_head :]
+
+    def fold(self, work, pdf, us):
+        next_idx, pend, _ = work
+        # vectorized ingest: map roles → symbols and drop already-
+        # consumed turns before the per-element insert (a pandas
+        # Series element loop here doubled the drain wall time)
+        idxs = pdf["turn_idx"].to_numpy()
+        keep = idxs >= next_idx
+        syms = pdf["role"][keep].map(self.symbols).fillna(UNKNOWN_SYMBOL).tolist()
+        if self.step.timed:
+            ms = (us // 1000).to_dict()
+            mss = [ms.get(i) for i in pdf.index[keep]]
         else:
-            next_idx, last_us, pend, acc = 0, 0, {}, step.init
-        for pdf in pdf_iter:
-            if not len(pdf):
-                continue
-            last_us = _pdf_max_us(pdf, last_us)
-            # vectorized ingest: map roles → symbols and drop already-
-            # consumed turns before the per-element insert (a pandas
-            # Series element loop here doubled the drain wall time)
-            idxs = pdf["turn_idx"].to_numpy()
-            keep = idxs >= next_idx
-            syms = pdf["role"][keep].map(symbols).fillna(UNKNOWN_SYMBOL).tolist()
-            mss = _ts_to_ms(pdf["ts"][keep]) if step.timed else repeat(None)
-            for i, s, m in zip(idxs[keep].tolist(), syms, mss):
-                if i not in pend:  # first arrival wins; late dups drop
-                    pend[i] = (s, m)
+            mss = repeat(None)
+        for i, s, m in zip(idxs[keep].tolist(), syms, mss):
+            if i not in pend:  # first arrival wins; late dups drop
+                pend[i] = (s, m)
+        return work
+
+    def emit(self, key, work, watermark_ms):
+        next_idx, pend, acc = work
         run = []
         while next_idx in pend:
             run.append(pend.pop(next_idx))
             next_idx += 1
+        rows = []
         if run:
-            acc = step.fold(
+            acc = self.step.fold(
                 acc,
                 next_idx - len(run),
                 "".join(s for s, _ in run),
                 [m for _, m in run],
             )
-            row = (key[0], next_idx, *step.emit(acc, next_idx))
-            yield pd.DataFrame({name: [v] for name, v in zip(names, row)})
+            rows.append((key[0], next_idx, *self.step.emit(acc, next_idx)))
         order = sorted(pend)
-        head = (next_idx, pack_longs(order), "".join(pend[i][0] for i in order))
-        if step.timed:
-            head += (pack_longs([pend[i][1] for i in order]),)
-        stored_acc = tuple(pack_longs(v) if p else v for v, p in zip(acc, packed))
-        state.update(head + stored_acc + (last_us,))
-        _arm_idle_timeout(state, last_us, idle_timeout_seconds)
-
-    return fn
+        head = (next_idx, order, "".join(pend[i][0] for i in order))
+        if self.step.timed:
+            head += ([pend[i][1] for i in order],)
+        return head + tuple(acc), rows
 
 
 def _stream_reassembled(
@@ -536,19 +489,13 @@ def _stream_reassembled(
     symbols: dict[str, str],
     idle_timeout_seconds: int,
 ) -> DataFrame:
-    return (
+    return keyed_state(
         # guide §4.1: only the columns the state machine reads cross
         # the Python boundary (text/tool payloads never ship per group)
         stream.select("conv_id", "turn_idx", "role", "ts")
         .withWatermark("ts", watermark)
-        .groupBy("conv_id")
-        .applyInPandasWithState(
-            _reassembly_fn(step, dict(symbols), idle_timeout_seconds),
-            outputStructType=step.output,
-            stateStructType=_state_schema(step),
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+        .groupBy("conv_id"),
+        _Reassembly(step, symbols, idle_timeout_seconds),
     )
 
 

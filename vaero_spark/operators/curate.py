@@ -25,8 +25,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from vaero_spark.functions.text import lang_id, quality_columns, tokens
+from vaero_spark.operators.state import LONGS, KeyedStep, keyed_state
 
 
 def curate_documents(
@@ -573,8 +575,39 @@ def lexicon_flags_sql(
 # lexicon blocklist — streaming (live safety alerting per conversation)
 # ---------------------------------------------------------------------------
 
-_LEX_STATE_SCHEMA_DDL = "ords binary, hits binary, last_us long"  # packed LONGS
-_LEX_OUT_SCHEMA_DDL = "conv_id string, lex_hits long, flagged int"
+
+class _LexiconStep(KeyedStep):
+    """Per conversation, the hit count of each turn index (a re-delivered
+    turn overwrites, never double-counts); emits the running sum. An
+    idle conversation's state is evicted, emitting nothing: emissions
+    are eager."""
+
+    output = T.StructType(
+        [
+            T.StructField("conv_id", T.StringType()),
+            T.StructField("lex_hits", T.LongType()),
+            T.StructField("flagged", T.IntegerType()),
+        ]
+    )
+    fields = [T.StructField("ords", LONGS), T.StructField("hits", LONGS)]
+    init = ([], [])
+
+    def __init__(self, max_hits: int, idle_timeout_seconds: int):
+        self.max_hits, self.horizon_s = max_hits, idle_timeout_seconds
+
+    def start(self, acc):
+        return dict(zip(*acc))
+
+    def fold(self, turns, pdf, us):
+        for o, h in zip(pdf["_ord"], pdf["_h"]):
+            turns[int(o)] = int(h)  # overwrite: duplicate-safe
+        return turns
+
+    def emit(self, key, turns, watermark_ms):
+        items = sorted(turns.items())
+        total = sum(h for _, h in items)
+        acc = ([o for o, _ in items], [h for _, h in items])
+        return acc, [(key[0], total, 1 if total > self.max_hits else 0)]
 
 
 def stream_lexicon(
@@ -621,13 +654,6 @@ def stream_lexicon(
     update re-emits the running sum), so downstream consumers see the
     final pre-timeout row even though timeout itself emits nothing.
     """
-    from vaero_spark.operators.state import (
-        _arm_idle_timeout,
-        _pdf_max_us,
-        pack_longs,
-        unpack_longs,
-    )
-
     pre = (
         stream.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
         .withWatermark(ts_col, watermark)
@@ -639,42 +665,8 @@ def stream_lexicon(
         )
         .filter(F.col("_h") > 0)
     )
-
-    def fn(key, pdfs, state):
-        import pandas as pd
-
-        if state.hasTimedOut:  # idle conversation: emissions were eager
-            state.remove()
-            return
-        ords, hits, last_us = state.get if state.exists else (b"", b"", 0)
-        turns = dict(zip(unpack_longs(ords), unpack_longs(hits)))
-        for pdf in pdfs:
-            for o, h in zip(pdf["_ord"], pdf["_h"]):
-                turns[int(o)] = int(h)  # overwrite: duplicate-safe
-            if len(pdf):
-                last_us = _pdf_max_us(pdf, last_us)
-        items = sorted(turns.items())
-        state.update(
-            (
-                pack_longs(o for o, _ in items),
-                pack_longs(h for _, h in items),
-                last_us,
-            )
-        )
-        _arm_idle_timeout(state, last_us, idle_timeout_seconds)
-        total = sum(h for _, h in items)
-        out = pd.DataFrame(
-            [(key[0], total, 1 if total > max_hits else 0)],
-            columns=["conv_id", "lex_hits", "flagged"],
-        )
-        yield out.astype({"lex_hits": "int64", "flagged": "int32"})
-
-    return pre.groupBy("conv_id").applyInPandasWithState(
-        fn,
-        outputStructType=_LEX_OUT_SCHEMA_DDL,
-        stateStructType=_LEX_STATE_SCHEMA_DDL,
-        outputMode="update",
-        timeoutConf="EventTimeTimeout",
+    return keyed_state(
+        pre.groupBy("conv_id"), _LexiconStep(max_hits, idle_timeout_seconds)
     )
 
 

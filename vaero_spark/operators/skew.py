@@ -53,13 +53,6 @@ def salted_agg(
     )
 
 
-def repartition_salted(df: DataFrame, key: str, n_partitions: int, n_salts: int = 16) -> DataFrame:
-    """Explicit salted repartition for downstream per-key pipelines:
-    distributes a hot key over ``n_salts`` partitions while keeping
-    locality for normal keys."""
-    return df.repartition(n_partitions, F.col(key), salt_column(n_salts, "turn_idx"))
-
-
 def salted_join(
     fact: DataFrame,
     dim: DataFrame,

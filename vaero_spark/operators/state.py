@@ -1,17 +1,24 @@
-"""Per-key custom state — ``applyInPandasWithState`` operators.
+"""Per-key custom state: the one ``applyInPandasWithState`` core and the
+keyed-state operators built on it.
 
 The reference's only stateful construct is the sink-side per-prefix
 buffer: byte-cap flush (``execute/sinkNode.go:105-125``) and time-cap
 flush via a timer goroutine (``sinkNode.go:242-254``). The byte cap
 lives in the sink's ``file_seq`` packing (``sinks/writers.py``); this
 module holds the keyed state that a job needs beyond what Spark's
-native stateful operators give: open-session tracking (the event-time
-time cap), routing counters and the CDC upsert view, plus the idle
-eviction helpers the CEP, funnel and lexicon operators share, and the
-packed form every list-valued state field is stored in. State lives in
-Spark's state store (the default HDFS-backed provider unless a session
-sets ``spark.sql.streaming.stateStore.providerClass``), checkpointed
-and exactly-once — the reference loses its buffers on crash.
+native stateful operators give. State lives in Spark's state store (the
+default HDFS-backed provider unless a session sets
+``spark.sql.streaming.stateStore.providerClass``), checkpointed and
+exactly-once — the reference loses its buffers on crash.
+
+Every keyed-state operator is a :class:`KeyedStep` run by
+:func:`keyed_state`, the package's only ``applyInPandasWithState`` call
+and only ``GroupState`` user: it owns timeouts, state load and store
+(packing every :data:`LONGS` field), the one event-time conversion
+(:func:`event_us`), the one arming rule and the output frame. Steps
+here: open sessions (the event-time time cap), routing counters and the
+CDC upsert view; CEP reassembly, funnel, rate spikes and lexicon are
+steps of the same core in their own modules.
 
 All logic is Arrow-batched pandas (no per-row Python in the JVM loop);
 state per key is O(1) scalars or a bounded list.
@@ -22,9 +29,10 @@ from __future__ import annotations
 import struct
 from typing import Any, Iterable, Iterator, Optional, Tuple
 
+import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, GroupedData
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql import types as T
@@ -71,6 +79,162 @@ def unpack_longs(blob: Optional[bytes]) -> Optional[list]:
 
 
 # ---------------------------------------------------------------------------
+# the keyed-state core
+# ---------------------------------------------------------------------------
+
+
+_US_PER_UNIT = {"us": 1, "ms": 1_000, "s": 1_000_000}
+
+
+def event_us(ts: pd.Series) -> pd.Series:
+    """Integer µs of the non-null values of the datetime64 series ``ts``
+    (index kept). NaT is dropped BEFORE the int64 view, which would turn
+    it into the -2^63 sentinel. The scale dispatches on the series'
+    actual unit: a ``// 1000 if ns`` rule silently mis-scales a
+    datetime64[ms]/[s] series 1000x instead of erroring."""
+    unit, _ = np.datetime_data(ts.dtype)  # raises on non-datetime dtypes
+    v = ts.dropna().astype("int64")
+    if unit == "ns":
+        return v // 1_000
+    if unit not in _US_PER_UNIT:
+        raise TypeError(f"unsupported datetime64 unit {unit!r}")
+    return v * _US_PER_UNIT[unit]
+
+
+def _arm_timeout(state: GroupState, last_us: int, horizon_s: int) -> None:
+    """Expire the key once the watermark passes ``last_us`` + horizon.
+
+    The deadline is the ceil to ms: floor-truncating the µs event time
+    would let the timeout fire up to ~1 ms BEFORE the watermark truly
+    passes it (for open sessions: splitting a session that a sub-ms
+    bridging event would have merged, where the non-timeout path
+    compares at exact µs). It must stay strictly above the current
+    watermark.
+
+    A key that has never seen a non-null event time (``last_us == 0``)
+    is NOT armed: max(1970+horizon, wm+1) degenerates to wm+1 — an
+    immediately-expiring timeout that would evict the key's state on
+    the very next batch. Such a key keeps NoTimeout behavior until a
+    real timestamp arrives."""
+    if last_us == 0:
+        return
+    state.setTimeoutTimestamp(
+        max(
+            -(-(last_us + horizon_s * 1_000_000) // 1000),
+            state.getCurrentWatermarkMs() + 1,
+        )
+    )
+
+
+class KeyedStep:
+    """What an operator supplies to :func:`keyed_state`.
+
+    ``output`` is the output schema and ``mode`` the output mode.
+    ``fields`` are the stored fields and ``init`` a new key's value, one
+    element per field (a stored null reads as its ``init`` element). A
+    ``LONGS`` field holds a list in every value the step sees; the core
+    packs and unpacks it. Per call, the core folds each non-empty pandas
+    batch into ``work = start(acc)`` with ``fold(work, pdf, us)``, where
+    ``us`` is :func:`event_us` of the batch's ``ts`` when the step has a
+    horizon, then takes ``(acc, rows) = emit(key, work, watermark_ms)``:
+    the value to store (``None`` removes the key's state) and the rows
+    to emit, tuples in ``output`` order. ``watermark_ms()`` is the
+    current watermark, for operators that set one.
+
+    ``horizon_s`` is the timeout policy: ``None``, the key never times
+    out; otherwise it expires once the watermark passes its last event
+    time plus ``horizon_s`` seconds, and :meth:`expire` gives the rows
+    that go out then. The last event time is the latest non-null ``ts``
+    the core has folded, stored as a trailing ``last_us`` field, unless
+    the step defines ``last_us(acc)`` to read it from its own state."""
+
+    mode = "update"
+    horizon_s: Optional[int] = None
+    last_us = None
+
+    def start(self, acc):
+        return acc
+
+    def expire(self, key: Tuple[Any, ...], acc) -> list:
+        return []
+
+
+def state_layout(step: KeyedStep) -> T.StructType:
+    """The stored layout of ``step``'s state: its fields, then the
+    core's ``last_us`` when the core keeps the key's event time."""
+    fields = list(step.fields)
+    if step.horizon_s is not None and step.last_us is None:
+        fields.append(T.StructField("last_us", T.LongType()))
+    return T.StructType(fields)
+
+
+def _state_fn(step: KeyedStep):
+    """The ``applyInPandasWithState`` function that runs ``step``."""
+    names = step.output.fieldNames()
+    packed = [f.dataType == LONGS for f in step.fields]
+    timed = step.horizon_s is not None
+    clocked = timed and step.last_us is None
+
+    def load(stored: tuple) -> tuple:
+        return tuple(
+            d if v is None else unpack_longs(v) if p else v
+            for v, d, p in zip(stored, step.init, packed)
+        )
+
+    def fn(
+        key: Tuple[Any, ...], pdf_iter: Iterator[pd.DataFrame], state: GroupState
+    ) -> Iterator[pd.DataFrame]:
+        if state.hasTimedOut:
+            rows = step.expire(key, load(state.get))
+            state.remove()
+            if rows:
+                yield pd.DataFrame(rows, columns=names)
+            return
+        if state.exists:
+            stored = state.get
+            acc, last_us = load(stored), stored[-1] if clocked else 0
+        else:
+            acc, last_us = step.init, 0
+        work = step.start(acc)
+        for pdf in pdf_iter:
+            if not len(pdf):
+                continue
+            us = event_us(pdf["ts"]) if timed else None
+            if clocked and len(us):
+                last_us = max(last_us, int(us.max()))
+            work = step.fold(work, pdf, us)
+        acc, rows = step.emit(key, work, state.getCurrentWatermarkMs)
+        if acc is None:
+            state.remove()
+        else:
+            stored = tuple(pack_longs(v) if p else v for v, p in zip(acc, packed))
+            state.update(stored + (last_us,) if clocked else stored)
+            if timed:
+                clock = last_us if clocked else step.last_us(acc)
+                _arm_timeout(state, clock, step.horizon_s)
+        if rows:
+            yield pd.DataFrame(rows, columns=names)
+
+    return fn
+
+
+def keyed_state(grouped: GroupedData, step: KeyedStep) -> DataFrame:
+    """``step`` run over every key of ``grouped``: the package's one
+    ``applyInPandasWithState`` call."""
+    return grouped.applyInPandasWithState(
+        _state_fn(step),
+        outputStructType=step.output,
+        stateStructType=state_layout(step),
+        outputMode=step.mode,
+        timeoutConf=(
+            GroupStateTimeout.NoTimeout
+            if step.horizon_s is None
+            else GroupStateTimeout.EventTimeTimeout
+        ),
+    )
+
+
+# ---------------------------------------------------------------------------
 # open-session tracking (time-cap flush parity, event-time based)
 # ---------------------------------------------------------------------------
 
@@ -84,10 +248,8 @@ SESSION_OUTPUT_SCHEMA = T.StructType(
     ]
 )
 
-SESSION_STATE_SCHEMA = T.StructType([T.StructField("ts_us", LONGS)])
 
-
-def _session_tracker(gap_seconds: int):
+class _SessionStep(KeyedStep):
     """Keyed session assembly with EXACT batch-sessionization semantics:
     buffer the conversation's event times, split on gaps ≥ ``gap``, and
     emit a session as ``closed`` only once the watermark passes its
@@ -97,13 +259,26 @@ def _session_tracker(gap_seconds: int):
     memory is bounded by the watermark window, not conversation life.
     This makes the streamed result equal ``F.session_window`` /
     the SQL sessionization bit-for-bit (oracle-checked in the gate as
-    ``stream_open_sessions``)."""
-    gap_us = gap_seconds * 1_000_000
+    ``stream_open_sessions``). The timeout is the session close: it
+    fires at the last kept event + gap and emits the buffer's sessions
+    as closed."""
 
-    def segments(sorted_us: list) -> list:
+    output = SESSION_OUTPUT_SCHEMA
+    fields = [T.StructField("ts_us", LONGS)]
+    init = ([],)
+    mode = "append"
+
+    def __init__(self, gap_seconds: int):
+        self.horizon_s = gap_seconds
+        self.gap_us = gap_seconds * 1_000_000
+
+    def last_us(self, acc) -> int:
+        return acc[0][-1]  # the kept buffer is sorted
+
+    def _segments(self, sorted_us: list) -> list:
         segs, cur = [], [sorted_us[0]]
         for t in sorted_us[1:]:
-            if t - cur[-1] >= gap_us:
+            if t - cur[-1] >= self.gap_us:
                 segs.append(cur)
                 cur = [t]
             else:
@@ -111,65 +286,41 @@ def _session_tracker(gap_seconds: int):
         segs.append(cur)
         return segs
 
-    def mk(conv_id, seg, closed) -> dict:
-        return {
-            "conv_id": conv_id,
-            "session_start": pd.Timestamp(seg[0], unit="us"),
-            "session_end": pd.Timestamp(seg[-1] + gap_us, unit="us"),
-            "n_turns": len(seg),
-            "closed": closed,
-        }
+    def _row(self, conv_id, seg: list, closed: bool) -> tuple:
+        return (
+            conv_id,
+            pd.Timestamp(seg[0], unit="us"),
+            pd.Timestamp(seg[-1] + self.gap_us, unit="us"),
+            len(seg),
+            closed,
+        )
 
-    def fn(
-        key: Tuple[Any, ...],
-        pdf_iter: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        (conv_id,) = key
-        buf = unpack_longs(state.get[0]) if state.exists else []
-        if state.hasTimedOut:
-            state.remove()
-            if buf:
-                yield pd.DataFrame([mk(conv_id, s, True) for s in segments(sorted(buf))])
-            return
+    def start(self, acc):
+        return list(acc[0])
 
-        for pdf in pdf_iter:
-            ts = pdf["ts"].dropna()  # NaT → -2^63 under the int64 view
-            us = ts.astype("int64")  # datetime64[us/ns] → int64
-            if ts.dtype == "datetime64[ns]":
-                us = us // 1000
-            buf.extend(int(x) for x in us)
+    def fold(self, buf, pdf, us):
+        buf.extend(us.tolist())
+        return buf
+
+    def emit(self, key, buf, watermark_ms):
         if not buf:  # only null-ts rows ever seen: nothing to sessionize
-            if state.exists:
-                state.remove()
-            return
+            return None, []
         buf.sort()
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        out, keep = [], []
-        for seg in segments(buf):
-            if seg[-1] + gap_us <= wm_us:
-                out.append(mk(conv_id, seg, True))  # matured: final, emit now
+        wm_us = watermark_ms() * 1000
+        rows, keep = [], []
+        for seg in self._segments(buf):
+            if seg[-1] + self.gap_us <= wm_us:
+                rows.append(self._row(key[0], seg, True))  # matured: final
             else:
                 keep.extend(seg)
-        if keep:
-            state.update((pack_longs(keep),))
-            # ceil of (end + gap) in ms: floor-truncating the µs event
-            # time would let the timeout fire up to ~1 ms BEFORE the
-            # watermark truly passes end+gap, splitting a session that a
-            # sub-ms bridging event would have merged (the non-timeout
-            # path compares at exact µs — both paths must agree).
-            timeout_ms = max(
-                -(-(keep[-1] + gap_us) // 1000),
-                state.getCurrentWatermarkMs() + 1,
-            )
-            state.setTimeoutTimestamp(timeout_ms)
-            out.append(mk(conv_id, segments(keep)[-1], False))  # trailing open
-        else:
-            state.remove()
-        if out:
-            yield pd.DataFrame(out)
+        if not keep:
+            return None, rows
+        rows.append(self._row(key[0], self._segments(keep)[-1], False))  # open
+        return (keep,), rows
 
-    return fn
+    def expire(self, key, acc):
+        buf = acc[0]
+        return [self._row(key[0], s, True) for s in self._segments(buf)] if buf else []
 
 
 def track_open_sessions(
@@ -184,22 +335,14 @@ def track_open_sessions(
     Only ``(conv_id, ts)`` crosses the Python boundary — the tracker
     reads nothing else, and shipping the payload columns per group would
     multiply the Arrow transfer ~10x for nothing (guide §4.1)."""
-    return (
-        stream.select("conv_id", "ts")
-        .withWatermark("ts", watermark)
-        .groupBy("conv_id")
-        .applyInPandasWithState(
-            _session_tracker(gap_seconds),
-            outputStructType=SESSION_OUTPUT_SCHEMA,
-            stateStructType=SESSION_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+    return keyed_state(
+        stream.select("conv_id", "ts").withWatermark("ts", watermark).groupBy("conv_id"),
+        _SessionStep(gap_seconds),
     )
 
 
 # ---------------------------------------------------------------------------
-# idle eviction (shared with the CEP, funnel and lexicon operators)
+# routing counters (per-conversation route statistics)
 # ---------------------------------------------------------------------------
 
 # Event-time idle horizon after which a routing-counter key's state is
@@ -209,45 +352,6 @@ def track_open_sessions(
 # restarts at zero — partial counts merge downstream by summing per
 # conv_id (the update-mode consumer sums/replaces per key anyway).
 DEFAULT_IDLE_TIMEOUT_S = 24 * 3600
-
-
-def _pdf_max_us(pdf: pd.DataFrame, cur: int) -> int:
-    """max(cur, max event time in µs over NON-NULL ts rows). NaT must be
-    excluded BEFORE the int64 view: it converts to the -2^63 sentinel,
-    and an all-null-ts conversation would otherwise keep last_us=0 and
-    arm an already-expired timeout that evicts its state on the next
-    batch (resetting counters / reassembly buffers)."""
-    ts = pdf["ts"].dropna()
-    if ts.empty:
-        return cur
-    us = ts.astype("int64")
-    if ts.dtype == "datetime64[ns]":
-        us = us // 1000
-    return max(cur, int(us.max()))
-
-
-def _arm_idle_timeout(state: GroupState, last_us: int, idle_s: int) -> None:
-    """Evict the key once the watermark passes last-event + idle (ceil
-    to ms; must stay strictly above the current watermark).
-
-    A key that has never seen a non-null event time (``last_us == 0``)
-    is NOT armed: max(1970+idle, wm+1) degenerates to wm+1 — an
-    immediately-expiring timeout that would evict the key's state on
-    the very next batch. Such a key keeps NoTimeout behavior until a
-    real timestamp arrives."""
-    if last_us == 0:
-        return
-    state.setTimeoutTimestamp(
-        max(
-            -(-(last_us + idle_s * 1_000_000) // 1000),
-            state.getCurrentWatermarkMs() + 1,
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# routing counters (per-conversation route statistics)
-# ---------------------------------------------------------------------------
 
 COUNTER_OUTPUT_SCHEMA = T.StructType(
     [
@@ -259,54 +363,38 @@ COUNTER_OUTPUT_SCHEMA = T.StructType(
     ]
 )
 
-COUNTER_STATE_SCHEMA = T.StructType(
-    [
+
+class _CounterStep(KeyedStep):
+    """Running per-conversation totals. An idle key is evicted without
+    emitting: its final totals went out on its last real update (update
+    mode), and a resuming conversation restarts at zero
+    (:data:`DEFAULT_IDLE_TIMEOUT_S`)."""
+
+    output = COUNTER_OUTPUT_SCHEMA
+    fields = [
         T.StructField("n_total", T.LongType()),
         T.StructField("n_user", T.LongType()),
         T.StructField("n_tool", T.LongType()),
         T.StructField("n_error", T.LongType()),
-        T.StructField("last_us", T.LongType()),
     ]
-)
+    init = (0, 0, 0, 0)
 
+    def __init__(self, idle_timeout_seconds: int):
+        self.horizon_s = idle_timeout_seconds
 
-def _counter_fn(idle_timeout_seconds: int):
-    def fn(
-        key: Tuple[Any, ...], pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (conv_id,) = key
-        if state.hasTimedOut:
-            # idle past the horizon: evict. The final totals were already
-            # emitted on the last real update (update mode), so nothing
-            # is emitted here; a resuming conversation restarts at zero
-            # and partials merge downstream (DEFAULT_IDLE_TIMEOUT_S note).
-            state.remove()
-            return
-        total, n_user, n_tool, n_error, last_us = (
-            state.get if state.exists else (0, 0, 0, 0, 0)
-        )
-        for pdf in pdf_iter:
-            total += len(pdf)
-            n_user += int((pdf["role"] == "user").sum())
-            n_tool += int((pdf["role"] == "tool").sum())
+    def fold(self, acc, pdf, us):
+        total, n_user, n_tool, n_error = acc
+        return (
+            total + len(pdf),
+            n_user + int((pdf["role"] == "user").sum()),
+            n_tool + int((pdf["role"] == "tool").sum()),
             # text never crosses the boundary — the error probe is the
             # JVM-evaluated `_is_error` flag (guide §4.1 column pruning)
-            n_error += int(pdf["_is_error"].sum())
-            if len(pdf):
-                last_us = _pdf_max_us(pdf, last_us)
-        state.update((total, n_user, n_tool, n_error, last_us))
-        _arm_idle_timeout(state, last_us, idle_timeout_seconds)
-        yield pd.DataFrame(
-            {
-                "conv_id": [conv_id],
-                "n_total": [total],
-                "n_user": [n_user],
-                "n_tool": [n_tool],
-                "n_error": [n_error],
-            }
+            n_error + int(pdf["_is_error"].sum()),
         )
 
-    return fn
+    def emit(self, key, acc, watermark_ms):
+        return acc, [(key[0], *acc)]
 
 
 def routing_counters(
@@ -331,16 +419,9 @@ def routing_counters(
         F.coalesce(F.col("text").contains("error"), F.lit(False)).alias("_is_error"),
         "ts",
     )
-    return (
-        narrow.withWatermark("ts", watermark)
-        .groupBy("conv_id")
-        .applyInPandasWithState(
-            _counter_fn(idle_timeout_seconds),
-            outputStructType=COUNTER_OUTPUT_SCHEMA,
-            stateStructType=COUNTER_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+    return keyed_state(
+        narrow.withWatermark("ts", watermark).groupBy("conv_id"),
+        _CounterStep(idle_timeout_seconds),
     )
 
 
@@ -348,8 +429,36 @@ def routing_counters(
 # CDC upsert materialization (last-writer-wins entity view)
 # ---------------------------------------------------------------------------
 
-UPSERT_OUTPUT_DDL = "doc_id bigint, cur_seq bigint, deleted int, text_md5 string"
-UPSERT_STATE_DDL = "best_seq bigint, deleted int, text_md5 string"
+
+class _UpsertStep(KeyedStep):
+    """Last-writer-wins on the sequence number: one (seq, flag, md5)
+    tuple per entity."""
+
+    output = T.StructType(
+        [
+            T.StructField("doc_id", T.LongType()),
+            T.StructField("cur_seq", T.LongType()),
+            T.StructField("deleted", T.IntegerType()),
+            T.StructField("text_md5", T.StringType()),
+        ]
+    )
+    fields = [
+        T.StructField("best_seq", T.LongType()),
+        T.StructField("deleted", T.IntegerType()),
+        T.StructField("text_md5", T.StringType()),
+    ]
+    init = (-1, 0, "")
+
+    def fold(self, acc, pdf, us):
+        best, deleted, md5h = acc
+        for s, d, m in zip(pdf["_seq"], pdf["_del"], pdf["_md5"]):
+            if int(s) > best:
+                best, deleted = int(s), int(d)
+                md5h = "" if deleted else str(m)
+        return best, deleted, md5h
+
+    def emit(self, key, acc, watermark_ms):
+        return acc, [(key[0], *acc)]
 
 
 def stream_upsert(
@@ -381,35 +490,10 @@ def stream_upsert(
     Update mode: every change re-emits the entity's current row, so
     last-emission-wins gives consumers the view without a terminal scan.
     """
-    from pyspark.sql import functions as F
-
     pre = stream.select(
         F.col(id_col).cast("long").alias("doc_id"),
         F.col(seq_col).cast("long").alias("_seq"),
         (F.col(op_col) == F.lit("delete")).cast("int").alias("_del"),
         F.coalesce(F.md5(F.col(text_col)), F.lit("")).alias("_md5"),
     )
-
-    def fn(key, pdfs, state):
-        best, deleted, md5h = state.get if state.exists else (-1, 0, "")
-        for pdf in pdfs:
-            for s, d, m in zip(pdf["_seq"], pdf["_del"], pdf["_md5"]):
-                if int(s) > best:
-                    best, deleted = int(s), int(d)
-                    md5h = "" if deleted else str(m)
-        state.update((best, deleted, md5h))
-        out = pd.DataFrame(
-            [(key[0], best, deleted, md5h)],
-            columns=["doc_id", "cur_seq", "deleted", "text_md5"],
-        )
-        yield out.astype(
-            {"doc_id": "int64", "cur_seq": "int64", "deleted": "int32"}
-        )
-
-    return pre.groupBy("doc_id").applyInPandasWithState(
-        fn,
-        outputStructType=UPSERT_OUTPUT_DDL,
-        stateStructType=UPSERT_STATE_DDL,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return keyed_state(pre.groupBy("doc_id"), _UpsertStep())

@@ -81,20 +81,6 @@ class ExactlyOnceParquetSink:
     order_cols: tuple = ("conv_id", "turn_idx")
     filename_format: str | None = None  # strftime; e.g. "%s.log"
     batch_max_bytes: int | None = None  # byte-cap file splitting
-    # Parquet dictionary encoding is a pure loss on high-cardinality
-    # text (every transcript turn is unique): the encoder hashes every
-    # string, overflows the dictionary page, and falls back to plain
-    # anyway — measured ~1.5x slower writes. Flip on for low-cardinality
-    # payloads.
-    dictionary: bool = False
-    # One shuffle on the prefix before the partitioned write: without it
-    # every task writes a file per prefix it happens to contain
-    # (tasks × prefixes files per epoch — thousands of tiny files whose
-    # per-file Hadoop Configuration setup serializes on a class lock and
-    # whose commit the driver processes one by one). With it, file count
-    # = distinct prefixes. At cluster scale small-files pressure on the
-    # table store makes this the right default too.
-    repartition_by_prefix: bool = True
 
     def write(self, batch_df: DataFrame, epoch_id: int) -> dict:
         # marker I/O goes through the scheme-aware shim, so the same
@@ -138,7 +124,15 @@ class ExactlyOnceParquetSink:
         # before write — cheap, no extra shuffle beyond the partitioner.
         order = [c for c in self.order_cols if c in df.columns]
         epoch_dir = fs.join(self.path, "data", f"epoch={epoch_id}")
-        if has_ts and self.repartition_by_prefix:
+        if has_ts:
+            # One shuffle on the prefix before the partitioned write:
+            # without it every task writes a file per prefix it happens
+            # to contain (tasks × prefixes files per epoch — thousands of
+            # tiny files whose per-file Hadoop Configuration setup
+            # serializes on a class lock and whose commit the driver
+            # processes one by one). With it, file count = distinct
+            # prefixes. At cluster scale small-files pressure on the
+            # table store makes this right too.
             df = df.repartition(F.col("prefix"))
 
         part_cols = ["prefix"] if has_ts else []
@@ -186,9 +180,11 @@ class ExactlyOnceParquetSink:
                 df = df.drop("file_seq")
 
         writer = df.sortWithinPartitions(*part_cols, *order) if order else df
-        w = writer.write.mode("overwrite").option(
-            "parquet.enable.dictionary", str(self.dictionary).lower()
-        )
+        # Parquet dictionary encoding is a pure loss on high-cardinality
+        # text (every transcript turn is unique): the encoder hashes every
+        # string, overflows the dictionary page, and falls back to plain
+        # anyway — measured ~1.5x slower writes.
+        w = writer.write.mode("overwrite").option("parquet.enable.dictionary", "false")
         if part_cols:
             w = w.partitionBy(*part_cols)
         w.parquet(epoch_dir)
