@@ -102,9 +102,6 @@ def _spark(cores: int, app: str):
         app,
         master=f"local[{cores}]",
         shuffle_partitions=max(cores, 8),
-        extra_conf={"spark.sql.streaming.stateStore.providerClass": (
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-        )},
     )
 
 

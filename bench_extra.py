@@ -1,9 +1,8 @@
 #!/usr/bin/env python
 """Per-query measurement harness for optimization work (guide §1).
 
-NOT the driver contract — ``bench.py`` is frozen for measurement; this
-file exists so individual queries can be isolated, re-timed, and their
-plans captured without touching the frozen harness.
+NOT the driver contract: ``bench.py`` times the whole suite; this file
+isolates individual queries, re-times them and captures their plans.
 
 Usage:
     python bench_extra.py q1 q2 ...            # time the named queries
@@ -11,11 +10,11 @@ Usage:
     python bench_extra.py --explain q1         # dump explain('formatted')
     python bench_extra.py --all                # whole suite, bench order
 
-Methodology mirrors bench.py's suite phase exactly: one local[N]
-session (N = ``session.host_cpus()``), shuffle_partitions=max(cores,8),
-RocksDB state store provider, a t_rename_delete warm-up through the
-same noop path, then each query forced with a noop write. Output: one
-JSON line per query on stdout.
+Methodology mirrors bench.py's suite phase exactly: the session is
+``bench._spark`` on local[N] (N = ``session.host_cpus()``), a
+t_rename_delete warm-up runs through the same noop path, then each
+query is forced with a noop write. Output: one JSON line per query on
+stdout.
 """
 from __future__ import annotations
 
@@ -33,19 +32,6 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 SF_DIR_DEFAULT = "/root/testdata/sf0.1"
 
 
-def _spark(cores: int):
-    from vaero_spark.session import get_spark
-
-    return get_spark(
-        "vaero_bench_extra",
-        master=f"local[{cores}]",
-        shuffle_partitions=max(cores, 8),
-        extra_conf={"spark.sql.streaming.stateStore.providerClass": (
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-        )},
-    )
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="*")
@@ -59,9 +45,10 @@ def main() -> None:
     import __spark_entry__ as entry_mod
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", SF_DIR_DEFAULT)
+    import bench
     from vaero_spark.session import host_cpus
 
-    spark = _spark(host_cpus())
+    spark = bench._spark(host_cpus(), "vaero_bench_extra")
     qs = entry_mod.queries()
     names = list(qs) if args.all else args.names
     unknown = [n for n in names if n not in qs]

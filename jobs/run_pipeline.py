@@ -22,8 +22,8 @@ exactly-once from committed offsets.
 
 The session is ``get_spark``'s. Once it is up, the job prints one JSON
 line, ``{"session": {...}}``, with its master, shuffle width (a new
-checkpoint's state-store count), local filesystem class and Python
-worker daemon module. Per-epoch metrics go to
+checkpoint's state-store count), local filesystem class, Python worker
+daemon module and state store provider. Per-epoch metrics go to
 ``./vaero_metrics/metrics.jsonl``; ``vaeroctl start`` runs each job in its
 own job home, so every job has its own file.
 """
@@ -82,7 +82,8 @@ def main() -> None:
         "master": spark.sparkContext.master,
         "spark.sql.shuffle.partitions": spark.conf.get("spark.sql.shuffle.partitions"),
         **{k: spark.conf.get(k, None)  # None: unset
-           for k in ("spark.hadoop.fs.file.impl", "spark.python.daemon.module")},
+           for k in ("spark.hadoop.fs.file.impl", "spark.python.daemon.module",
+                     "spark.sql.streaming.stateStore.providerClass")},
     }
     print(json.dumps({"session": session}), flush=True)
     attach_metrics_listener(spark, os.path.abspath("vaero_metrics"))

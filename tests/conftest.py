@@ -15,11 +15,7 @@ def spark():
     s = get_spark(
         "vaero_spark_tests",
         master="local[4]",
-        shuffle_partitions=4,
         extra_conf={
-            "spark.sql.streaming.stateStore.providerClass": (
-                "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-            ),
             # a fixed heap, so the suite's memory does not follow the host's
             # (get_spark's default is half of physical memory)
             "spark.driver.memory": "6g",

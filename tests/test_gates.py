@@ -7,6 +7,7 @@ left running and the session's shuffle width must be back where it was
 
 from __future__ import annotations
 
+import json
 import shutil
 
 import duckdb
@@ -20,6 +21,9 @@ from vaero_spark.sources.transcripts import TRANSCRIPTS_SCHEMA
 from vaero_spark.testing.fixtures import write_transcripts_parquet
 
 STREAM_GATES = [name for name in E.queries() if name.startswith("stream_")]
+PROVIDER = "spark.sql.streaming.stateStore.providerClass"
+ROCKSDB = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+HDFS = "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
 
 
 @pytest.fixture(scope="module")
@@ -64,18 +68,22 @@ def test_pinned_input_size_reads_uris(spark, tmp_path):
 
 
 def test_state_width_survives_a_narrower_resume(spark, tmp_path):
-    """A stateful query keeps the state-store count it started with: a
-    checkpoint begun at width 8 and resumed in a session at width 4 still
-    runs 8 stores (Spark restores the width from the offset log), and its
-    drained result equals an uninterrupted run's."""
+    """A stateful query keeps the state-store count and provider it
+    started with: a checkpoint begun at width 8 on the HDFS-backed store
+    and resumed in a session at width 4 on ``get_spark``'s RocksDB store
+    still runs 8 HDFS-backed stores (Spark restores both confs from the
+    offset log), and its drained result equals an uninterrupted run's."""
     staged = tmp_path / "staged"
     pdf = write_transcripts_parquet(str(staged), n_files=6, n_turns=1200, n_convs=30, seed=5)
     files = sorted(staged.iterdir())
     src = tmp_path / "src"
     src.mkdir()
 
-    def drain(inp, ckpt, sink, width):
+    def drain(inp, ckpt, sink, width, provider=ROCKSDB):
+        """(state-store count, engine) of each stateful operator; the
+        engine is told by its metrics: only HDFS reports map-cache hits."""
         spark.conf.set("spark.sql.shuffle.partitions", str(width))
+        spark.conf.set(PROVIDER, provider)
         q = (
             spark.readStream.schema(TRANSCRIPTS_SCHEMA)
             .option("maxFilesPerTrigger", "1")
@@ -89,24 +97,31 @@ def test_state_width_survives_a_narrower_resume(spark, tmp_path):
         )
         try:
             q.processAllAvailable()
-            return [op["numShufflePartitions"] for op in q.lastProgress["stateOperators"]]
+            return [(op["numShufflePartitions"],
+                     "hdfs" if "loadedMapCacheHitCount" in op["customMetrics"] else "rocksdb")
+                    for op in q.lastProgress["stateOperators"]]
         finally:
             q.stop()
 
     old = spark.conf.get("spark.sql.shuffle.partitions")
+    assert spark.conf.get(PROVIDER) == ROCKSDB
     try:
         resumed = MemorySink()
         for f in files[:3]:
             shutil.copy(f, src)
-        assert drain(src, tmp_path / "ckpt", resumed, 8) == [8]
+        assert drain(src, tmp_path / "ckpt", resumed, 8, HDFS) == [(8, "hdfs")]
         for f in files[3:]:
             shutil.copy(f, src)
-        assert drain(src, tmp_path / "ckpt", resumed, 4) == [8]
+        assert drain(src, tmp_path / "ckpt", resumed, 4) == [(8, "hdfs")]
         assert len(resumed.batches) == 6
         whole = MemorySink()
-        assert drain(staged, tmp_path / "ckpt_whole", whole, 4) == [4]
+        assert drain(staged, tmp_path / "ckpt_whole", whole, 4) == [(4, "rocksdb")]
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
+        spark.conf.set(PROVIDER, ROCKSDB)
+    offsets = tmp_path / "ckpt" / "offsets"
+    last = max((f for f in offsets.iterdir() if f.name.isdigit()), key=lambda f: int(f.name))
+    assert json.loads(last.read_text().splitlines()[1])["conf"][PROVIDER] == HDFS
     got = sorted(tuple(r) for r in E._last_emission(resumed, "conv_id"))
     assert got == sorted(tuple(r) for r in E._last_emission(whole, "conv_id"))
     assert sum(r[1] for r in got) == len(pdf)

@@ -167,8 +167,6 @@ def test_streaming_drain_forks_no_file_commands(tmp_path, sf_dir):
         from vaero_spark.sinks.writers import ExactlyOnceParquetSink
 
         spark = get_spark("nofork_probe", master="local[2]", extra_conf={{
-            "spark.sql.streaming.stateStore.providerClass":
-                "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
             "spark.eventLog.enabled": "true",
             "spark.eventLog.dir": {str(work)!r},
         }})

@@ -1,10 +1,12 @@
 """``get_spark``'s host-derived defaults: the shuffle width (and so a new
 streaming query's state-store count) is the master's slot count, the
-driver heap follows the host's physical memory, and an in-process master
-reads and writes local files through the java.nio local filesystem."""
+driver heap follows the host's physical memory, an in-process master
+reads and writes local files through the java.nio local filesystem, and
+every session runs the RocksDB state store, which no other module sets."""
 
 from __future__ import annotations
 
+import ast
 import os
 import subprocess
 import sys
@@ -17,6 +19,8 @@ from vaero_spark.session import (
 )
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PROVIDER = "spark.sql.streaming.stateStore.providerClass"
+ROCKSDB = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
 
 @pytest.mark.parametrize(
@@ -76,7 +80,8 @@ def test_session_defaults_follow_the_master(tmp_path):
               .getDefaultFileSystem().getClass().getName(),
               jvm.java.lang.System.getProperty("java.class.path"),
               spark.conf.get("spark.sql.shuffle.partitions"),
-              spark.sparkContext.getConf().get("spark.driver.memory"))
+              spark.sparkContext.getConf().get("spark.driver.memory"),
+              spark.conf.get({PROVIDER!r}))
         spark.stop()
         """
     )
@@ -87,10 +92,38 @@ def test_session_defaults_follow_the_master(tmp_path):
         capture_output=True, text=True, timeout=300,
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
-    fs, afs, class_path, *defaults = proc.stdout.split()[-5:]
+    fs, afs, class_path, *defaults = proc.stdout.split()[-6:]
     assert (fs, afs) == ("vaero.fs.NioLocalFileSystem", "vaero.fs.NioLocalFs")
     assert caller_jar in class_path.split(os.pathsep)
-    assert defaults == ["2", default_driver_memory()]
+    assert defaults == ["2", default_driver_memory(), ROCKSDB]
+
+
+def _sets_provider(tree: ast.AST) -> bool:
+    """Whether a module sets the state store provider: its conf key as a
+    dict key or as the first argument of a ``config``/``set`` call."""
+    def is_key(node):
+        return isinstance(node, ast.Constant) and node.value == PROVIDER
+
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Dict) and any(map(is_key, node.keys)):
+            return True
+        if (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("config", "set") and node.args and is_key(node.args[0])):
+            return True
+    return False
+
+
+def test_only_get_spark_sets_the_state_store():
+    """The state store provider is chosen in one place, ``get_spark``;
+    every other entry point inherits it."""
+    setters = []
+    for root, dirs, files in os.walk(REPO):
+        dirs[:] = [d for d in dirs if not d.startswith(".") and d != "tests"]
+        for f in files:
+            path = os.path.join(root, f)
+            if f.endswith(".py") and _sets_provider(ast.parse(open(path).read())):
+                setters.append(os.path.relpath(path, REPO))
+    assert setters == ["vaero_spark/session.py"]
 
 
 def test_spark_submit_keeps_the_launchers_master(tmp_path):

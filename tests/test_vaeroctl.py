@@ -114,13 +114,15 @@ def test_job_lifecycle_add_start_stop_resume_delete(spark, tmp_path, monkeypatch
     assert not vaeroctl._pid_alive(pid)
 
     # the job's session is get_spark's: one store per host CPU, the java.nio
-    # local filesystem and the Python worker daemon
+    # local filesystem, the Python worker daemon and the RocksDB state store
     cpus = host_cpus()
     assert _session_record(job["log"]) == {
         "master": f"local[{cpus}]",
         "spark.sql.shuffle.partitions": str(cpus),
         "spark.hadoop.fs.file.impl": "vaero.fs.NioLocalFileSystem",
         "spark.python.daemon.module": "vaero_spark.worker_daemon",
+        "spark.sql.streaming.stateStore.providerClass":
+            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     }
 
     # per-job metrics: the job's epochs land under its own job home

@@ -303,7 +303,7 @@ def main() -> None:
     import __spark_entry__ as entry_mod
     from vaero_spark.session import get_spark
 
-    spark = get_spark("explain_audit", master="local[8]", shuffle_partitions=8)
+    spark = get_spark("explain_audit", master="local[8]")
     qs = entry_mod.queries()
     failures = []
 

@@ -15,6 +15,10 @@ All three run through the same core, so "noop vs real" compares
 operator logic on one call path: if ``noop`` is close to the real ops,
 the gates' cost is the per-group invocation overhead (framework floor),
 not operator logic — and operator-level tuning cannot move it.
+
+One untimed ``noop`` drain runs first, so the session's warm-up (first
+streaming query, JIT, Python-worker start) is not charged to the first
+timed variant.
 """
 from __future__ import annotations
 
@@ -45,12 +49,7 @@ def main() -> None:
     from vaero_spark.session import get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark(
-        "profile_pandas_state",
-        extra_conf={"spark.sql.streaming.stateStore.providerClass": (
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-        )},
-    )
+    spark = get_spark("profile_pandas_state")
     inp = entry._gate_stream_input(spark, sf_dir, "plain")
 
     def build_noop(src):
@@ -74,6 +73,7 @@ def main() -> None:
         sink = entry._drain_gate(spark, build, mode=mode, pin=False, inp=inp)
         return round(time.perf_counter() - t0, 3), len(sink.rows())
 
+    drain(build_noop, "update")  # untimed warm-up
     for name, build, mode in (
         ("noop", build_noop, "update"),
         ("counters", build_counters, "update"),

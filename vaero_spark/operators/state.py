@@ -6,10 +6,10 @@ buffer: byte-cap flush (``execute/sinkNode.go:105-125``) and time-cap
 flush via a timer goroutine (``sinkNode.go:242-254``). The byte cap
 lives in the sink's ``file_seq`` packing (``sinks/writers.py``); this
 module holds the keyed state that a job needs beyond what Spark's
-native stateful operators give. State lives in Spark's state store (the
-default HDFS-backed provider unless a session sets
-``spark.sql.streaming.stateStore.providerClass``), checkpointed and
-exactly-once — the reference loses its buffers on crash.
+native stateful operators give. State lives in Spark's state store
+(RocksDB, which ``session.get_spark`` chooses for every session),
+checkpointed and exactly-once — the reference loses its buffers on
+crash.
 
 Every keyed-state operator is a :class:`KeyedStep` run by
 :func:`keyed_state`, the package's only ``applyInPandasWithState`` call

@@ -6,9 +6,10 @@ master's slot count (which also fixes a streaming query's state-store
 count, so a stateful stage runs in one wave of tasks; a cluster
 master's width is left to the submitter), UTC session timezone
 (required for bit-exact parity with the DuckDB oracle), Arrow enabled
-for the pandas-UDF slow path, a driver heap that fits the host.
-Python workers start through
-``vaero_spark.worker_daemon``, which stops each task from re-parsing
+for the pandas-UDF slow path, a driver heap that fits the host, and
+the RocksDB state store, whose per-key state lives off the JVM heap
+(a checkpoint keeps the provider it was started with). Python workers
+start through ``vaero_spark.worker_daemon``, which stops each task from re-parsing
 ``pyspark.zip`` (~0.28 CPU-s per Python task); the package's parent directory
 goes on the workers' ``PYTHONPATH`` so they find it from any working
 directory. On an in-process local master whose JVM ``get_spark``
@@ -121,6 +122,8 @@ def get_spark(
         # driver — measured as all-executors-parked phases per epoch)
         .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.streaming.stateStore.providerClass",
+                "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
         .config("spark.driver.memory", driver_memory)
         .config("spark.python.daemon.module", "vaero_spark.worker_daemon")
         .config("spark.executorEnv.PYTHONPATH", os.pathsep.join(filter(None, worker_path)))
