@@ -389,9 +389,12 @@ def _drain_gate(
       pin. ``applyInPandasWithState`` gates are bound by per-GROUP
       Python invocation cost, which executor width amortizes — the same
       pin makes them 2-3x SLOWER (open_sessions 26→50-61 s, counters
-      13.6→30-45 s, cep 13.3→30-39 s) — and ``stream_trending``'s
-      per-batch JVM tokenize+explode is compute-bound (pinned 14.4 vs
-      11.6 s): both keep the session width.
+      13.6→30-45 s) — and ``stream_trending``'s per-batch JVM
+      tokenize+explode is compute-bound (pinned 14.4 vs 11.6 s): both
+      keep the session width. The five streaming CEP gates measured
+      like the pandas ones (cep 13.3→30-39 s) while they ran there; they
+      now run in the JVM core (``flatMapGroupsWithState``) and keep the
+      session width until re-measured at 32 slots.
     """
     import contextlib
     import tempfile
@@ -430,8 +433,9 @@ def _drain_gate(
 def _last_emission(sink, *key) -> list:
     """Update-mode collapse of a drained :class:`MemorySink`: for each
     ``key`` value, the rows of the latest epoch that emitted it (one row
-    for the single-row gates: ``applyInPandasWithState`` calls the state
-    function at most once per key per micro-batch)."""
+    for the single-row gates: ``applyInPandasWithState`` and
+    ``flatMapGroupsWithState`` call the state function at most once per
+    key per micro-batch)."""
     final: dict = {}
     for _, rows in sorted(sink.batches):
         epoch: dict = {}

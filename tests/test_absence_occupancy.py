@@ -11,20 +11,15 @@ from __future__ import annotations
 import itertools
 import random
 
-import pandas as pd
 import pytest
 
-from vaero_spark.operators.cep import (
-    ROLE_SYMBOLS,
-    _AbsenceStep,
-    _Reassembly,
-    cep_absence,
-    stream_cep_absence,
-)
-from vaero_spark.operators.state import _state_fn, unpack_longs
+from vaero_spark.operators.cep import cep_absence, stream_cep_absence
+from vaero_spark.operators.state import unpack_longs
 from vaero_spark.operators.windows import concurrency_by_hour
+from vaero_spark.testing.jvm_state import JavaCep, KeyState
 
-SYM_TO_ROLE = {v: k for k, v in ROLE_SYMBOLS.items()}
+#: 2024-01-01 in µs, the event time of the count-based cases
+_T0_US = 1_704_067_200_000_000
 
 
 def _brute_absence(seq: str, k: int = 3, trig: str = "u", resp: str = "a"):
@@ -44,31 +39,16 @@ def _brute_absence(seq: str, k: int = 3, trig: str = "u", resp: str = "a"):
     return len(seq), n_trig, n_dang, first
 
 
-def _drive(seq: str, splits: tuple[int, ...], k: int, fake_state):
-    """Feed ``seq`` to the absence state fn in chunks (in order) and
-    return every emission as (n_turns, n_triggers, n_dangling, first)."""
-    fn = _state_fn(_Reassembly(_AbsenceStep("u", "a", k), ROLE_SYMBOLS, 3600))
-    state = fake_state()
+def _drive(core: JavaCep, seq: str, splits: tuple[int, ...]):
+    """Feed ``seq`` to the JVM core's absence step in chunks (in order)
+    and return every emission as (n_turns, n_triggers, n_dangling,
+    first)."""
+    state = KeyState()
     out = []
     pos = 0
     for ln in splits:
-        idxs = list(range(pos, pos + ln))
-        pdf = pd.DataFrame(
-            {
-                "turn_idx": idxs,
-                "role": [SYM_TO_ROLE[seq[i]] for i in idxs],
-                "ts": pd.Timestamp("2024-01-01"),
-            }
-        )
-        for emitted in fn(("c",), iter([pdf]), state):
-            out.append(
-                (
-                    int(emitted["n_turns"].iloc[0]),
-                    int(emitted["n_triggers"].iloc[0]),
-                    int(emitted["n_dangling"].iloc[0]),
-                    int(emitted["first_dangling_turn"].iloc[0]),
-                )
-            )
+        rows = [(i, seq[i], _T0_US) for i in range(pos, pos + ln)]
+        out += [tuple(emitted[1:]) for emitted in core.call("c", rows, state)]
         pos += ln
     return out, state
 
@@ -83,17 +63,18 @@ def _splits(n: int):
             yield (a, b, n - a - b)
 
 
-def test_stream_absence_every_emission_equals_prefix_batch(fake_state):
+def test_stream_absence_every_emission_equals_prefix_batch(spark):
     """Exhaustive: for every role string up to length 6 over {u,a,t}
     and every 1-3-chunk split, EVERY emission equals the brute-force
     batch scan of the prefix consumed so far, and open-trigger state
     stays <= k."""
     k = 2
+    core = JavaCep(spark, "absence", ["u", "a", k])
     for n in range(1, 7):
         for seq in map("".join, itertools.product("uat", repeat=n)):
             want_final = _brute_absence(seq, k)
             for sp in _splits(n):
-                out, state = _drive(seq, sp, k, fake_state)
+                out, state = _drive(core, seq, sp)
                 pos = 0
                 for (n_turns, n_trig, n_dang, first), ln in zip(out, sp):
                     pos += ln
@@ -104,36 +85,29 @@ def test_stream_absence_every_emission_equals_prefix_batch(fake_state):
                 # open triggers bounded: a trigger expires on the next
                 # processed turn once its k-window is seen, so at most
                 # k+1 are ever open (e.g. "uuu" with k=2 holds 0,1,2)
-                assert len(unpack_longs(state._v[3]) or []) <= k + 1
+                assert len(unpack_longs(state.get[3]) or []) <= k + 1
 
 
-def test_stream_absence_fn_out_of_order_and_dups(fake_state):
+def test_stream_absence_fn_out_of_order_and_dups(spark):
     """Out-of-order arrival buffers in pend until the contiguous prefix
     reaches it; duplicate turns drop (first arrival wins)."""
-    fn = _state_fn(_Reassembly(_AbsenceStep("u", "a", 3), ROLE_SYMBOLS, 3600))
-    state = fake_state()
+    core = JavaCep(spark, "absence", ["u", "a", 3])
+    state = KeyState()
     seq = "utttaut"  # u@0 answered at 4 (gap 4 > 3 => dangling!), u@5 open
 
     def feed(idxs):
-        pdf = pd.DataFrame(
-            {
-                "turn_idx": idxs,
-                "role": [SYM_TO_ROLE[seq[i]] for i in idxs],
-                "ts": pd.Timestamp("2024-01-01"),
-            }
-        )
-        return list(fn(("c",), iter([pdf]), state))
+        return core.call("c", [(i, seq[i], _T0_US) for i in idxs], state)
 
     assert feed([2, 4, 6]) == []  # nothing contiguous yet
     out = feed([0, 1, 3, 5, 0])  # completes 0..6; dup of 0 drops
     assert len(out) == 1
     r = out[0]
-    assert int(r["n_turns"].iloc[0]) == 7
-    assert int(r["n_triggers"].iloc[0]) == 2
+    assert r.n_turns == 7
+    assert r.n_triggers == 2
     # u@0: a arrives at 4, gap 4 > k=3 => dangling; u@5: no response
     # before prefix end => dangling-at-prefix-end
-    assert int(r["n_dangling"].iloc[0]) == 2
-    assert int(r["first_dangling_turn"].iloc[0]) == 0
+    assert r.n_dangling == 2
+    assert r.first_dangling_turn == 0
 
 
 def test_stream_absence_drain_equals_batch(spark, tmp_path):
@@ -350,15 +324,13 @@ def test_stream_absence_resumes_from_checkpoint(spark, tmp_path):
     assert got == want and want
 
 
-def test_stream_absence_time_emissions_equal_prefix_batch(fake_state):
+def test_stream_absence_time_emissions_equal_prefix_batch(spark):
     """Time-based absence: random timed role strings x chunkings — every
     emission equals the brute-force time-window scan of the prefix. A
     second pass draws null event times with the batch twin's semantics
     (``MIN`` skips null response times; NULL arithmetic answers a
     null-time trigger by any later timed response)."""
     import random
-
-    from vaero_spark.operators.cep import _AbsenceTimeStep
 
     def brute(seq, mss, wait_ms):
         n_trig = n_dang = 0
@@ -380,6 +352,7 @@ def test_stream_absence_time_emissions_equal_prefix_batch(fake_state):
         return len(seq), n_trig, n_dang, first
 
     wait_ms = 300_000
+    core = JavaCep(spark, "absence_time", ["u", "a", wait_ms])
     for null_share in (0.0, 0.3):
         rng, null_rng = random.Random(31), random.Random(32)
         for trial in range(80):
@@ -392,25 +365,15 @@ def test_stream_absence_time_emissions_equal_prefix_batch(fake_state):
                 t += rng.choice([1_000, 60_000, 200_000, 400_000])
                 mss.append(None if null_rng.random() < null_share else t)
             cuts = sorted(rng.sample(range(1, n), k=min(2, n - 1))) + [n]
-            fn = _state_fn(_Reassembly(_AbsenceTimeStep("u", "a", wait_ms), ROLE_SYMBOLS, 3600))
-            state = fake_state()
+            state = KeyState()
             pos = 0
             for cut in cuts:
-                idxs = list(range(pos, cut))
-                pdf = pd.DataFrame(
-                    {
-                        "turn_idx": idxs,
-                        "role": [SYM_TO_ROLE[seq[i]] for i in idxs],
-                        "ts": pd.to_datetime([mss[i] for i in idxs], unit="ms"),
-                    }
-                )
-                for emitted in fn(("c",), iter([pdf]), state):
-                    got = (
-                        int(emitted["n_turns"].iloc[0]),
-                        int(emitted["n_triggers"].iloc[0]),
-                        int(emitted["n_dangling"].iloc[0]),
-                        int(emitted["first_dangling_turn"].iloc[0]),
-                    )
+                rows = [
+                    (i, seq[i], None if mss[i] is None else mss[i] * 1000)
+                    for i in range(pos, cut)
+                ]
+                for emitted in core.call("c", rows, state):
+                    got = tuple(emitted[1:])
                     assert got == brute(seq[:cut], mss[:cut], wait_ms), (
                         seq, mss, cuts, cut,
                     )

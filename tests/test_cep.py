@@ -4,21 +4,22 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
 import pytest
 
 from vaero_spark.operators.cep import (
     ROLE_SYMBOLS,
-    _AbsenceStep,
-    _AbsenceTimeStep,
-    _KleeneStep,
-    _Reassembly,
-    _WithinStep,
     cep_match,
+    stream_cep_absence,
+    stream_cep_absence_time,
+    stream_cep_kleene,
+    stream_cep_match,
+    stream_cep_within,
 )
-from vaero_spark.operators.state import _state_fn
+from vaero_spark.testing.jvm_state import JavaCep, KeyState
 
 ROLES = ["user", "assistant", "tool", "system"]
+#: 2024-01-01 in µs, the event time of the untimed unit cases
+_T0_US = 1_704_067_200_000_000
 
 
 def _fixture_rows():
@@ -122,37 +123,34 @@ def test_stream_cep_final_state_equals_batch(spark, tmp_path):
         assert n_turns == totals[conv], conv
 
 
-def test_stream_cep_fn_reassembles_out_of_order(fake_state):
-    """Unit-drive the state fn batch-by-batch with an adversarial
+def test_stream_cep_fn_reassembles_out_of_order(spark):
+    """Unit-drive the JVM core batch-by-batch with an adversarial
     arrival order: the match spanning a batch boundary is found once
     the gap fills, never double-counted."""
     roles = ["user", "tool", "tool", "user", "assistant", "tool", "tool", "user"]
     # seq = "uttuattu": matches of "ttu" at 1 and 5
     # stream_cep_match's step: the literal as a fixed-length pattern
-    fn = _state_fn(_Reassembly(_KleeneStep(re.escape("ttu"), 3, 3), ROLE_SYMBOLS, 3600))
-    state = fake_state()
+    core = JavaCep(spark, "kleene", [re.escape("ttu"), 3, 3])
+    state = KeyState()
 
     def feed(idxs):
-        pdf = pd.DataFrame(
-            {"turn_idx": idxs, "role": [roles[i] for i in idxs],
-             "ts": pd.Timestamp("2024-01-01")}
-        )
-        return list(fn(("c",), iter([pdf]), state))
+        rows = [(i, ROLE_SYMBOLS[roles[i]], _T0_US) for i in idxs]
+        return core.call("c", rows, state)
 
     # batch 1: turns 0,1 then a gap — turn 3,4 wait in pending
     out1 = feed([0, 1, 3, 4])
-    assert out1 and out1[0]["n_matches"].iloc[0] == 0
-    assert out1[0]["n_turns"].iloc[0] == 2  # contiguous prefix stops at gap
+    assert out1 and out1[0].n_matches == 0
+    assert out1[0].n_turns == 2  # contiguous prefix stops at gap
     # batch 2: the gap (turn 2) + duplicates of consumed turns
     out2 = feed([2, 0, 1])
-    assert out2[0]["n_turns"].iloc[0] == 5
-    assert out2[0]["n_matches"].iloc[0] == 1
-    assert out2[0]["first_match_turn"].iloc[0] == 1
+    assert out2[0].n_turns == 5
+    assert out2[0].n_matches == 1
+    assert out2[0].first_match_turn == 1
     # batch 3: the tail; second match spans the carry
     out3 = feed([5, 6, 7])
-    assert out3[0]["n_turns"].iloc[0] == 8
-    assert out3[0]["n_matches"].iloc[0] == 2
-    assert out3[0]["first_match_turn"].iloc[0] == 1
+    assert out3[0].n_turns == 8
+    assert out3[0].n_matches == 2
+    assert out3[0].first_match_turn == 1
 
 
 def test_stream_cep_rejects_bad_literals():
@@ -175,16 +173,16 @@ def test_kleene_parser_widths_and_lazy_form():
             parse_kleene_pattern(bad, ROLE_SYMBOLS)
 
 
-def test_stream_cep_kleene_fn_earliest_completion_and_carry(fake_state):
-    """Unit-drive the Kleene state fn: a quantified match held open at
+def test_stream_cep_kleene_fn_earliest_completion_and_carry(spark):
+    """Unit-drive the JVM core's Kleene step: a quantified match held open at
     a batch boundary completes (earliest-completion) once the next
     symbols arrive, the carry stays < max_len, and a greedy-looking
     continuation does NOT extend an already-final match."""
     from vaero_spark.operators.cep import parse_kleene_pattern
 
     l_min, l_max, lazy = parse_kleene_pattern("t{2,3}u", ROLE_SYMBOLS)
-    fn = _state_fn(_Reassembly(_KleeneStep(lazy, l_min, l_max), ROLE_SYMBOLS, 3600))
-    state = fake_state()
+    core = JavaCep(spark, "kleene", [lazy, l_min, l_max])
+    state = KeyState()
     #         0      1      2      3      4      5       6      7
     roles = ["tool", "tool", "tool", "user", "tool", "tool", "user", "user"]
     # seq "tttuttuu": earliest-completion t{2,3}u: shortest at 0 needs
@@ -192,22 +190,19 @@ def test_stream_cep_kleene_fn_earliest_completion_and_carry(fake_state):
     # n_matches 2, first at 0
 
     def feed(idxs):
-        pdf = pd.DataFrame(
-            {"turn_idx": idxs, "role": [roles[i] for i in idxs],
-             "ts": pd.Timestamp("2024-01-01")}
-        )
-        return list(fn(("c",), iter([pdf]), state))
+        rows = [(i, ROLE_SYMBOLS[roles[i]], _T0_US) for i in idxs]
+        return core.call("c", rows, state)
 
     out1 = feed([0, 1])  # "tt": could still match with more input => carried
-    assert out1[0]["n_matches"].iloc[0] == 0
-    assert len(state._v[3]) < l_max  # carry bounded by max_len
+    assert out1[0].n_matches == 0
+    assert len(state.get[3]) < l_max  # carry bounded by max_len
     out2 = feed([2, 3])  # "tttu" complete => one match, not two
-    assert out2[0]["n_matches"].iloc[0] == 1
-    assert out2[0]["first_match_turn"].iloc[0] == 0
+    assert out2[0].n_matches == 1
+    assert out2[0].first_match_turn == 0
     out3 = feed([4, 5, 6, 7])  # "ttuu" => second match at 4
-    assert out3[0]["n_matches"].iloc[0] == 2
-    assert out3[0]["n_turns"].iloc[0] == 8
-    assert len(state._v[3]) < l_max
+    assert out3[0].n_matches == 2
+    assert out3[0].n_turns == 8
+    assert len(state.get[3]) < l_max
 
 
 def test_stream_cep_kleene_drain_equals_batch_lazy(spark, tmp_path):
@@ -302,17 +297,14 @@ def test_cep_within_time_bound_excludes_slow_completions(spark):
         cep_within(df, "ttu", -1)
 
 
-def test_stream_within_every_emission_equals_prefix_batch(fake_state):
-    """Unit-drive the streaming within machine over random timed role
+def test_stream_within_every_emission_equals_prefix_batch(spark):
+    """Unit-drive the JVM core's within step over random timed role
     strings and every chunking: each emission must equal the brute-force
     sliding lead-chain scan of the consumed prefix (no end-of-stream
     fold exists in these semantics). A second pass draws null event
     times: as in the batch twin's lead chain, a window with a null end
     is no hit."""
-    import itertools
     import random
-
-    SYM_TO_ROLE = {v: k for k, v in ROLE_SYMBOLS.items()}
 
     def brute(seq, mss, literal, span_ms):
         L = len(literal)
@@ -332,6 +324,7 @@ def test_stream_within_every_emission_equals_prefix_batch(fake_state):
         return len(seq), n, first
 
     literal, span_ms = "ttu", 600_000
+    core = JavaCep(spark, "within", [literal, span_ms])
     null_ends = 0  # literal windows with a timed start and a null end
     for null_share, n_trials in ((0.0, 60), (0.3, 200)):
         rng, null_rng = random.Random(9), random.Random(10)
@@ -349,30 +342,17 @@ def test_stream_within_every_emission_equals_prefix_batch(fake_state):
                 for p in range(n - 2)
             )
             cuts = sorted(rng.sample(range(1, n), k=min(2, n - 1))) + [n]
-            fn = _state_fn(_Reassembly(_WithinStep(literal, span_ms), ROLE_SYMBOLS, 3600))
-            state = fake_state()
+            state = KeyState()
             pos = 0
             for cut in cuts:
-                idxs = list(range(pos, cut))
-                pdf = pd.DataFrame(
-                    {
-                        "turn_idx": idxs,
-                        "role": [SYM_TO_ROLE[seq[i]] for i in idxs],
-                        "ts": pd.to_datetime([mss[i] for i in idxs], unit="ms"),
-                    }
-                )
-                for emitted in fn(("c",), iter([pdf]), state):
-                    got = (
-                        int(emitted["n_turns"].iloc[0]),
-                        int(emitted["n_within"].iloc[0]),
-                        int(emitted["first_within_turn"].iloc[0]),
-                    )
+                for emitted in core.call("c", _rows(range(pos, cut), seq, mss), state):
+                    got = emitted.n_turns, emitted.n_within, emitted.first_within_turn
                     assert got == brute(seq[:cut], mss[:cut], literal, span_ms), (
                         seq, mss, cuts, cut,
                     )
                 pos = cut
             # carry bounded by L-1 symbols
-            assert len(state._v[4] or "") <= len(literal) - 1
+            assert len(state.get[4] or "") <= len(literal) - 1
     assert null_ends, "null pass drew no window with a null end"
 
 
@@ -439,35 +419,33 @@ def test_cep_match_multi_equals_per_pattern_runs(spark):
     assert got == want and want
 
 
-#: one instance factory per pattern step behind the reassembly core
+#: (step, args) of each pattern step behind the JVM reassembly core
 _STEPS = {
-    "kleene": lambda: _KleeneStep("t{2,3}?u", 3, 4),
-    "absence": lambda: _AbsenceStep("u", "a", 2),
-    "within": lambda: _WithinStep("tu", 300_000),
-    "absence_time": lambda: _AbsenceTimeStep("u", "a", 300_000),
+    "kleene": ("kleene", ["t{2,3}?u", 3, 4]),
+    "absence": ("absence", ["u", "a", 2]),
+    "within": ("within", ["tu", 300_000]),
+    "absence_time": ("absence_time", ["u", "a", 300_000]),
 }
 
 
-def _feed(fn, state, idxs, seq, mss):
-    sym_to_role = {v: k for k, v in ROLE_SYMBOLS.items()}
-    pdf = pd.DataFrame(
-        {
-            "turn_idx": idxs,
-            "role": [sym_to_role[seq[i]] for i in idxs],
-            "ts": pd.to_datetime([mss[i] for i in idxs], unit="ms"),
-        }
-    )
-    return [tuple(e.iloc[0]) for e in fn(("c",), iter([pdf]), state)]
+def _rows(idxs, seq, mss):
+    """The core's input rows for turns ``idxs`` of symbol string ``seq``
+    with event-time ms ``mss`` (``None``: a null ``ts``)."""
+    return [(i, seq[i], None if mss[i] is None else mss[i] * 1000) for i in idxs]
+
+
+def _feed(core, state, idxs, seq, mss):
+    return [tuple(r) for r in core.call("c", _rows(idxs, seq, mss), state)]
 
 
 @pytest.mark.parametrize("step", list(_STEPS))
-def test_stream_step_out_of_order_equals_in_order(step, fake_state):
-    """Every CEP step behind the shared reassembly core: shuffled,
+def test_stream_step_out_of_order_equals_in_order(step, spark):
+    """Every CEP step behind the JVM reassembly core: shuffled,
     duplicated arrival in random chunks ends in the same emission and
     the same stored state as in-order arrival in one batch."""
     import random
 
-    make_step = _STEPS[step]
+    core = JavaCep(spark, *_STEPS[step])
     rng = random.Random(17)
     for trial in range(40):
         n = rng.randrange(1, 25)
@@ -477,29 +455,81 @@ def test_stream_step_out_of_order_equals_in_order(step, fake_state):
             t += rng.choice([1_000, 120_000, 400_000])
             mss.append(t)
 
-        fn, ref = _state_fn(_Reassembly(make_step(), ROLE_SYMBOLS, 3600)), fake_state()
-        want = _feed(fn, ref, list(range(n)), seq, mss)[-1]
+        ref = KeyState()
+        want = _feed(core, ref, list(range(n)), seq, mss)[-1]
 
         arrivals = list(range(n)) + [rng.randrange(n) for _ in range(rng.randrange(1, 5))]
         rng.shuffle(arrivals)
-        fn, state = _state_fn(_Reassembly(make_step(), ROLE_SYMBOLS, 3600)), fake_state()
+        state = KeyState()
         got, pos = None, 0
         while pos < len(arrivals):
             chunk = arrivals[pos : pos + rng.randrange(1, 5)]
             pos += len(chunk)
-            got = (_feed(fn, state, chunk, seq, mss) or [got])[-1]
+            got = (_feed(core, state, chunk, seq, mss) or [got])[-1]
         assert got == want, (step, seq, arrivals)
-        assert state._v == ref._v, (step, seq, arrivals)
+        assert state.get == ref.get, (step, seq, arrivals)
 
 
 @pytest.mark.parametrize("step", list(_STEPS))
-def test_stream_step_timeout_removes_state_and_emits_nothing(step, fake_state):
+def test_stream_step_timeout_removes_state_and_emits_nothing(step, spark):
     """An idle-timeout call drops the conversation's state and emits
     nothing, even when it carries new rows."""
     seq, mss = "uttua", [1_704_067_200_000 + i * 1_000 for i in range(5)]
-    fn, state = _state_fn(_Reassembly(_STEPS[step](), ROLE_SYMBOLS, 3600)), fake_state()
-    assert _feed(fn, state, [0, 1, 3], seq, mss)
+    core, state = JavaCep(spark, *_STEPS[step]), KeyState()
+    assert _feed(core, state, [0, 1, 3], seq, mss)
     assert state.exists
     state.hasTimedOut = True
-    assert _feed(fn, state, [2, 4], seq, mss) == []
+    assert _feed(core, state, [2, 4], seq, mss) == []
     assert not state.exists and state.get is None
+
+
+def test_stream_step_limits_above_int32(spark):
+    """A ms limit above 2^31 reaches the JVM core whole: with a 30-day
+    span (2.59e9 ms), turns 25 days apart complete a within window and
+    answer a time-based absence trigger."""
+    month_ms, later_us = 30 * 86_400_000, _T0_US + 25 * 86_400_000_000
+    rows = [(0, "t", _T0_US), (1, "u", later_us)]
+    within = JavaCep(spark, "within", ["tu", month_ms]).call("c", rows, KeyState())
+    assert [tuple(r) for r in within] == [("c", 2, 1, 0)]
+    rows = [(0, "u", _T0_US), (1, "a", later_us)]
+    absence = JavaCep(spark, "absence_time", ["u", "a", month_ms]).call("c", rows, KeyState())
+    assert [tuple(r) for r in absence] == [("c", 2, 1, 0, -1)]
+
+
+#: every streaming CEP operator, as its gate builds it
+_STREAM_OPS = {
+    "stream_cep": lambda s: stream_cep_match(s, "ttu"),
+    "stream_cep_kleene": lambda s: stream_cep_kleene(s, "t{1,3}u"),
+    "stream_absence": lambda s: stream_cep_absence(s, k=3),
+    "stream_within": lambda s: stream_cep_within(s, "ttu", 21600),
+    "stream_absence_t": lambda s: stream_cep_absence_time(s, max_wait_s=3600),
+}
+
+
+@pytest.mark.parametrize("gate", list(_STREAM_OPS))
+def test_stream_cep_runs_in_the_jvm_core(spark, tmp_path, capsys, gate):
+    """Each streaming CEP operator plans one ``FlatMapGroupsWithState``
+    (the JVM core) and no Python state operator."""
+    from vaero_spark.sources.transcripts import transcripts_stream
+
+    _STREAM_OPS[gate](transcripts_stream(spark, str(tmp_path))).explain()
+    plan = capsys.readouterr().out
+    assert plan.count("FlatMapGroupsWithState") == 1, plan
+    assert "InPandas" not in plan and "Python" not in plan, plan
+
+
+@pytest.mark.parametrize("gate", list(_STREAM_OPS))
+def test_stream_cep_fails_fast_without_the_jar(gate):
+    """JVM-free: without the jar py4j resolves ``vaero.state.Reassembly``
+    to a package, and the query would fail mid-stream with "'JavaPackage'
+    object is not callable". The operator refuses while it is built,
+    naming the jar and ``spark.jars``, before it touches the stream."""
+    from types import SimpleNamespace
+
+    from py4j.java_gateway import JavaPackage
+
+    missing = JavaPackage("vaero.state.Reassembly", None)
+    jvm = SimpleNamespace(vaero=SimpleNamespace(state=SimpleNamespace(Reassembly=missing)))
+    stream = SimpleNamespace(sparkSession=SimpleNamespace(_jvm=jvm))
+    with pytest.raises(RuntimeError, match=r"vaero\.jar.*spark\.jars"):
+        _STREAM_OPS[gate](stream)

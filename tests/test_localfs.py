@@ -195,21 +195,26 @@ def test_streaming_drain_forks_no_file_commands(tmp_path, sf_dir):
 
 
 def test_committed_jar_is_its_sources_build(tmp_path):
-    """``localfs.jar`` holds exactly the classes ``javac --release 17``
-    builds from ``src/`` against pyspark's jars (``jvm/build.sh``)."""
+    """``vaero.jar`` holds exactly the classes ``javac --release 17``
+    builds from every source under ``src/vaero/`` (the local filesystem
+    and the CEP keyed-state core) against pyspark's jars
+    (``jvm/build.sh``)."""
     import pyspark
 
     javac = shutil.which("javac")
     if javac is None:
         pytest.skip("no javac on PATH")
     jars = os.path.join(os.path.dirname(pyspark.__file__), "jars", "*")
-    src = os.path.join(JVM_DIR, "src", "vaero", "fs")
+    src = os.path.join(JVM_DIR, "src", "vaero")
+    sources = sorted(
+        os.path.join(d, f) for d, _, fs in os.walk(src) for f in fs if f.endswith(".java")
+    )
     subprocess.run(
-        [javac, "--release", "17", "-cp", jars, "-d", str(tmp_path),
-         *sorted(os.path.join(src, f) for f in os.listdir(src))],
+        [javac, "--release", "17", "-cp", jars, "-d", str(tmp_path), *sources],
         check=True, capture_output=True,
     )
     built = {str(p.relative_to(tmp_path)): p.read_bytes() for p in tmp_path.rglob("*.class")}
-    with zipfile.ZipFile(os.path.join(JVM_DIR, "localfs.jar")) as jar:
+    assert {n.split("/")[1] for n in built} == {"fs", "state"}
+    with zipfile.ZipFile(os.path.join(JVM_DIR, "vaero.jar")) as jar:
         committed = {n: jar.read(n) for n in jar.namelist() if not n.endswith("/")}
     assert committed == built

@@ -1,8 +1,9 @@
-"""The keyed-state core (the one applyInPandasWithState call) and its
-operators: open-session tracking with event-time timeout, routing
-counters with idle eviction, the event-time conversion and arming rule,
-every operator's step driven through the core, the packed int64-list
-codec, and the stored state layout of every such operator."""
+"""The keyed-state cores and their operators: the pandas core (the one
+applyInPandasWithState call) with open-session tracking, routing
+counters with idle eviction, the event-time conversion and arming rule;
+the JVM core of the streaming CEP operators; every operator's step driven
+through its core, the packed int64-list codec, and the stored state
+layout of every such operator."""
 
 from __future__ import annotations
 
@@ -15,6 +16,7 @@ import pytest
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
 from pyspark.errors import StreamingQueryException
+from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupStateTimeout
 from pyspark.sql.types import _parse_datatype_string
 
@@ -23,6 +25,7 @@ from vaero_spark.operators.state import routing_counters, track_open_sessions
 from vaero_spark.sinks.writers import MemorySink
 from vaero_spark.sources.transcripts import transcripts_stream
 from vaero_spark.testing.fixtures import write_transcripts_parquet
+from vaero_spark.testing.jvm_state import JavaCep, KeyState
 
 
 def _run(spark, df, tmp, name, mode="update"):
@@ -220,23 +223,28 @@ def test_arm_idle_timeout_skips_all_null_ts_key():
     assert st.armed == 1_700_000_100_000 + 3600 * 1000  # real ts arms
 
 
+class _JavaStep:
+    """A streaming CEP operator's pattern step in the JVM core
+    (``vaero.state.Reassembly``): its name and arguments, as the operator
+    passes them, and the core's idle horizon."""
+
+    horizon_s = 3600
+    last_us = None  # the core keeps the key's event time
+
+    def __init__(self, step: str, args: list):
+        self.step, self.args = step, args
+
+    def core(self, spark) -> JavaCep:
+        return JavaCep(spark, self.step, self.args, self.horizon_s)
+
+
 #: one step per keyed-state operator, as the operator builds it
 _STEPS = {
-    "cep_match": cep._Reassembly(
-        cep._KleeneStep(re.escape("ttu"), 3, 3), cep.ROLE_SYMBOLS, 3600
-    ),
-    "cep_kleene": cep._Reassembly(
-        cep._KleeneStep("t{2,3}?u", 3, 4), cep.ROLE_SYMBOLS, 3600
-    ),
-    "cep_absence": cep._Reassembly(
-        cep._AbsenceStep("u", "a", 2), cep.ROLE_SYMBOLS, 3600
-    ),
-    "cep_within": cep._Reassembly(
-        cep._WithinStep("tu", 300_000), cep.ROLE_SYMBOLS, 3600
-    ),
-    "cep_absence_time": cep._Reassembly(
-        cep._AbsenceTimeStep("u", "a", 300_000), cep.ROLE_SYMBOLS, 3600
-    ),
+    "cep_match": _JavaStep("kleene", [re.escape("ttu"), 3, 3]),
+    "cep_kleene": _JavaStep("kleene", ["t{2,3}?u", 3, 4]),
+    "cep_absence": _JavaStep("absence", ["u", "a", 2]),
+    "cep_within": _JavaStep("within", ["tu", 300_000]),
+    "cep_absence_time": _JavaStep("absence_time", ["u", "a", 300_000]),
     "open_sessions": state._SessionStep(1800),
     "routing_counters": state._CounterStep(3600),
     "upsert": state._UpsertStep(),
@@ -246,31 +254,40 @@ _STEPS = {
 }
 
 
+def _layout(name: str, request) -> T.StructType:
+    """The stored layout of ``_STEPS[name]``: read from the JVM core for
+    a CEP step, from ``state_layout`` for a pandas-core step."""
+    step = _STEPS[name]
+    if isinstance(step, _JavaStep):
+        return step.core(request.getfixturevalue("spark")).layout
+    return state.state_layout(step)
+
+
 # A changed literal is a checkpoint reset: Spark refuses a checkpoint of
 # the old layout at restart (test_array_layout_checkpoint_is_refused).
 _LAYOUTS = [
     pytest.param(
-        state.state_layout(_STEPS["cep_kleene"]),
+        "cep_kleene",
         "struct<next_idx:bigint,pend_idx:binary,pend_sym:string,"
         "carry:string,n_matches:bigint,first_match:bigint,last_us:bigint>",
         id="cep_kleene",
     ),
     pytest.param(
-        state.state_layout(_STEPS["cep_absence"]),
+        "cep_absence",
         "struct<next_idx:bigint,pend_idx:binary,pend_sym:string,"
         "open_idx:binary,n_triggers:bigint,n_dangling:bigint,"
         "first_dangling:bigint,last_us:bigint>",
         id="cep_absence",
     ),
     pytest.param(
-        state.state_layout(_STEPS["cep_within"]),
+        "cep_within",
         "struct<next_idx:bigint,pend_idx:binary,pend_sym:string,"
         "pend_ms:binary,carry_sym:string,carry_ms:binary,"
         "n_within:bigint,first_within:bigint,last_us:bigint>",
         id="cep_within",
     ),
     pytest.param(
-        state.state_layout(_STEPS["cep_absence_time"]),
+        "cep_absence_time",
         "struct<next_idx:bigint,pend_idx:binary,pend_sym:string,"
         "pend_ms:binary,open_idx:binary,open_ms:binary,"
         "n_triggers:bigint,n_dangling:bigint,first_dangling:bigint,"
@@ -278,46 +295,46 @@ _LAYOUTS = [
         id="cep_absence_time",
     ),
     pytest.param(
-        state.state_layout(_STEPS["open_sessions"]),
+        "open_sessions",
         "struct<ts_us:binary>",
         id="open_sessions",
     ),
     pytest.param(
-        state.state_layout(_STEPS["routing_counters"]),
+        "routing_counters",
         "struct<n_total:bigint,n_user:bigint,n_tool:bigint,n_error:bigint,"
         "last_us:bigint>",
         id="routing_counters",
     ),
     pytest.param(
-        state.state_layout(_STEPS["upsert"]),
+        "upsert",
         "struct<best_seq:bigint,deleted:int,text_md5:string>",
         id="upsert",
     ),
     pytest.param(
-        state.state_layout(_STEPS["funnel"]),
+        "funnel",
         "struct<ords:binary,masks:binary,last_us:bigint>",
         id="funnel",
     ),
     pytest.param(
-        state.state_layout(_STEPS["rate_spikes"]),
+        "rate_spikes",
         "struct<bucket_idxs:binary,counts:binary>",
         id="rate_spikes",
     ),
     pytest.param(
-        state.state_layout(_STEPS["lexicon"]),
+        "lexicon",
         "struct<ords:binary,hits:binary,last_us:bigint>",
         id="lexicon",
     ),
 ]
 
 
-@pytest.mark.parametrize("layout,want", _LAYOUTS)
-def test_stored_state_layout_is_pinned(layout, want):
+@pytest.mark.parametrize("name,want", _LAYOUTS)
+def test_stored_state_layout_is_pinned(name, want, request):
     """A checkpoint stores each operator's state rows in its layout; a
     changed layout cannot resume from an existing checkpoint. Change a
     literal here only together with a state migration or a documented
     checkpoint reset."""
-    assert layout.simpleString() == want
+    assert _layout(name, request).simpleString() == want
 
 
 @pytest.mark.parametrize(
@@ -364,13 +381,13 @@ def test_former_ddl_schemas_parse_to_the_same_struct(spark, ddl, schema):
     assert _parse_datatype_string(ddl) == schema
 
 
-@pytest.mark.parametrize("layout,want", _LAYOUTS)
-def test_stored_layout_has_no_array_or_map(layout, want):
+@pytest.mark.parametrize("name,want", _LAYOUTS)
+def test_stored_layout_has_no_array_or_map(name, want, request):
     """An ``array`` or ``map`` state field makes Spark's Row encoder emit
     ``MapObjects`` code whose variable names carry a JVM-global counter,
     so its state encoders are compiled again in every micro-batch; list
     state is stored packed (``state.LONGS``) instead."""
-    got = layout.simpleString().lower()
+    got = _layout(name, request).simpleString().lower()
     assert "array<" not in got and "map<" not in got
 
 
@@ -396,59 +413,90 @@ def _batch(ts: list) -> pd.DataFrame:
     )
 
 
-@pytest.mark.parametrize("name", list(_STEPS))
-def test_step_contract_through_the_core(name, fake_state):
-    """Every keyed-state operator's step, driven through the core without
-    a JVM: it stores its pinned layout with packed bytes in every LONGS
-    field and arms a timeout only if it has a horizon; a timed-out call
-    removes the state and emits only the step's expiry rows (closed
-    sessions for open sessions, nothing elsewhere); a key whose rows all
-    have a null ts never arms a timeout."""
+def _through_the_core(name: str, fake_state, request):
+    """``(call, new_state)`` for ``_STEPS[name]`` through its core:
+    ``call(state, ts)`` runs one call for key ``"k"`` over ``_batch(ts)``
+    and returns the emitted rows as tuples. A CEP step runs in the JVM
+    core through ``TestGroupState`` on the columns the operator projects
+    (the role's symbol, µs event time); any other step runs in the
+    pandas core on ``FakeState``."""
     step = _STEPS[name]
+    if isinstance(step, _JavaStep):
+        core = step.core(request.getfixturevalue("spark"))
+
+        def call(st, ts):
+            pdf = _batch(ts)
+            rows = [
+                (i, cep.ROLE_SYMBOLS[role], None if pd.isna(t) else t.value // 1000)
+                for i, role, t in zip(pdf["turn_idx"], pdf["role"], pdf["ts"])
+            ]
+            return [tuple(r) for r in core.call("k", rows, st)]
+
+        return call, KeyState
     fn = state._state_fn(step)
-    layout = state.state_layout(step)
+
+    def call(st, ts):
+        out = fn(("k",), iter([_batch(ts)]), st)
+        return [tuple(r) for df in out for r in df.itertuples(index=False)]
+
+    return call, fake_state
+
+
+@pytest.mark.parametrize("name", list(_STEPS))
+def test_step_contract_through_the_core(name, fake_state, request):
+    """Every keyed-state operator's step, driven through its core (the
+    JVM core's function on Spark's ``TestGroupState`` for the CEP steps,
+    the pandas core on ``FakeState`` for the rest): it stores its pinned
+    layout with packed bytes in every LONGS field and arms a timeout
+    only if it has a horizon; a timed-out call removes the state and
+    emits only the step's expiry rows (closed sessions for open
+    sessions, nothing elsewhere); a key whose rows all have a null ts
+    never arms a timeout."""
+    step = _STEPS[name]
+    call, new_state = _through_the_core(name, fake_state, request)
+    layout = _layout(name, request)
     ts = [_T0 + pd.Timedelta(minutes=i) for i in range(5)]
 
-    st = fake_state()
-    assert list(fn(("k",), iter([_batch(ts)]), st))
+    st = new_state()
+    assert call(st, ts)
     assert len(st.get) == len(layout.fields)
     for v, f in zip(st.get, layout.fields):
         assert isinstance(v, bytes) == (f.dataType == state.LONGS), f.name
     assert (st.armed is not None) == (step.horizon_s is not None)
 
     st.hasTimedOut = True
-    out = list(fn(("k",), iter([_batch(ts)]), st))
+    out = call(st, ts)
     assert not st.exists and st.get is None
     want = []
     if name == "open_sessions":
         want = [("k", _T0, _T0 + pd.Timedelta(minutes=34), 5, True)]
-    assert [tuple(r) for df in out for r in df.itertuples(index=False)] == want
+    assert out == want
 
-    st = fake_state()
-    list(fn(("k",), iter([_batch([pd.NaT] * 3)]), st))
+    st = new_state()
+    call(st, [pd.NaT] * 3)
     assert st.armed is None
 
 
 @pytest.mark.parametrize(
     "name", [n for n, s in _STEPS.items() if s.horizon_s is not None]
 )
-def test_last_event_time_never_moves_back(name, fake_state):
+def test_last_event_time_never_moves_back(name, fake_state, request):
     """A key's last event time is monotone through the core: a later
     batch of older events, or of null ts only, leaves the stored
     ``last_us`` and the armed timeout where the newest event put them."""
     step = _STEPS[name]
-    fn = state._state_fn(step)
+    call, new_state = _through_the_core(name, fake_state, request)
     clocked = step.last_us is None
-    st = fake_state()
+    st = new_state()
     newer = [_T0 + pd.Timedelta(hours=1, minutes=i) for i in range(5)]
-    list(fn(("k",), iter([_batch(newer)]), st))
+    call(st, newer)
     armed = st.armed
     last_us = st.get[-1] if clocked else None
     assert armed is not None
     if clocked:
         assert last_us == newer[-1].value // 1000
     for ts in ([_T0 + pd.Timedelta(minutes=i) for i in range(5)], [pd.NaT] * 3):
-        list(fn(("k",), iter([_batch(ts)]), st))
+        call(st, ts)
         assert st.armed == armed
         if clocked:
             assert st.get[-1] == last_us
@@ -546,9 +594,10 @@ def test_state_encoders_compile_once(spark, one_file_epochs, tmp_path, build, mo
 
 
 def _old_layout_op(stream, cols, output, layout, value, mode):
-    """A stateful operator shaped like a packed one that stores ``value``
-    in an ``array<long>`` ``layout``, as the operators did before they
-    packed their lists."""
+    """A pandas-core stateful operator that stores ``value`` in
+    ``layout``: shaped like a packed operator with an ``array<long>``
+    layout, as the operators were before they packed their lists, or like
+    the streaming CEP operators before they moved to the JVM core."""
 
     def fn(key, pdfs, group_state):
         for _ in pdfs:
@@ -566,33 +615,10 @@ def _old_layout_op(stream, cols, output, layout, value, mode):
     )
 
 
-@pytest.mark.parametrize(
-    "old,build,mode",
-    [
-        pytest.param(
-            (
-                ["conv_id", "turn_idx", "role", "ts"],
-                cep.CEP_STREAM_OUTPUT_SCHEMA,
-                "next_idx long, pend_idx array<long>, pend_sym string, "
-                "carry string, n_matches long, first_match long, last_us long",
-                (0, [1, 2], "tt", "", 0, -1, 0),
-            ),
-            lambda s: cep.stream_cep_match(s, "ttu"),
-            "update",
-            id="cep_match",
-        ),
-        pytest.param(
-            (["conv_id", "ts"], state.SESSION_OUTPUT_SCHEMA, "ts_us array<long>", ([0],)),
-            track_open_sessions,
-            "append",
-            id="open_sessions",
-        ),
-    ],
-)
-def test_array_layout_checkpoint_is_refused(spark, tmp_path, old, build, mode):
-    """A checkpoint written with an operator's old ``array<bigint>``
-    layout does not resume under the packed one: Spark's state schema
-    check refuses it at restart instead of misreading the stored rows."""
+def _resume_error(spark, tmp_path, first, build, mode) -> str:
+    """Drain ``first`` into a new checkpoint, add a file, then resume the
+    checkpoint with ``build``: the error that the resumed query fails
+    with."""
     src = tmp_path / "src"
     write_transcripts_parquet(str(src), n_files=1, n_turns=60, n_convs=4, seed=9)
     ckpt = str(tmp_path / "ckpt")
@@ -609,10 +635,69 @@ def test_array_layout_checkpoint_is_refused(spark, tmp_path, old, build, mode):
         finally:
             q.stop()
 
-    run(_old_layout_op(transcripts_stream(spark, str(src)), *old, mode))
+    run(first(transcripts_stream(spark, str(src))))
     write_transcripts_parquet(
         str(src), n_files=1, start_file_idx=1, n_turns=60, n_convs=4, seed=10
     )
     with pytest.raises(StreamingQueryException) as err:
         run(build(transcripts_stream(spark, str(src))))
-    assert "STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE" in str(err.value)
+    return str(err.value)
+
+
+@pytest.mark.parametrize(
+    "old,build,mode",
+    [
+        # the cep_match case moved to the test below: its operator is no
+        # longer applyInPandasWithState, which Spark checks first
+        pytest.param(
+            (["conv_id", "ts"], state.SESSION_OUTPUT_SCHEMA, "ts_us array<long>", ([0],)),
+            track_open_sessions,
+            "append",
+            id="open_sessions",
+        ),
+    ],
+)
+def test_array_layout_checkpoint_is_refused(spark, tmp_path, old, build, mode):
+    """A checkpoint written with an operator's old ``array<bigint>``
+    layout does not resume under the packed one: Spark's state schema
+    check refuses it at restart instead of misreading the stored rows."""
+    err = _resume_error(
+        spark, tmp_path, lambda s: _old_layout_op(s, *old, mode), build, mode
+    )
+    assert "STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE" in err
+
+
+_CEP_OUTPUT = "conv_id string, n_turns long, n_matches long, first_match_turn long"
+
+
+@pytest.mark.parametrize(
+    "layout,value",
+    [
+        pytest.param(
+            "next_idx long, pend_idx binary, pend_sym string, "
+            "carry string, n_matches long, first_match long, last_us long",
+            (0, state.pack_longs([1, 2]), "tt", "", 0, -1, 0),
+            id="packed",
+        ),
+        pytest.param(
+            "next_idx long, pend_idx array<long>, pend_sym string, "
+            "carry string, n_matches long, first_match long, last_us long",
+            (0, [1, 2], "tt", "", 0, -1, 0),
+            id="array",
+        ),
+    ],
+)
+def test_pandas_core_checkpoint_is_refused_by_the_jvm_core(spark, tmp_path, layout, value):
+    """A ``stream_cep_match`` checkpoint written by the pandas core
+    (``applyInPandasWithState``), in the stored layout the JVM core keeps
+    byte for byte or in the older ``array<bigint>`` one, does not resume
+    under the JVM core's ``flatMapGroupsWithState``: Spark's operator
+    metadata check refuses it at restart, so the five streaming CEP
+    gates' checkpoints reset."""
+    cols = ["conv_id", "turn_idx", "role", "ts"]
+    err = _resume_error(
+        spark, tmp_path,
+        lambda s: _old_layout_op(s, cols, _CEP_OUTPUT, layout, value, "update"),
+        lambda s: cep.stream_cep_match(s, "ttu"), "update",
+    )
+    assert "STREAMING_STATEFUL_OPERATOR_NOT_MATCH_IN_STATE_METADATA" in err

@@ -38,22 +38,23 @@ the non-overlapping count engine-divergent), and must use only the
 portable regex core (literals, classes, ``+ * ? {m,n}``, alternation,
 grouping) — no backreferences or lookaround, which RE2 lacks.
 
-The ``stream_cep_*`` twins are one sequence-reassembly step,
-:class:`_Reassembly`, of the keyed-state core (``state.keyed_state``),
-around one pattern step each (``_KleeneStep``, ``_AbsenceStep``,
-``_WithinStep``, ``_AbsenceTimeStep``).
+The ``stream_cep_*`` twins run in the JVM: one ``flatMapGroupsWithState``
+core, ``vaero.state.Reassembly`` (``jvm/src/vaero/state/``, in
+``jvm/vaero.jar``), reassembles each conversation's turns around one
+pattern step (Kleene, absence, within, time-based absence). Python
+validates the arguments, projects the narrow input in SQL (the role's
+symbol and the event time in µs) and sets the watermark; no event
+crosses into a Python worker.
 """
 
 from __future__ import annotations
 
 import re
-from itertools import count, repeat
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from vaero_spark.operators.state import LONGS, KeyedStep, keyed_state
+from vaero_spark.session import JAR
 
 #: default role → symbol alphabet for transcript tables
 ROLE_SYMBOLS = {"user": "u", "assistant": "a", "tool": "t", "system": "s"}
@@ -368,135 +369,52 @@ def cep_within_sql(
 
 
 # ---------------------------------------------------------------------------
-# streaming CEP — one sequence-reassembly core, one fold step per pattern
+# streaming CEP — one sequence-reassembly core in the JVM, one step per pattern
 # ---------------------------------------------------------------------------
 
-CEP_STREAM_OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType()),
-        T.StructField("n_turns", T.LongType()),
-        T.StructField("n_matches", T.LongType()),
-        T.StructField("first_match_turn", T.LongType()),
-    ]
-)
 
-ABSENCE_STREAM_OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType()),
-        T.StructField("n_turns", T.LongType()),
-        T.StructField("n_triggers", T.LongType()),
-        T.StructField("n_dangling", T.LongType()),
-        T.StructField("first_dangling_turn", T.LongType()),
-    ]
-)
+def _reassembly_class(spark):
+    """``vaero.state.Reassembly`` in ``spark``'s JVM. Without the jar py4j
+    resolves the name to a package, and the query would fail only once it
+    ran; fail while it is built instead."""
+    from py4j.java_gateway import JavaClass
 
-WITHIN_STREAM_OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType()),
-        T.StructField("n_turns", T.LongType()),
-        T.StructField("n_within", T.LongType()),
-        T.StructField("first_within_turn", T.LongType()),
-    ]
-)
-
-class _Reassembly(KeyedStep):
-    """The keyed step of every streaming CEP operator: out-of-order
-    sequence reassembly over ``(conv_id, turn_idx, role, ts)`` around
-    one pattern ``step``.
-
-    Turns wait in a pending buffer until the contiguous ``turn_idx``
-    prefix reaches them (first arrival wins; consumed turns and late
-    duplicates drop), so the pattern step folds each newly contiguous
-    run ``(start, symbols, event-time ms)`` exactly once and in order.
-    A null ``ts`` reaches a timed step as ``None``. One row, from
-    ``step.emit``, goes out whenever the prefix advances. Turn indexes
-    are assumed 0-based contiguous per conversation (the canonical
-    transcripts derivation guarantees it). An idle conversation's state
-    is evicted, emitting nothing. Stored: next_idx = next contiguous
-    turn expected; pend_* = out-of-order turns awaiting reassembly (idx
-    list + aligned symbol chars, plus event-time ms when the step reads
-    time); then the pattern step's accumulator fields.
-
-    A pattern step supplies ``output`` (its output schema), ``timed``
-    (it reads event time, so pending turns keep ``pend_ms``),
-    ``fields`` and ``init`` (its accumulator's state fields and empty
-    value), ``fold(acc, start, syms, mss) -> acc`` and
-    ``emit(acc, n_turns)`` (the output columns after ``conv_id,
-    n_turns``). An accumulator field of type ``LONGS`` holds a list."""
-
-    def __init__(self, step, symbols: dict[str, str], idle_timeout_seconds: int):
-        self.step, self.symbols = step, dict(symbols)
-        self.horizon_s = idle_timeout_seconds
-        self.output = step.output
-        head = [
-            T.StructField("next_idx", T.LongType()),
-            T.StructField("pend_idx", LONGS),
-            T.StructField("pend_sym", T.StringType()),
-        ]
-        if step.timed:
-            head.append(T.StructField("pend_ms", LONGS))
-        self.n_head, self.fields = len(head), head + step.fields
-        self.init = (0, [], "") + (([],) if step.timed else ()) + step.init
-
-    def start(self, acc):
-        pend_ms = acc[3] if self.step.timed else repeat(None)
-        return acc[0], dict(zip(acc[1], zip(acc[2], pend_ms))), acc[self.n_head :]
-
-    def fold(self, work, pdf, us):
-        next_idx, pend, _ = work
-        # vectorized ingest: map roles → symbols and drop already-
-        # consumed turns before the per-element insert (a pandas
-        # Series element loop here doubled the drain wall time)
-        idxs = pdf["turn_idx"].to_numpy()
-        keep = idxs >= next_idx
-        syms = pdf["role"][keep].map(self.symbols).fillna(UNKNOWN_SYMBOL).tolist()
-        if self.step.timed:
-            ms = (us // 1000).to_dict()
-            mss = [ms.get(i) for i in pdf.index[keep]]
-        else:
-            mss = repeat(None)
-        for i, s, m in zip(idxs[keep].tolist(), syms, mss):
-            if i not in pend:  # first arrival wins; late dups drop
-                pend[i] = (s, m)
-        return work
-
-    def emit(self, key, work, watermark_ms):
-        next_idx, pend, acc = work
-        run = []
-        while next_idx in pend:
-            run.append(pend.pop(next_idx))
-            next_idx += 1
-        rows = []
-        if run:
-            acc = self.step.fold(
-                acc,
-                next_idx - len(run),
-                "".join(s for s, _ in run),
-                [m for _, m in run],
-            )
-            rows.append((key[0], next_idx, *self.step.emit(acc, next_idx)))
-        order = sorted(pend)
-        head = (next_idx, order, "".join(pend[i][0] for i in order))
-        if self.step.timed:
-            head += ([pend[i][1] for i in order],)
-        return head + tuple(acc), rows
+    cls = spark._jvm.vaero.state.Reassembly
+    if not isinstance(cls, JavaClass):
+        raise RuntimeError(
+            f"vaero.state.Reassembly is not on the driver's classpath: the "
+            f"streaming CEP operators need {JAR}. get_spark adds it for "
+            "in-process local masters; give other masters and spark-submit "
+            "the jar with --jars or spark.jars"
+        )
+    return cls
 
 
 def _stream_reassembled(
     stream: DataFrame,
-    step,
+    step: str,
+    args: list,
     watermark: str,
     symbols: dict[str, str],
     idle_timeout_seconds: int,
 ) -> DataFrame:
-    return keyed_state(
-        # guide §4.1: only the columns the state machine reads cross
-        # the Python boundary (text/tool payloads never ship per group)
-        stream.select("conv_id", "turn_idx", "role", "ts")
-        .withWatermark("ts", watermark)
-        .groupBy("conv_id"),
-        _Reassembly(step, symbols, idle_timeout_seconds),
-    )
+    """``stream`` through the JVM core's pattern ``step`` with ``args``:
+    turns wait until the contiguous ``turn_idx`` prefix reaches them
+    (first arrival wins; consumed turns, late duplicates and null
+    ``turn_idx`` rows drop), one row goes out whenever the prefix
+    advances, and an idle conversation's state is removed, emitting
+    nothing. The core reads the narrow projection only: the role's
+    symbol and the event time in µs are computed here in SQL."""
+    spark = stream.sparkSession
+    core = _reassembly_class(spark)
+    turns = stream.select(
+        "conv_id",
+        F.col("turn_idx").cast("long").alias("turn_idx"),
+        _symbol_expr("role", symbols).alias("sym"),
+        "ts",
+        F.unix_micros(F.col("ts").cast("timestamp")).alias("us"),
+    ).withWatermark("ts", watermark)
+    return DataFrame(core.stream(turns._jdf, step, args, idle_timeout_seconds), spark)
 
 
 # Bounded-quantifier (Kleene-class) streaming patterns: a CONCATENATION
@@ -558,78 +476,6 @@ def parse_kleene_pattern(pattern: str, symbols: dict[str, str]) -> tuple[int, in
     return l_min, l_max, "".join(lazy_parts)
 
 
-class _KleeneStep:
-    """Earliest-completion (leftmost, shortest, non-overlapping) count
-    of a pattern whose matches are ``l_min``..``l_max`` symbols long.
-    A literal is the case ``l_min == l_max``: its carry is then always
-    shorter than the literal and its end-of-stream tail is empty."""
-
-    output = CEP_STREAM_OUTPUT_SCHEMA
-    timed = False
-    #: carry = the consumed suffix from the first unsettled position on
-    #: (shorter than max_len, never the conversation)
-    fields = [
-        T.StructField("carry", T.StringType()),
-        T.StructField("n_matches", T.LongType()),
-        T.StructField("first_match", T.LongType()),
-    ]
-    init = ("", 0, -1)
-
-    def __init__(self, pattern: str, l_min: int, l_max: int):
-        self.rx = re.compile(pattern)
-        self.l_min, self.l_max = l_min, l_max
-
-    def _shortest(self, s: str, p: int) -> int:
-        """Length of the earliest-completion (shortest) match at ``p``
-        over what is available, or 0."""
-        for ln in range(self.l_min, min(self.l_max, len(s) - p) + 1):
-            if self.rx.fullmatch(s, p, p + ln):
-                return ln
-        return 0
-
-    def _scan(self, s: str, s_abs: int, final: bool) -> tuple[int, int, int]:
-        """Leftmost earliest-completion scan of ``s`` (its first symbol
-        is turn ``s_abs``) → (stop position, matches, first match turn).
-
-        Unless ``final``, it SETTLES only decisions that are final
-        regardless of future input: a found (shortest) match at p uses
-        already-seen symbols only — final immediately; a NO-match at p
-        is final only once >= max_len symbols are available past p
-        (more input could still complete a match there — and were a
-        later completed match counted while p is still open, a future
-        completion at p would have absorbed it, breaking the leftmost
-        non-overlap invariant). The scan stops at the first unsettled
-        position. ``final`` is the end-of-stream view: every position
-        settles."""
-        p, n, cnt, first = 0, len(s), 0, -1
-        while p < n:
-            hit = self._shortest(s, p)
-            if hit:
-                cnt += 1
-                if first < 0:
-                    first = s_abs + p
-                p += hit
-            elif final or n - p >= self.l_max:
-                p += 1
-            else:
-                break
-        return p, cnt, first
-
-    def fold(self, acc, start: int, syms: str, mss: list):
-        carry, n_matches, first_match = acc
-        scan = carry + syms
-        p, cnt, first = self._scan(scan, start - len(carry), final=False)
-        return scan[p:], n_matches + cnt, first_match if first_match >= 0 else first
-
-    def emit(self, acc, n_turns: int):
-        # settled + an end-of-stream scan of the tiny carry (recomputed,
-        # never stored) == the batch scan of the prefix seen so far, so
-        # every emission is exact, not just the drained final one
-        carry, n_matches, first_match = acc
-        _, cnt, first = self._scan(carry, n_turns - len(carry), final=True)
-        return n_matches + cnt, first_match if first_match >= 0 else first
-
-
 def stream_cep_kleene(
     stream: DataFrame,
     pattern: str,
@@ -671,8 +517,7 @@ def stream_cep_kleene(
     """
     l_min, l_max, lazy = parse_kleene_pattern(pattern, symbols)
     return _stream_reassembled(
-        stream, _KleeneStep(lazy, l_min, l_max), watermark, symbols,
-        idle_timeout_seconds,
+        stream, "kleene", [lazy, l_min, l_max], watermark, symbols, idle_timeout_seconds
     )
 
 
@@ -713,59 +558,15 @@ def stream_cep_match(
     if not set(literal) <= alphabet:
         raise ValueError(f"literal {literal!r} uses symbols outside {sorted(alphabet)}")
     _check_pattern(literal, symbols)
-    step = _KleeneStep(re.escape(literal), len(literal), len(literal))
-    return _stream_reassembled(stream, step, watermark, symbols, idle_timeout_seconds)
+    # the fixed-length Kleene case; re.escape leaves a java.util.regex
+    # pattern of the same meaning (it escapes no letter or digit)
+    args = [re.escape(literal), len(literal), len(literal)]
+    return _stream_reassembled(stream, "kleene", args, watermark, symbols, idle_timeout_seconds)
 
 
 # ---------------------------------------------------------------------------
 # streaming CEP negation — absence detection with bounded per-conv state
 # ---------------------------------------------------------------------------
-
-
-class _AbsenceStep:
-    """Count-based absence: a trigger is dangling when none of the
-    ``limit`` turns after it is a response."""
-
-    output = ABSENCE_STREAM_OUTPUT_SCHEMA
-    timed = False
-    #: open_idx = trigger turn positions still awaiting a response (all
-    #: within k turns of the consumed prefix end, so |open_idx| <= k+1);
-    #: counters never change once written
-    fields = [
-        T.StructField("open_idx", LONGS),
-        T.StructField("n_triggers", T.LongType()),
-        T.StructField("n_dangling", T.LongType()),
-        T.StructField("first_dangling", T.LongType()),
-    ]
-    init = ([], 0, 0, -1)
-
-    def __init__(self, trig_sym: str, resp_sym: str, limit: int):
-        self.trig, self.resp, self.limit = trig_sym, resp_sym, limit
-
-    def fold(self, acc, start: int, syms: str, mss: list):
-        open_t, (n_trig, n_dang, first_dang) = list(acc[0]), acc[1:]
-        for idx, s in enumerate(syms, start):
-            # settle expired triggers first: the k turns after them are
-            # now fully seen with no response -> dangling, FINAL
-            while open_t and idx - open_t[0] > self.limit:
-                t = open_t.pop(0)
-                n_dang += 1
-                if first_dang < 0:
-                    first_dang = t
-            if s == self.resp:
-                open_t.clear()  # every surviving open trigger is answered
-            if s == self.trig:
-                n_trig += 1
-                open_t.append(idx)
-        return open_t, n_trig, n_dang, first_dang
-
-    def emit(self, acc, n_turns: int):
-        # fold in the end-of-stream view: open triggers have no response
-        # in the prefix seen so far, so its batch scan counts them
-        # dangling
-        open_idx, (n_trig, n_dang, first_dang) = acc[0], acc[-3:]
-        firsts = [t for t in (first_dang, *open_idx) if t >= 0]
-        return n_trig, n_dang + len(open_idx), min(firsts, default=-1)
 
 
 def stream_cep_absence(
@@ -807,58 +608,13 @@ def stream_cep_absence(
         raise ValueError("trigger and response roles must differ")
     if k < 1:
         raise ValueError("k must be >= 1")
-    step = _AbsenceStep(symbols[trigger_role], symbols[response_role], k)
-    return _stream_reassembled(stream, step, watermark, symbols, idle_timeout_seconds)
+    args = [symbols[trigger_role], symbols[response_role], k]
+    return _stream_reassembled(stream, "absence", args, watermark, symbols, idle_timeout_seconds)
 
 
 # ---------------------------------------------------------------------------
 # streaming time-bounded CEP — the within() clause as a live detector
 # ---------------------------------------------------------------------------
-
-
-class _WithinStep:
-    """Sliding ``literal`` windows whose last turn is at most
-    ``max_span_ms`` after their first."""
-
-    output = WITHIN_STREAM_OUTPUT_SCHEMA
-    timed = True
-    #: carry_* = the last len(literal)-1 consumed turns (symbol chars +
-    #: epoch-ms) — the only lookbehind a window ending at the next turn
-    #: needs
-    fields = [
-        T.StructField("carry_sym", T.StringType()),
-        T.StructField("carry_ms", LONGS),
-        T.StructField("n_within", T.LongType()),
-        T.StructField("first_within", T.LongType()),
-    ]
-    init = ("", [], 0, -1)
-
-    def __init__(self, literal: str, max_span_ms: int):
-        self.literal, self.max_span_ms = literal, max_span_ms
-
-    def fold(self, acc, start: int, syms: str, mss: list):
-        carry_sym, carry_ms, n_within, first_within = acc
-        seq, ms = carry_sym + syms, list(carry_ms) + mss
-        base, tail = start - len(carry_sym), len(self.literal) - 1
-        # a sliding start settles the moment its window completes:
-        # symbols already seen, span check pure arithmetic — every
-        # emission equals the batch lead-chain on the seen prefix. The
-        # carry is < len(literal), so each window ends in the new run.
-        for p in range(len(seq) - tail):
-            t0, t1 = ms[p], ms[p + tail]
-            if (
-                seq.startswith(self.literal, p)
-                and t0 is not None
-                and t1 is not None  # a null end is no hit, as in the batch
-                and t1 - t0 <= self.max_span_ms
-            ):
-                n_within += 1
-                if first_within < 0:
-                    first_within = base + p
-        return seq[-tail:], ms[-tail:], n_within, first_within
-
-    def emit(self, acc, n_turns: int):
-        return acc[2:]
 
 
 def stream_cep_within(
@@ -890,8 +646,8 @@ def stream_cep_within(
         raise ValueError(f"literal {literal!r} uses symbols outside the alphabet")
     if max_span_s < 0:
         raise ValueError("max_span_s must be >= 0")
-    step = _WithinStep(literal, max_span_s * 1000)
-    return _stream_reassembled(stream, step, watermark, symbols, idle_timeout_seconds)
+    args = [literal, max_span_s * 1000]
+    return _stream_reassembled(stream, "within", args, watermark, symbols, idle_timeout_seconds)
 
 
 
@@ -1089,48 +845,6 @@ def cep_absence_time_sql(
     WHERE n_dangling > 0"""
 
 
-class _AbsenceTimeStep(_AbsenceStep):
-    """Time-based absence: a trigger is dangling when no later response
-    comes within ``limit`` ms of it. Null event times follow the batch
-    twin's NULL arithmetic: a ``None``-time response answers nothing,
-    and a ``None``-time trigger never expires by time — it stays open
-    until a timed response answers it."""
-
-    timed = True
-    fields = [
-        T.StructField("open_idx", LONGS),
-        T.StructField("open_ms", LONGS),
-        T.StructField("n_triggers", T.LongType()),
-        T.StructField("n_dangling", T.LongType()),
-        T.StructField("first_dangling", T.LongType()),
-    ]
-    init = ([], [], 0, 0, -1)
-
-    def fold(self, acc, start: int, syms: str, mss: list):
-        open_t = list(zip(acc[0], acc[1]))
-        n_trig, n_dang, first_dang = acc[2:]
-        for idx, s, m in zip(count(start), syms, mss):
-            if m is not None:
-                # per-conv ts is non-decreasing in turn order (the
-                # canonical derivation orders turn_idx by ts), so once
-                # THIS turn is past a trigger's deadline every earlier
-                # turn was too: the trigger's wait window is fully seen
-                # -> dangling, FINAL. Timed triggers expire in turn
-                # order, so the first one settled is the smallest.
-                expired = [i for i, t in open_t if t is not None and m - t > self.limit]
-                if expired:
-                    n_dang += len(expired)
-                    if first_dang < 0:
-                        first_dang = expired[0]
-                    open_t = [(i, t) for i, t in open_t if i not in expired]
-                if s == self.resp:
-                    open_t = []  # every survivor answered within the wait
-            if s == self.trig:
-                n_trig += 1
-                open_t.append((idx, m))
-        return [i for i, _ in open_t], [t for _, t in open_t], n_trig, n_dang, first_dang
-
-
 def stream_cep_absence_time(
     stream: DataFrame,
     trigger_role: str = "user",
@@ -1171,7 +885,7 @@ def stream_cep_absence_time(
         raise ValueError("trigger and response roles must differ")
     if max_wait_s < 0:
         raise ValueError("max_wait_s must be >= 0")
-    step = _AbsenceTimeStep(
-        symbols[trigger_role], symbols[response_role], max_wait_s * 1000
+    args = [symbols[trigger_role], symbols[response_role], max_wait_s * 1000]
+    return _stream_reassembled(
+        stream, "absence_time", args, watermark, symbols, idle_timeout_seconds
     )
-    return _stream_reassembled(stream, step, watermark, symbols, idle_timeout_seconds)

@@ -11,14 +11,19 @@ native stateful operators give. State lives in Spark's state store
 checkpointed and exactly-once — the reference loses its buffers on
 crash.
 
-Every keyed-state operator is a :class:`KeyedStep` run by
-:func:`keyed_state`, the package's only ``applyInPandasWithState`` call
-and only ``GroupState`` user: it owns timeouts, state load and store
-(packing every :data:`LONGS` field), the one event-time conversion
-(:func:`event_us`), the one arming rule and the output frame. Steps
-here: open sessions (the event-time time cap), routing counters and the
-CDC upsert view; CEP reassembly, funnel, rate spikes and lexicon are
-steps of the same core in their own modules.
+Every keyed-state operator but the streaming CEP ones is a
+:class:`KeyedStep` run by :func:`keyed_state`, the package's only
+``applyInPandasWithState`` call and only Python ``GroupState`` user: it
+owns timeouts, state load and store (packing every :data:`LONGS` field),
+the one event-time conversion (:func:`event_us`), the one arming rule
+and the output frame. Steps here: open sessions (the event-time time
+cap), routing counters and the CDC upsert view; funnel, rate spikes and
+lexicon are steps of the same core in their own modules. The five
+streaming CEP operators (``cep.stream_cep_*``) run in the JVM instead,
+in one ``flatMapGroupsWithState`` core (``vaero.state.Reassembly`` in
+``jvm/vaero.jar``) that keeps this core's rules: timeout removal, the
+trailing ``last_us``, the arming rule and ``LONGS`` packed as
+:func:`pack_longs` packs them.
 
 All logic is Arrow-batched pandas (no per-row Python in the JVM loop);
 state per key is O(1) scalars or a bounded list.

@@ -13,8 +13,10 @@ start through ``vaero_spark.worker_daemon``, which stops each task from re-parsi
 ``pyspark.zip`` (~0.28 CPU-s per Python task); the package's parent directory
 goes on the workers' ``PYTHONPATH`` so they find it from any working
 directory. On an in-process local master whose JVM ``get_spark``
-launches, local files go through ``vaero.fs.NioLocalFileSystem``
-(``jvm/localfs.jar``, sources beside it):
+launches, the package's jar (``jvm/vaero.jar``, sources beside it) joins
+the driver's classpath: the streaming CEP operators' keyed-state core
+(``vaero.state.Reassembly``) lives there, and local files go through its
+``vaero.fs.NioLocalFileSystem``:
 without ``libhadoop.so``, Hadoop's local filesystem forks ``chmod`` on every
 file it creates and ``readlink`` on every rename, ~17 ms per checkpoint or
 state-store file on a 4-vCPU VM; the jar's java.nio versions of those two
@@ -31,7 +33,8 @@ from pyspark.sql import SparkSession
 
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _LOCAL_MASTER = re.compile(r"local(?:\[(\d+|\*)(?:,\d+)?\])?")
-_LOCALFS_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "localfs.jar")
+#: the package's JVM classes: the java.nio local filesystem and the CEP core
+JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "vaero.jar")
 
 
 def host_cpus() -> int:
@@ -80,14 +83,15 @@ def get_spark(
     master gets no default width: the submitter's
     ``--conf spark.sql.shuffle.partitions`` or Spark's own. The driver heap
     is ``$SPARK_DRIVER_MEMORY``, else :func:`default_driver_memory`.
-    An :func:`in_process` master gets the java.nio local filesystem on the
-    driver's classpath, after any ``spark.driver.extraClassPath`` the
-    caller gives; another master keeps Hadoop's, as its executors may not
-    have the jar.
+    An :func:`in_process` master gets :data:`JAR` on the driver's
+    classpath, after any ``spark.driver.extraClassPath`` the caller gives,
+    and with it the java.nio local filesystem; another master keeps
+    Hadoop's, as its executors may not have the jar, and needs the jar in
+    ``spark.jars`` (``--jars``) for the streaming CEP operators.
     Under ``spark-submit`` the Python driver joins a JVM that is already
     running (``$PYSPARK_GATEWAY_PORT`` is set): ``master`` defaults to the
-    submitted one, and the java.nio filesystem is left out, as its jar can
-    no longer join that JVM's classpath.
+    submitted one, and the jar is left out, as it can no longer join that
+    JVM's classpath; pass it with ``--jars``.
     """
     joined = "PYSPARK_GATEWAY_PORT" in os.environ
     if master is None and not joined:
@@ -99,7 +103,7 @@ def get_spark(
     conf = dict(extra_conf or {})
     worker_path = [conf.pop("spark.executorEnv.PYTHONPATH", None), _PACKAGE_PARENT]
     if not joined and in_process(master):
-        class_path = [conf.pop("spark.driver.extraClassPath", None), _LOCALFS_JAR]
+        class_path = [conf.pop("spark.driver.extraClassPath", None), JAR]
         conf = {
             "spark.hadoop.fs.file.impl": "vaero.fs.NioLocalFileSystem",
             "spark.hadoop.fs.AbstractFileSystem.file.impl": "vaero.fs.NioLocalFs",
