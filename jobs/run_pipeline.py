@@ -23,7 +23,8 @@ exactly-once from committed offsets.
 The session is ``get_spark``'s. Once it is up, the job prints one JSON
 line, ``{"session": {...}}``, with its master, shuffle width (a new
 checkpoint's state-store count), local filesystem class, Python worker
-daemon module and state store provider. Per-epoch metrics go to
+daemon module, state store provider and the JVM's JIT policy
+(``spark.driver.defaultJavaOptions``). Per-epoch metrics go to
 ``./vaero_metrics/metrics.jsonl``; ``vaeroctl start`` runs each job in its
 own job home, so every job has its own file.
 """
@@ -83,7 +84,8 @@ def main() -> None:
         "spark.sql.shuffle.partitions": spark.conf.get("spark.sql.shuffle.partitions"),
         **{k: spark.conf.get(k, None)  # None: unset
            for k in ("spark.hadoop.fs.file.impl", "spark.python.daemon.module",
-                     "spark.sql.streaming.stateStore.providerClass")},
+                     "spark.sql.streaming.stateStore.providerClass",
+                     "spark.driver.defaultJavaOptions")},
     }
     print(json.dumps({"session": session}), flush=True)
     attach_metrics_listener(spark, os.path.abspath("vaero_metrics"))

@@ -1,12 +1,14 @@
 """``get_spark``'s host-derived defaults: the shuffle width (and so a new
 streaming query's state-store count) is the master's slot count, the
 driver heap follows the host's physical memory, an in-process master
-reads and writes local files through the java.nio local filesystem, and
-every session runs the RocksDB state store, which no other module sets."""
+reads and writes local files through the java.nio local filesystem and
+starts its JVM with the one JIT policy, and every session runs the
+RocksDB state store, which no other module sets."""
 
 from __future__ import annotations
 
 import ast
+import json
 import os
 import subprocess
 import sys
@@ -14,13 +16,16 @@ import textwrap
 
 import pytest
 
+from pyspark.sql import SparkSession
+
 from vaero_spark.session import (
-    default_driver_memory, host_cpus, in_process, master_slots,
+    JIT_POLICY, default_driver_memory, get_spark, host_cpus, in_process, master_slots,
 )
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PROVIDER = "spark.sql.streaming.stateStore.providerClass"
 ROCKSDB = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+DEFAULT_JAVA = "spark.driver.defaultJavaOptions"
 
 
 @pytest.mark.parametrize(
@@ -63,25 +68,38 @@ def test_session_defaults_follow_the_master(tmp_path):
     shuffle partitions, even with ``$SPARK_GRAFT_CPUS`` wider; with no
     ``$SPARK_DRIVER_MEMORY`` its heap is :func:`default_driver_memory`.
     Its ``file:`` filesystems are the java.nio ones, and a caller's
-    ``spark.driver.extraClassPath`` entry stays on the classpath."""
+    ``spark.driver.extraClassPath`` entry stays on the classpath. Its JVM
+    starts with every :data:`JIT_POLICY` flag ahead of the caller's
+    ``spark.driver.extraJavaOptions``, so a caller's flag wins a conflict
+    and the policy's other flags hold."""
     caller_jar = str(tmp_path / "caller.jar")
+    caller_java = "-Dvaero.probe=1 -XX:Tier4InvocationThreshold=7000"
     script = textwrap.dedent(
         f"""
-        import sys
+        import json, sys
         sys.path.insert(0, {REPO!r})
         from vaero_spark.session import get_spark
 
         spark = get_spark("width_probe", master="local[2]",
-                          extra_conf={{"spark.driver.extraClassPath": {caller_jar!r}}})
+                          extra_conf={{"spark.driver.extraClassPath": {caller_jar!r},
+                                       "spark.driver.extraJavaOptions": {caller_java!r}}})
         jvm, conf = spark._jvm, spark._jsc.hadoopConfiguration()
         uri = jvm.java.net.URI("file:///")
-        print(jvm.org.apache.hadoop.fs.FileSystem.get(uri, conf).getClass().getName(),
-              jvm.org.apache.hadoop.fs.FileContext.getFileContext(uri, conf)
-              .getDefaultFileSystem().getClass().getName(),
-              jvm.java.lang.System.getProperty("java.class.path"),
-              spark.conf.get("spark.sql.shuffle.partitions"),
-              spark.sparkContext.getConf().get("spark.driver.memory"),
-              spark.conf.get({PROVIDER!r}))
+        mx = jvm.java.lang.management.ManagementFactory
+        hotspot = mx.getPlatformMXBean(
+            jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean"))
+        print(json.dumps({{
+            "fs": jvm.org.apache.hadoop.fs.FileSystem.get(uri, conf).getClass().getName(),
+            "afs": jvm.org.apache.hadoop.fs.FileContext.getFileContext(uri, conf)
+                   .getDefaultFileSystem().getClass().getName(),
+            "class_path": jvm.java.lang.System.getProperty("java.class.path"),
+            "defaults": [spark.conf.get("spark.sql.shuffle.partitions"),
+                         spark.sparkContext.getConf().get("spark.driver.memory"),
+                         spark.conf.get({PROVIDER!r})],
+            "jvm_args": list(mx.getRuntimeMXBean().getInputArguments()),
+            "vm_options": {{name: hotspot.getVMOption(name).getValue()
+                           for name in ("Tier4CompileThreshold", "Tier4InvocationThreshold")}},
+        }}))
         spark.stop()
         """
     )
@@ -92,10 +110,44 @@ def test_session_defaults_follow_the_master(tmp_path):
         capture_output=True, text=True, timeout=300,
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
-    fs, afs, class_path, *defaults = proc.stdout.split()[-6:]
-    assert (fs, afs) == ("vaero.fs.NioLocalFileSystem", "vaero.fs.NioLocalFs")
-    assert caller_jar in class_path.split(os.pathsep)
-    assert defaults == ["2", default_driver_memory(), ROCKSDB]
+    out = json.loads(proc.stdout.splitlines()[-1])
+    assert (out["fs"], out["afs"]) == ("vaero.fs.NioLocalFileSystem", "vaero.fs.NioLocalFs")
+    assert caller_jar in out["class_path"].split(os.pathsep)
+    assert out["defaults"] == ["2", default_driver_memory(), ROCKSDB]
+    args = out["jvm_args"]
+    probe = args.index("-Dvaero.probe=1")
+    assert all(args.index(flag) < probe for flag in JIT_POLICY.split()), args
+    assert out["vm_options"] == {"Tier4CompileThreshold": "150000",
+                                 "Tier4InvocationThreshold": "7000"}
+
+
+class _Launched(Exception):
+    """Raised by the stubbed ``getOrCreate`` with the builder's options."""
+
+
+@pytest.mark.parametrize("master, joined", [
+    ("local[2]", False), ("local", False),
+    ("yarn", False), ("spark://h:7077", False), ("local-cluster[2,1,1024]", False),
+    ("local[2]", True),  # under spark-submit: the driver JVM already runs
+])
+def test_jit_policy_only_for_a_jvm_get_spark_launches(master, joined, monkeypatch):
+    """Only an in-process master whose JVM ``get_spark`` starts gets the JIT
+    policy: a cluster master's and a joined session's JVMs are long-lived
+    or already running (``--driver-java-options`` reaches those)."""
+    def stub(builder):
+        raise _Launched(dict(builder._options))
+
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", stub)
+    if joined:
+        monkeypatch.setenv("PYSPARK_GATEWAY_PORT", "1")
+    else:
+        monkeypatch.delenv("PYSPARK_GATEWAY_PORT", raising=False)
+    with pytest.raises(_Launched) as launched:
+        get_spark(master=master)
+    options = launched.value.args[0]
+    assert options.get(DEFAULT_JAVA) == (JIT_POLICY if in_process(master) and not joined
+                                         else None)
+    assert "spark.driver.extraJavaOptions" not in options
 
 
 def _sets_provider(tree: ast.AST) -> bool:

@@ -566,7 +566,13 @@ def test_state_encoders_compile_once(spark, one_file_epochs, tmp_path, build, mo
     epoch is new: the filter that holds the epoch's watermark as a
     literal. The array<bigint> layouts compiled 2-3 more per epoch. (The
     query's first no-data epoch, which may end the drain, compiles its
-    own plan once and is not counted.)"""
+    own plan once and is not counted.) That last compile stays without a
+    Spark patch: in spark-sql 4.1.2 the late-row filter
+    (``WatermarkSupport.watermarkPredicateForDataForLateEvents``) and
+    ``FlatMapGroupsWithStateExecBase.watermarkPresent``, which lets the
+    state function read ``getCurrentWatermarkMs`` (the timeout arming
+    rule's ``wm + 1``), both come from the same watermark attribute in
+    the operator's input; dropping the one drops the other."""
     compiles = (
         spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
         .METRIC_COMPILATION_TIME()

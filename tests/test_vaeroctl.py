@@ -13,7 +13,7 @@ import time
 import pytest
 
 from jobs import vaeroctl
-from vaero_spark.session import host_cpus
+from vaero_spark.session import JIT_POLICY, host_cpus
 from vaero_spark.testing.fixtures import write_transcripts_parquet
 
 
@@ -114,7 +114,8 @@ def test_job_lifecycle_add_start_stop_resume_delete(spark, tmp_path, monkeypatch
     assert not vaeroctl._pid_alive(pid)
 
     # the job's session is get_spark's: one store per host CPU, the java.nio
-    # local filesystem, the Python worker daemon and the RocksDB state store
+    # local filesystem, the Python worker daemon, the RocksDB state store and
+    # the JIT policy
     cpus = host_cpus()
     assert _session_record(job["log"]) == {
         "master": f"local[{cpus}]",
@@ -123,6 +124,7 @@ def test_job_lifecycle_add_start_stop_resume_delete(spark, tmp_path, monkeypatch
         "spark.python.daemon.module": "vaero_spark.worker_daemon",
         "spark.sql.streaming.stateStore.providerClass":
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+        "spark.driver.defaultJavaOptions": JIT_POLICY,
     }
 
     # per-job metrics: the job's epochs land under its own job home

@@ -21,7 +21,14 @@ without ``libhadoop.so``, Hadoop's local filesystem forks ``chmod`` on every
 file it creates and ``readlink`` on every rename, ~17 ms per checkpoint or
 state-store file on a 4-vCPU VM; the jar's java.nio versions of those two
 calls make it ~0.4 ms. ``.crc`` files, checksums and file modes stay as
-they were.
+they were. The same JVM gets one JIT policy, :data:`JIT_POLICY`: HotSpot's
+tier-4 (C2) thresholds at ten times their JDK 17 defaults, so C2 compiles
+what stays hot (regex, parquet encoding, generated stages) and leaves
+driver code that runs a few hundred times per epoch (closure cleaning,
+Jackson, Java serialization, Catalyst rules) in C1. It goes in
+``spark.driver.defaultJavaOptions``, which Spark's launcher puts before
+``spark.driver.extraJavaOptions``; HotSpot keeps a flag's last
+occurrence, so a caller's own flags, passed in ``extraJavaOptions``, win.
 """
 
 from __future__ import annotations
@@ -35,6 +42,12 @@ _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _LOCAL_MASTER = re.compile(r"local(?:\[(\d+|\*)(?:,\d+)?\])?")
 #: the package's JVM classes: the java.nio local filesystem and the CEP core
 JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "vaero.jar")
+#: C2 thresholds ×10 over JDK 17's 5000/600/15000/40000: on a 4-vCPU host
+#: C2 took 5.6 of a perfbench ``cep`` window's 10.6 CPU-s, 1.9 with these
+JIT_POLICY = (
+    "-XX:Tier4InvocationThreshold=50000 -XX:Tier4MinInvocationThreshold=6000 "
+    "-XX:Tier4CompileThreshold=150000 -XX:Tier4BackEdgeThreshold=400000"
+)
 
 
 def host_cpus() -> int:
@@ -85,13 +98,18 @@ def get_spark(
     is ``$SPARK_DRIVER_MEMORY``, else :func:`default_driver_memory`.
     An :func:`in_process` master gets :data:`JAR` on the driver's
     classpath, after any ``spark.driver.extraClassPath`` the caller gives,
-    and with it the java.nio local filesystem; another master keeps
-    Hadoop's, as its executors may not have the jar, and needs the jar in
-    ``spark.jars`` (``--jars``) for the streaming CEP operators.
+    and with it the java.nio local filesystem, and its driver JVM starts
+    with :data:`JIT_POLICY` in ``spark.driver.defaultJavaOptions``; JVM
+    flags of the caller's own go in ``spark.driver.extraJavaOptions``,
+    which comes later on the command line and wins on conflict. Another
+    master keeps Hadoop's filesystem, as its executors may not have the
+    jar, needs the jar in ``spark.jars`` (``--jars``) for the streaming CEP
+    operators, and gets no JIT flags: its JVMs are long-lived.
     Under ``spark-submit`` the Python driver joins a JVM that is already
     running (``$PYSPARK_GATEWAY_PORT`` is set): ``master`` defaults to the
-    submitted one, and the jar is left out, as it can no longer join that
-    JVM's classpath; pass it with ``--jars``.
+    submitted one, and the jar and the JIT policy are left out, as neither
+    can reach that JVM any more; pass them with ``--jars`` and
+    ``--driver-java-options``.
     """
     joined = "PYSPARK_GATEWAY_PORT" in os.environ
     if master is None and not joined:
@@ -107,6 +125,7 @@ def get_spark(
         conf = {
             "spark.hadoop.fs.file.impl": "vaero.fs.NioLocalFileSystem",
             "spark.hadoop.fs.AbstractFileSystem.file.impl": "vaero.fs.NioLocalFs",
+            "spark.driver.defaultJavaOptions": JIT_POLICY,
             **conf,
             "spark.driver.extraClassPath": os.pathsep.join(filter(None, class_path)),
         }
