@@ -22,10 +22,12 @@ file it creates and ``readlink`` on every rename, ~17 ms per checkpoint or
 state-store file on a 4-vCPU VM; the jar's java.nio versions of those two
 calls make it ~0.4 ms. ``.crc`` files, checksums and file modes stay as
 they were. The same JVM gets one JIT policy, :data:`JIT_POLICY`: HotSpot's
-tier-4 (C2) thresholds at ten times their JDK 17 defaults, so C2 compiles
-what stays hot (regex, parquet encoding, generated stages) and leaves
-driver code that runs a few hundred times per epoch (closure cleaning,
-Jackson, Java serialization, Catalyst rules) in C1. It goes in
+tier-4 (C2) thresholds at ten times their JDK 17 defaults, so driver code
+that runs a few hundred times per epoch (closure cleaning, Jackson, Java
+serialization, Catalyst rules) stays in C1: C2 CPU in a perfbench ``cep``
+window fell 5.6 -> 1.9 s. Hot batch loops reach C2 later too: over
+``bench.py``'s suite the streaming gates ran 8% faster and the batch
+queries 8% slower, the suite wall unchanged (4-vCPU host, sf0.1). It goes in
 ``spark.driver.defaultJavaOptions``, which Spark's launcher puts before
 ``spark.driver.extraJavaOptions``; HotSpot keeps a flag's last
 occurrence, so a caller's own flags, passed in ``extraJavaOptions``, win.
