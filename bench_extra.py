@@ -60,17 +60,6 @@ def main() -> None:
             "overwrite"
         ).save()
 
-    def _probe() -> float:
-        """~0.4 s single-process md5 burn (Mh/s) — the bench.py churn
-        marker: a depressed probe beside a timing flags host weather."""
-        import hashlib
-
-        acc = b"seed"
-        t0 = time.perf_counter()
-        for _ in range(400_000):
-            acc = hashlib.md5(acc).digest()
-        return round(0.4 / (time.perf_counter() - t0), 2)
-
     for name in names:
         if args.explain:
             df = qs[name](spark, sf_dir)
@@ -87,7 +76,8 @@ def main() -> None:
             spark.sparkContext.setJobDescription(None)
             print(
                 json.dumps(
-                    {"query": name, "rep": rep, "sec": dt, "probe_mhps": _probe()}
+                    {"query": name, "rep": rep, "sec": dt,
+                     "probe_mhps": bench._cpu_probe()}
                 ),
                 flush=True,
             )

@@ -39,17 +39,29 @@ def _brute_absence(seq: str, k: int = 3, trig: str = "u", resp: str = "a"):
     return len(seq), n_trig, n_dang, first
 
 
-def _drive(core: JavaCep, seq: str, splits: tuple[int, ...]):
+def _drive(core: JavaCep, seq: str, splits: tuple[int, ...], memo: dict):
     """Feed ``seq`` to the JVM core's absence step in chunks (in order)
     and return every emission as (n_turns, n_triggers, n_dangling,
-    first)."""
-    state = KeyState()
-    out = []
-    pos = 0
+    first), with the key's state after the last chunk.
+
+    The core is deterministic, so ``memo`` maps each chunk path already
+    fed (the tuple of chunks) to its emissions and the state after them,
+    and the feed resumes from the longest memoized prefix of this path."""
+    chunks, pos = [], 0
     for ln in splits:
-        rows = [(i, seq[i], _T0_US) for i in range(pos, pos + ln)]
-        out += [tuple(emitted[1:]) for emitted in core.call("c", rows, state)]
+        chunks.append(seq[pos : pos + ln])
         pos += ln
+    done = len(chunks)
+    while done and tuple(chunks[:done]) not in memo:
+        done -= 1
+    out, state = memo.get(tuple(chunks[:done]), ((), KeyState()))
+    out, state = list(out), state.copy()
+    pos = sum(map(len, chunks[:done]))
+    for i in range(done, len(chunks)):
+        rows = [(j, seq[j], _T0_US) for j in range(pos, pos + len(chunks[i]))]
+        out += [tuple(emitted[1:]) for emitted in core.call("c", rows, state)]
+        pos += len(chunks[i])
+        memo[tuple(chunks[: i + 1])] = (tuple(out), state.copy())
     return out, state
 
 
@@ -70,11 +82,12 @@ def test_stream_absence_every_emission_equals_prefix_batch(spark):
     stays <= k."""
     k = 2
     core = JavaCep(spark, "absence", ["u", "a", k])
+    memo: dict = {}
     for n in range(1, 7):
         for seq in map("".join, itertools.product("uat", repeat=n)):
             want_final = _brute_absence(seq, k)
             for sp in _splits(n):
-                out, state = _drive(core, seq, sp)
+                out, state = _drive(core, seq, sp, memo)
                 pos = 0
                 for (n_turns, n_trig, n_dang, first), ln in zip(out, sp):
                     pos += ln

@@ -13,8 +13,10 @@ from __future__ import annotations
 
 import datetime as dt
 import tempfile
+from typing import Sequence, Tuple
 
 import pytest
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from vaero_spark.operators.analytics import (
@@ -257,8 +259,43 @@ def test_stream_spikes_eviction_path_keeps_in_order_input_exact(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
+def funnel_membership(
+    transcripts: DataFrame,
+    stages: Sequence[Tuple[str, Column]],
+    conv_col: str = "conv_id",
+    order_col: str = "turn_idx",
+) -> DataFrame:
+    """Per-conversation funnel membership in Spark, the batch reference
+    the stream_funnel tests compare against: one row ``(conv_id, stage,
+    first_ord)`` for every stage a conversation reaches, with the FIRST
+    order position at which it did — the row-level form of ``funnel``
+    (whose counts are exactly ``GROUP BY stage`` over this), and the
+    Spark form of ``analytics.funnel_membership_sql``."""
+    if not stages:
+        raise ValueError("funnel needs at least one stage")
+    outs: list[DataFrame] = []
+    reached: DataFrame | None = None
+    for i, (name, pred) in enumerate(stages):
+        hits = transcripts.filter(pred).select(
+            F.col(conv_col).alias("_conv"), F.col(order_col).alias("_ord")
+        )
+        if reached is not None:
+            hits = hits.join(reached, "_conv").filter(F.col("_ord") > F.col("_prev"))
+        reached = hits.groupBy("_conv").agg(F.min("_ord").alias("_prev"))
+        outs.append(
+            reached.select(
+                F.col("_conv").alias(conv_col),
+                F.lit(i + 1).cast("int").alias("stage"),
+                F.col("_prev").cast("long").alias("first_ord"),
+            )
+        )
+    out = outs[0]
+    for o in outs[1:]:
+        out = out.unionByName(o)
+    return out
+
+
 def test_funnel_membership_aggregates_to_funnel_counts(spark, sf_dir):
-    from vaero_spark.operators.analytics import funnel_membership
     from vaero_spark.sources.transcripts import load_transcripts
 
     tr = load_transcripts(spark, sf_dir)
@@ -301,7 +338,6 @@ def _drain_funnel(spark, tr, stage_roles, n_files, watermark="60 days"):
 
 
 def test_stream_funnel_drain_equals_batch_out_of_order(spark, sf_dir):
-    from vaero_spark.operators.analytics import funnel_membership
     from vaero_spark.sources.transcripts import load_transcripts
 
     tr = load_transcripts(spark, sf_dir)

@@ -67,6 +67,54 @@ def test_pinned_input_size_reads_uris(spark, tmp_path):
     assert E._pinned_state_partitions(spark, d).n == min(8, slots)
 
 
+class _StubSession:
+    """The parts of a session the pin touches: four executor slots and a
+    conf holding a session width (7) that no pin here takes."""
+
+    class sparkContext:  # noqa: N801
+        defaultParallelism = 4
+
+    def __init__(self):
+        self.settings = {"spark.sql.shuffle.partitions": "7"}
+        self.conf = self
+
+    def get(self, key):
+        return self.settings[key]
+
+    def set(self, key, value):
+        self.settings[key] = value
+
+
+@pytest.mark.parametrize(
+    "n_bytes, want", [(3 << 30, 12), (100_000_000, min(8, 4))], ids=["3GiB", "100MB"]
+)
+def test_pin_widens_with_remote_input(monkeypatch, n_bytes, want):
+    """Above its floor the pin takes one partition per 256 MB of input,
+    sized through Hadoop FS for a remote URI as for a local path, and
+    gives the session its own width back on exit. JVM-free: the content
+    summary is stubbed."""
+    import vaero_spark.sinks.fs as sink_fs
+
+    paths = []
+
+    class _Summary:
+        def getLength(self):  # noqa: N802
+            return n_bytes
+
+    class _FS:
+        def getContentSummary(self, jpath):  # noqa: N802
+            paths.append(jpath)
+            return _Summary()
+
+    monkeypatch.setattr(sink_fs, "_jvm_fs", lambda spark, path: (_FS(), path, None))
+    spark = _StubSession()
+    with E._pinned_state_partitions(spark, "s3a://bucket/in") as pin:
+        assert (pin.bytes, pin.n) == (n_bytes, want)
+        assert spark.conf.get("spark.sql.shuffle.partitions") == str(want)
+    assert paths == ["s3a://bucket/in"]
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
+
+
 def test_state_width_survives_a_narrower_resume(spark, tmp_path):
     """A stateful query keeps the state-store count and provider it
     started with: a checkpoint begun at width 8 on the HDFS-backed store

@@ -15,10 +15,10 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from vaero_spark.compiler import compile_batch, rows_as_json
+from vaero_spark.compiler import compile_batch
 from vaero_spark.dsl import Vaero
-from vaero_spark.oracle import run_plan
 from vaero_spark.plans.plan import OpNode, Plan
+from vaero_spark.testing.oracle import rows_as_json, run_plan
 
 FIELDS = ["hostname", "msg", "severity", "f", "t"]
 # regex surface: literals, classes, quantifiers, alternation, anchors

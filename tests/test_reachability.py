@@ -1,5 +1,6 @@
 """Every top-level name in ``vaero_spark/`` must be reachable from code
-that runs outside the test suite, or be allowlisted with a reason.
+that runs outside the test suite, and that code must not import
+``vaero_spark.testing``.
 
 JVM-free: the check is an AST scan. Identifiers are followed from the
 roots to a fixpoint:
@@ -9,14 +10,16 @@ roots to a fixpoint:
   ``perfbench/``): names, attributes, import aliases and
   identifier-shaped string constants;
 - the package's own module-level statements that are neither a
-  definition nor an import (they run on import);
-- the allowlist below.
+  definition nor an import (they run on import).
 
 A top-level def, class or assignment is reached when any reached code
 names it; its body's identifiers are then reached in turn. Matching is by
 name, not by module, so the scan can miss dead code that shares a name
 with live code but never flags live code as dead. ``vaero_spark/testing/``
-(fixtures for tests) and dunder names are skipped.
+(fixtures and oracles for tests) and dunder names are skipped: a
+test-only helper lives there or in its test file, and
+:func:`test_production_code_does_not_import_testing` keeps production
+code from reaching it.
 """
 
 from __future__ import annotations
@@ -28,22 +31,6 @@ from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
 PACKAGE = ROOT / "vaero_spark"
-
-# Reached only from tests, on purpose. Each entry says why it stays.
-ALLOWLIST = {
-    "vaero_spark.compiler.rows_as_json": "reference-interpreter oracle of "
-    "test_reference_pipelines, test_property_parity and test_transforms_parity",
-    "vaero_spark.oracle.run_plan": "reference-interpreter oracle of "
-    "test_reference_pipelines, test_property_parity and test_transforms_parity",
-    "vaero_spark.sources.random_events.random_events_json": "input generator "
-    "of the reference-interpreter parity tests",
-    "vaero_spark.operators.analytics.funnel_membership": "batch reference "
-    "that the stream_funnel tests compare against",
-    "vaero_spark.sinks.bucketed.save_bucketed": "bucketed-layout capability "
-    "(SURVEY section 2), tested by test_bucketed.py",
-    "vaero_spark.sinks.writers.IcebergSink": "cluster sink; it needs the "
-    "Iceberg runtime jar, so without one only its guard test runs it",
-}
 
 _IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*\Z")
 
@@ -116,11 +103,11 @@ def _outside_identifiers() -> set[str]:
     return out
 
 
-def _reached(defs, roots: set[str], start=()) -> set[str]:
-    """Qualified names reached from the identifiers ``roots`` and the
-    definitions ``start``, followed to a fixpoint."""
-    reached = set(start)
-    seen = set(roots).union(*(defs[q][1] for q in reached))
+def _reached(defs, roots: set[str]) -> set[str]:
+    """Qualified names reached from the identifiers ``roots``, followed
+    to a fixpoint."""
+    reached: set[str] = set()
+    seen = set(roots)
     frontier = True
     while frontier:
         frontier = False
@@ -139,24 +126,50 @@ def _production_roots() -> tuple[dict, set[str]]:
 
 def test_every_top_level_name_is_reachable():
     defs, roots = _production_roots()
-    reached = _reached(defs, roots, start=set(ALLOWLIST) & set(defs))
-    unreached = sorted(set(defs) - reached)
+    unreached = sorted(set(defs) - _reached(defs, roots))
     assert not unreached, (
-        "top-level names that no non-test code reaches; delete them, or add "
-        f"them to ALLOWLIST with a reason: {unreached}"
+        "top-level names that no non-test code reaches; delete them, or move "
+        f"a test-only reference to vaero_spark/testing/: {unreached}"
     )
 
 
-def test_allowlist_is_current():
-    """An entry that no longer exists, that production code now reaches on
-    its own, or that another entry reaches, leaves the list."""
-    defs, roots = _production_roots()
-    missing = sorted(q for q in ALLOWLIST if q not in defs)
-    assert not missing, f"allowlisted names that no longer exist: {missing}"
-    reached = _reached(defs, roots)
-    live = sorted(q for q in ALLOWLIST if q in reached)
-    assert not live, f"allowlisted names that production code reaches: {live}"
-    redundant = sorted(
-        q for q in ALLOWLIST if q in _reached(defs, roots, start=set(ALLOWLIST) - {q})
+def _production_files() -> list[Path]:
+    """The package outside ``testing/`` plus the non-test entry points:
+    ``__spark_entry__.py``, ``bench*.py``, ``jobs/`` and ``tools/``
+    (``perfbench/`` and ``tests/`` build fixtures from ``testing/``)."""
+    files = [p for p in PACKAGE.rglob("*.py") if (PACKAGE / "testing") not in p.parents]
+    files += [ROOT / "__spark_entry__.py", *ROOT.glob("bench*.py")]
+    for d in ("jobs", "tools"):
+        files += (ROOT / d).rglob("*.py")
+    return sorted(files)
+
+
+def _imported_modules(path: Path) -> set[str]:
+    """Every module ``path`` imports; ``from M import a`` counts ``M``
+    and ``M.a`` (``a`` may be a submodule), relative imports resolved."""
+    package = _module_name(path).split(".")
+    if path.name != "__init__.py":
+        package = package[:-1]
+    out: set[str] = set()
+    for node in ast.walk(ast.parse(path.read_text(), str(path))):
+        if isinstance(node, ast.Import):
+            out.update(a.name for a in node.names)
+        elif isinstance(node, ast.ImportFrom):
+            base = package[: len(package) - node.level + 1] if node.level else []
+            mod = ".".join(base + ([node.module] if node.module else []))
+            out.add(mod)
+            out.update(f"{mod}.{a.name}" for a in node.names)
+    return out
+
+
+def test_production_code_does_not_import_testing():
+    """Test fixtures and oracles stay out of what production runs: no
+    production file imports ``vaero_spark.testing`` or a module in it."""
+    testing = "vaero_spark.testing"
+    bad = sorted(
+        f"{p.relative_to(ROOT)}: {m}"
+        for p in _production_files()
+        for m in _imported_modules(p)
+        if m == testing or m.startswith(testing + ".")
     )
-    assert not redundant, f"allowlisted names that other entries reach: {redundant}"
+    assert not bad, f"production files that import {testing}: {bad}"

@@ -13,12 +13,11 @@ import textwrap
 import pytest
 from pyspark.sql import functions as F
 
-from vaero_spark.compiler import compile_batch, rows_as_json
+from vaero_spark.compiler import compile_batch
 from vaero_spark.dsl import Vaero
-from vaero_spark.oracle import run_plan
 from vaero_spark.sinks.writers import default_sink_factory
-from vaero_spark.sources.random_events import random_events_json
 from vaero_spark.streaming.engine import run_streaming_plan
+from vaero_spark.testing.oracle import random_events_json, rows_as_json, run_plan
 
 
 def _norm(events):

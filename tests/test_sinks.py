@@ -120,21 +120,3 @@ def test_stub_sink_never_counts(spark, transcripts_df):
             setattr(_DF, m, fn)
     assert rec["rows"] == 7
     assert sink.epochs == [{"service": "datadog", "epoch": 0, "rows": 7}]
-
-
-def test_iceberg_sink_guard(spark, transcripts_df):
-    """Without the Iceberg runtime the sink must fail loudly, not write.
-
-    Jar acquisition attempted (round 4): no iceberg-spark-runtime jar
-    anywhere on the image (`find / -name 'iceberg*.jar'` is empty, no
-    ~/.ivy2 cache) and the sandbox has no network (maven central DNS
-    fails), so the end-to-end snapshot-resume test remains blocked; the
-    code path stays guard-tested."""
-    import pytest as _pytest
-
-    from vaero_spark.sinks.writers import IcebergSink, iceberg_available
-
-    if iceberg_available(spark):
-        _pytest.skip("Iceberg runtime present; guard not applicable")
-    with _pytest.raises(RuntimeError, match="Iceberg runtime"):
-        IcebergSink("local.db.t").write(transcripts_df, 0)

@@ -9,10 +9,9 @@ import json
 
 import pytest
 
-from vaero_spark.compiler import compile_batch, rows_as_json
+from vaero_spark.compiler import compile_batch
 from vaero_spark.dsl import Vaero
-from vaero_spark.oracle import run_plan
-from vaero_spark.sources.random_events import random_events_json
+from vaero_spark.testing.oracle import random_events_json, rows_as_json, run_plan
 
 
 def _spark_events(spark, plan, sink="out"):

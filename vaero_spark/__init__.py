@@ -13,14 +13,15 @@ Architecture (idiomatic Spark, NOT a port):
 - ``vaero_spark.plans``     — op dataclasses + task-graph serialization.
 - ``vaero_spark.compiler``  — plan → DataFrame transformation chain
   (native Column expressions; Catalyst optimizes the whole pipeline).
-- ``vaero_spark.oracle``    — pure-Python interpreter with the reference's
-  literal per-event JSON semantics, used only as a test oracle.
 - ``vaero_spark.operators`` — transforms, windows, stateful ops, joins,
   dedup/similarity/text-analysis operators.
 - ``vaero_spark.sources`` / ``vaero_spark.sinks`` — batch + streaming IO,
   exactly-once checkpointed sinks.
 - ``vaero_spark.streaming`` — StreamingQuery management, lineage/metrics
   listener, checkpoint/resume.
+- ``vaero_spark.testing``   — test fixtures and oracles (the pure-Python
+  interpreter of the reference's per-event JSON semantics); no production
+  module imports it.
 """
 
 __version__ = "0.1.0"

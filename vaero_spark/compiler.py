@@ -155,14 +155,3 @@ def _apply_chain(ops: list[OpNode]) -> Callable[[DataFrame], DataFrame]:
         return df
 
     return fn
-
-
-def rows_as_json(df: DataFrame) -> DataFrame:
-    """Render rows back to JSON strings (for parity with the oracle's
-    event-string output)."""
-    if df.columns == ["value"]:
-        return df
-    # keep null fields: the oracle's sjson semantics serialize them
-    return df.select(
-        F.to_json(F.struct(*df.columns), {"ignoreNullFields": "false"}).alias("value")
-    )

@@ -1,7 +1,8 @@
 """Regex dialect helpers.
 
 The reference uses Go RE2 (``regexp.MatchString`` etc.); Spark uses Java
-``java.util.regex``; the test oracle uses Python ``re``. We confine the
+``java.util.regex``; the test oracle (``vaero_spark/testing/oracle.py``)
+uses Python ``re``. We confine the
 supported surface to the common subset (literals, classes, quantifiers,
 alternation, anchors, capture groups) and normalize named-group syntax:
 Python ``(?P<name>...)`` ⇔ Java/RE2 ``(?<name>...)``.
@@ -18,11 +19,6 @@ _NAMED_ANY = re.compile(r"\(\?P?<([A-Za-z][A-Za-z0-9_]*)>")
 def to_java_regex(pattern: str) -> str:
     """Normalize to Java syntax (named groups ``(?<name>...)``)."""
     return _NAMED_PY.sub(r"(?<\1>", pattern)
-
-
-def to_python_regex(pattern: str) -> str:
-    """Normalize to Python syntax (named groups ``(?P<name>...)``)."""
-    return re.sub(r"\(\?<([A-Za-z][A-Za-z0-9_]*)>", r"(?P<\1>", pattern)
 
 
 def named_groups(pattern: str) -> list[tuple[str, int]]:

@@ -140,50 +140,19 @@ def funnel_sql(
     return ",\n".join(ctes) + "\n" + "\nUNION ALL\n".join(selects)
 
 
-def funnel_membership(
-    transcripts: DataFrame,
-    stages: Sequence[Tuple[str, Column]],
-    conv_col: str = "conv_id",
-    order_col: str = "turn_idx",
-) -> DataFrame:
-    """Per-conversation funnel membership: one row ``(conv_id, stage,
-    first_ord)`` for every stage a conversation reaches, with the FIRST
-    order position at which it did — the row-level form of
-    :func:`funnel` (whose counts are exactly ``GROUP BY stage`` over
-    this). Same chained conv-keyed plan; this is also the drain target
-    of :func:`stream_funnel`."""
-    if not stages:
-        raise ValueError("funnel needs at least one stage")
-    outs: list[DataFrame] = []
-    reached: DataFrame | None = None
-    for i, (name, pred) in enumerate(stages):
-        hits = transcripts.filter(pred).select(
-            F.col(conv_col).alias("_conv"), F.col(order_col).alias("_ord")
-        )
-        if reached is not None:
-            hits = hits.join(reached, "_conv").filter(F.col("_ord") > F.col("_prev"))
-        reached = hits.groupBy("_conv").agg(F.min("_ord").alias("_prev"))
-        outs.append(
-            reached.select(
-                F.col("_conv").alias(conv_col),
-                F.lit(i + 1).cast("int").alias("stage"),
-                F.col("_prev").cast("long").alias("first_ord"),
-            )
-        )
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out
-
-
 def funnel_membership_sql(
     table_expr: str,
     stages: Sequence[Tuple[str, str]],
     conv_col: str = "conv_id",
     order_col: str = "turn_idx",
 ) -> str:
-    """DuckDB twin of :func:`funnel_membership` (same chained CTEs as
-    :func:`funnel_sql`, emitting the per-conversation rows)."""
+    """Per-conversation funnel membership: one row ``(conv_id, stage,
+    first_ord)`` for every stage a conversation reaches, with the FIRST
+    order position at which it did — the row-level form of
+    :func:`funnel_sql` (same chained CTEs; its counts are exactly
+    ``GROUP BY stage`` over this) and the drain target of
+    :func:`stream_funnel`. Its Spark form is the test reference
+    ``funnel_membership`` in ``tests/test_analytics.py``."""
     ctes = []
     for i, (name, where) in enumerate(stages):
         if i == 0:
@@ -267,7 +236,7 @@ def stream_funnel(
     watermark: str = "60 days",
     idle_timeout_seconds: int = 3600,
 ) -> DataFrame:
-    """Streaming form of :func:`funnel_membership`: track each LIVE
+    """Streaming form of :func:`funnel_membership_sql`: track each LIVE
     conversation's progression through ordered stages as turns arrive,
     in any order.
 
@@ -289,7 +258,7 @@ def stream_funnel(
     turns can only extend the reached set and only move first hits
     earlier (the feasible set for every stage grows monotonically), so
     last-emission-wins needs no retractions, and the drained result
-    equals :func:`funnel_membership` exactly — the stateful streaming
+    equals :func:`funnel_membership_sql` exactly — the stateful streaming
     op gets an EXACT SQL oracle, the ``stream_cep`` /
     ``stream_spikes`` pairing.
     """

@@ -5,8 +5,9 @@ codegen — no per-row Python anywhere).
 Semantics are pinned to the Go implementations in
 ``/root/reference/transform/*.go``; each function's docstring cites the
 exact behavior it reproduces, including edge cases. The pytest suite
-asserts parity against the pure-Python oracle (``vaero_spark.oracle``)
-which interprets the same semantics literally.
+asserts parity against the pure-Python oracle
+(``vaero_spark.testing.oracle``), which interprets the same semantics
+literally.
 """
 
 from __future__ import annotations

@@ -8,11 +8,12 @@ with in-memory buffers that are lost on crash (at-most/at-least-once,
 overwrites the same epoch directory and the commit marker dedups it —
 end-to-end exactly-once on top of checkpointed offsets.
 
-Production target is the Iceberg sink (atomic snapshot commits); the
-sandbox image has no Iceberg jar, so :class:`ExactlyOnceParquetSink`
-implements the same contract on parquet + epoch manifests. The probe in
-:func:`iceberg_available` flips the writer when the runtime jar exists.
-The parquet sink itself is object-store-ready: give it an ``s3a://`` or
+:class:`ExactlyOnceParquetSink` is the exactly-once sink: parquet data
+plus per-epoch manifests, the marker written last as the commit point.
+:func:`default_sink_factory` routes every table-like DSL sink op to it
+(``s3``, ``parquet``, ``file`` and ``iceberg``); an Iceberg table sink
+needs the Iceberg Spark runtime jar, which the repository does not ship.
+The parquet sink is object-store-ready: give it an ``s3a://`` or
 ``hdfs://`` root and the marker/manifest I/O rides the JVM Hadoop
 FileSystem client (``sinks/fs.py`` documents per-store commit
 atomicity); only the hadoop-aws jars + credentials are cluster-side
@@ -28,15 +29,6 @@ from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def iceberg_available(spark) -> bool:
-    """True when the Iceberg Spark runtime is on the classpath."""
-    try:
-        spark._jvm.java.lang.Class.forName("org.apache.iceberg.spark.SparkCatalog")
-        return True
-    except Exception:  # noqa: BLE001
-        return False
 
 
 @dataclass
@@ -200,9 +192,8 @@ class ExactlyOnceParquetSink:
         dropped = total - kept
 
         # Per-partition lineage: what landed where this epoch, from the
-        # committed files themselves (no extra Spark job). The Iceberg
-        # sink gets this natively from snapshot manifests; here the
-        # epoch manifest carries it for the parquet sandbox sink.
+        # committed files themselves (no extra Spark job); the epoch
+        # manifest carries it, as a table format's snapshot manifest would.
         manifest = {
             "epoch": epoch_id,
             "rows": kept,
@@ -232,58 +223,6 @@ class ExactlyOnceParquetSink:
         if not paths:
             return spark.createDataFrame([], "conv_id string")
         return spark.read.option("basePath", fs.join(self.path, "data")).parquet(*paths)
-
-
-@dataclass
-class IcebergSink:
-    """Production sink: idempotent per-epoch appends to an Iceberg table.
-
-    Exactly-once: each epoch's append commit carries
-    ``vaero.epoch=<id>`` in its snapshot summary; on re-delivery after a
-    restart we scan recent snapshot summaries and skip epochs already
-    committed — the Iceberg-native analog of the parquet sink's marker
-    files (atomic snapshot commit replaces the marker rename).
-
-    Requires the Iceberg Spark runtime on the classpath and a configured
-    catalog (``spark.sql.catalog.<name>``). The sandbox image has no
-    Iceberg jar (``iceberg_available`` returns False), so this class is
-    exercised only by its unit-level guard; the epoch-commit contract is
-    integration-tested through :class:`ExactlyOnceParquetSink`, which
-    implements the identical protocol on files.
-    """
-
-    table: str  # catalog.db.table
-    prefix_format: str = "yyyy-MM-dd"
-    ts_col: str = "ts"
-    order_cols: tuple = ("conv_id", "turn_idx")
-
-    def _committed_epochs(self, spark) -> set:
-        rows = spark.sql(
-            f"SELECT summary['vaero.epoch'] AS e FROM {self.table}.snapshots"
-        ).collect()
-        return {int(r.e) for r in rows if r.e is not None}
-
-    def write(self, batch_df: DataFrame, epoch_id: int) -> dict:
-        spark = batch_df.sparkSession
-        if not iceberg_available(spark):
-            raise RuntimeError("Iceberg runtime not on classpath; use ExactlyOnceParquetSink")
-        if epoch_id in self._committed_epochs(spark):
-            return {"epoch": epoch_id, "skipped": True}
-        df = batch_df.filter(F.col(self.ts_col).isNotNull()).withColumn(
-            "prefix", F.date_format(self.ts_col, self.prefix_format)
-        )
-        df = df.repartition(F.col("prefix")).sortWithinPartitions(
-            "prefix", *[c for c in self.order_cols if c in df.columns]
-        )
-        (
-            df.writeTo(self.table)
-            .option("snapshot-property.vaero.epoch", str(epoch_id))
-            .append()
-        )
-        return {"epoch": epoch_id, "skipped": False}
-
-    def foreach_batch(self) -> Callable[[DataFrame, int], None]:
-        return lambda df, epoch_id: self.write(df, epoch_id)
 
 
 @dataclass

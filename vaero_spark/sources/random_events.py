@@ -8,7 +8,6 @@ msgs, severities) with a pinned base timestamp instead of
 
 from __future__ import annotations
 
-import json
 from datetime import datetime, timedelta, timezone
 
 from pyspark.sql import DataFrame, SparkSession
@@ -49,16 +48,3 @@ def random_events_rows(batch: int = 0) -> list[tuple]:
 
 def random_events_df(spark: SparkSession, batch: int = 0) -> DataFrame:
     return spark.createDataFrame(random_events_rows(batch), RANDOM_EVENTS_SCHEMA)
-
-
-def random_events_json(batch: int = 0) -> list[str]:
-    """JSON-string form for the oracle interpreter."""
-    out = []
-    for host, t, f, msg, sev, ts in random_events_rows(batch):
-        out.append(
-            json.dumps(
-                {"hostname": host, "t": t, "f": f, "msg": msg, "severity": sev, "timestamp": ts},
-                separators=(", ", ": "),
-            )
-        )
-    return out

@@ -28,6 +28,13 @@ class KeyState:
         self._row = None  # the stored Java Row
         self._group = None  # the last call's TestGroupState
 
+    def copy(self) -> "KeyState":
+        """A state holding the same stored row (a call never changes a
+        stored row; it stores a new one), not yet called."""
+        state = KeyState()
+        state._row = self._row
+        return state
+
     @property
     def exists(self) -> bool:
         return self._row is not None

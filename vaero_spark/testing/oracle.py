@@ -2,9 +2,12 @@
 
 Interprets a pipeline plan over a list of JSON-string events with the
 reference's literal per-event semantics (gjson/sjson path rewrites,
-``/root/reference/transform/*.go`` and ``execute/transformNode.go``).
+its ``transform/*.go`` and ``execute/transformNode.go``).
 The pytest parity suite runs every pipeline through this oracle AND the
-Spark compiler and asserts equal output. Never used in the data path.
+Spark compiler and asserts equal output. Never used in the data path:
+:func:`random_events_json` is the oracle's input form of the fixture
+source, and :func:`rows_as_json` renders the compiler's sink frames in
+the oracle's output form.
 """
 
 from __future__ import annotations
@@ -13,8 +16,40 @@ import json
 import re
 from typing import Any
 
-from vaero_spark.functions.regex_utils import to_python_regex
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
 from vaero_spark.plans.plan import OpNode, Plan
+from vaero_spark.sources.random_events import random_events_rows
+
+
+def to_python_regex(pattern: str) -> str:
+    """Normalize to Python syntax (named groups ``(?P<name>...)``)."""
+    return re.sub(r"\(\?<([A-Za-z][A-Za-z0-9_]*)>", r"(?P<\1>", pattern)
+
+
+def random_events_json(batch: int = 0) -> list[str]:
+    """JSON-string form of ``random_events_rows`` for the interpreter."""
+    out = []
+    for host, t, f, msg, sev, ts in random_events_rows(batch):
+        out.append(
+            json.dumps(
+                {"hostname": host, "t": t, "f": f, "msg": msg, "severity": sev, "timestamp": ts},
+                separators=(", ", ": "),
+            )
+        )
+    return out
+
+
+def rows_as_json(df: DataFrame) -> DataFrame:
+    """Render rows back to JSON strings (for parity with the oracle's
+    event-string output)."""
+    if df.columns == ["value"]:
+        return df
+    # keep null fields: the oracle's sjson semantics serialize them
+    return df.select(
+        F.to_json(F.struct(*df.columns), {"ignoreNullFields": "false"}).alias("value")
+    )
 
 
 # ---- gjson/sjson-style path ops over parsed dicts ----
